@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -89,12 +90,13 @@ object Bench {
     def storageUsed(): Long =
       spark.sparkContext.getExecutorMemoryStatus.values
         .map { case (max, free) => max - free }.sum
-    def pass(): Map[String, Double] = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      clearAll()
-      name -> dt
+    // rows that threw in either pass, with the first error: never timed,
+    // out of the best-of-2 and every total, and they fail the run
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    def pass(): Map[String, Double] = {
+      val (times, errors) = timedPass(spark, sfDir, selected.toSeq, () => clearAll())
+      errors.foreach { case (k, e) => failed.getOrElseUpdate(k, e) }
+      times
     }
     // Per-query perf budgets (r6 verdict task 4): bench_budget.json pins
     // each query's clean-host best-of-2; any row whose best exceeds
@@ -145,7 +147,9 @@ object Bench {
     val (loadMid, storageMid) = (loadavg(), storageUsed())
     val p2 = pass()
     val (loadAfter, storageAfter) = (loadavg(), storageUsed())
-    val results = p1.map { case (k, v) => k -> math.min(v, p2(k)) }
+    val results = p1.collect {
+      case (k, v) if !failed.contains(k) => k -> math.min(v, p2(k))
+    }
     val qs = results.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -179,7 +183,10 @@ object Bench {
       s""""all_in_vs_baseline":${j(baselinePerQ.map(allInPerQ / _))},""" +
       s""""plan_vs_baseline":${j(baselinePerQ.map(planPerQ / _))}}"""
     println(gateJson)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"class_subtotals":$classJson,"sf":"$sfDir"}""")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val failedJson = failed.map { case (k, e) =>
+      s"""{"q":"$k","error":${json.writeValueAsString(e)}}""" }.mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"class_subtotals":$classJson,"sf":"$sfDir"}""")
     // Complete per-query artifact ON DISK (r2/r3 verdicts: both driver
     // stdout tails truncate at 2k chars, which made the r3 75.6s-vs-48.3s
     // scare undiagnosable from the recorded artifacts alone). Includes
@@ -219,6 +226,7 @@ object Bench {
       s""""budget_violations_suspect_load":${suspectViolations.mkString("[", ",", "]")},""" +
       s""""host_loaded":$hostLoaded,""" +
       s""""unbudgeted":${unbudgeted.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+      s""""failed":$failedJson,""" +
       s""""queries":$detail}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"), payload)
@@ -238,5 +246,28 @@ object Bench {
         java.nio.file.Paths.get(f"bench_detail_r$roundNum%02d.json"), payload)
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} row(s) threw: ${failed.keys.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** One timed pass: each row's wall seconds to `count()` its result,
+    * `after()` between rows. A row that throws gets its error message
+    * instead of a time. */
+  def timedPass(spark: SparkSession, dir: String,
+                rows: Seq[(String, (SparkSession, String) => DataFrame)],
+                after: () => Unit): (Map[String, Double], Map[String, String]) = {
+    val times = Map.newBuilder[String, Double]
+    val errors = Map.newBuilder[String, String]
+    rows.foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, dir).count()
+        times += name -> (System.nanoTime() - t0) / 1e9
+      } catch { case NonFatal(e) => errors += name -> e.toString }
+      after()
+    }
+    (times.result(), errors.result())
   }
 }

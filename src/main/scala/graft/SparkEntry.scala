@@ -633,9 +633,13 @@ object SparkEntry {
       ms.addData(rows.filter(_._1 > 1400): _*)
       q.processAllAvailable()
     } finally q.stop()
+    // the maintainer rewrote meta and store from the stream's own
+    // session; this session may still hold an earlier run's listing
+    s.catalog.refreshTable("graft_mv_stream_meta")
     // cursor must sit at the stream's high-water mark: the read below
     // is then served from the store alone (delta scan empty)
     val cur = s.table("graft_mv_stream_meta").head().getLong(4)
+    s.catalog.refreshTable(s"graft_mv_stream_store_c$cur")
     require(cur == rows.map(_._1).max,
       s"matview maintainer left cursor at $cur")
     graft.sources.MatViewLayout.read(s, "graft_mv_stream",

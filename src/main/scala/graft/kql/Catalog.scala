@@ -1,8 +1,12 @@
 package graft.kql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** Table-name → DataFrame resolution over a directory of parquet files
   * (the driver fixture layout, TESTDATA.md). At cluster scale the same
@@ -47,34 +51,91 @@ final class Catalog(spark: SparkSession, dir: String,
   /** Parquet is the primary at-rest format; ORC/CSV/JSON fall back by
     * file extension (ADX ingest formats, SURVEY §2.1; ORC via Spark's
     * built-in vectorized reader — same pushdown/pruning class as
-    * parquet). Local-FS existence check — a metastore fronts this on a
-    * real cluster. */
-  private def load(name: String): DataFrame = {
-    def exists(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
-    if (exists(s"$dir/$name.parquet"))
-      normalize(spark.read.parquet(s"$dir/$name.parquet"),
-        nanosTimestampCols(s"$dir/$name.parquet"))
-    else if (exists(s"$dir/$name.orc"))
-      normalize(spark.read.orc(s"$dir/$name.orc"), Set.empty)
-    else if (exists(s"$dir/$name.csv"))
-      normalize(spark.read.option("header", "true").option("inferSchema", "true")
-        .csv(s"$dir/$name.csv"), Set.empty)
-    else if (exists(s"$dir/$name.json"))
-      normalize(spark.read.json(s"$dir/$name.json"), Set.empty)
-    // raw text (ADX txt ingest): one string column `line` per line —
-    // the natural front for line-oriented corpora (WARC/WET dumps,
-    // log shards) feeding the line ops
-    else if (exists(s"$dir/$name.txt"))
-      spark.read.text(s"$dir/$name.txt").withColumnRenamed("value", "line")
-    else normalize(spark.read.parquet(s"$dir/$name.parquet"), Set.empty) // error path
+    * parquet); raw text (ADX txt ingest) is one string column `line` per
+    * line — the natural front for line-oriented corpora (WARC/WET dumps,
+    * log shards) feeding the line ops. Local-FS existence check — a
+    * metastore fronts this on a real cluster. */
+  private def load(name: String): DataFrame =
+    Catalog.formats.map(ext => ext -> s"$dir/$name.$ext")
+      .find { case (_, p) => Files.exists(Paths.get(p)) }
+      .map { case (ext, p) => Catalog.resolve(spark, ext, p) }
+      .getOrElse(spark.read.parquet(s"$dir/$name.parquet")) // throws PATH_NOT_FOUND
+
+  def withTable(name: String, df: DataFrame): Catalog =
+    new Catalog(spark, dir, extra + (name -> df))
+}
+
+object Catalog {
+  def apply(spark: SparkSession, dir: String): Catalog = new Catalog(spark, dir)
+
+  /** Table file extensions, in lookup order. */
+  private val formats = Seq("parquet", "orc", "csv", "json", "txt")
+
+  private def reader(spark: SparkSession, ext: String): DataFrameReader = ext match {
+    case "csv" => spark.read.option("header", "true").option("inferSchema", "true").format("csv")
+    case "txt" => spark.read.format("text")
+    case f => spark.read.format(f)
   }
+
+  /** What a session remembers of one table path: the listing it was
+    * resolved at — (name, size, mtime) of the file, or of every file
+    * under a directory table — the source schema Spark inferred from it,
+    * and its TIMESTAMP(NANOS) columns. Metadata only, never a DataFrame:
+    * nothing here references the session, so a dropped session's entries
+    * are collected with it, and every query still scans the files. */
+  private final case class Meta(listing: Seq[(String, Long, Long)],
+                                schema: StructType, nanosCols: Set[String])
+
+  private val sessions =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Meta]]()
+
+  private def metas(spark: SparkSession): ConcurrentHashMap[String, Meta] =
+    sessions.synchronized {
+      sessions.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Meta]())
+    }
+
+  /** The table at `path` as a DataFrame. Schema inference (a Spark job
+    * for parquet/csv/json) and the footer read run once per session,
+    * path and listing: a hit hands Spark the recorded schema, so it
+    * starts no job and reads no footer. A rewritten file or directory
+    * changes the listing and resolves afresh. */
+  private def resolve(spark: SparkSession, ext: String, path: String): DataFrame = {
+    val key = Paths.get(path).toAbsolutePath.normalize
+    val listing = listingOf(key)
+    val known = metas(spark)
+    val hit = Option(known.get(key.toString)).filter(m => listing.contains(m.listing))
+    val (df, nanosCols) = hit match {
+      case Some(m) => (reader(spark, ext).schema(m.schema).load(path), m.nanosCols)
+      case None =>
+        val df = reader(spark, ext).load(path)
+        val cols = if (ext == "parquet") nanosTimestampCols(spark, path) else Set.empty[String]
+        listing.foreach(l => known.put(key.toString, Meta(l, df.schema, cols)))
+        (df, cols)
+    }
+    if (ext == "txt") df.withColumnRenamed("value", "line")
+    else normalize(df, nanosCols)
+  }
+
+  /** Sorted (relative name, size, mtime in ns) of every regular file at
+    * or under `p`; None when the tree changed under the walk (then the
+    * lookup is served, but not cached). */
+  private def listingOf(p: Path): Option[Seq[(String, Long, Long)]] =
+    try {
+      val walk = Files.walk(p)
+      try Some(walk.iterator.asScala.flatMap { f =>
+        val a = Files.readAttributes(f, classOf[BasicFileAttributes])
+        if (a.isRegularFile)
+          Some((p.relativize(f).toString, a.size, a.lastModifiedTime.to(TimeUnit.NANOSECONDS)))
+        else None
+      }.toVector.sorted)
+      finally walk.close()
+    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => None }
 
   /** Columns whose parquet logical type is TIMESTAMP(NANOS), read from
     * one file footer (a metadata-only driver read, like schema
     * inference). Keyed off the file's own logical type — NOT the column
     * name — so a user table with a plain long `ts` column is untouched. */
-  private def nanosTimestampCols(path: String): Set[String] = {
-    import scala.jdk.CollectionConverters._
+  private def nanosTimestampCols(spark: SparkSession, path: String): Set[String] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -120,11 +181,4 @@ final class Catalog(spark: SparkSession, dir: String,
         d.withColumn(f.name, col(f.name).cast("timestamp"))
       else d
     }
-
-  def withTable(name: String, df: DataFrame): Catalog =
-    new Catalog(spark, dir, extra + (name -> df))
-}
-
-object Catalog {
-  def apply(spark: SparkSession, dir: String): Catalog = new Catalog(spark, dir)
 }

@@ -462,6 +462,14 @@ class StreamingSpec extends AnyFunSuite {
       "replay must not self-match the batch against its own index entries")
   }
 
+  test("tmp_stream_matview_refresh gives the same answer on a second run in one session") {
+    val row = SparkEntry.queries("tmp_stream_matview_refresh")
+    val first = row(spark, TestSpark.sfDir).collect().toSeq
+    val second = row(spark, TestSpark.sfDir).collect().toSeq
+    assert(first.nonEmpty)
+    assert(second == first)
+  }
+
   test("matview maintainer: an all-late batch is refused loudly, state untouched") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
