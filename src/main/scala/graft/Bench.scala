@@ -12,28 +12,7 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
       case None => SparkEntry.queries
     }
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // session-build extensions hook: graft_* SQL functions (the
-      // tmp_extensions_sql driver row proves the injection end-to-end)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Kryo for the one RDD path (connected components): Tuple2[Long,
-      // Long] shuffle rounds are ~2x cheaper than Java serialization;
-      // DataFrame shuffles (Tungsten UnsafeRow) are unaffected
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // 163 queries x many codegen'd stages blow through the default
-      // 100-entry generated-class cache, so later queries (and every
-      // pass-2 rerun) pay full JIT again — the main source of the
-      // in-bench-vs-standalone gap on the heavy rows
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.create(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // loadavg BEFORE the warm-up pass: loadavg_before is sampled after
     // warm-up, when the bench's own 32 threads have already driven the
@@ -56,8 +35,7 @@ object Bench {
     warmDir.foreach { wd =>
       selected.foreach { case (_, fn) =>
         try { fn(spark, wd).count() } catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        GraftSession.release(spark)
       }
     }
     // best-of-2 timed passes: single-JVM local mode shows large
@@ -67,26 +45,12 @@ object Bench {
     // accumulated storage otherwise squeezes execution memory and
     // inflates the heavy shuffle queries (measured 2× on minhash by the
     // end of a 142-query pass).
-    // clearCache() only drops DataFrame/catalog caches — RDD-level
-    // persists (the CC loop's localCheckpoint blocks) are invisible to
-    // it and were reclaimed only by ContextCleaner GC, which a 128 GiB
-    // single-JVM heap almost never triggers. Over 191 queries × (warmup
-    // + 2 passes) the leaked blocks squeezed unified execution memory
-    // and blew up pass 2 on exactly the heaviest rows (r5 verdict:
-    // llm_pipeline_v2 4.8→19.2 s). Explicitly unpersist every RDD too.
-    def clearAll(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      // drains the library's persist-tracking queue (blocks are already
-      // freed above; this frees the retained plan references)
-      graft.ext.LlmOps.releaseCaches()
-    }
     def loadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split(" ").take(3).mkString(",")
       catch { case _: Throwable => "" }
     // bytes of block-manager storage currently in use — visible leak
-    // detector: should be ~0 at every pass boundary after clearAll()
+    // detector: should be ~0 at every pass boundary after release
     def storageUsed(): Long =
       spark.sparkContext.getExecutorMemoryStatus.values
         .map { case (max, free) => max - free }.sum
@@ -94,7 +58,8 @@ object Bench {
     // out of the best-of-2 and every total, and they fail the run
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     def pass(): Map[String, Double] = {
-      val (times, errors) = timedPass(spark, sfDir, selected.toSeq, () => clearAll())
+      val (times, errors) =
+        timedPass(spark, sfDir, selected.toSeq, () => GraftSession.release(spark))
       errors.foreach { case (k, e) => failed.getOrElseUpdate(k, e) }
       times
     }

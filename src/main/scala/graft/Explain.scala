@@ -1,21 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan for named queries.
   * Usage: runMain graft.Explain q02_tpch_q1 q10_tpch_q5 ... */
 object Explain {
   def main(args: Array[String]): Unit = {
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create("4")
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       println(s"\n========== $name ==========")

@@ -48,21 +48,7 @@ object Scale {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
     val scales = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 8, 32)
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // session-build extensions hook: graft_* SQL functions (the
-      // tmp_extensions_sql driver row proves the injection end-to-end)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.create(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_SCALE_ONLY=op1,op2 measures a subset (builder
@@ -133,11 +119,6 @@ object Scale {
       }
     }
 
-    def clearAll(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      LlmOps.releaseCaches()
-    }
     def loadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split(" ").take(3).mkString(",")
@@ -149,7 +130,7 @@ object Scale {
     // warm-up at the smallest scale (JIT + codegen), untimed
     selected(s"$base/x${scales.min}", scales.min).foreach { case (_, fn) =>
       try fn() catch { case _: Throwable => () }
-      clearAll()
+      GraftSession.release(spark)
     }
     val sb = new StringBuilder
     for (k <- scales) {
@@ -160,7 +141,7 @@ object Scale {
         val t0 = System.nanoTime()
         val out = try fn() catch { case _: Throwable => -1L }
         val dt = (System.nanoTime() - t0) / 1e9
-        clearAll()
+        GraftSession.release(spark)
         val rowsIn = if (name.startsWith("ann_") || name.contains("kmeans") ||
           name.contains("cosine") || name.contains("semdedup")) nVecs else nDocs
         val line = s"""{"metric":"scale","op":"$name","scale":$k,""" +

@@ -3,6 +3,7 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.kql.Kql
 import graft.ext.{LlmOps, TemporalOps}
+import graft.GraftSession.pinned
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder brief.
   *
@@ -135,7 +136,7 @@ object SparkEntry {
     * sink, and return the sunk rows (hash-checked against DuckDB's batch
     * recompute by the driver). */
   def streamParityQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) { streamParityBody(s, dir) }
+    pinned(s, lowShuffle) { s => streamParityBody(s, dir) }
 
   private def streamParityBody(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -166,7 +167,7 @@ object SparkEntry {
     * idempotent; the memory stream is fed a BOUNDED 40-doc slice
     * (harness plumbing, not a data pass). */
   def streamLineDedupQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) { streamLineDedupBody(s, dir) }
+    pinned(s, lowShuffle) { s => streamLineDedupBody(s, dir) }
 
   private def streamLineDedupBody(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -226,15 +227,12 @@ object SparkEntry {
   /** Harness-sized streaming queries pay per-partition state-store
     * open/commit overhead every micro-batch (the tmp_stream_join
     * lesson: 32→4 partitions = 21.4→4.0 s); a real deployment sizes
-    * the state partition count to the cluster. */
-  private def withLowShuffle[A](s: SparkSession)(body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+    * the state partition count to the cluster. Pinned per row through
+    * [[GraftSession.pinned]], never set on the caller's session. */
+  private val lowShuffle = "spark.sql.shuffle.partitions" -> "4"
 
   def streamTopkQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) { streamTopkBody(s, dir) }
+    pinned(s, lowShuffle) { s => streamTopkBody(s, dir) }
 
   private def streamTopkBody(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -270,7 +268,7 @@ object SparkEntry {
     * filtered out) push the watermark past every real session's end —
     * watermarks advance between batches, hence two flushes. */
   def streamSessionQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) { streamSessionBody(s, dir) }
+    pinned(s, lowShuffle) { s => streamSessionBody(s, dir) }
 
   /** tmp_rocksdb_session body (r13): the EXACT tmp_stream_session query
     * re-run with the RocksDB state store provider — the disk-backed
@@ -279,35 +277,28 @@ object SparkEntry {
     * tmp_stream_session: the backend must be invisible to results
     * (merge-across-batch sessions, watermark flushes, all of it). */
   def streamSessionRocksQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-      try streamSessionBody(s, dir, "graft_stream_session_rocks_sink")
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+    pinned(s, lowShuffle, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      s => streamSessionBody(s, dir, "graft_stream_session_rocks_sink")
     }
 
   /** tmp_extensions_sql body (r13): the spark.sql.extensions hook made
-    * driver-visible. The harness sessions (Verify/Bench/TestSpark) are
-    * BUILT with `spark.sql.extensions=graft.GraftExtensions` — the
-    * exact path a cluster session takes from `spark-submit --conf`
-    * (SparkSession.applyExtensions reads the static conf at session
-    * build; a live session ignores it, which is why the conf sits in
-    * the builders and ExtensionsSpec covers the live-session
-    * registerAll alternative separately). This query then runs through
-    * the injected `graft_*` functions as PLAIN SQL — no Scala-API
-    * touch — and every output is integer-exact for the DuckDB oracle:
-    * sorted-intersect over distinct token lengths, an integer-valued
-    * self dot product, and an ADC table lookup with an arithmetic
-    * plant. */
+    * driver-visible. Every harness session is BUILT by
+    * [[GraftSession.create]] with `spark.sql.extensions=
+    * graft.GraftExtensions` — the exact path a cluster session takes
+    * from `spark-submit --conf` (SparkSession.applyExtensions reads the
+    * static conf at session build; a live session ignores it, which is
+    * why the conf sits in GraftSession.create and ExtensionsSpec covers
+    * the live-session registerAll alternative separately). This query
+    * then runs through the injected `graft_*` functions as PLAIN SQL —
+    * no Scala-API touch — and every output is integer-exact for the
+    * DuckDB oracle: sorted-intersect over distinct token lengths, an
+    * integer-valued self dot product, and an ADC table lookup with an
+    * arithmetic plant. */
   def extensionsSqlQuery(s: SparkSession, dir: String): DataFrame = {
     // the functions must have arrived via the session-build hook: this
     // row never calls registerAll, so resolution failing here means
-    // the extensions config was dropped from the harness builder
+    // the extensions config was dropped from GraftSession.create
     require(s.catalog.functionExists("graft_dot_product"),
       "session not built with spark.sql.extensions=graft.GraftExtensions")
     s.read.parquet(s"$dir/documents.parquet")
@@ -378,7 +369,7 @@ object SparkEntry {
     * to starts floor30(t) and floor30(t) − 30 min). Two micro-batches;
     * cumulative counts must merge across the batch boundary. */
   def streamSlidingQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) { streamSlidingBody(s, dir) }
+    pinned(s, lowShuffle) { s => streamSlidingBody(s, dir) }
 
   private def streamSlidingBody(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -423,7 +414,7 @@ object SparkEntry {
     * The oracle states the expected final table arithmetically (batch-1
     * rows + batch-2 new keys + the id%5==1 re-sends). */
   def streamDedupWmQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) {
+    pinned(s, lowShuffle) { s =>
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val evs = s.read.parquet(s"$dir/events.parquet")
@@ -472,7 +463,7 @@ object SparkEntry {
     * absent — outer semantics on a stream); final table ≡ the batch
     * left join, value-exact. */
   def streamEnrichQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) {
+    pinned(s, lowShuffle) { s =>
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val evs = s.read.parquet(s"$dir/events.parquet")
@@ -508,7 +499,7 @@ object SparkEntry {
     * batch pass, so dropped/duplicated legs or per-source state
     * mismatch. */
   def streamUnionQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) {
+    pinned(s, lowShuffle) { s =>
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val evs = s.read.parquet(s"$dir/events.parquet")
@@ -549,7 +540,7 @@ object SparkEntry {
     * File sink + checkpoint (memory sinks cannot recover state);
     * AvailableNow drains per batch. */
   def streamScanQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) {
+    pinned(s, lowShuffle) { s =>
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import org.apache.spark.sql.streaming.Trigger
@@ -594,7 +585,7 @@ object SparkEntry {
     * dropped/duplicated batch row, a broken partial merge (avg, HLL
     * dcount, arg_max struct), or a cursor bug all mismatch. */
   def streamMatViewRefreshQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) { streamMatViewRefreshQueryBody(s, dir) }
+    pinned(s, lowShuffle) { s => streamMatViewRefreshQueryBody(s, dir) }
 
   private def streamMatViewRefreshQueryBody(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -648,7 +639,7 @@ object SparkEntry {
   }
 
   def streamMatViewQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) { streamMatViewQueryBody(s, dir) }
+    pinned(s, lowShuffle) { s => streamMatViewQueryBody(s, dir) }
 
   private def streamMatViewQueryBody(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -698,7 +689,7 @@ object SparkEntry {
     * watermark boundary — the drop decision is unambiguous on any
     * boundary convention. */
   def streamMatViewLateQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) { streamMatViewLateQueryBody(s, dir) }
+    pinned(s, lowShuffle) { s => streamMatViewLateQueryBody(s, dir) }
 
   private def streamMatViewLateQueryBody(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -760,25 +751,20 @@ object SparkEntry {
     * verify SFs (sf0.001: click 515 ⋈ purchase 517 across the first
     * boundary; sf0.01: click 834 ⋈ purchase 839 across the second) —
     * join state provably crossed micro-batches; the spec pins it. */
-  def streamStreamJoinQuery(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+  def streamStreamJoinQuery(s: SparkSession, dir: String): DataFrame =
     // A two-sided streaming join instantiates FOUR state stores per
     // shuffle partition per micro-batch; at the session's 32 partitions
     // × 3 batches that is ~400 store open/commit cycles on a ~600-row
     // harness feed (measured 21.4 s — pure fixed overhead, not data).
-    // Pin the join's state partitioning to 2 for this query and
-    // restore; a real deployment sizes this to the cluster (the state
-    // partition count is a per-query deployment dial, not a library
-    // default). Stream-stream joins open 4 state stores PER partition
-    // PER micro-batch — at sub-kilobyte harness batches the commit
-    // overhead is the whole cost (32->4 measured 21.4->4.0 s in r8;
-    // 4->2 shaves the remaining floor).
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try streamStreamJoinBody(s, dir)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
+    // Pin the join's state partitioning to 2 for this query; a real
+    // deployment sizes this to the cluster (the state partition count
+    // is a per-query deployment dial, not a library default). At
+    // sub-kilobyte harness batches the commit overhead is the whole
+    // cost (32->4 measured 21.4->4.0 s in r8; 4->2 shaves the remaining
+    // floor).
+    pinned(s, joinShuffle) { s => streamStreamJoinBody(s, dir) }
+
+  private val joinShuffle = "spark.sql.shuffle.partitions" -> "2"
 
   private def streamStreamJoinBody(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -832,13 +818,11 @@ object SparkEntry {
     * equal DuckDB's plain batch LEFT JOIN — extra null rows for
     * actually-matched clicks, or missing null rows for unmatched ones,
     * both mismatch. */
-  def streamStreamLeftJoinQuery(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
+  def streamStreamLeftJoinQuery(s: SparkSession, dir: String): DataFrame =
     // 2 partitions: same state-store-commit reasoning as the inner join
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try {
+    pinned(s, joinShuffle) { s =>
+      import s.implicits._
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val evs = s.read.parquet(s"$dir/events.parquet")
         .filter(col("event_id") <= 2000 &&
           col("event_type").isin("click", "purchase"))
@@ -887,8 +871,7 @@ object SparkEntry {
       } finally q.stop()
       s.table("graft_stream_join_left_sink").filter(col("user_id") >= 0)
         .orderBy("click_id", "purchase_id")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
+    }
 
   /** tmp_stream_hard_negatives body (r14): ONLINE hard-negative mining —
     * two micro-batches of anchor vectors probe the at-rest IVF index
@@ -901,7 +884,7 @@ object SparkEntry {
     * the index is read-only, so batch boundaries cannot change results
     * (pruned-probe parity is spec-pinned in StreamingSpec). */
   def streamHardNegativesQuery(s: SparkSession, dir: String): DataFrame =
-    withLowShuffle(s) { streamHardNegativesBody(s, dir) }
+    pinned(s, lowShuffle) { s => streamHardNegativesBody(s, dir) }
 
   private def streamHardNegativesBody(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -963,7 +946,7 @@ object SparkEntry {
     // 800 label<=3 vectors through 2 micro-batches + a closed audit: at
     // 32 shuffle partitions every foreachBatch join/commit is pure task
     // overhead (the tmp_stream_join 21.4->4.0 s lesson)
-    withLowShuffle(s) { streamCosineDedupBody(s, dir) }
+    pinned(s, lowShuffle) { s => streamCosineDedupBody(s, dir) }
 
   /** Pristine-state manager for the streaming cosine-dedup harness (r10
     * verdict task 1: the one-time index build must not be timed inside
@@ -5231,17 +5214,14 @@ object SparkEntry {
         graft.sources.BucketedLayout.writeBucketed(
           d, "graft_bprune_docs", Seq("doc_id"), buckets = 8)
         // autoBucketedScan would un-bucket a plain filter scan and
-        // forfeit pruning — pin it off so this row exercises the
-        // pruned read path (R11OpsSpec asserts SelectedBucketsCount),
-        // materialize EAGERLY, and restore the conf so the rest of
-        // the suite plans under defaults
-        s.conf.set(
-          "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-        try s.table("graft_bprune_docs")
-          .filter(col("doc_id").isin(7L, 123L))
-          .orderBy("doc_id").localCheckpoint(true)
-        finally s.conf.set(
-          "spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
+        // forfeit pruning — pin it off for this read so the row
+        // exercises the pruned read path (R11OpsSpec asserts
+        // SelectedBucketsCount) and materialize EAGERLY under the pin
+        pinned(s, "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
+          s => s.table("graft_bprune_docs")
+            .filter(col("doc_id").isin(7L, 123L))
+            .orderBy("doc_id").localCheckpoint(true)
+        }
       },
       Some("""SELECT doc_id, source, n_chars FROM documents WHERE doc_id IN (7, 123) ORDER BY doc_id""")),
 

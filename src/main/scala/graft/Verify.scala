@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,31 +8,7 @@ object Verify {
     // optional extra args: run only the named queries (builder iteration)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // KQL fidelity: failed casts yield null, not errors (SURVEY §7.4)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // fixture events.ts is TIMESTAMP(NANOS); read as long + normalize
-      // in graft.kql.Catalog
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // session-build extensions hook: graft_* SQL functions (the
-      // tmp_extensions_sql driver row proves the injection end-to-end)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Kryo for the one RDD path (connected components): Tuple2[Long,
-      // Long] shuffle rounds are ~2x cheaper than Java serialization;
-      // DataFrame shuffles (Tungsten UnsafeRow) are unaffected
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // 163 queries x many codegen'd stages blow through the default
-      // 100-entry generated-class cache, so later queries (and every
-      // pass-2 rerun) pay full JIT again — the main source of the
-      // in-bench-vs-standalone gap on the heavy rows
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.create(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -55,13 +30,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // the pair/group operators persist per-doc frames for within-query
-      // reuse; without a per-query clear those cached blocks accumulate
-      // across the 163-query session (same hygiene as Bench). RDD-level
-      // persists (CC localCheckpoint blocks) are invisible to
-      // clearCache() — unpersist them explicitly too.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      graft.ext.LlmOps.releaseCaches() // drain the persist-tracking queue
+      // reuse; without a per-query release those cached blocks
+      // accumulate across the session (same hygiene as Bench)
+      GraftSession.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

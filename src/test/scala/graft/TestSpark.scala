@@ -2,23 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all specs (KQL-fidelity configs match
-  * Verify.scala: ANSI off, UTC, nanos-as-long). */
+/** One shared local session for all specs, built with the same config
+  * Verify and Bench run (GraftSession.create). */
 object TestSpark {
-  java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // session-build extensions hook: graft_* SQL functions (the
-      // tmp_extensions_sql driver row proves the injection end-to-end)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.create("4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
