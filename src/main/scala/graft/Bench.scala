@@ -18,11 +18,11 @@ object Bench {
     // warm-up, when the bench's own 32 threads have already driven the
     // 1-min average to 5+ — only this pre-warmup sample can prove the
     // host was externally quiet (the r8 verdict's clean-host ask)
-    def loadavg0(): String =
+    def loadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split(" ").take(3).mkString(",")
       catch { case _: Throwable => "" }
-    val loadStart = loadavg0()
+    val loadStart = loadavg()
     // JIT/codegen warm-up: run every query once against the smallest
     // fixture so the timed pass below measures the engine, not
     // first-touch class loading and codegen compilation (cold-vs-warm
@@ -45,10 +45,6 @@ object Bench {
     // accumulated storage otherwise squeezes execution memory and
     // inflates the heavy shuffle queries (measured 2× on minhash by the
     // end of a 142-query pass).
-    def loadavg(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split(" ").take(3).mkString(",")
-      catch { case _: Throwable => "" }
     // bytes of block-manager storage currently in use — visible leak
     // detector: should be ~0 at every pass boundary after release
     def storageUsed(): Long =

@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.SessionShim
 
 /** The one place that decides how a graft Spark session is built, how a
-  * row runs with a pinned conf, and what is released after a row. Bench,
-  * Verify, Scale, Explain and the test session all build through here,
-  * so the config that is tested is the config that is benched. */
+  * row runs with a pinned conf, where a row stages files, and what is
+  * released after a row. Bench, Verify, Scale, Explain and the test
+  * session all build through here, so the config that is tested is the
+  * config that is benched. */
 object GraftSession {
   /** A `local[cpus]` session with graft's config (`getOrCreate`: an
     * existing session is returned, and only the runtime SQL confs below
@@ -60,10 +61,33 @@ object GraftSession {
     * persists (the CC loop's localCheckpoint blocks), which only
     * ContextCleaner GC would reclaim — on a large heap almost never — so
     * over a long pass the leaked blocks squeeze execution memory (r5
-    * verdict: llm_pipeline_v2 4.8→19.2 s in bench pass 2). */
+    * verdict: llm_pipeline_v2 4.8→19.2 s in bench pass 2). Also deletes
+    * every [[scratch]] directory handed out since the last release. */
   def release(s: SparkSession): Unit = {
     s.catalog.clearCache()
     s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     graft.ext.LlmOps.releaseCaches()
+    deleteScratch()
   }
+
+  private val scratchDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  // a caller that never releases (an application embedding the engine)
+  // still leaves nothing behind once the JVM exits
+  sys.addShutdownHook(deleteScratch())
+
+  /** A fresh, empty directory under `java.io.tmpdir` for a row's staging
+    * files (an index, a stream's checkpoint, a layout's output), unique
+    * to this call so no two rows or runs share one. [[release]] deletes
+    * every directory handed out since the last release, so a row's
+    * result must be consumed before the release that follows it. */
+  def scratch(name: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_${name}_").toFile
+    scratchDirs.add(dir)
+    dir.getPath
+  }
+
+  private def deleteScratch(): Unit =
+    Iterator.continually(scratchDirs.poll()).takeWhile(_ != null)
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
 }

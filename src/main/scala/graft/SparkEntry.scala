@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.kql.Kql
 import graft.ext.{LlmOps, TemporalOps}
 import graft.GraftSession.pinned
+import graft.streaming.StreamingOps
+import graft.streaming.StreamingOps.{drive, memoryStream, toMemory}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder brief.
   *
@@ -132,29 +134,25 @@ object SparkEntry {
   }
 
   /** tmp_stream_parity body: plan the KQL text onto a MemoryStream fed a
-    * bounded slice of `events`, drain it with an AvailableNow memory
-    * sink, and return the sunk rows (hash-checked against DuckDB's batch
-    * recompute by the driver). */
+    * bounded slice of `events`, drain it into a memory sink, and return
+    * the sunk rows (hash-checked against DuckDB's batch recompute). */
   def streamParityQuery(s: SparkSession, dir: String): DataFrame =
-    pinned(s, lowShuffle) { s => streamParityBody(s, dir) }
-
-  private def streamParityBody(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val rows = s.read.parquet(s"$dir/events.parquet")
-      .filter(col("event_id") <= 2000)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .as[(Long, String, Double)].collect().toSeq
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, Double)]
-    ms.addData(rows: _*)
-    val src = ms.toDF().toDF("event_id", "event_type", "value")
-    val out = Kql.runStream(s,
-      """src | summarize n = count(), s = sum(tolong(round(value * 100))) by event_type
-        | sort by event_type asc""",
-      dir, Map("src" -> src))
-    graft.streaming.StreamingOps.runToMemory(s, out, "tmp_stream_parity_sink", "complete")
-      .orderBy("event_type")
-  }
+    pinned(s, lowShuffle) { s =>
+      import s.implicits._
+      val rows = s.read.parquet(s"$dir/events.parquet")
+        .filter(col("event_id") <= 2000)
+        .select(col("event_id"), col("event_type"), col("value"))
+        .as[(Long, String, Double)].collect().toSeq
+      val (ms, src) = memoryStream[(Long, String, Double)](s,
+        "event_id", "event_type", "value")
+      ms.addData(rows: _*)
+      val out = Kql.runStream(s,
+        """src | summarize n = count(), s = sum(tolong(round(value * 100))) by event_type
+          | sort by event_type asc""",
+        dir, Map("src" -> src))
+      StreamingOps.runToMemory(s, out, "tmp_stream_parity_sink", "complete")
+        .orderBy("event_type")
+    }
 
   /** tmp_stream_line_dedup body (r6, verdict task 4): the STATEFUL
     * streaming path — two micro-batches of documents through
@@ -167,39 +165,28 @@ object SparkEntry {
     * idempotent; the memory stream is fed a BOUNDED 40-doc slice
     * (harness plumbing, not a data pass). */
   def streamLineDedupQuery(s: SparkSession, dir: String): DataFrame =
-    pinned(s, lowShuffle) { s => streamLineDedupBody(s, dir) }
-
-  private def streamLineDedupBody(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    // 4 file-buckets, sized to the 40-doc harness corpus (the cosine
-    // harness convention — bucket count is the at-rest layout dial);
-    // appends read the spec off the table, so batches land in 4 files
-    graft.ext.LlmOps.buildLineIndex(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "graft_stream_line_idx",
-      buckets = 4)
-    s.sql("DROP TABLE IF EXISTS graft_stream_line_kept")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), "graft_stream_line_kept")
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-    val rows = relined10(docs(s, dir)).filter(col("doc_id") < 40)
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect().toSeq
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val src = ms.toDF().toDF("doc_id", "text")
-    val q = graft.streaming.StreamingOps.lineDedupIncrementalStream(
-      src, "graft_stream_line_idx", "graft_stream_line_kept")
-    try {
-      ms.addData(rows.filter(_._1 < 20): _*)
-      q.processAllAvailable()
-      ms.addData(rows.filter(_._1 >= 20): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    s.catalog.refreshTable("graft_stream_line_kept")
-    s.table("graft_stream_line_kept")
-      .select(col("doc_id"), col("n_lines"), col("n_kept"), col("clean_text"),
-        col("__batch_id").cast("long").as("batch_id"))
-      .orderBy("doc_id")
-  }
+    pinned(s, lowShuffle) { s =>
+      import s.implicits._
+      // 4 file-buckets, sized to the 40-doc harness corpus (the cosine
+      // harness convention — bucket count is the at-rest layout dial);
+      // appends read the spec off the table, so batches land in 4 files
+      graft.ext.LlmOps.buildLineIndex(
+        Seq.empty[(Long, String)].toDF("doc_id", "text"), "graft_stream_line_idx",
+        buckets = 4)
+      graft.sources.BucketedLayout.clearStale(s, "graft_stream_line_kept")
+      val rows = relined10(docs(s, dir)).filter(col("doc_id") < 40)
+        .select(col("doc_id"), col("text")).as[(Long, String)].collect().toSeq
+      val (ms, src) = memoryStream[(Long, String)](s, "doc_id", "text")
+      drive(StreamingOps.lineDedupIncrementalStream(
+          src, "graft_stream_line_idx", "graft_stream_line_kept"))(
+        () => ms.addData(rows.filter(_._1 < 20): _*),
+        () => ms.addData(rows.filter(_._1 >= 20): _*))
+      s.catalog.refreshTable("graft_stream_line_kept")
+      s.table("graft_stream_line_kept")
+        .select(col("doc_id"), col("n_lines"), col("n_kept"), col("clean_text"),
+          col("__batch_id").cast("long").as("batch_id"))
+        .orderBy("doc_id")
+    }
 
   /** tmp_stream_matview body (r7, verdict task 7): ADX materialized-
     * view / update-policy semantics — a continuous `summarize n, s by
@@ -232,30 +219,21 @@ object SparkEntry {
   private val lowShuffle = "spark.sql.shuffle.partitions" -> "4"
 
   def streamTopkQuery(s: SparkSession, dir: String): DataFrame =
-    pinned(s, lowShuffle) { s => streamTopkBody(s, dir) }
-
-  private def streamTopkBody(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val rows = docs(s, dir).filter(col("doc_id") < 40)
-      .select(col("doc_id"), coalesce(col("text"), lit("")))
-      .as[(Long, String)].collect().toSeq
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val src = ms.toDF().toDF("doc_id", "text")
-    val topk = src.select(explode(split(lower(col("text")), "\\s+")).as("tok"))
-      .filter(length(col("tok")) >= 1)
-      .groupBy("tok").agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("tok")).limit(10)
-    val q = topk.writeStream.format("memory")
-      .queryName("graft_stream_topk_sink").outputMode("complete").start()
-    try {
-      ms.addData(rows.filter(_._1 < 20): _*)
-      q.processAllAvailable()
-      ms.addData(rows.filter(_._1 >= 20): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    s.table("graft_stream_topk_sink").orderBy(col("cnt").desc, col("tok"))
-  }
+    pinned(s, lowShuffle) { s =>
+      import s.implicits._
+      val rows = docs(s, dir).filter(col("doc_id") < 40)
+        .select(col("doc_id"), coalesce(col("text"), lit("")))
+        .as[(Long, String)].collect().toSeq
+      val (ms, src) = memoryStream[(Long, String)](s, "doc_id", "text")
+      val topk = src.select(explode(split(lower(col("text")), "\\s+")).as("tok"))
+        .filter(length(col("tok")) >= 1)
+        .groupBy("tok").agg(count(lit(1)).as("cnt"))
+        .orderBy(col("cnt").desc, col("tok")).limit(10)
+      drive(toMemory(topk, "graft_stream_topk_sink", "complete"))(
+        () => ms.addData(rows.filter(_._1 < 20): _*),
+        () => ms.addData(rows.filter(_._1 >= 20): _*))
+      s.table("graft_stream_topk_sink").orderBy(col("cnt").desc, col("tok"))
+    }
 
   /** tmp_stream_session body: stateful SESSION WINDOWS made driver-
     * visible — gap-based sessions (30 min) per user over two time-
@@ -329,7 +307,6 @@ object SparkEntry {
   private def streamSessionBody(s: SparkSession, dir: String,
       sink: String = "graft_stream_session_sink"): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val evs = s.read.parquet(s"$dir/events.parquet")
       .filter(col("event_id") <= 2000)
       .select(col("event_id"),
@@ -340,24 +317,16 @@ object SparkEntry {
     // (sf0.001's slice tops out below id 1000); events are time-ordered
     // by event_id, so batch 2 never falls behind batch 1's watermark
     val halfId = evs.map(_._1).max / 2
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val src = ms.toDF().toDF("event_id", "ts_us", "user_id")
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-    val sess = graft.streaming.StreamingOps.sessionAgg(
-      src, "30 minutes", "10 seconds")
+    val (ms, raw) = memoryStream[(Long, Long, Long)](s, "event_id", "ts_us", "user_id")
+    val src = raw.withColumn("ts", timestamp_micros(col("ts_us")))
+    val sess = StreamingOps.sessionAgg(src, "30 minutes", "10 seconds")
       .select(col("user_id"), unix_micros(col("sess_start")).as("start_us"),
         unix_micros(col("sess_end")).as("end_us"), col("n_events"))
-    val q = sess.writeStream.format("memory")
-      .queryName(sink).outputMode("append").start()
-    try {
-      ms.addData(evs.filter(_._1 < halfId): _*)
-      q.processAllAvailable()
-      ms.addData(evs.filter(_._1 >= halfId) :+
-        ((888888L, maxTs + 86400L * 1000000L, -1L)): _*)
-      q.processAllAvailable()
-      ms.addData((888889L, maxTs + 2 * 86400L * 1000000L, -1L))
-      q.processAllAvailable()
-    } finally q.stop()
+    drive(toMemory(sess, sink, "append"))(
+      () => ms.addData(evs.filter(_._1 < halfId): _*),
+      () => ms.addData(evs.filter(_._1 >= halfId) :+
+        ((888888L, maxTs + 86400L * 1000000L, -1L)): _*),
+      () => ms.addData((888889L, maxTs + 2 * 86400L * 1000000L, -1L)))
     s.table(sink).filter(col("user_id") >= 0)
       .orderBy("user_id", "start_us")
   }
@@ -369,36 +338,26 @@ object SparkEntry {
     * to starts floor30(t) and floor30(t) − 30 min). Two micro-batches;
     * cumulative counts must merge across the batch boundary. */
   def streamSlidingQuery(s: SparkSession, dir: String): DataFrame =
-    pinned(s, lowShuffle) { s => streamSlidingBody(s, dir) }
-
-  private def streamSlidingBody(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val rows = s.read.parquet(s"$dir/events.parquet")
-      .filter(col("event_id") <= 2000)
-      .select(col("event_id"),
-        unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
-      .as[(Long, Long, Double)].collect().toSeq
-    val halfId = rows.map(_._1).max / 2
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
-    val src = ms.toDF().toDF("event_id", "ts_us", "value")
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-    val agg = src
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-      .agg(count(lit(1)).as("n"),
-        sum(expr("CAST(ROUND(value * 100) AS BIGINT)")).as("cents"))
-      .select(unix_micros(col("window.start")).as("start_us"),
-        col("n"), col("cents"))
-    val q = agg.writeStream.format("memory")
-      .queryName("graft_stream_sliding_sink").outputMode("complete").start()
-    try {
-      ms.addData(rows.filter(_._1 < halfId): _*)
-      q.processAllAvailable()
-      ms.addData(rows.filter(_._1 >= halfId): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    s.table("graft_stream_sliding_sink").orderBy("start_us")
-  }
+    pinned(s, lowShuffle) { s =>
+      import s.implicits._
+      val rows = s.read.parquet(s"$dir/events.parquet")
+        .filter(col("event_id") <= 2000)
+        .select(col("event_id"),
+          unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
+        .as[(Long, Long, Double)].collect().toSeq
+      val halfId = rows.map(_._1).max / 2
+      val (ms, raw) = memoryStream[(Long, Long, Double)](s, "event_id", "ts_us", "value")
+      val agg = raw.withColumn("ts", timestamp_micros(col("ts_us")))
+        .groupBy(window(col("ts"), "1 hour", "30 minutes"))
+        .agg(count(lit(1)).as("n"),
+          sum(expr("CAST(ROUND(value * 100) AS BIGINT)")).as("cents"))
+        .select(unix_micros(col("window.start")).as("start_us"),
+          col("n"), col("cents"))
+      drive(toMemory(agg, "graft_stream_sliding_sink", "complete"))(
+        () => ms.addData(rows.filter(_._1 < halfId): _*),
+        () => ms.addData(rows.filter(_._1 >= halfId): _*))
+      s.table("graft_stream_sliding_sink").orderBy("start_us")
+    }
 
   /** tmp_stream_dedup_wm body: Spark's NATIVE watermarked streaming
     * dedup (dropDuplicatesWithinWatermark) driver-visible, proving BOTH
@@ -416,7 +375,6 @@ object SparkEntry {
   def streamDedupWmQuery(s: SparkSession, dir: String): DataFrame =
     pinned(s, lowShuffle) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val evs = s.read.parquet(s"$dir/events.parquet")
         .filter(col("event_id") <= 2000)
         .select(col("event_id"),
@@ -436,21 +394,14 @@ object SparkEntry {
       val sentinelTs = maxTs1 + 400L * 86400 * 1000000
       val b3 = b1.collect { case (id, _, _) if id % 5 == 1 =>
         (id, sentinelTs + 86400L * 1000000, "b3") }
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
-      val src = ms.toDF().toDF("key", "ts_us", "src")
-        .withColumn("ts", timestamp_micros(col("ts_us")))
-      val dd = graft.streaming.StreamingOps.dedupStream(src, "key", "90 days")
+      val (ms, raw) = memoryStream[(Long, Long, String)](s, "key", "ts_us", "src")
+      val src = raw.withColumn("ts", timestamp_micros(col("ts_us")))
+      val dd = StreamingOps.dedupStream(src, "key", "90 days")
         .select(col("key"), col("src"), col("ts_us"))
-      val q = dd.writeStream.format("memory")
-        .queryName("graft_stream_ddwm_sink").outputMode("append").start()
-      try {
-        ms.addData(b1: _*)
-        q.processAllAvailable()
-        ms.addData((b2dups ++ b2new) :+ ((-1L, sentinelTs, "s")): _*)
-        q.processAllAvailable()
-        ms.addData(b3: _*)
-        q.processAllAvailable()
-      } finally q.stop()
+      drive(toMemory(dd, "graft_stream_ddwm_sink", "append"))(
+        () => ms.addData(b1: _*),
+        () => ms.addData((b2dups ++ b2new) :+ ((-1L, sentinelTs, "s")): _*),
+        () => ms.addData(b3: _*))
       s.table("graft_stream_ddwm_sink").filter(col("key") >= 0)
         .orderBy("key", "src")
     }
@@ -465,7 +416,6 @@ object SparkEntry {
   def streamEnrichQuery(s: SparkSession, dir: String): DataFrame =
     pinned(s, lowShuffle) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val evs = s.read.parquet(s"$dir/events.parquet")
         .filter(col("event_id") <= 2000)
         .select(col("event_id"), col("user_id"),
@@ -476,18 +426,12 @@ object SparkEntry {
       val dim = s.range(0, 10000).select(col("id").as("user_id"))
         .filter(pmod(col("user_id"), lit(3)) =!= 1)
         .withColumn("tier", concat(lit("t"), pmod(col("user_id"), lit(4))))
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      val src = ms.toDF().toDF("event_id", "user_id", "cents")
+      val (ms, src) = memoryStream[(Long, Long, Long)](s, "event_id", "user_id", "cents")
       val joined = src.join(broadcast(dim), Seq("user_id"), "left_outer")
         .select(col("event_id"), col("user_id"), col("cents"), col("tier"))
-      val q = joined.writeStream.format("memory")
-        .queryName("graft_stream_enrich_sink").outputMode("append").start()
-      try {
-        ms.addData(evs.filter(_._1 < half): _*)
-        q.processAllAvailable()
-        ms.addData(evs.filter(_._1 >= half): _*)
-        q.processAllAvailable()
-      } finally q.stop()
+      drive(toMemory(joined, "graft_stream_enrich_sink", "append"))(
+        () => ms.addData(evs.filter(_._1 < half): _*),
+        () => ms.addData(evs.filter(_._1 >= half): _*))
       s.table("graft_stream_enrich_sink").orderBy("event_id")
     }
 
@@ -501,33 +445,26 @@ object SparkEntry {
   def streamUnionQuery(s: SparkSession, dir: String): DataFrame =
     pinned(s, lowShuffle) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val evs = s.read.parquet(s"$dir/events.parquet")
         .filter(col("event_id") <= 2000)
         .select(col("event_id"), col("user_id"), col("event_type"),
           expr("CAST(ROUND(value * 100) AS BIGINT)").as("cents"))
         .as[(Long, Long, String, Long)].collect().toSeq
       val half = evs.map(_._1).max / 2
-      val msA = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String, Long)]
-      val msB = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String, Long)]
-      def frame(ms: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String, Long)]) =
-        ms.toDF().toDF("event_id", "user_id", "event_type", "cents")
-      val agg = frame(msA).unionByName(frame(msB))
+      val cols = Seq("event_id", "user_id", "event_type", "cents")
+      val (msA, srcA) = memoryStream[(Long, Long, String, Long)](s, cols: _*)
+      val (msB, srcB) = memoryStream[(Long, Long, String, Long)](s, cols: _*)
+      val agg = srcA.unionByName(srcB)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
-      val q = agg.writeStream.format("memory")
-        .queryName("graft_stream_union_sink").outputMode("complete").start()
-      try {
-        // each source delivers HALF its slice per round: state must
-        // merge across sources AND rounds
-        val (a, b) = evs.partition(_._1 < half)
-        val (a1, a2) = a.splitAt(a.size / 2)
-        val (b1, b2) = b.splitAt(b.size / 2)
-        msA.addData(a1: _*); msB.addData(b1: _*)
-        q.processAllAvailable()
-        msA.addData(a2: _*); msB.addData(b2: _*)
-        q.processAllAvailable()
-      } finally q.stop()
+      // each source delivers HALF its slice per round: state must
+      // merge across sources AND rounds
+      val (a, b) = evs.partition(_._1 < half)
+      val (a1, a2) = a.splitAt(a.size / 2)
+      val (b1, b2) = b.splitAt(b.size / 2)
+      drive(toMemory(agg, "graft_stream_union_sink", "complete"))(
+        () => { msA.addData(a1: _*); msB.addData(b1: _*) },
+        () => { msA.addData(a2: _*); msB.addData(b2: _*) })
       s.table("graft_stream_union_sink").orderBy("event_type")
     }
 
@@ -542,8 +479,6 @@ object SparkEntry {
   def streamScanQuery(s: SparkSession, dir: String): DataFrame =
     pinned(s, lowShuffle) { s =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import org.apache.spark.sql.streaming.Trigger
       val evs = s.read.parquet(s"$dir/events.parquet")
         .filter(col("event_id") <= 2000)
         .select(col("event_id"), col("user_id"),
@@ -551,26 +486,20 @@ object SparkEntry {
           expr("CAST(ROUND(value * 100) AS BIGINT)").as("cents"))
         .as[(Long, Long, Long, Long)].collect().toSeq
       val halfId = evs.map(_._1).max / 2
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long, Long)]
-      val src = ms.toDF().toDF("event_id", "user_id", "ts_us", "cents")
+      val (ms, src) = memoryStream[(Long, Long, Long, Long)](s,
+        "event_id", "user_id", "ts_us", "cents")
       val q =
         """src
           | partition by user_id (sort by ts_us asc, event_id asc
             | scan declare (rs:long=0) with (step s: true => rs = rs + cents))
           | project user_id, event_id, rs"""
       val out = Kql.runStream(s, q, dir, Map("src" -> src))
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_scan_ckpt").toString
-      val outDir = java.nio.file.Files.createTempDirectory("graft_scan_out").toString
-      def drain(): Unit = {
-        val sq = out.writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        sq.awaitTermination()
-      }
+      val ckpt = GraftSession.scratch("scan_ckpt")
+      val outDir = GraftSession.scratch("scan_out")
       ms.addData(evs.filter(_._1 < halfId): _*)
-      drain()
+      StreamingOps.runToParquet(out, outDir, ckpt)
       ms.addData(evs.filter(_._1 >= halfId): _*)
-      drain()
+      StreamingOps.runToParquet(out, outDir, ckpt)
       s.read.parquet(outDir).orderBy("user_id", "event_id")
     }
 
@@ -585,94 +514,76 @@ object SparkEntry {
     * dropped/duplicated batch row, a broken partial merge (avg, HLL
     * dcount, arg_max struct), or a cursor bug all mismatch. */
   def streamMatViewRefreshQuery(s: SparkSession, dir: String): DataFrame =
-    pinned(s, lowShuffle) { s => streamMatViewRefreshQueryBody(s, dir) }
-
-  private def streamMatViewRefreshQueryBody(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val ev = graft.kql.Catalog(s, dir).table("events")
-      .filter(col("event_id") <= 2000)
-      .select(col("event_id"),
-        expr("unix_micros(cast(ts as timestamp)) div 3600000000").as("bin_h"),
-        round(col("value") * 100).cast("long").as("cents"),
-        col("event_type"))
-    val stage = s"${System.getProperty("java.io.tmpdir")}/graft_mv_live_stage"
-    // seed under __batch_id=-1: the maintainer writes each micro-batch
-    // to its own __batch_id partition (idempotent replays), so the
-    // stage layout must be uniformly partitioned
-    ev.filter(col("event_id") <= 700)
-      .withColumn("__batch_id", lit(-1L))
-      .write.mode("overwrite").partitionBy("__batch_id").parquet(stage)
-    val aggs = Seq(
-      graft.sources.MatAgg("count", "", "n"),
-      graft.sources.MatAgg("sum", "cents", "s"),
-      graft.sources.MatAgg("avg", "cents", "avg_c"),
-      graft.sources.MatAgg("dcount", "event_type", "d_types"),
-      graft.sources.MatAgg("arg_max", "event_id|event_type", "latest_type"))
-    graft.sources.MatViewLayout.build(s.read.parquet(stage),
-      "graft_mv_stream", "events_live", Seq("bin_h"), aggs,
-      "event_id", 700L)
-    val rows = ev.filter(col("event_id") > 700)
-      .as[(Long, Long, Long, String)].collect().toSeq
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long, String)]
-    val src = ms.toDF().toDF("event_id", "bin_h", "cents", "event_type")
-    val q = graft.streaming.StreamingOps.matViewMaintainStream(
-      src, "graft_mv_stream", stage, "event_id")
-    try {
-      ms.addData(rows.filter(_._1 <= 1400): _*)
-      q.processAllAvailable()
-      ms.addData(rows.filter(_._1 > 1400): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    // the maintainer rewrote meta and store from the stream's own
-    // session; this session may still hold an earlier run's listing
-    s.catalog.refreshTable("graft_mv_stream_meta")
-    // cursor must sit at the stream's high-water mark: the read below
-    // is then served from the store alone (delta scan empty)
-    val cur = s.table("graft_mv_stream_meta").head().getLong(4)
-    s.catalog.refreshTable(s"graft_mv_stream_store_c$cur")
-    require(cur == rows.map(_._1).max,
-      s"matview maintainer left cursor at $cur")
-    graft.sources.MatViewLayout.read(s, "graft_mv_stream",
-      _ => s.read.parquet(stage))
-      .orderBy("bin_h")
-  }
+    pinned(s, lowShuffle) { s =>
+      import s.implicits._
+      val ev = graft.kql.Catalog(s, dir).table("events")
+        .filter(col("event_id") <= 2000)
+        .select(col("event_id"),
+          expr("unix_micros(cast(ts as timestamp)) div 3600000000").as("bin_h"),
+          round(col("value") * 100).cast("long").as("cents"),
+          col("event_type"))
+      val stage = GraftSession.scratch("mv_live_stage")
+      // seed under __batch_id=-1: the maintainer writes each micro-batch
+      // to its own __batch_id partition (idempotent replays), so the
+      // stage layout must be uniformly partitioned
+      ev.filter(col("event_id") <= 700)
+        .withColumn("__batch_id", lit(-1L))
+        .write.mode("overwrite").partitionBy("__batch_id").parquet(stage)
+      val aggs = Seq(
+        graft.sources.MatAgg("count", "", "n"),
+        graft.sources.MatAgg("sum", "cents", "s"),
+        graft.sources.MatAgg("avg", "cents", "avg_c"),
+        graft.sources.MatAgg("dcount", "event_type", "d_types"),
+        graft.sources.MatAgg("arg_max", "event_id|event_type", "latest_type"))
+      graft.sources.MatViewLayout.build(s.read.parquet(stage),
+        "graft_mv_stream", "events_live", Seq("bin_h"), aggs,
+        "event_id", 700L)
+      val rows = ev.filter(col("event_id") > 700)
+        .as[(Long, Long, Long, String)].collect().toSeq
+      val (ms, src) = memoryStream[(Long, Long, Long, String)](s,
+        "event_id", "bin_h", "cents", "event_type")
+      drive(StreamingOps.matViewMaintainStream(
+          src, "graft_mv_stream", stage, "event_id"))(
+        () => ms.addData(rows.filter(_._1 <= 1400): _*),
+        () => ms.addData(rows.filter(_._1 > 1400): _*))
+      // the maintainer rewrote meta and store from the stream's own
+      // session; this session may still hold an earlier run's listing
+      s.catalog.refreshTable("graft_mv_stream_meta")
+      // cursor must sit at the stream's high-water mark: the read below
+      // is then served from the store alone (delta scan empty)
+      val cur = s.table("graft_mv_stream_meta").head().getLong(4)
+      s.catalog.refreshTable(s"graft_mv_stream_store_c$cur")
+      require(cur == rows.map(_._1).max,
+        s"matview maintainer left cursor at $cur")
+      graft.sources.MatViewLayout.read(s, "graft_mv_stream",
+        _ => s.read.parquet(stage))
+        .orderBy("bin_h")
+    }
 
   def streamMatViewQuery(s: SparkSession, dir: String): DataFrame =
-    pinned(s, lowShuffle) { s => streamMatViewQueryBody(s, dir) }
-
-  private def streamMatViewQueryBody(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    s.sql("DROP TABLE IF EXISTS graft_stream_matview")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), "graft_stream_matview")
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-    // epoch-µs ints into the stream (session TZ is UTC, so the NTZ
-    // cast is identity) — matches the oracle's epoch_us convention
-    val rows = s.read.parquet(s"$dir/events.parquet")
-      .filter(col("event_id") <= 2000)
-      .select(col("event_id"),
-        unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
-      .as[(Long, Long, Double)].collect().toSeq
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
-    val src = ms.toDF().toDF("event_id", "ts_us", "value")
-    val agg = src
-      .groupBy(expr("ts_us div 3600000000").as("bin_h"))
-      .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 100).cast("long")).as("s"))
-    val q = graft.streaming.StreamingOps.matViewStream(agg, "graft_stream_matview")
-    try {
-      ms.addData(rows.filter(_._1 < 1000): _*)
-      q.processAllAvailable()
-      ms.addData(rows.filter(_._1 >= 1000): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    s.catalog.refreshTable("graft_stream_matview")
-    graft.streaming.StreamingOps.matViewRead(s, "graft_stream_matview", Seq("bin_h"))
-      .select(col("bin_h"), col("n"), col("s"), col("n_updates"))
-      .orderBy("bin_h")
-  }
+    pinned(s, lowShuffle) { s =>
+      import s.implicits._
+      graft.sources.BucketedLayout.clearStale(s, "graft_stream_matview")
+      // epoch-µs ints into the stream (session TZ is UTC, so the NTZ
+      // cast is identity) — matches the oracle's epoch_us convention
+      val rows = s.read.parquet(s"$dir/events.parquet")
+        .filter(col("event_id") <= 2000)
+        .select(col("event_id"),
+          unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
+        .as[(Long, Long, Double)].collect().toSeq
+      val (ms, src) = memoryStream[(Long, Long, Double)](s, "event_id", "ts_us", "value")
+      val agg = src
+        .groupBy(expr("ts_us div 3600000000").as("bin_h"))
+        .agg(count(lit(1)).as("n"),
+          sum(round(col("value") * 100).cast("long")).as("s"))
+      drive(StreamingOps.matViewStream(agg, "graft_stream_matview"))(
+        () => ms.addData(rows.filter(_._1 < 1000): _*),
+        () => ms.addData(rows.filter(_._1 >= 1000): _*))
+      s.catalog.refreshTable("graft_stream_matview")
+      StreamingOps.matViewRead(s, "graft_stream_matview", Seq("bin_h"))
+        .select(col("bin_h"), col("n"), col("s"), col("n_updates"))
+        .orderBy("bin_h")
+    }
 
   /** tmp_stream_matview_late body (r7): WATERMARK semantics made
     * driver-visible — the same update-mode materialized view as
@@ -689,43 +600,32 @@ object SparkEntry {
     * watermark boundary — the drop decision is unambiguous on any
     * boundary convention. */
   def streamMatViewLateQuery(s: SparkSession, dir: String): DataFrame =
-    pinned(s, lowShuffle) { s => streamMatViewLateQueryBody(s, dir) }
-
-  private def streamMatViewLateQueryBody(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    s.sql("DROP TABLE IF EXISTS graft_stream_matview_late")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), "graft_stream_matview_late")
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-    val evs = s.read.parquet(s"$dir/events.parquet")
-      .filter(col("event_id") <= 2000)
-      .select(col("event_id"),
-        unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
-      .as[(Long, Long, Double)].collect().toSeq
-    val b1 = evs.filter(_._1 <= 1000)
-    val b2 = evs.filter(_._1 > 1000) :+ ((999999L, b1.map(_._2).min, 12345.0))
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
-    val src = ms.toDF().toDF("event_id", "ts_us", "value")
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .withWatermark("ts", "3700 seconds")
-    val agg = src.groupBy(window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 100).cast("long")).as("s"))
-      .select(expr("unix_micros(window.start) div 3600000000").as("bin_h"),
-        col("n"), col("s"))
-    val q = graft.streaming.StreamingOps.matViewStream(agg, "graft_stream_matview_late")
-    try {
-      ms.addData(b1: _*)
-      q.processAllAvailable()
-      ms.addData(b2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    s.catalog.refreshTable("graft_stream_matview_late")
-    graft.streaming.StreamingOps.matViewRead(s, "graft_stream_matview_late", Seq("bin_h"))
-      .select(col("bin_h"), col("n"), col("s"), col("n_updates"))
-      .orderBy("bin_h")
-  }
+    pinned(s, lowShuffle) { s =>
+      import s.implicits._
+      graft.sources.BucketedLayout.clearStale(s, "graft_stream_matview_late")
+      val evs = s.read.parquet(s"$dir/events.parquet")
+        .filter(col("event_id") <= 2000)
+        .select(col("event_id"),
+          unix_micros(col("ts").cast("timestamp")).as("ts_us"), col("value"))
+        .as[(Long, Long, Double)].collect().toSeq
+      val b1 = evs.filter(_._1 <= 1000)
+      val b2 = evs.filter(_._1 > 1000) :+ ((999999L, b1.map(_._2).min, 12345.0))
+      val (ms, raw) = memoryStream[(Long, Long, Double)](s, "event_id", "ts_us", "value")
+      val src = raw.withColumn("ts", timestamp_micros(col("ts_us")))
+        .withWatermark("ts", "3700 seconds")
+      val agg = src.groupBy(window(col("ts"), "1 hour"))
+        .agg(count(lit(1)).as("n"),
+          sum(round(col("value") * 100).cast("long")).as("s"))
+        .select(expr("unix_micros(window.start) div 3600000000").as("bin_h"),
+          col("n"), col("s"))
+      drive(StreamingOps.matViewStream(agg, "graft_stream_matview_late"))(
+        () => ms.addData(b1: _*),
+        () => ms.addData(b2: _*))
+      s.catalog.refreshTable("graft_stream_matview_late")
+      StreamingOps.matViewRead(s, "graft_stream_matview_late", Seq("bin_h"))
+        .select(col("bin_h"), col("n"), col("s"), col("n_updates"))
+        .orderBy("bin_h")
+    }
 
   /** tmp_stream_join body (r8): STREAM-STREAM inner join parity — the
     * one §2.10 join shape the earlier rows don't cover (stream-static
@@ -762,49 +662,53 @@ object SparkEntry {
     // sub-kilobyte harness batches the commit overhead is the whole
     // cost (32->4 measured 21.4->4.0 s in r8; 4->2 shaves the remaining
     // floor).
-    pinned(s, joinShuffle) { s => streamStreamJoinBody(s, dir) }
+    pinned(s, joinShuffle) { s =>
+      val evs = clicksAndPurchases(s, dir)
+      val (msC, clicks) = joinSide(s, "c")
+      val (msP, purchases) = joinSide(s, "p")
+      val joined = clicks.join(purchases,
+        col("c_user") === col("p_user") &&
+          col("p_ts") >= col("c_ts") &&
+          col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
+        .select(col("c_id").as("click_id"), col("p_id").as("purchase_id"),
+          col("c_user").as("user_id"),
+          (col("p_ts_us") - col("c_ts_us")).as("dt_us"))
+      def feed(batch: Seq[(Long, Long, Long, String)]): Unit = {
+        msC.addData(batch.filter(_._4 == "click").map(t => (t._1, t._2, t._3)): _*)
+        msP.addData(batch.filter(_._4 == "purchase").map(t => (t._1, t._2, t._3)): _*)
+      }
+      drive(toMemory(joined, "graft_stream_join_sink", "append"))(
+        () => feed(evs.filter(_._1 < 516)),
+        () => feed(evs.filter(t => t._1 >= 516 && t._1 < 836)),
+        () => feed(evs.filter(_._1 >= 836)))
+      s.table("graft_stream_join_sink").orderBy("click_id", "purchase_id")
+    }
 
   private val joinShuffle = "spark.sql.shuffle.partitions" -> "2"
 
-  private def streamStreamJoinBody(s: SparkSession, dir: String): DataFrame = {
+  /** The click and purchase events of the stream-join rows' bounded
+    * slice, as (event_id, user_id, ts_us, event_type). */
+  private def clicksAndPurchases(s: SparkSession,
+                                 dir: String): Seq[(Long, Long, Long, String)] = {
     import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val evs = s.read.parquet(s"$dir/events.parquet")
+    s.read.parquet(s"$dir/events.parquet")
       .filter(col("event_id") <= 2000 &&
         col("event_type").isin("click", "purchase"))
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("ts_us"),
         col("event_type"))
       .as[(Long, Long, Long, String)].collect().toSeq
-    val msC = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val msP = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    def side(ms: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)],
-             pre: String) =
-      ms.toDF().toDF(s"${pre}_id", s"${pre}_user", s"${pre}_ts_us")
-        .withColumn(s"${pre}_ts", timestamp_micros(col(s"${pre}_ts_us")))
-        .withWatermark(s"${pre}_ts", "3700 seconds")
-    val joined = side(msC, "c").join(side(msP, "p"),
-      col("c_user") === col("p_user") &&
-        col("p_ts") >= col("c_ts") &&
-        col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
-      .select(col("c_id").as("click_id"), col("p_id").as("purchase_id"),
-        col("c_user").as("user_id"),
-        (col("p_ts_us") - col("c_ts_us")).as("dt_us"))
-    val q = joined.writeStream.format("memory")
-      .queryName("graft_stream_join_sink").outputMode("append").start()
-    def feed(batch: Seq[(Long, Long, Long, String)]): Unit = {
-      msC.addData(batch.filter(_._4 == "click").map(t => (t._1, t._2, t._3)): _*)
-      msP.addData(batch.filter(_._4 == "purchase").map(t => (t._1, t._2, t._3)): _*)
-    }
-    try {
-      feed(evs.filter(_._1 < 516))
-      q.processAllAvailable()
-      feed(evs.filter(t => t._1 >= 516 && t._1 < 836))
-      q.processAllAvailable()
-      feed(evs.filter(_._1 >= 836))
-      q.processAllAvailable()
-    } finally q.stop()
-    s.table("graft_stream_join_sink").orderBy("click_id", "purchase_id")
+  }
+
+  /** One side of the stream-join rows: (id, user, ts_us) rows with
+    * columns prefixed `pre`, an event-time column and a 3700 s
+    * watermark. */
+  private def joinSide(s: SparkSession, pre: String) = {
+    import s.implicits._
+    val (ms, raw) = memoryStream[(Long, Long, Long)](s,
+      s"${pre}_id", s"${pre}_user", s"${pre}_ts_us")
+    (ms, raw.withColumn(s"${pre}_ts", timestamp_micros(col(s"${pre}_ts_us")))
+      .withWatermark(s"${pre}_ts", "3700 seconds"))
   }
 
   /** tmp_stream_join_left body: stream-stream LEFT OUTER join — the
@@ -821,24 +725,11 @@ object SparkEntry {
   def streamStreamLeftJoinQuery(s: SparkSession, dir: String): DataFrame =
     // 2 partitions: same state-store-commit reasoning as the inner join
     pinned(s, joinShuffle) { s =>
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val evs = s.read.parquet(s"$dir/events.parquet")
-        .filter(col("event_id") <= 2000 &&
-          col("event_type").isin("click", "purchase"))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts").cast("timestamp")).as("ts_us"),
-          col("event_type"))
-        .as[(Long, Long, Long, String)].collect().toSeq
+      val evs = clicksAndPurchases(s, dir)
       val maxTs = evs.map(_._3).max
-      val msC = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      val msP = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      def side(ms: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)],
-               pre: String) =
-        ms.toDF().toDF(s"${pre}_id", s"${pre}_user", s"${pre}_ts_us")
-          .withColumn(s"${pre}_ts", timestamp_micros(col(s"${pre}_ts_us")))
-          .withWatermark(s"${pre}_ts", "3700 seconds")
-      val joined = side(msC, "c").join(side(msP, "p"),
+      val (msC, clicks) = joinSide(s, "c")
+      val (msP, purchases) = joinSide(s, "p")
+      val joined = clicks.join(purchases,
         col("c_user") === col("p_user") &&
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"),
@@ -846,8 +737,6 @@ object SparkEntry {
         .select(col("c_id").as("click_id"), col("p_id").as("purchase_id"),
           col("c_user").as("user_id"),
           (col("p_ts_us") - col("c_ts_us")).as("dt_us"))
-      val q = joined.writeStream.format("memory")
-        .queryName("graft_stream_join_left_sink").outputMode("append").start()
       def feed(batch: Seq[(Long, Long, Long, String)]): Unit = {
         msC.addData(batch.filter(_._4 == "click").map(t => (t._1, t._2, t._3)): _*)
         msP.addData(batch.filter(_._4 == "purchase").map(t => (t._1, t._2, t._3)): _*)
@@ -856,19 +745,16 @@ object SparkEntry {
         msC.addData((777000L + daysAhead, -1L, maxTs + daysAhead * 86400000000L))
         msP.addData((778000L + daysAhead, -1L, maxTs + daysAhead * 86400000000L))
       }
-      try {
-        // 3 blocking rounds, not 4 (r11): the first sentinel pair rides
-        // the second data batch — watermarks update BETWEEN batches, so
-        // the combined batch still joins its real rows under the old
-        // watermark, and the final sentinel batch flushes every
-        // unmatched click exactly as before (output-invariant; each
-        // round is 4 state stores × partitions of commit overhead)
-        feed(evs.filter(_._1 < 836))
-        q.processAllAvailable()
-        feed(evs.filter(_._1 >= 836)); sentinel(3)
-        q.processAllAvailable()
-        sentinel(6); q.processAllAvailable()
-      } finally q.stop()
+      // 3 blocking rounds, not 4 (r11): the first sentinel pair rides
+      // the second data batch — watermarks update BETWEEN batches, so
+      // the combined batch still joins its real rows under the old
+      // watermark, and the final sentinel batch flushes every
+      // unmatched click exactly as before (output-invariant; each
+      // round is 4 state stores × partitions of commit overhead)
+      drive(toMemory(joined, "graft_stream_join_left_sink", "append"))(
+        () => feed(evs.filter(_._1 < 836)),
+        () => { feed(evs.filter(_._1 >= 836)); sentinel(3) },
+        () => sentinel(6))
       s.table("graft_stream_join_left_sink").filter(col("user_id") >= 0)
         .orderBy("click_id", "purchase_id")
     }
@@ -884,69 +770,30 @@ object SparkEntry {
     * the index is read-only, so batch boundaries cannot change results
     * (pruned-probe parity is spec-pinned in StreamingSpec). */
   def streamHardNegativesQuery(s: SparkSession, dir: String): DataFrame =
-    pinned(s, lowShuffle) { s => streamHardNegativesBody(s, dir) }
-
-  private def streamHardNegativesBody(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val e = embs(s, dir)
-    val path = sys.props("java.io.tmpdir") + "/graft_hn_stream_idx_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    // the anchor index is REBUILT (overwrite) on every pass: the old
-    // skip-if-_SUCCESS reused a PREVIOUS RUN's on-disk artifact — the
-    // same cross-run pattern the r11 verdict flagged on plantedImages
-    // (and staleness-unsafe for a regenerated fixture at the same dir).
-    // The build is this streaming row's seed setup and is priced in it.
-    val cents = LlmOps.buildIvfIndex(e, path, nLists = 8)
-    s.sql("DROP TABLE IF EXISTS graft_stream_hn")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), "graft_stream_hn")
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-    val anchors = e.filter(pmod(col("vec_id"), lit(100)) === 0)
-      .select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>"))
-      .as[(Long, Long, Seq[Double])].collect().toSeq
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Seq[Double])]
-    val src = ms.toDF().toDF("vec_id", "label", "embedding")
-    val q = graft.streaming.StreamingOps.hardNegativesStream(
-      src, path, cents, "graft_stream_hn", k = 5, nProbe = 8)
-    try {
-      ms.addData(anchors.filter(_._1 % 200 == 0): _*)
-      q.processAllAvailable()
-      ms.addData(anchors.filter(_._1 % 200 != 0): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    s.catalog.refreshTable("graft_stream_hn")
-    s.table("graft_stream_hn")
-      .select(col("anchor_id"), col("rank"), col("neg_id"), col("cos_u"))
-      .orderBy("anchor_id", "rank")
-  }
-
-  /** tmp_stream_cosine_dedup body (r6): the stateful streaming parity
-    * row for EMBEDDING dedup — two micro-batches of odd-id vectors
-    * through [[graft.streaming.StreamingOps.dedupCosineIncrementalStream]]
-    * against an even-id seed index; cross-batch state is the cosine LSH
-    * index AT REST (batch 1's KEPT vectors grow it, so batch 2 drops
-    * against them). Corpus restricted to labels 0–3 so the exact audit
-    * is CLOSED (the llm_dedup_cosine_incr convention). Facts:
-    * - n_should_seed: odd vectors with an exact-cos ≥ τ partner among
-    *   the evens — INDEPENDENT of engine recall, DuckDB-recomputable
-    *   exactly from the pair set;
-    * - n_false_drops: dropped odds with no partner in their visible
-    *   superset (evens ∪ same-batch lower ids ∪, for batch 2, batch 1)
-    *   — zero by construction (every drop is exact-verified against a
-    *   SUBSET of that superset);
-    * - recall_seed_ok: ≥ 90% of the seed-should-drop set actually
-    *   dropped (banding recall floor);
-    * - cross_state_drop: some batch-2 drop has NO even partner and NO
-    *   lower-batch-2 partner — explainable ONLY by batch-1 kept state,
-    *   the driver-visible proof the stream is stateful;
-    * - n_batches = 2 (both partitions committed). */
-  def streamCosineDedupQuery(s: SparkSession, dir: String): DataFrame =
-    // 800 label<=3 vectors through 2 micro-batches + a closed audit: at
-    // 32 shuffle partitions every foreachBatch join/commit is pure task
-    // overhead (the tmp_stream_join 21.4->4.0 s lesson)
-    pinned(s, lowShuffle) { s => streamCosineDedupBody(s, dir) }
+    pinned(s, lowShuffle) { s =>
+      import s.implicits._
+      val e = embs(s, dir)
+      // the anchor index is rebuilt into a fresh scratch directory on
+      // every pass, never reused from a previous run; the build is this
+      // streaming row's seed setup and is priced in it
+      val path = GraftSession.scratch("hn_stream_idx")
+      val cents = LlmOps.buildIvfIndex(e, path, nLists = 8)
+      graft.sources.BucketedLayout.clearStale(s, "graft_stream_hn")
+      val anchors = e.filter(pmod(col("vec_id"), lit(100)) === 0)
+        .select(col("vec_id"), col("label"),
+          col("embedding").cast("array<double>"))
+        .as[(Long, Long, Seq[Double])].collect().toSeq
+      val (ms, src) = memoryStream[(Long, Long, Seq[Double])](s,
+        "vec_id", "label", "embedding")
+      drive(StreamingOps.hardNegativesStream(
+          src, path, cents, "graft_stream_hn", k = 5, nProbe = 8))(
+        () => ms.addData(anchors.filter(_._1 % 200 == 0): _*),
+        () => ms.addData(anchors.filter(_._1 % 200 != 0): _*))
+      s.catalog.refreshTable("graft_stream_hn")
+      s.table("graft_stream_hn")
+        .select(col("anchor_id"), col("rank"), col("neg_id"), col("cos_u"))
+        .orderBy("anchor_id", "rank")
+    }
 
   /** Pristine-state manager for the streaming cosine-dedup harness (r10
     * verdict task 1: the one-time index build must not be timed inside
@@ -1120,63 +967,78 @@ object SparkEntry {
       case _ => buildPristineCosIndex(s, dir)
     }
 
-  private def streamCosineDedupBody(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val e = embs(s, dir).filter(col("label") <= 3)
-    ensurePristineCosIndex(s, dir)
-    s.sql("DROP TABLE IF EXISTS graft_stream_cos_kept")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"), "graft_stream_cos_kept")
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-    val odds = e.filter(pmod(col("vec_id"), lit(2)) === 1)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Seq[Double])].collect().toSeq
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])]
-    val src = ms.toDF().toDF("vec_id", "embedding")
-    val q = graft.streaming.StreamingOps.dedupCosineIncrementalStream(
-      src, "graft_stream_cos_idx", "graft_stream_cos_kept")
-    try {
-      ms.addData(odds.filter(_._1 % 4 == 1): _*)
-      q.processAllAvailable()
-      ms.addData(odds.filter(_._1 % 4 == 3): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    s.catalog.refreshTable("graft_stream_cos_kept")
-    val kept = s.table("graft_stream_cos_kept")
-      .select(col("vec_id"), col("__batch_id").cast("long").as("bid"))
-    // closed exact audit over the full label<=3 corpus. The per-odd
-    // partner-class table is a PURE FUNCTION of the fixture (exact
-    // cosine pairs among ≤4-label vectors — oracle-side ground truth,
-    // not engine output); it lives at rest in graft_audit_cos_stream_cls,
-    // rebuilt from parquet on every pass by the llm_audit_cos_all
-    // index-build row (r11 verdict task 2 — no JVM-memoized query data).
-    if (auditBuilt.get("cos_all") != dir) buildCosAllAudit(s, dir)
-    val cls = s.table("graft_audit_cos_stream_cls")
-    val audit = e.filter(pmod(col("vec_id"), lit(2)) === 1).select(col("vec_id"))
-      .join(kept, Seq("vec_id"), "left_outer")
-      .join(broadcast(cls.withColumnRenamed("x", "vec_id")), Seq("vec_id"), "left_outer")
-      .na.fill(0, Seq("has_even", "has_lower_b1", "has_b1", "has_lower_b2"))
-      .withColumn("dropped", col("bid").isNull)
-      .withColumn("superset_ok", when(pmod(col("vec_id"), lit(4)) === 1,
-          col("has_even") === 1 || col("has_lower_b1") === 1)
-        .otherwise(col("has_even") === 1 || col("has_b1") === 1 ||
-          col("has_lower_b2") === 1))
-    audit.agg(
-        sum(when(col("has_even") === 1, 1L).otherwise(0L)).as("n_should_seed"),
-        sum(when(col("dropped") && !col("superset_ok"), 1L).otherwise(0L))
-          .as("n_false_drops"),
-        sum(when(col("dropped") && col("has_even") === 1, 1L).otherwise(0L))
-          .as("dropped_seed"),
-        sum(when(col("dropped") && pmod(col("vec_id"), lit(4)) === 3 &&
-          col("has_even") === 0 && col("has_lower_b2") === 0, 1L).otherwise(0L))
-          .as("n_cross"))
-      .crossJoin(kept.agg(countDistinct(col("bid")).as("n_batches")))
-      .select(col("n_should_seed"), col("n_false_drops"),
-        (col("dropped_seed") >= ceil(col("n_should_seed") * 0.9)).as("recall_seed_ok"),
-        (col("n_cross") >= 1L).as("cross_state_drop"),
-        col("n_batches"))
-  }
+  /** tmp_stream_cosine_dedup body (r6): the stateful streaming parity
+    * row for EMBEDDING dedup — two micro-batches of odd-id vectors
+    * through [[graft.streaming.StreamingOps.dedupCosineIncrementalStream]]
+    * against an even-id seed index; cross-batch state is the cosine LSH
+    * index AT REST (batch 1's KEPT vectors grow it, so batch 2 drops
+    * against them). Corpus restricted to labels 0–3 so the exact audit
+    * is CLOSED (the llm_dedup_cosine_incr convention). Facts:
+    * - n_should_seed: odd vectors with an exact-cos ≥ τ partner among
+    *   the evens — INDEPENDENT of engine recall, DuckDB-recomputable
+    *   exactly from the pair set;
+    * - n_false_drops: dropped odds with no partner in their visible
+    *   superset (evens ∪ same-batch lower ids ∪, for batch 2, batch 1)
+    *   — zero by construction (every drop is exact-verified against a
+    *   SUBSET of that superset);
+    * - recall_seed_ok: ≥ 90% of the seed-should-drop set actually
+    *   dropped (banding recall floor);
+    * - cross_state_drop: some batch-2 drop has NO even partner and NO
+    *   lower-batch-2 partner — explainable ONLY by batch-1 kept state,
+    *   the driver-visible proof the stream is stateful;
+    * - n_batches = 2 (both partitions committed). */
+  def streamCosineDedupQuery(s: SparkSession, dir: String): DataFrame =
+    // 800 label<=3 vectors through 2 micro-batches + a closed audit: at
+    // 32 shuffle partitions every foreachBatch join/commit is pure task
+    // overhead (the tmp_stream_join 21.4->4.0 s lesson)
+    pinned(s, lowShuffle) { s =>
+      import s.implicits._
+      val e = embs(s, dir).filter(col("label") <= 3)
+      ensurePristineCosIndex(s, dir)
+      graft.sources.BucketedLayout.clearStale(s, "graft_stream_cos_kept")
+      val odds = e.filter(pmod(col("vec_id"), lit(2)) === 1)
+        .select(col("vec_id"), col("embedding").cast("array<double>"))
+        .as[(Long, Seq[Double])].collect().toSeq
+      val (ms, src) = memoryStream[(Long, Seq[Double])](s, "vec_id", "embedding")
+      drive(StreamingOps.dedupCosineIncrementalStream(
+          src, "graft_stream_cos_idx", "graft_stream_cos_kept"))(
+        () => ms.addData(odds.filter(_._1 % 4 == 1): _*),
+        () => ms.addData(odds.filter(_._1 % 4 == 3): _*))
+      s.catalog.refreshTable("graft_stream_cos_kept")
+      val kept = s.table("graft_stream_cos_kept")
+        .select(col("vec_id"), col("__batch_id").cast("long").as("bid"))
+      // closed exact audit over the full label<=3 corpus. The per-odd
+      // partner-class table is a PURE FUNCTION of the fixture (exact
+      // cosine pairs among ≤4-label vectors — oracle-side ground truth,
+      // not engine output); it lives at rest in graft_audit_cos_stream_cls,
+      // rebuilt from parquet on every pass by the llm_audit_cos_all
+      // index-build row (r11 verdict task 2 — no JVM-memoized query data).
+      if (auditBuilt.get("cos_all") != dir) buildCosAllAudit(s, dir)
+      val cls = s.table("graft_audit_cos_stream_cls")
+      val audit = e.filter(pmod(col("vec_id"), lit(2)) === 1).select(col("vec_id"))
+        .join(kept, Seq("vec_id"), "left_outer")
+        .join(broadcast(cls.withColumnRenamed("x", "vec_id")), Seq("vec_id"), "left_outer")
+        .na.fill(0, Seq("has_even", "has_lower_b1", "has_b1", "has_lower_b2"))
+        .withColumn("dropped", col("bid").isNull)
+        .withColumn("superset_ok", when(pmod(col("vec_id"), lit(4)) === 1,
+            col("has_even") === 1 || col("has_lower_b1") === 1)
+          .otherwise(col("has_even") === 1 || col("has_b1") === 1 ||
+            col("has_lower_b2") === 1))
+      audit.agg(
+          sum(when(col("has_even") === 1, 1L).otherwise(0L)).as("n_should_seed"),
+          sum(when(col("dropped") && !col("superset_ok"), 1L).otherwise(0L))
+            .as("n_false_drops"),
+          sum(when(col("dropped") && col("has_even") === 1, 1L).otherwise(0L))
+            .as("dropped_seed"),
+          sum(when(col("dropped") && pmod(col("vec_id"), lit(4)) === 3 &&
+            col("has_even") === 0 && col("has_lower_b2") === 0, 1L).otherwise(0L))
+            .as("n_cross"))
+        .crossJoin(kept.agg(countDistinct(col("bid")).as("n_batches")))
+        .select(col("n_should_seed"), col("n_false_drops"),
+          (col("dropped_seed") >= ceil(col("n_should_seed") * 0.9)).as("recall_seed_ok"),
+          (col("n_cross") >= 1L).as("cross_state_drop"),
+          col("n_batches"))
+    }
 
   // Sums of 2-decimal money doubles go through exact integer cents so the
   // result is bit-identical to the DuckDB oracle (double→decimal casts are
@@ -2032,8 +1894,7 @@ object SparkEntry {
     "llm_ann_ivf_indexed" -> Q(
       (s, dir) => {
         val e = embs(s, dir)
-        val path = sys.props("java.io.tmpdir") + "/graft_ivf_index_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_")
+        val path = GraftSession.scratch("ivf_index")
         val cents = LlmOps.buildIvfIndex(e, path, nLists = 16)
         val q0 = e.filter(col("vec_id") === 0)
           .select(col("embedding").cast("array<double>"))
@@ -2247,8 +2108,7 @@ object SparkEntry {
     "llm_ann_pq_indexed" -> Q(
       (s, dir) => {
         val e = embs(s, dir)
-        val path = sys.props("java.io.tmpdir") + "/graft_pq_index_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_")
+        val path = GraftSession.scratch("pq_index")
         val (cents, _) = LlmOps.buildPqIndex(e, path, nLists = 16)
         val q0 = e.filter(col("vec_id") === 0)
           .select(col("embedding").cast("array<double>"))
@@ -3174,8 +3034,8 @@ object SparkEntry {
     // The planted image corpus write as its own index-build row: image
     // payloads are at-rest storage, and this row re-pays the plant
     // construction on every pass (it previously survived across driver
-    // runs in java.io.tmpdir — r11 verdict task 2's plantedImages
-    // decision).
+    // runs in the JVM's temp directory — r11 verdict task 2's
+    // plantedImages decision).
     "llm_image_plant" -> Q(
       (s, dir) => {
         import s.implicits._
@@ -4632,8 +4492,7 @@ object SparkEntry {
           .withColumn("h", pmod(pmod(col("doc_id") * 2654435761L,
             lit(4294967296L)), lit(1000L)))
           .select("doc_id", "n_chars", "h")
-        val path = java.nio.file.Files
-          .createTempDirectory("graft_zq").toString + "/t"
+        val path = GraftSession.scratch("zq") + "/t"
         graft.sources.ZOrderLayout.zorderWrite(d, path,
           Seq("n_chars", "h"), bits = 4, files = 8)
         s.read.parquet(path)
@@ -4652,8 +4511,7 @@ object SparkEntry {
           .withColumn("h", pmod(pmod(col("doc_id") * 2654435761L,
             lit(4294967296L)), lit(1000L)))
           .select("doc_id", "n_chars", "h")
-        val path = java.nio.file.Files
-          .createTempDirectory("graft_hq").toString + "/t"
+        val path = GraftSession.scratch("hq") + "/t"
         graft.sources.HilbertLayout.hilbertWrite(d, path,
           Seq("n_chars", "h"), bits = 4, files = 8)
         s.read.parquet(path)

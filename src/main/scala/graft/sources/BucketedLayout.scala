@@ -18,7 +18,7 @@ object BucketedLayout {
     * can inherit a warehouse dir from a prior run: the managed-table
     * LOCATION outlives the in-memory catalog, and saveAsTable refuses it
     * (LOCATION_ALREADY_EXISTS). */
-  private def clearStale(spark: SparkSession, table: String): Unit = {
+  private[graft] def clearStale(spark: SparkSession, table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val loc = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)

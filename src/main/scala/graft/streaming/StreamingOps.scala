@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming surface (SURVEY.md §2.10): the same KQL-shaped aggregations
   * run as Structured Streaming jobs. ADX semantics map as:
@@ -159,7 +161,7 @@ object StreamingOps {
                              keptTable: String, threshold: Double = 0.8,
                              textCol: String = "text", idCol: String = "doc_id",
                              checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processDedupBatch(batch, batchId, indexTable, keptTable, threshold,
@@ -219,7 +221,7 @@ object StreamingOps {
                                    idCol: String = "vec_id",
                                    vecCol: String = "embedding",
                                    checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processCosineBatch(batch, batchId, indexTable, keptTable, idCol, vecCol)
@@ -281,7 +283,7 @@ object StreamingOps {
                                  textCol: String = "text",
                                  idCol: String = "doc_id",
                                  checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processLineBatch(batch, batchId, indexTable, keptTable, delim,
@@ -310,7 +312,7 @@ object StreamingOps {
     * harness doesn't need one. */
   def matViewStream(aggregated: DataFrame, viewTable: String,
                     checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val writer = aggregated.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -354,7 +356,7 @@ object StreamingOps {
   def matViewMaintainStream(stream: DataFrame, view: String,
                             stagePath: String, cursorCol: String,
                             checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
@@ -428,7 +430,7 @@ object StreamingOps {
                           labelCol: String = "label",
                           vecCol: String = "embedding",
                           checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val writer = anchors.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
@@ -463,17 +465,41 @@ object StreamingOps {
       .drop("__rn", "__batch_id")
   }
 
+  /** A MemoryStream of `A` rows on `s`, and its streaming frame with the
+    * tuple's columns named `cols`. */
+  def memoryStream[A: Encoder](s: SparkSession,
+                               cols: String*): (MemoryStream[A], DataFrame) = {
+    val ms = MemoryStream[A](s)
+    (ms, ms.toDF().toDF(cols: _*))
+  }
+
+  /** Starts `stream` into the in-memory table `sink` (a temp view in the
+    * stream's session) in output `mode`. */
+  def toMemory(stream: DataFrame, sink: String, mode: String): StreamingQuery =
+    stream.writeStream.format("memory").queryName(sink).outputMode(mode).start()
+
+  /** The micro-batch protocol: runs each feed (which may add to several
+    * sources), processes everything it made available before the next
+    * feed runs, and stops `q` on every path. */
+  def drive(q: StreamingQuery)(feeds: (() => Unit)*): Unit =
+    try feeds.foreach { feed => feed(); q.processAllAvailable() }
+    finally q.stop()
+
   /** Wire a streaming DataFrame to an in-memory sink and process all
     * currently-available input (used by tests and the demo). */
   def runToMemory(spark: SparkSession, stream: DataFrame, name: String,
                   outputMode: String): DataFrame = {
-    val q = stream.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drive(toMemory(stream, name, outputMode))(() => ())
     spark.table(name)
   }
+
+  /** Runs `stream` in append mode into the parquet files at `path` until
+    * it has processed everything available now, resuming from and
+    * committing to `checkpoint`: successive calls on one checkpoint are
+    * restarts that carry the stream's state across. */
+  def runToParquet(stream: DataFrame, path: String, checkpoint: String): Unit =
+    stream.writeStream.format("parquet")
+      .option("path", path).option("checkpointLocation", checkpoint)
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
 }

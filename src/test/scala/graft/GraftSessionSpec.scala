@@ -50,6 +50,20 @@ class GraftSessionSpec extends AnyFunSuite {
     } finally spark.conf.unset(key)
   }
 
+  test("release deletes the scratch directories of the rows that stage files") {
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def graftEntries = tmp.list().filter(_.startsWith("graft_")).toSet
+    val before = graftEntries
+    Seq("tmp_stream_scan", "tmp_stream_matview_refresh", "tmp_stream_hard_negatives",
+      "llm_ann_ivf_indexed", "llm_ann_pq_indexed", "tmp_zorder_scan",
+      "tmp_hilbert_scan").foreach { row =>
+      assert(SparkEntry.queries(row)(spark, TestSpark.sfDir).collect().nonEmpty, row)
+    }
+    GraftSession.release(spark)
+    val left = graftEntries -- before
+    assert(left.isEmpty, s"left under java.io.tmpdir: $left")
+  }
+
   private def sources(root: String): Seq[java.nio.file.Path] = {
     val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
     try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
@@ -74,5 +88,25 @@ class GraftSessionSpec extends AnyFunSuite {
     val found = offenders("src/main", "\\.conf\\s*\\.\\s*(set|unset)\\s*\\(".r,
       Set("GraftSession.scala", "StreamingOps.scala"))
     assert(found.isEmpty, s"pin conf with GraftSession.pinned instead: $found")
+  }
+
+  test("only StreamingOps builds, starts or drives a stream") {
+    val found = offenders("src/main",
+      "\\.processAllAvailable\\s*\\(|\\.writeStream\\b|MemoryStream\\s*\\[".r,
+      Set("StreamingOps.scala"))
+    assert(found.isEmpty,
+      s"use StreamingOps.memoryStream, toMemory and drive instead: $found")
+  }
+
+  test("only GraftSession makes directories under java.io.tmpdir") {
+    val found = offenders("src/main", "java\\.io\\.tmpdir|createTempDirectory".r,
+      Set("GraftSession.scala"))
+    assert(found.isEmpty, s"stage files in GraftSession.scratch instead: $found")
+  }
+
+  test("only graft/sources drops catalog tables") {
+    val found = offenders("src/main", "DROP TABLE IF EXISTS".r, Set.empty)
+      .filterNot(_.contains("/graft/sources/"))
+    assert(found.isEmpty, s"use BucketedLayout.clearStale instead: $found")
   }
 }
