@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import Ast._
+import graft.ext.{ActivityOps, LlmOps, TableOps, TemporalOps}
 
 /** KQL AST → Spark DataFrame planner (SURVEY.md §3.2 step 2).
   *
@@ -118,16 +119,20 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
   }
 
   // ============================================================== sources
+  /** A let-bound table, else the catalog's. */
+  private def tableNamed(name: String): DataFrame =
+    letTables.getOrElse(name, catalog.table(name))
+
   private def planSource(s: Source): DataFrame = s match {
     case TableRef(name) =>
-      letTables.getOrElse(name, catalog.table(name))
+      tableNamed(name)
     case QualifiedTableRef(_, db, name) =>
       catalog.tableIn(db, name)
     case MaterializedViewRef(name) =>
       // store ∪ delta merge — the view's source table resolves through
       // THIS catalog, so the delta always reads current data
       graft.sources.MatViewLayout.read(spark, name,
-        t => letTables.getOrElse(t, catalog.table(t)))
+        tableNamed)
     case DataTable(schema, rows) =>
       val st = StructType(schema.map { case (n, t) => StructField(n, kqlType(t)) })
       val data = rows.map { r =>
@@ -190,7 +195,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
       // applies to), provenance in source_, then one filter over the
       // padded superset schema
       val branches = tables.map { n =>
-        letTables.getOrElse(n, catalog.table(n)).withColumn("source_", lit(n))
+        tableNamed(n).withColumn("source_", lit(n))
       }
       val u = branches.reduce(_.unionByName(_, allowMissingColumns = true))
       val filtered = u.filter(toCol(pred, u))
@@ -278,7 +283,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
 
     case MakeGraphOp(src, dst, nodes) =>
       val nd = nodes.map { case (tbl, key) =>
-        (letTables.getOrElse(tbl, catalog.table(tbl)), key) }
+        (tableNamed(tbl), key) }
       graphCtx = Some(GraphOps.GraphCtx(df, resolveName(df, src),
         resolveName(df, dst), nd))
       df // placeholder; the next operator must be a graph consumer
@@ -587,1233 +592,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
 
     case s: Summarize => planSummarize(df, s)
 
-    case EvaluateOp("pivot", pivotE :: rest) =>
-      // `evaluate pivot(col [, agg])` → Spark's native pivot (two-pass:
-      // distinct values then a pivoting hash aggregate). Group keys are
-      // every column not consumed by the pivot or the aggregate.
-      val pivotName = pivotE match {
-        case Col(n) => resolveName(df, n)
-        case other => throw PlanError(s"pivot expects a column, got $other")
-      }
-      val aggE = rest.headOption.getOrElse(App("count", Nil))
-      def colRefs(e: Expr): Set[String] = e match {
-        case Col(n) => Set(n)
-        case App(_, as) => as.flatMap(colRefs).toSet
-        case BinOp(_, l, r) => colRefs(l) ++ colRefs(r)
-        case UnOp(_, x) => colRefs(x)
-        case _ => Set.empty
-      }
-      val consumed = colRefs(aggE) + pivotName
-      val groupCols = df.columns.filterNot(c => consumed.exists(_.equalsIgnoreCase(c)))
-      val pivoted = df.groupBy(groupCols.map(col).toSeq: _*)
-        .pivot(pivotName).agg(toCol(aggE, df, agg = true))
-      // KQL pivot yields 0 (not null) for empty count cells
-      aggE match {
-        case App("count" | "countif", _) => pivoted.na.fill(0L)
-        case _ => pivoted
-      }
-
-    case EvaluateOp("bag_unpack", dynE :: Nil) =>
-      // schema-creating by definition: KQL bag_unpack emits the UNION of
-      // keys across all rows, so infer over a bounded distinct sample of
-      // bag shapes (spark.read.json union-merges per-row schemas) — one
-      // bounded eager action, then the expansion itself stays lazy
-      val c = toCol(dynE, df)
-      val sample = df.select(c.cast("string").as("__d")).na.drop()
-        .distinct().limit(1024)
-      val inferred = df.sparkSession.read
-        .json(sample.as(org.apache.spark.sql.Encoders.STRING))
-      if (inferred.schema.isEmpty) df
-      else {
-        val parsed = df.withColumn("__bag", from_json(c, inferred.schema))
-        val keep: Seq[String] = dynE match {
-          case Col(n) =>
-            val rn = resolveName(df, n)
-            df.columns.filterNot(_.equalsIgnoreCase(rn)).toSeq
-          case _ => df.columns.toSeq
-        }
-        parsed.select(keep.map(c => col(c)) :+ col("__bag.*"): _*)
-      }
-
-    case EvaluateOp("narrow", Nil) =>
-      // transpose to (Row, Column, Value): zero-based global row ordinal
-      // via the two-phase machinery, then one posexplode-style stack of
-      // the columns as (name, stringified value) structs
-      if (!serialized && sortCols.isEmpty) serialized = true // natural order
-      val (dp, ord, keys, pr) = windowInputs(df)
-      val withRow = GlobalWindow.compute(dp, ord, keys,
-        Seq(GlobalWindow.RowNumber("__narrow_rn", None)), pr)
-      val cols = df.columns.toSeq
-      val pairs = array(cols.map(c =>
-        struct(lit(c).as("Column"), col(c).cast("string").as("Value"))): _*)
-      withRow.select((col("__narrow_rn") - 1L).as("Row"), explode(pairs).as("__kv"))
-        .select(col("Row"), col("__kv.Column").as("Column"), col("__kv.Value").as("Value"))
-
-    case EvaluateOp("activity_engagement", idE :: tsE :: innerE :: outerE :: Nil) =>
-      graft.ext.ActivityOps.activityEngagement(df,
-        colNameOf(df, idE, "activity_engagement id"),
-        colNameOf(df, tsE, "activity_engagement timeline"),
-        timespanUs(innerE), timespanUs(outerE))
-
-    case EvaluateOp("sliding_window_counts", idE :: tsE :: lookE :: binE :: Nil) =>
-      graft.ext.ActivityOps.slidingWindowCounts(df,
-        colNameOf(df, idE, "sliding_window_counts id"),
-        colNameOf(df, tsE, "sliding_window_counts timeline"),
-        timespanUs(lookE), timespanUs(binE))
-
-    // `evaluate dcount_intersect(hll1, hll2[, hll3])`: intersection
-    // cardinalities from the sketches by inclusion–exclusion — sketch
-    // unions are mergeable (hll_union), so this stays a projection
-    case EvaluateOp("dcount_intersect", hllEs) if hllEs.length >= 2 && hllEs.length <= 3 =>
-      val hs = hllEs.map(e => toCol(e, df))
-      val est = (c: Column) => hll_sketch_estimate(c)
-      val u2 = (a: Column, b: Column) => est(hll_union(a, b))
-      val s = hs.map(est)
-      val keep = df.columns.filterNot(c => hllEs.exists {
-        case Col(n) => resolveName(df, n) == c; case _ => false }).map(col).toList
-      if (hs.length == 2) {
-        val inter = s(0) + s(1) - u2(hs(0), hs(1))
-        df.select((keep :+ s(0).as("s0") :+ greatest(inter, lit(0L)).as("s1")): _*)
-      } else {
-        val i01 = s(0) + s(1) - u2(hs(0), hs(1))
-        val i02 = s(0) + s(2) - u2(hs(0), hs(2))
-        val i12 = s(1) + s(2) - u2(hs(1), hs(2))
-        val uAll = est(hll_union(hll_union(hs(0), hs(1)), hs(2)))
-        val i012 = uAll - s(0) - s(1) - s(2) + i01 + i02 + i12
-        df.select((keep :+ s(0).as("s0") :+ greatest(i01, lit(0L)).as("s1")
-          :+ greatest(i012, lit(0L)).as("s2")): _*)
-      }
-
-    case EvaluateOp("rolling_percentile", valE :: pctE :: tsE :: binE :: winE :: Nil) =>
-      val pct = staticValue(pctE, "") match {
-        case l: Long => l.toDouble; case d: Double => d; case _ => 50.0 }
-      graft.ext.ActivityOps.rollingPercentile(df,
-        colNameOf(df, valE, "rolling_percentile value"),
-        pct, colNameOf(df, tsE, "rolling_percentile timeline"),
-        timespanUs(binE), staticValue(winE, "").asInstanceOf[Long].toInt)
-
-    // `evaluate ipv4_lookup(RangeTable, ipCol, cidrKeyCol)`: enrich rows
-    // whose IPv4 falls inside a lookup row's CIDR. The range table is
-    // dimension-sized ⇒ explicit broadcast; containment is long-range
-    // arithmetic on the parsed addresses (no UDF).
-    case EvaluateOp("ipv4_lookup", Col(tbl) :: ipE :: keyE :: Nil) =>
-      val lk = letTables.getOrElse(tbl, catalog.table(tbl))
-      val keyName = resolveName(lk, keyE match {
-        case Col(n) => n; case _ => throw PlanError("ipv4_lookup key must be a column") })
-      val ipName = colNameOf(df, ipE, "ipv4_lookup ip")
-      val net = element_at(split(col(keyName), "/"), 1)
-      val sfx = coalesce(element_at(split(col(keyName), "/"), 2).cast("long"), lit(32L))
-      val block = pow(lit(2.0), lit(32L) - sfx).cast("long")
-      val start = Functions.registry("parse_ipv4")(List(net)) -
-        pmod(Functions.registry("parse_ipv4")(List(net)), block)
-      val aug = lk.withColumn("__ip_lo", start).withColumn("__ip_hi", start + block - 1)
-      val ipL = Functions.registry("parse_ipv4")(List(col(ipName)))
-      df.join(broadcast(aug),
-          ipL >= aug("__ip_lo") && ipL <= aug("__ip_hi"), "inner")
-        .drop("__ip_lo", "__ip_hi")
-
-    case EvaluateOp("active_users_count",
-        idE :: tsE :: startE :: stopE :: lookE :: perE :: mE :: binE :: Nil) =>
-      graft.ext.ActivityOps.activeUsersCount(df,
-        colNameOf(df, idE, "active_users_count id"),
-        colNameOf(df, tsE, "active_users_count timeline"),
-        tsLitUs(startE), tsLitUs(stopE), timespanUs(lookE), timespanUs(perE),
-        staticValue(mE, "").asInstanceOf[Long].toInt, timespanUs(binE))
-
-    case EvaluateOp("activity_counts_metrics", idE :: tsE :: startE :: stopE :: binE :: Nil) =>
-      graft.ext.ActivityOps.activityCountsMetrics(df,
-        colNameOf(df, idE, "activity_counts_metrics id"),
-        colNameOf(df, tsE, "activity_counts_metrics timeline"),
-        tsLitUs(startE), tsLitUs(stopE), timespanUs(binE))
-
-    // `evaluate activity_metrics(id, timeline, step)`: per-bin dcount /
-    // new / retained-from-previous-bin with exact micro rates
-    // (ActivityOps.activityMetrics)
-    case EvaluateOp("activity_metrics", idE :: tsE :: binE :: Nil) =>
-      graft.ext.ActivityOps.activityMetrics(df,
-        colNameOf(df, idE, "activity_metrics id"),
-        colNameOf(df, tsE, "activity_metrics timeline"),
-        timespanUs(binE))
-
-    // `evaluate new_activity_metrics(id, timeline, step)`: cohort
-    // retention/churn per (first-seen bin, activity bin) pair
-    // (ActivityOps.newActivityMetrics)
-    case EvaluateOp("new_activity_metrics", idE :: tsE :: binE :: Nil) =>
-      graft.ext.ActivityOps.newActivityMetrics(df,
-        colNameOf(df, idE, "new_activity_metrics id"),
-        colNameOf(df, tsE, "new_activity_metrics timeline"),
-        timespanUs(binE))
-
-    case EvaluateOp("session_count", idE :: tsE :: startE :: stopE :: binE :: lookE :: Nil) =>
-      graft.ext.ActivityOps.sessionCount(df,
-        colNameOf(df, idE, "session_count id"),
-        colNameOf(df, tsE, "session_count timeline"),
-        tsLitUs(startE), tsLitUs(stopE), timespanUs(binE), timespanUs(lookE))
-
-    case EvaluateOp("autocluster", pctE :: colEs) if colEs.nonEmpty =>
-      cubeSegments(df, colEs, litDouble(pctE), "autocluster column")
-
-    // simplified KQL diffpatterns: attribute segments whose share
-    // DIFFERS between the A and B splits of the data (incident
-    // investigation — "what changed?"); same cube lattice as
-    // autocluster/basket, split counted map-side as two conditional
-    // sums, difference threshold in percentage points
-    case EvaluateOp("diffpatterns", splitE :: aE :: bE :: dE :: colEs) if colEs.nonEmpty =>
-      diffPatterns(df, splitE, litString(aE, "diffpatterns A value"),
-        litString(bE, "diffpatterns B value"), litDouble(dE), colEs)
-
-    // simplified KQL diffpatterns_text: TOKENS whose document-frequency
-    // share differs between the A and B splits — the text sibling of
-    // diffpatterns (error-message clustering: "which words appear in
-    // failing requests but not passing ones")
-    case EvaluateOp("diffpatterns_text",
-        textE :: splitE :: aE :: bE :: dE :: Nil) =>
-      diffPatternsText(df, colNameOf(df, textE, "diffpatterns_text text"),
-        colNameOf(df, splitE, "diffpatterns_text split"),
-        litString(aE, "diffpatterns_text A value"),
-        litString(bE, "diffpatterns_text B value"), litDouble(dE))
-
-    // simplified KQL basket: frequent attribute segments over the same
-    // cube lattice, support threshold as a ratio (default 0.05)
-    case EvaluateOp("basket", args) if args.nonEmpty =>
-      args.head match {
-        case Lit(v: Double) if args.length > 1 =>
-          cubeSegments(df, args.tail, v * 100, "basket column")
-        case _ => cubeSegments(df, args, 5.0, "basket column")
-      }
-
-    // `evaluate rows_near(cond, before[, after])` on a serialized input:
-    // keep rows within `before` rows before / `after` rows after any
-    // condition row. Routed through the two-phase GlobalWindow lag/lead
-    // machinery — no single-partition window over data.
-    case EvaluateOp("rows_near", condE :: beforeE :: rest) =>
-      val before = staticValue(beforeE, "").asInstanceOf[Long].toInt
-      val after = rest.headOption.map(staticValue(_, "").asInstanceOf[Long].toInt)
-        .getOrElse(before)
-      if (before < 0 || after < 0 || before > 32 || after > 32)
-        throw PlanError("rows_near supports 0..32 rows before/after")
-      val flagged = df.withColumn("__rn_f", when(toCol(condE, df), 1L).otherwise(0L))
-      val (dPrep, ordered, keys, preRanged) = windowInputs(flagged)
-      val lagNames = (1 to after).map(k => s"__rn_lag$k")
-      val leadNames = (1 to before).map(k => s"__rn_lead$k")
-      val calls: List[GlobalWindow.Call] =
-        ((1 to after).map(k => GlobalWindow.Lag(lagNames(k - 1), col("__rn_f"), k, Some(lit(0L)))) ++
-         (1 to before).map(k => GlobalWindow.Lead(leadNames(k - 1), col("__rn_f"), k, Some(lit(0L))))).toList
-      val computed =
-        if (calls.isEmpty) dPrep
-        else GlobalWindow.compute(dPrep, ordered, keys, calls, preRanged)
-      val near = ((col("__rn_f") === 1L) +:
-        (lagNames ++ leadNames).map(n => col(n) === 1L)).reduce(_ || _)
-      restoreSerializedOrder(
-        computed.filter(near).drop(("__rn_f" +: (lagNames ++ leadNames)): _*))
-
-    // ---- LLM-pipeline ops surfaced in the query language (E1): the same
-    // LlmOps/TemporalOps implementations the Scala API (E2) calls.
-    case EvaluateOp("dedup_exact", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.dedupExact(df, colNameOf(df, textE, "dedup_exact text"),
-        colNameOf(df, idE, "dedup_exact id"))
-
-    case EvaluateOp("jaccard_pairs", tE :: textE :: idE :: rest) =>
-      graft.ext.LlmOps.jaccardPairs(df, litDouble(tE),
-        rest.headOption.map(colNameOf(df, _, "jaccard_pairs block")),
-        colNameOf(df, textE, "jaccard_pairs text"), colNameOf(df, idE, "jaccard_pairs id"))
-
-    // `evaluate fuzzy_token_pairs(minLen, maxVocab, maxDist, text)`:
-    // vocabulary spelling-variant pairs within Levenshtein distance
-    // maxDist, found by deletion-neighborhood blocking
-    // (LlmOps.fuzzyTokenPairs)
-    case EvaluateOp("fuzzy_token_pairs", mE :: vE :: dE :: textE :: Nil) =>
-      graft.ext.LlmOps.fuzzyTokenPairs(df, litLong(mE).toInt, litLong(vE).toInt,
-        litLong(dE).toInt, textCol = colNameOf(df, textE, "fuzzy_token_pairs text"))
-
-    // `evaluate containment_pairs(threshold, w, text, id)`: asymmetric
-    // shingle-containment pairs (LlmOps.containmentPairs)
-    case EvaluateOp("containment_pairs", tE :: wE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.containmentPairs(df, litDouble(tE), litLong(wE).toInt,
-        textCol = colNameOf(df, textE, "containment_pairs text"),
-        idCol = colNameOf(df, idE, "containment_pairs id"))
-
-    // `evaluate dedup_contained(threshold, w, text, id)`: drop docs
-    // contained in a larger doc, keep the superset
-    // (LlmOps.dedupContained)
-    case EvaluateOp("dedup_contained", tE :: wE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.dedupContained(df, litDouble(tE), litLong(wE).toInt,
-        textCol = colNameOf(df, textE, "dedup_contained text"),
-        idCol = colNameOf(df, idE, "dedup_contained id"))
-
-    // `evaluate ann_pq(queryId, k, refine, id, vec)`: product-quantization
-    // ANN with exact re-rank (LlmOps.annCosinePq)
-    case EvaluateOp("ann_pq", qE :: kE :: rE :: idE :: vecE :: Nil) =>
-      graft.ext.LlmOps.annCosinePq(df, litLong(qE), litLong(kE).toInt,
-        refine = litLong(rE).toInt,
-        idCol = colNameOf(df, idE, "ann_pq id"),
-        vecCol = colNameOf(df, vecE, "ann_pq vector"))
-
-    // `evaluate connected_components(src, dst)`: transitive components
-    // over the input edge frame via the two-phase star engine
-    // (GraphOps.components)
-    case EvaluateOp("connected_components", srcE :: dstE :: Nil) =>
-      GraphOps.components(df,
-        colNameOf(df, srcE, "connected_components src"),
-        colNameOf(df, dstE, "connected_components dst"))
-
-    // `evaluate pagerank(iters, src, dst)`: damped power-iteration
-    // PageRank over the input edge frame, integer-micro arithmetic
-    // (GraphOps.pageRank)
-    case EvaluateOp("pagerank", iE :: srcE :: dstE :: Nil) =>
-      GraphOps.pageRank(df, litLong(iE).toInt,
-        colNameOf(df, srcE, "pagerank src"),
-        colNameOf(df, dstE, "pagerank dst"))
-
-    // `evaluate source_kl(text, source)`: per-source KL divergence from
-    // the corpus token distribution (LlmOps.sourceKl)
-    case EvaluateOp("source_kl", textE :: srcE :: Nil) =>
-      graft.ext.LlmOps.sourceKl(df,
-        textCol = colNameOf(df, textE, "source_kl text"),
-        srcCol = colNameOf(df, srcE, "source_kl source"))
-
-    // `evaluate rrf_fuse(k0, topK, system, id, rank)`: reciprocal-rank
-    // fusion of tall (system, id, rank) lists (LlmOps.rrfFuse)
-    case EvaluateOp("rrf_fuse", kE :: tE :: sE :: idE :: rE :: Nil) =>
-      graft.ext.LlmOps.rrfFuse(df, litLong(kE).toInt, litLong(tE).toInt,
-        systemCol = colNameOf(df, sE, "rrf_fuse system"),
-        idCol = colNameOf(df, idE, "rrf_fuse id"),
-        rankCol = colNameOf(df, rE, "rrf_fuse rank"))
-
-    // `evaluate logreg_score(iters, dim, label, text, id)`: hashed
-    // bag-of-words logistic-regression classifier, full-batch GD
-    // (LlmOps.logRegScore)
-    case EvaluateOp("logreg_score", iE :: dE :: lE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.logRegScore(df,
-        colNameOf(df, lE, "logreg_score label"),
-        dim = litLong(dE).toInt, iters = litLong(iE).toInt,
-        textCol = colNameOf(df, textE, "logreg_score text"),
-        idCol = colNameOf(df, idE, "logreg_score id"))
-
-    // `evaluate cms_count('probe toks', width, depth, text)`: count-min
-    // sketch frequency estimates (LlmOps.cmsCount)
-    case EvaluateOp("cms_count", pE :: wE :: dE :: textE :: Nil) =>
-      graft.ext.LlmOps.cmsCount(df, litString(pE, "cms_count probes"),
-        litLong(wE).toInt, litLong(dE).toInt,
-        textCol = colNameOf(df, textE, "cms_count text"))
-
-    // `evaluate heavy_hitters(m, k, text)`: exact top-k tokens via the
-    // bounded-memory Misra-Gries candidate pass + exact recount
-    case EvaluateOp("heavy_hitters", mE :: kE :: textE :: Nil) =>
-      graft.ext.LlmOps.heavyHitters(df, litLong(mE).toInt, litLong(kE).toInt,
-        colNameOf(df, textE, "heavy_hitters text"))
-
-    // `evaluate collocations(min_count, k, text)`: top-k bigram
-    // collocations by lift (vocabulary-sized work, bounded selection)
-    case EvaluateOp("collocations", mcE :: kE :: textE :: Nil) =>
-      graft.ext.LlmOps.collocations(df, litLong(mcE).toInt, litLong(kE).toInt,
-        colNameOf(df, textE, "collocations text"))
-
-    // `evaluate naive_bayes_lang(hold_mod)`: multinomial NB language
-    // classifier over a documents-shaped frame (doc_id, lang, text)
-    case EvaluateOp("naive_bayes_lang", modE :: Nil) =>
-      graft.ext.LlmOps.naiveBayesLangId(df, litLong(modE).toInt)
-
-    // `evaluate mmr_select(query_id, n_cand, k)`: diverse top-k over an
-    // embeddings-shaped frame (vec_id, embedding)
-    case EvaluateOp("mmr_select", qE :: nE :: kE :: Nil) =>
-      graft.ext.LlmOps.mmrSelect(df, litLong(qE), litLong(nE).toInt,
-        litLong(kE).toInt)
-
-    // `evaluate doc_entropy(text, id)`: per-doc token entropy + TTR
-    case EvaluateOp("doc_entropy", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.docEntropy(df, colNameOf(df, textE, "doc_entropy text"),
-        colNameOf(df, idE, "doc_entropy id"))
-
-    // `evaluate script_detect(text)`: Unicode-script mix + dominant
-    // script (the pre-langid router)
-    case EvaluateOp("script_detect", tE :: Nil) =>
-      graft.ext.LlmOps.scriptDetect(df,
-        colNameOf(df, tE, "script_detect text"))
-
-    // `evaluate license_detect(text)`: SPDX/phrase license detection
-    case EvaluateOp("license_detect", tE :: Nil) =>
-      graft.ext.LlmOps.licenseDetect(df,
-        colNameOf(df, tE, "license_detect text"))
-
-    // `evaluate mojibake_detect(text)`: encoding-damage signals + flag
-    case EvaluateOp("mojibake_detect", tE :: Nil) =>
-      graft.ext.LlmOps.mojibakeDetect(df,
-        colNameOf(df, tE, "mojibake_detect text"))
-
-    // `evaluate span_corrupt(blockSize, text, id)`: T5 denoising pairs
-    case EvaluateOp("span_corrupt", bE :: tE :: idE :: Nil) =>
-      graft.ext.LlmOps.spanCorrupt(df, litLong(bE).toInt,
-        colNameOf(df, tE, "span_corrupt text"),
-        colNameOf(df, idE, "span_corrupt id"))
-
-    // `evaluate bleu(ref, cand, id)`: clipped n-gram precision + BLEU
-    case EvaluateOp("bleu", rE :: cE :: idE :: Nil) =>
-      graft.ext.LlmOps.bleuScore(df, colNameOf(df, rE, "bleu ref"),
-        colNameOf(df, cE, "bleu cand"), colNameOf(df, idE, "bleu id"))
-
-    // `evaluate bm25_indexed('table', 'query', k)`: BM25 against the
-    // at-rest inverted index (postings for the query terms only)
-    case EvaluateOp("bm25_indexed", tblE :: qE :: kE :: Nil) =>
-      graft.ext.LlmOps.bm25Indexed(df.sparkSession,
-        litString(tblE, "bm25_indexed index table"),
-        litString(qE, "bm25_indexed query"), litLong(kE).toInt)
-
-    // `evaluate k_anonymity(k, col1, col2, ...)`: re-identification
-    // risk audit — per quasi-identifier-combo counts + the ≥ k flag
-    case EvaluateOp("k_anonymity", kE :: colEs) if colEs.nonEmpty =>
-      graft.ext.LlmOps.kAnonymity(df,
-        colEs.map(e => colNameOf(df, e, "k_anonymity column")),
-        litLong(kE).toInt)
-
-    // `evaluate ann_binary(queryId, k, id, vec)`: sign-bit hamming ANN
-    case EvaluateOp("ann_binary", qE :: kE :: idE :: vE :: Nil) =>
-      graft.ext.LlmOps.annCosineBinary(df, litLong(qE), litLong(kE).toInt,
-        idCol = colNameOf(df, idE, "ann_binary id"),
-        vecCol = colNameOf(df, vE, "ann_binary vec"))
-
-    // `evaluate tokenizer_oov(vocabTop, text, id)`: per-doc OOV rate
-    // vs the corpus top-K word vocabulary
-    case EvaluateOp("tokenizer_oov", vE :: tE :: idE :: Nil) =>
-      graft.ext.LlmOps.tokenizerOov(df, litLong(vE).toInt,
-        colNameOf(df, tE, "tokenizer_oov text"),
-        colNameOf(df, idE, "tokenizer_oov id"))
-
-    // `evaluate global_shuffle(shards, id)`: deterministic training reshard
-    case EvaluateOp("global_shuffle", sE :: idE :: Nil) =>
-      graft.ext.LlmOps.globalShuffle(df, litLong(sE).toInt,
-        idCol = colNameOf(df, idE, "global_shuffle id"))
-
-    // `evaluate calibration_bins(bins, charCut, text, id)`: reliability bins
-    case EvaluateOp("calibration_bins", bE :: cE :: tE :: idE :: Nil) =>
-      graft.ext.LlmOps.calibrationBins(df, litLong(bE).toInt,
-        litLong(cE).toInt, colNameOf(df, tE, "calibration_bins text"),
-        colNameOf(df, idE, "calibration_bins id"))
-
-    // `evaluate rouge_n(ref, cand, id)`: ROUGE-1/2 n-gram recall
-    case EvaluateOp("rouge_n", rE :: cE :: idE :: Nil) =>
-      graft.ext.LlmOps.rougeN(df,
-        colNameOf(df, rE, "rouge_n ref"),
-        colNameOf(df, cE, "rouge_n cand"),
-        colNameOf(df, idE, "rouge_n id"))
-
-    // `evaluate sft_pack(text, id)`: SFT loss-mask geometry per doc
-    case EvaluateOp("sft_pack", tE :: idE :: Nil) =>
-      graft.ext.LlmOps.sftPack(df,
-        textCol = colNameOf(df, tE, "sft_pack text"),
-        idCol = colNameOf(df, idE, "sft_pack id"))
-
-    // `evaluate dpo_pairs(groups, text, id)`: per-prompt preference pairs
-    case EvaluateOp("dpo_pairs", gE :: tE :: idE :: Nil) =>
-      graft.ext.LlmOps.dpoPairs(df, litLong(gE).toInt,
-        colNameOf(df, tE, "dpo_pairs text"),
-        colNameOf(df, idE, "dpo_pairs id"))
-
-    // `evaluate matryoshka(vec, id)`: prefix-energy truncation audit
-    case EvaluateOp("matryoshka", vE :: idE :: Nil) =>
-      graft.ext.LlmOps.matryoshkaEval(df,
-        vecCol = colNameOf(df, vE, "matryoshka vec"),
-        idCol = colNameOf(df, idE, "matryoshka id"))
-
-    // `evaluate curriculum_shards(shards, text, id)`: easy-to-hard cut
-    case EvaluateOp("curriculum_shards", sE :: tE :: idE :: Nil) =>
-      graft.ext.LlmOps.curriculumShards(df, litLong(sE).toInt,
-        colNameOf(df, tE, "curriculum_shards text"),
-        colNameOf(df, idE, "curriculum_shards id"))
-
-    // `evaluate ccnet_buckets(lang, text, id)`: per-language LM terciles
-    case EvaluateOp("ccnet_buckets", lE :: tE :: idE :: Nil) =>
-      graft.ext.LlmOps.ccnetBuckets(df,
-        colNameOf(df, lE, "ccnet_buckets lang"),
-        colNameOf(df, tE, "ccnet_buckets text"),
-        colNameOf(df, idE, "ccnet_buckets id"))
-
-    // `evaluate sentence_split(text, id)`: terminator-bounded sentence
-    // rows with in-doc indexes (chunking prep)
-    case EvaluateOp("sentence_split", tE :: idE :: Nil) =>
-      graft.ext.LlmOps.sentenceSplit(df,
-        colNameOf(df, tE, "sentence_split text"),
-        colNameOf(df, idE, "sentence_split id"))
-
-    // `evaluate dedup_soft(text)`: duplicate-group training weights
-    // (1/n micros) instead of drops
-    case EvaluateOp("dedup_soft", tE :: Nil) =>
-      graft.ext.LlmOps.dedupSoft(df,
-        colNameOf(df, tE, "dedup_soft text"))
-
-    // `evaluate wer(ref, hyp, id)`: token edit distance + WER micros
-    case EvaluateOp("wer", rE :: hE :: idE :: Nil) =>
-      graft.ext.LlmOps.werScore(df, colNameOf(df, rE, "wer ref"),
-        colNameOf(df, hE, "wer hyp"), colNameOf(df, idE, "wer id"))
-
-    // `evaluate rouge_l(ref, cand, id)`: LCS recall/precision/F1
-    case EvaluateOp("rouge_l", rE :: cE :: idE :: Nil) =>
-      graft.ext.LlmOps.rougeL(df, colNameOf(df, rE, "rouge_l ref"),
-        colNameOf(df, cE, "rouge_l cand"), colNameOf(df, idE, "rouge_l id"))
-
-    // `evaluate hard_negatives(anchorEvery, k, id, label, vec)`:
-    // contrastive hard-negative mining
-    case EvaluateOp("hard_negatives", aE :: kE :: idE :: lE :: vE :: Nil) =>
-      graft.ext.LlmOps.hardNegatives(df, litLong(aE).toInt, litLong(kE).toInt,
-        idCol = colNameOf(df, idE, "hard_negatives id"),
-        labelCol = colNameOf(df, lE, "hard_negatives label"),
-        vecCol = colNameOf(df, vE, "hard_negatives vec"))
-
-    // `evaluate hard_negatives_ivf(anchorEvery, k, nLists, nProbe, id,
-    // label, vec)` — the IVF-pruned form (nProbe = nLists reproduces
-    // the scan form exactly; see LlmOps.hardNegativesIvf)
-    case EvaluateOp("hard_negatives_ivf",
-        aE :: kE :: nlE :: npE :: idE :: lE :: vE :: Nil) =>
-      graft.ext.LlmOps.hardNegativesIvf(df, litLong(aE).toInt,
-        litLong(kE).toInt,
-        nLists = litLong(nlE).toInt, nProbe = litLong(npE).toInt,
-        idCol = colNameOf(df, idE, "hard_negatives_ivf id"),
-        labelCol = colNameOf(df, lE, "hard_negatives_ivf label"),
-        vecCol = colNameOf(df, vE, "hard_negatives_ivf vec"))
-
-    // `evaluate dataset_card(source, lang, text, id)`: one-row-per-
-    // source release summary
-    case EvaluateOp("dataset_card", sE :: lE :: tE :: idE :: Nil) =>
-      graft.ext.LlmOps.datasetCard(df,
-        colNameOf(df, sE, "dataset_card source"),
-        colNameOf(df, lE, "dataset_card lang"),
-        colNameOf(df, tE, "dataset_card text"),
-        colNameOf(df, idE, "dataset_card id"))
-
-    // `evaluate frontier_schedule(perSlot, host, priority, id)`:
-    // crawl politeness fetch slots per host
-    case EvaluateOp("frontier_schedule", nE :: hE :: pE :: idE :: Nil) =>
-      graft.ext.LlmOps.frontierSchedule(df, litLong(nE).toInt,
-        colNameOf(df, hE, "frontier_schedule host"),
-        colNameOf(df, pE, "frontier_schedule priority"),
-        colNameOf(df, idE, "frontier_schedule id"))
-
-    // `evaluate pmi_contexts(window, minCount, k, text)`: top-k PMI
-    // association contexts per word
-    case EvaluateOp("pmi_contexts", wE :: mE :: kE :: tE :: Nil) =>
-      graft.ext.LlmOps.pmiContexts(df, litLong(wE).toInt,
-        litLong(mE).toInt, litLong(kE).toInt,
-        textCol = colNameOf(df, tE, "pmi_contexts text"))
-
-    // `evaluate keyword_extract(k, text, id)`: per-doc top-k tf-idf
-    // terms (doc tagging / cluster labeling)
-    case EvaluateOp("keyword_extract", kE :: tE :: idE :: Nil) =>
-      graft.ext.LlmOps.keywordExtract(df, litLong(kE).toInt,
-        textCol = colNameOf(df, tE, "keyword_extract text"),
-        idCol = colNameOf(df, idE, "keyword_extract id"))
-
-    // `evaluate stupid_backoff(holdMod, text, id)`: held-out bigram LM
-    // scoring with unigram backoff (Brants 2007)
-    case EvaluateOp("stupid_backoff", hE :: tE :: idE :: Nil) =>
-      graft.ext.LlmOps.stupidBackoff(df, litLong(hE).toInt,
-        textCol = colNameOf(df, tE, "stupid_backoff text"),
-        idCol = colNameOf(df, idE, "stupid_backoff id"))
-
-    // `evaluate code_detect(text)`: code-vs-prose routing gate
-    case EvaluateOp("code_detect", tE :: Nil) =>
-      graft.ext.LlmOps.codeDetect(df,
-        colNameOf(df, tE, "code_detect text"))
-
-    // `evaluate warc_meta(text)`: WARC + embedded-HTTP header fields
-    // (the crawl container's route-and-filter metadata)
-    case EvaluateOp("warc_meta", tE :: Nil) =>
-      graft.ext.LlmOps.warcMeta(df, colNameOf(df, tE, "warc_meta text"))
-
-    // `evaluate avif_dims(payload)`: AVIF/HEIC dims from the ISO-BMFF
-    // ispe box (meta -> iprp -> ipco walk), header bytes only
-    case EvaluateOp("avif_dims", binE :: Nil) =>
-      graft.ext.LlmOps.avifDims(df, colNameOf(df, binE, "avif_dims payload"))
-
-    // `evaluate heaps_law(text, id)`: vocabulary-growth checkpoints +
-    // fitted Heaps exponent along the deterministic hash shuffle
-    case EvaluateOp("heaps_law", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.heapsLaw(df, colNameOf(df, textE, "heaps_law text"),
-        colNameOf(df, idE, "heaps_law id"))
-
-    // `evaluate stratified_split(trainFrac, valFrac, strata, id)`:
-    // exact per-stratum train/val/test assignment
-    case EvaluateOp("stratified_split", tE :: vE :: sE :: idE :: Nil) =>
-      graft.ext.LlmOps.stratifiedSplit(df, litDouble(tE), litDouble(vE),
-        colNameOf(df, sE, "stratified_split strata"),
-        colNameOf(df, idE, "stratified_split id"))
-
-    // `evaluate embedding_outliers(label, embedding, id)`: per-vector
-    // distance-to-centroid Tukey quarantine
-    case EvaluateOp("embedding_outliers", lblE :: vecE :: idE :: Nil) =>
-      graft.ext.LlmOps.embeddingOutliers(df,
-        colNameOf(df, lblE, "embedding_outliers label"),
-        colNameOf(df, vecE, "embedding_outliers embedding"),
-        colNameOf(df, idE, "embedding_outliers id"))
-
-    // `evaluate cluster_metrics(label, embedding)`: per-label cluster
-    // cohesion/separation audit (squared Davies-Bouldin, integer milli)
-    case EvaluateOp("cluster_metrics", lblE :: vecE :: Nil) =>
-      graft.ext.LlmOps.clusterMetrics(df,
-        colNameOf(df, lblE, "cluster_metrics label"),
-        colNameOf(df, vecE, "cluster_metrics embedding"))
-
-    // `evaluate audio_dhash(payload)`: 64-bit energy-envelope gradient
-    // fingerprint
-    case EvaluateOp("audio_dhash", binE :: Nil) =>
-      graft.ext.LlmOps.audioDhash(df,
-        colNameOf(df, binE, "audio_dhash payload"))
-
-    // `evaluate image_dhash(payload)`: 64-bit perceptual gradient hash
-    case EvaluateOp("image_dhash", binE :: Nil) =>
-      graft.ext.LlmOps.imageDhash(df,
-        colNameOf(df, binE, "image_dhash payload"))
-
-    // `evaluate image_neardup(maxHamming, id, dhash)`: pigeonhole
-    // near-dup pairs over a dhash frame
-    case EvaluateOp("image_neardup", kE :: idE :: hE :: Nil) =>
-      graft.ext.LlmOps.imageNearDupPairs(df, litLong(kE).toInt,
-        colNameOf(df, idE, "image_neardup id"),
-        colNameOf(df, hE, "image_neardup dhash"))
-
-    // `evaluate ngram_novelty(n, holdMod, text, id)`: per-doc n-gram
-    // novelty of the eval fold vs the train fold
-    case EvaluateOp("ngram_novelty", nE :: mE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.ngramNovelty(df, litLong(nE).toInt,
-        litLong(mE).toInt,
-        colNameOf(df, textE, "ngram_novelty text"),
-        colNameOf(df, idE, "ngram_novelty id"))
-
-    // `evaluate length_histogram(by, text, id)`: log2 token-length
-    // histogram per group
-    case EvaluateOp("length_histogram", byE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.lengthHistogram(df,
-        colNameOf(df, byE, "length_histogram by"),
-        colNameOf(df, textE, "length_histogram text"),
-        colNameOf(df, idE, "length_histogram id"))
-
-    // `evaluate embedding_drift(DocsTable, source)`: per-source centroid
-    // drift over an embeddings-shaped frame
-    case EvaluateOp("embedding_drift", Col(tbl) :: srcE :: Nil) =>
-      val dt = letTables.getOrElse(tbl, catalog.table(tbl))
-      graft.ext.LlmOps.embeddingDrift(df, dt,
-        colNameOf(dt, srcE, "embedding_drift source"))
-
-    // `evaluate cdc_chunks(w, maskBits, text, id)`: content-defined
-    // chunking via rolling window-sum boundaries
-    case EvaluateOp("cdc_chunks", wE :: mE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.cdcChunks(df, litLong(wE).toInt, litLong(mE).toInt,
-        colNameOf(df, textE, "cdc_chunks text"),
-        colNameOf(df, idE, "cdc_chunks id"))
-
-    // `evaluate kmv_distinct(k, by, text)`: mergeable k-minimum-values
-    // distinct sketch per group + merged global
-    case EvaluateOp("kmv_distinct", kE :: byE :: textE :: Nil) =>
-      graft.ext.LlmOps.kmvDistinct(df, litLong(kE).toInt,
-        colNameOf(df, byE, "kmv_distinct by"),
-        colNameOf(df, textE, "kmv_distinct text"))
-
-    // `evaluate ogg_meta(payload)`: OGG Opus/Vorbis id-header metadata
-    case EvaluateOp("ogg_meta", binE :: Nil) =>
-      graft.ext.LlmOps.oggMeta(df,
-        colNameOf(df, binE, "ogg_meta payload"))
-
-    // `evaluate exif_meta(payload)`: TIFF/EXIF width/height/orientation
-    case EvaluateOp("exif_meta", binE :: Nil) =>
-      graft.ext.LlmOps.exifMeta(df,
-        colNameOf(df, binE, "exif_meta payload"))
-
-    // `evaluate temperature_mix(alpha, targetFrac, source, id)`:
-    // α-temperature source mixing (mT5 rule) — keep-rate sampling with
-    // p_s ∝ n_s^α
-    case EvaluateOp("temperature_mix", aE :: tE :: srcE :: idE :: Nil) =>
-      graft.ext.LlmOps.temperatureMix(df, litDouble(aE), litDouble(tE),
-        colNameOf(df, srcE, "temperature_mix source"),
-        colNameOf(df, idE, "temperature_mix id"))
-
-    // `evaluate vocab_drift(NewTable, k, text)`: top token-frequency
-    // movers between the piped (old) snapshot and NewTable
-    case EvaluateOp("vocab_drift", Col(tbl) :: kE :: textE :: Nil) =>
-      val nw = letTables.getOrElse(tbl, catalog.table(tbl))
-      graft.ext.LlmOps.vocabDrift(df, nw, litLong(kE).toInt,
-        colNameOf(df, textE, "vocab_drift text"))
-
-    // `evaluate unigram_segment(vocabTop, topK, text, id)`: unigram-LM
-    // Viterbi segmentation of the corpus vocabulary (Kudo 2018)
-    case EvaluateOp("unigram_segment", vE :: kE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.unigramSegment(df, litLong(vE).toInt,
-        litLong(kE).toInt, 12,
-        colNameOf(df, textE, "unigram_segment text"),
-        colNameOf(df, idE, "unigram_segment id"))
-
-    // `evaluate source_similarity(text, source)`: pairwise source
-    // token-set Jaccard (corpus-composition audit)
-    case EvaluateOp("source_similarity", textE :: srcE :: Nil) =>
-      graft.ext.LlmOps.sourceSimilarity(df,
-        colNameOf(df, textE, "source_similarity text"),
-        colNameOf(df, srcE, "source_similarity source"))
-
-    // `evaluate iqr_outliers(val, by)`: Tukey-fence outlier counts per
-    // group over an integer measure
-    case EvaluateOp("iqr_outliers", valE :: byE :: Nil) =>
-      graft.ext.TableOps.iqrOutliers(df,
-        colNameOf(df, valE, "iqr_outliers val"),
-        colNameOf(df, byE, "iqr_outliers by"))
-
-    // `evaluate dedup_substring(L, text, id)`: remove duplicated
-    // L-token spans corpus-wide, keeping each span's first occurrence
-    case EvaluateOp("dedup_substring", lE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.dedupSubstringRemove(df, litLong(lE).toInt,
-        colNameOf(df, textE, "dedup_substring text"),
-        colNameOf(df, idE, "dedup_substring id"))
-
-    // `evaluate readability(text, id)`: Flesch / FK-grade integer-micro
-    // readability signals per doc
-    case EvaluateOp("readability", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.readability(df,
-        colNameOf(df, textE, "readability text"),
-        colNameOf(df, idE, "readability id"))
-
-    // `evaluate table_diff(NewTable, key1 [, key2 ...])`: snapshot
-    // reconciliation — classify keys added/removed/changed/unchanged
-    // between the piped (old) table and NewTable
-    case EvaluateOp("table_diff", Col(tbl) :: keyEs) if keyEs.nonEmpty =>
-      val nw = letTables.getOrElse(tbl, catalog.table(tbl))
-      val keys = keyEs.map(e => colNameOf(df, e, "table_diff key"))
-      graft.ext.TableOps.tableDiff(df, nw, keys)
-
-    // `evaluate compact_plan(targetBytes, size, id)`: small-file
-    // bin-packing over a file-metadata frame
-    case EvaluateOp("compact_plan", tE :: sizeE :: idE :: Nil) =>
-      graft.ext.TableOps.compactPlan(df,
-        colNameOf(df, sizeE, "compact_plan size"),
-        colNameOf(df, idE, "compact_plan id"), litLong(tE))
-
-    // `evaluate dedup_url(url, quality, id)`: canonical-URL keep-best
-    case EvaluateOp("dedup_url", urlE :: qE :: idE :: Nil) =>
-      graft.ext.LlmOps.dedupByCanonicalUrl(df,
-        colNameOf(df, urlE, "dedup_url url"),
-        colNameOf(df, qE, "dedup_url quality"),
-        colNameOf(df, idE, "dedup_url id"))
-
-    // `evaluate profile(c1, c2, ...)`: one-pass per-column profiling —
-    // (column, n, n_null, n_distinct, min_s, max_s), the dataset-card /
-    // data-quality summary. One aggregate over all requested columns
-    // (the multi-distinct Expand is ncols+1 wide — at 100 TB swap
-    // count_distinct for approx_count_distinct, same plan shape);
-    // min/max are computed on the NATIVE type then stringified, so
-    // numeric columns don't sort lexically.
-    case EvaluateOp("profile", args) if args.nonEmpty =>
-      val names = args.map(a => colNameOf(df, a, "profile"))
-      val aggs = names.flatMap(n => Seq(
-        count(col(n)).as(s"__nn_$n"),
-        countDistinct(col(n)).as(s"__nd_$n"),
-        min(col(n)).cast("string").as(s"__mn_$n"),
-        max(col(n)).cast("string").as(s"__mx_$n")))
-      val agged = df.agg(count(lit(1)).as("__t"), aggs: _*)
-      agged.select(explode(array(names.map(n => struct(
-          lit(n).as("column"), col("__t").as("n"),
-          (col("__t") - col(s"__nn_$n")).as("n_null"),
-          col(s"__nd_$n").as("n_distinct"),
-          col(s"__mn_$n").as("min_s"), col(s"__mx_$n").as("max_s"))): _*))
-          .as("__p"))
-        .select(col("__p.column").as("column"), col("__p.n").as("n"),
-          col("__p.n_null").as("n_null"),
-          col("__p.n_distinct").as("n_distinct"),
-          col("__p.min_s").as("min_s"), col("__p.max_s").as("max_s"))
-
-    // `evaluate linreg(y, x1, x2, ...)`: OLS via the normal equations —
-    // one Gram-sums aggregate + a driver-side deterministic solve
-    // (LlmOps.linReg); output (feature, coef) incl. _intercept/_n/_r2
-    case EvaluateOp("linreg", yE :: featEs) if featEs.nonEmpty =>
-      graft.ext.LlmOps.linReg(df, colNameOf(df, yE, "linreg target"),
-        featEs.map(e => colNameOf(df, e, "linreg feature")))
-
-    // `evaluate shortest_paths_weighted('srcId', iters, src, dst, w)`:
-    // single-source Bellman-Ford distances, non-negative integer
-    // weights (GraphOps.shortestPathsWeighted)
-    case EvaluateOp("shortest_paths_weighted",
-        sE :: iE :: srcE :: dstE :: wE :: Nil) =>
-      GraphOps.shortestPathsWeighted(df,
-        litString(sE, "shortest_paths_weighted source"),
-        litLong(iE).toInt,
-        colNameOf(df, srcE, "shortest_paths_weighted src"),
-        colNameOf(df, dstE, "shortest_paths_weighted dst"),
-        colNameOf(df, wE, "shortest_paths_weighted w"))
-
-    // `evaluate hits(iters, src, dst)`: Kleinberg hubs & authorities,
-    // max-normalized integer-micro arithmetic (GraphOps.hits)
-    case EvaluateOp("hits", iE :: srcE :: dstE :: Nil) =>
-      GraphOps.hits(df, litLong(iE).toInt,
-        colNameOf(df, srcE, "hits src"),
-        colNameOf(df, dstE, "hits dst"))
-
-    // synchronous min-tie label-propagation communities over the input
-    // edge frame (GraphOps.labelPropagation)
-    case EvaluateOp("label_propagation", iE :: srcE :: dstE :: Nil) =>
-      GraphOps.labelPropagation(df, litLong(iE).toInt,
-        colNameOf(df, srcE, "label_propagation src"),
-        colNameOf(df, dstE, "label_propagation dst"))
-
-    // `evaluate triangle_count(src, dst)`: per-node triangle counts
-    // via degree-ordered orientation (GraphOps.triangleCount)
-    case EvaluateOp("triangle_count", srcE :: dstE :: Nil) =>
-      GraphOps.triangleCount(df,
-        colNameOf(df, srcE, "triangle_count src"),
-        colNameOf(df, dstE, "triangle_count dst"))
-
-    // `evaluate kcore(k, rounds, src, dst)`: k-core peeling — surviving
-    // nodes + surviving degree after `rounds` synchronous peels
-    // (GraphOps.kCore)
-    case EvaluateOp("kcore", kE :: rE :: srcE :: dstE :: Nil) =>
-      GraphOps.kCore(df, litLong(kE).toInt, litLong(rE).toInt,
-        colNameOf(df, srcE, "kcore src"),
-        colNameOf(df, dstE, "kcore dst"))
-
-    // `evaluate ann_sq8(queryId, k, refine, id, vec)`: scalar-quantized
-    // (int8) ANN with exact re-rank (LlmOps.annCosineSq8)
-    case EvaluateOp("ann_sq8", qE :: kE :: rE :: idE :: vecE :: Nil) =>
-      graft.ext.LlmOps.annCosineSq8(df, litLong(qE), litLong(kE).toInt,
-        refine = litLong(rE).toInt,
-        idCol = colNameOf(df, idE, "ann_sq8 id"),
-        vecCol = colNameOf(df, vecE, "ann_sq8 vector"))
-
-    case EvaluateOp("neardup_minhash", tE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.nearDupPairsMinhash(df, litDouble(tE),
-        textCol = colNameOf(df, textE, "neardup text"),
-        idCol = colNameOf(df, idE, "neardup id"))
-
-    case EvaluateOp("neardup_groups", tE :: textE :: idE :: rest) =>
-      graft.ext.LlmOps.nearDupGroups(df, litDouble(tE),
-        rest.headOption.map(colNameOf(df, _, "neardup_groups block")),
-        colNameOf(df, textE, "neardup_groups text"),
-        colNameOf(df, idE, "neardup_groups id"))
-
-    case EvaluateOp("simhash", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.simHash(df, textCol = colNameOf(df, textE, "simhash text"),
-        idCol = colNameOf(df, idE, "simhash id"))
-
-    // `evaluate contamination(EvalTable, n, text, id [, evalTextCol]
-    // [, 'broadcast'|'shuffle'])`: n-gram overlap against a benchmark
-    // table (decontamination pass); the join-strategy arg covers eval
-    // corpora too large to broadcast
-    case EvaluateOp("contamination", Col(tbl) :: nE :: textE :: idE :: rest) =>
-      val ev = letTables.getOrElse(tbl, catalog.table(tbl))
-      val (strategy, colArgs) = rest.partition {
-        case Lit(s: String) => s == "broadcast" || s == "shuffle"
-        case _ => false
-      }
-      val evalText = colArgs.headOption
-        .map(e => resolveName(ev, e match {
-          case Col(c) => c
-          case _ => throw PlanError("contamination eval text must be a column") }))
-        .getOrElse("text")
-      val bcast = strategy.headOption.forall {
-        case Lit(s: String) => s == "broadcast"
-        case _ => true
-      }
-      graft.ext.LlmOps.contamination(df, ev, litLong(nE).toInt,
-        colNameOf(df, textE, "contamination text"),
-        colNameOf(df, idE, "contamination id"), evalText, bcast)
-
-    // `evaluate winnow_contamination(EvalTable, k, w, minShared, text,
-    // id)`: substring-granular contamination pairs via shared winnow
-    // fingerprints (LlmOps.winnowContamination)
-    case EvaluateOp("winnow_contamination",
-        Col(tbl) :: kE :: wE :: mE :: textE :: idE :: Nil) =>
-      val ev = letTables.getOrElse(tbl, catalog.table(tbl))
-      graft.ext.LlmOps.winnowContamination(df, ev,
-        litLong(kE).toInt, litLong(wE).toInt, litLong(mE).toInt,
-        colNameOf(df, textE, "winnow_contamination text"),
-        colNameOf(df, idE, "winnow_contamination id"))
-
-    // `evaluate pca(p, id, vec)`: top-p principal-component projection
-    // (LlmOps.pca — driver Jacobi eigensolve over the one-pass
-    // covariance, bounded model metadata)
-    case EvaluateOp("pca", pE :: idE :: vecE :: Nil) =>
-      graft.ext.LlmOps.pca(df, litLong(pE).toInt,
-        colNameOf(df, idE, "pca id"),
-        colNameOf(df, vecE, "pca vector"))
-
-    case EvaluateOp("stratified_sample", nE :: strataE :: idE :: Nil) =>
-      graft.ext.LlmOps.stratifiedSample(df, litLong(nE).toInt,
-        colNameOf(df, strataE, "stratified_sample strata"),
-        colNameOf(df, idE, "stratified_sample id"))
-
-    case EvaluateOp("hash_split", trainE :: valE :: idE :: Nil) =>
-      graft.ext.LlmOps.hashSplit(df, litDouble(trainE), litDouble(valE),
-        colNameOf(df, idE, "hash_split id"))
-
-    case EvaluateOp("simhash_pairs", kE :: bitsE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.simHashPairs(df, litLong(kE).toInt, litLong(bitsE).toInt,
-        colNameOf(df, textE, "simhash_pairs text"),
-        colNameOf(df, idE, "simhash_pairs id"))
-
-    case EvaluateOp("quality_score", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.qualityScore(df, colNameOf(df, textE, "quality text"),
-        colNameOf(df, idE, "quality id"))
-
-    case EvaluateOp("repetition_score", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.repetitionScore(df, colNameOf(df, textE, "repetition text"),
-        colNameOf(df, idE, "repetition id"))
-
-    case EvaluateOp("unigram_logprob", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.unigramLogProb(df, colNameOf(df, textE, "unigram text"),
-        colNameOf(df, idE, "unigram id"))
-
-    case EvaluateOp("bigram_logprob", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.bigramLogProb(df, colNameOf(df, textE, "bigram text"),
-        colNameOf(df, idE, "bigram id"))
-
-    // `evaluate bm25('query terms', k, text, id)`: Okapi BM25 top-k
-    // lexical retrieval (LlmOps.bm25)
-    case EvaluateOp("bm25", qE :: kE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.bm25(df, litString(qE, "bm25 query"),
-        litLong(kE).toInt,
-        textCol = colNameOf(df, textE, "bm25 text"),
-        idCol = colNameOf(df, idE, "bm25 id"))
-
-    // `evaluate line_dedup('delim', text, id)`: corpus-wide
-    // first-occurrence line dedup (LlmOps.lineDedup)
-    case EvaluateOp("line_dedup", dE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.lineDedup(df, litString(dE, "line_dedup delimiter"),
-        colNameOf(df, textE, "line_dedup text"),
-        colNameOf(df, idE, "line_dedup id"))
-
-    // `evaluate boilerplate_remove(minDf, 'delim', text, id)`: drop lines
-    // appearing in >= minDf distinct docs (LlmOps.boilerplateRemove)
-    case EvaluateOp("boilerplate_remove", mE :: dE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.boilerplateRemove(df, litLong(mE).toInt,
-        litString(dE, "boilerplate_remove delimiter"),
-        colNameOf(df, textE, "boilerplate_remove text"),
-        colNameOf(df, idE, "boilerplate_remove id"))
-
-    // `evaluate chunk(chunkTokens, overlapTokens, text, id)`: overlapping
-    // token-window chunking (LlmOps.chunkDocs)
-    case EvaluateOp("chunk", cE :: oE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.chunkDocs(df, litLong(cE).toInt, litLong(oE).toInt,
-        colNameOf(df, textE, "chunk text"), colNameOf(df, idE, "chunk id"))
-
-    // `evaluate pack_sequences(budget, source, weight, id)`: training
-    // sequence assignment by cumulative weight (LlmOps.packSequences)
-    case EvaluateOp("pack_sequences", bE :: byE :: wE :: idE :: Nil) =>
-      graft.ext.LlmOps.packSequences(df, litLong(bE),
-        colNameOf(df, byE, "pack_sequences source"),
-        colNameOf(df, wE, "pack_sequences weight"),
-        colNameOf(df, idE, "pack_sequences id"))
-
-    // `evaluate dsir(TargetTable, n, buckets, text, id)`: DSIR
-    // importance weights vs a target corpus (LlmOps.dsirWeights)
-    case EvaluateOp("dsir", Col(tbl) :: nE :: bE :: textE :: idE :: Nil) =>
-      val target = letTables.getOrElse(tbl, catalog.table(tbl))
-      graft.ext.LlmOps.dsirWeights(df, target, litLong(nE).toInt,
-        litLong(bE).toInt, colNameOf(df, textE, "dsir text"),
-        colNameOf(df, idE, "dsir id"))
-
-    // `evaluate dsir_resample(TargetTable, k, n, buckets, text, id)`:
-    // Gumbel top-k importance resampling on the DSIR weights
-    // (LlmOps.dsirResample)
-    case EvaluateOp("dsir_resample", Col(tbl) :: kE :: nE :: bE :: textE :: idE :: Nil) =>
-      val target = letTables.getOrElse(tbl, catalog.table(tbl))
-      graft.ext.LlmOps.dsirResample(df, target, litLong(kE).toInt,
-        litLong(nE).toInt, litLong(bE).toInt,
-        colNameOf(df, textE, "dsir_resample text"),
-        colNameOf(df, idE, "dsir_resample id"))
-
-    // `evaluate text_normalize(text, id)`: NFC + control strip +
-    // whitespace collapse (LlmOps.textNormalize)
-    case EvaluateOp("text_normalize", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.textNormalize(df,
-        colNameOf(df, textE, "text_normalize text"),
-        colNameOf(df, idE, "text_normalize id"))
-
-    // `evaluate dedup_bloom(CorpusTable, fpp, text, id)`: bloom-filter
-    // membership dedup against a corpus table (LlmOps.dedupBloomFilter)
-    case EvaluateOp("dedup_bloom", Col(tbl) :: fppE :: textE :: idE :: Nil) =>
-      val corpus = letTables.getOrElse(tbl, catalog.table(tbl))
-      graft.ext.LlmOps.dedupBloomFilter(df, corpus, litDouble(fppE),
-        colNameOf(df, textE, "dedup_bloom text"),
-        colNameOf(df, idE, "dedup_bloom id"))
-
-    // `evaluate sniff_media_type(binCol)`: magic-bytes media-type
-    // detection on a binary (or string-bytes) column
-    // (LlmOps.sniffMediaType)
-    case EvaluateOp("sniff_media_type", binE :: Nil) =>
-      graft.ext.LlmOps.sniffMediaType(df,
-        colNameOf(df, binE, "sniff_media_type payload"))
-
-    // `evaluate media_dims(binCol)`: image width/height parsed from
-    // PNG/GIF/BMP/WebP/JPEG container headers — no decode
-    // (LlmOps.mediaDims)
-    case EvaluateOp("media_dims", binE :: Nil) =>
-      graft.ext.LlmOps.mediaDims(df,
-        colNameOf(df, binE, "media_dims payload"))
-
-    // `evaluate audio_meta(binCol)`: WAV fmt/data chunk-walk metadata
-    // (sample rate, channels, bits, frames, duration) — no decode
-    // (LlmOps.audioMeta)
-    case EvaluateOp("audio_meta", binE :: Nil) =>
-      graft.ext.LlmOps.audioMeta(df,
-        colNameOf(df, binE, "audio_meta payload"))
-
-    // `evaluate mp3_meta(binCol)`: MP3 frame-header metadata (bitrate,
-    // rate, channels, frame size), ID3v2-aware — no decode
-    // (LlmOps.mp3Meta)
-    case EvaluateOp("mp3_meta", binE :: Nil) =>
-      graft.ext.LlmOps.mp3Meta(df,
-        colNameOf(df, binE, "mp3_meta payload"))
-
-    // `evaluate flac_meta(binCol)`: FLAC STREAMINFO metadata (sample
-    // rate, channels, bits, total samples, duration) — fixed-offset
-    // parse, no decode (LlmOps.flacMeta)
-    case EvaluateOp("flac_meta", binE :: Nil) =>
-      graft.ext.LlmOps.flacMeta(df,
-        colNameOf(df, binE, "flac_meta payload"))
-
-    // `evaluate dbscan(eps, minPts, 'method', block, vec, id)`:
-    // density clustering with core/border/noise roles
-    // (LlmOps.dbscanCosine)
-    case EvaluateOp("dbscan", epsE :: mpE :: mE :: blkE :: vecE :: idE :: Nil) =>
-      graft.ext.LlmOps.dbscanCosine(df, litDouble(epsE), litLong(mpE).toInt,
-        blockCol = colNameOf(df, blkE, "dbscan block"),
-        idCol = colNameOf(df, idE, "dbscan id"),
-        vecCol = colNameOf(df, vecE, "dbscan vec"),
-        method = litString(mE, "dbscan method"))
-
-    // `evaluate winnow(k, w, text, id)`: MOSS winnowing fingerprints —
-    // local substring-granular fingerprinting (LlmOps.winnowFingerprints)
-    case EvaluateOp("winnow", kE :: wE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.winnowFingerprints(df, litLong(kE).toInt,
-        litLong(wE).toInt,
-        textCol = colNameOf(df, textE, "winnow text"),
-        idCol = colNameOf(df, idE, "winnow id"))
-
-    // `evaluate feature_hash(dim, text, id)`: hashing-trick signed
-    // bag-of-words vectorizer, sparse output (LlmOps.featureHash)
-    case EvaluateOp("feature_hash", dE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.featureHash(df, litLong(dE).toInt,
-        textCol = colNameOf(df, textE, "feature_hash text"),
-        idCol = colNameOf(df, idE, "feature_hash id"))
-
-    // `evaluate random_projection(k, dim, vec, id)`: JL ±1 projection
-    // to k dims in integer micros (LlmOps.randomProjection)
-    case EvaluateOp("random_projection", kE :: dimE :: vecE :: idE :: Nil) =>
-      graft.ext.LlmOps.randomProjection(df, litLong(kE).toInt,
-        litLong(dimE).toInt,
-        idCol = colNameOf(df, idE, "random_projection id"),
-        vecCol = colNameOf(df, vecE, "random_projection vec"))
-
-    // `evaluate video_meta(binCol)`: MP4 mvhd/tkhd box-walk metadata
-    // (timescale, duration, track dims) — no decode (LlmOps.videoMeta)
-    case EvaluateOp("video_meta", binE :: Nil) =>
-      graft.ext.LlmOps.videoMeta(df,
-        colNameOf(df, binE, "video_meta payload"))
-
-    case EvaluateOp("lang_id", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.langId(df, colNameOf(df, textE, "lang_id text"),
-        colNameOf(df, idE, "lang_id id"))
-
-    case EvaluateOp("fingerprint", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.fingerprint(df, colNameOf(df, textE, "fingerprint text"),
-        colNameOf(df, idE, "fingerprint id"))
-
-    case EvaluateOp("token_count", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.tokenCount(df, colNameOf(df, textE, "token_count text"),
-        colNameOf(df, idE, "token_count id"))
-
-    case EvaluateOp("pii_scrub", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.piiScrub(df, colNameOf(df, textE, "pii_scrub text"),
-        colNameOf(df, idE, "pii_scrub id"))
-
-    case EvaluateOp("substring_dup", wE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.substringDup(df, litLong(wE).toInt,
-        colNameOf(df, textE, "substring_dup text"),
-        colNameOf(df, idE, "substring_dup id"))
-
-    case EvaluateOp("term_freq", textE :: Nil) =>
-      graft.ext.LlmOps.termFreq(df, colNameOf(df, textE, "term_freq text"))
-
-    case EvaluateOp("tfidf", textE :: idE :: Nil) =>
-      graft.ext.LlmOps.tfIdf(df, colNameOf(df, textE, "tfidf text"),
-        colNameOf(df, idE, "tfidf id"))
-
-    case EvaluateOp("knn_cosine", qE :: kE :: idE :: vecE :: Nil) =>
-      graft.ext.LlmOps.knnCosine(df, litLong(qE), litLong(kE).toInt,
-        colNameOf(df, idE, "knn id"), colNameOf(df, vecE, "knn vector"))
-
-    case EvaluateOp("similarity_pairs", tE :: blkE :: idE :: vecE :: Nil) =>
-      graft.ext.LlmOps.similarityPairs(df, litDouble(tE),
-        colNameOf(df, blkE, "similarity block"), colNameOf(df, idE, "similarity id"),
-        colNameOf(df, vecE, "similarity vector"))
-
-    case EvaluateOp("similarity_pairs_lsh", tE :: blkE :: idE :: vecE :: Nil) =>
-      graft.ext.LlmOps.similarityPairsLsh(df, litDouble(tE),
-        colNameOf(df, blkE, "similarity block"), colNameOf(df, idE, "similarity id"),
-        colNameOf(df, vecE, "similarity vector"))
-
-    case EvaluateOp("cosine_groups", tE :: blkE :: idE :: vecE :: rest) =>
-      graft.ext.LlmOps.cosineGroups(df, litDouble(tE),
-        colNameOf(df, blkE, "cosine_groups block"),
-        colNameOf(df, idE, "cosine_groups id"),
-        colNameOf(df, vecE, "cosine_groups vector"),
-        method = rest.headOption.map(litString(_, "cosine_groups method"))
-          .getOrElse("exact"))
-
-    case EvaluateOp("dedup_cosine", tE :: blkE :: idE :: vecE :: rest) =>
-      graft.ext.LlmOps.dedupNearCosine(df, litDouble(tE),
-        colNameOf(df, blkE, "dedup block"), colNameOf(df, idE, "dedup id"),
-        colNameOf(df, vecE, "dedup vector"),
-        method = rest.headOption.map(litString(_, "dedup method")).getOrElse("lsh"))
-
-    // `evaluate kmeans(k, iters, id, vec)`: distributed Lloyd's k-means
-    // assignments over embeddings (LlmOps.kmeansFit)
-    case EvaluateOp("kmeans", kE :: itE :: idE :: vecE :: Nil) =>
-      graft.ext.LlmOps.kmeansFit(df, litLong(kE).toInt, litLong(itE).toInt,
-        colNameOf(df, idE, "kmeans id"), colNameOf(df, vecE, "kmeans vector"))
-
-    // `evaluate semdedup(threshold, nClusters, id, vec)`: SemDeDup-style
-    // k-means-cell semantic dedup (LlmOps.semDedup)
-    // `evaluate dedup_cosine_incremental('index', id, vec)`: dedup the
-    // input against a persisted buildCosineIndex corpus + itself
-    case EvaluateOp("dedup_cosine_incremental", tblE :: idE :: vecE :: Nil) =>
-      graft.ext.LlmOps.dedupCosineIncremental(df,
-        litString(tblE, "dedup_cosine_incremental index table"),
-        idCol = colNameOf(df, idE, "dedup_cosine_incremental id"),
-        vecCol = colNameOf(df, vecE, "dedup_cosine_incremental vector"))
-
-    // `evaluate bpe_pair_counts(k, text)`: top-k adjacent char pairs,
-    // frequency-weighted over distinct words (one BPE-trainer pass)
-    case EvaluateOp("bpe_pair_counts", kE :: textE :: Nil) =>
-      graft.ext.LlmOps.bpePairCounts(df, litLong(kE).toInt,
-        textCol = colNameOf(df, textE, "bpe_pair_counts text"))
-
-    // `evaluate bpe_train(rounds, text)`: N-round iterative BPE merge
-    // training -> the merge table (LlmOps.bpeTrain)
-    case EvaluateOp("bpe_train", rE :: textE :: Nil) =>
-      graft.ext.LlmOps.bpeTrain(df, litLong(rE).toInt,
-        textCol = colNameOf(df, textE, "bpe_train text"))
-
-    // `evaluate bpe_tokenize(rounds, text, id)`: per-doc token counts
-    // under the trained merges (LlmOps.bpeTokenize)
-    case EvaluateOp("bpe_tokenize", rE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.bpeTokenize(df, litLong(rE).toInt,
-        textCol = colNameOf(df, textE, "bpe_tokenize text"),
-        idCol = colNameOf(df, idE, "bpe_tokenize id"))
-
-    // `evaluate ngram_counts(n, k, text)`: corpus top-k n-grams
-    case EvaluateOp("ngram_counts", nE :: kE :: textE :: Nil) =>
-      graft.ext.LlmOps.ngramCounts(df, litLong(nE).toInt, litLong(kE).toInt,
-        textCol = colNameOf(df, textE, "ngram_counts text"))
-
-    // optional 5th arg = maxCellSize: the mega-cell split cap (0 = off)
-    case EvaluateOp("semdedup", tE :: kE :: idE :: vecE :: rest)
-        if rest.size <= 1 =>
-      graft.ext.LlmOps.semDedup(df, litDouble(tE), litLong(kE).toInt,
-        idCol = colNameOf(df, idE, "semdedup id"),
-        vecCol = colNameOf(df, vecE, "semdedup vector"),
-        maxCellSize = rest.headOption.map(litLong).getOrElse(0L))
-
-    // `evaluate source_cap(n, source, orderCol, id)`: keep the top-n rows
-    // per source/domain (LlmOps.sourceCap)
-    case EvaluateOp("source_cap", nE :: byE :: ordE :: idE :: Nil) =>
-      graft.ext.LlmOps.sourceCap(df, litLong(nE).toInt,
-        colNameOf(df, byE, "source_cap source"),
-        colNameOf(df, ordE, "source_cap order"),
-        colNameOf(df, idE, "source_cap id"))
-
-    // `evaluate quality_filter(minStopRatio, minTokens, text, id)`: the
-    // row-PRESERVING quality gate — keeps every input column, so KQL
-    // users can chain the full curation pipeline:
-    //   documents | evaluate quality_filter(0.05, 20, text, doc_id)
-    //             | evaluate source_cap(...) | evaluate token_budget_sample(...)
-    case EvaluateOp("quality_filter", srE :: ntE :: textE :: idE :: Nil) =>
-      val idName = colNameOf(df, idE, "quality_filter id")
-      val passing = graft.ext.LlmOps.qualityScore(df,
-          colNameOf(df, textE, "quality_filter text"), idName)
-        .filter(col("stop_ratio") >= litDouble(srE) &&
-          col("n_tokens") >= litLong(ntE))
-        .select(col(idName))
-      df.join(passing, Seq(idName), "left_semi")
-
-    // `evaluate source_sample(defaultRate, source, id, 'src', rate, ...)`:
-    // per-source mixing rates (LlmOps.weightedSourceSample)
-    case EvaluateOp("source_sample", dE :: byE :: idE :: pairEs)
-        if pairEs.length % 2 == 0 =>
-      val rates = pairEs.grouped(2).map {
-        case Seq(k, v) => litString(k, "source_sample source") -> litDouble(v)
-      }.toMap
-      graft.ext.LlmOps.weightedSourceSample(df, rates, litDouble(dE),
-        colNameOf(df, byE, "source_sample source col"),
-        colNameOf(df, idE, "source_sample id"))
-
-    // `evaluate token_budget_sample(budget, source, weight, id)`: fill a
-    // per-source token/char budget (LlmOps.tokenBudgetSample)
-    case EvaluateOp("token_budget_sample", bE :: byE :: wE :: idE :: Nil) =>
-      graft.ext.LlmOps.tokenBudgetSample(df, litLong(bE),
-        colNameOf(df, byE, "token_budget source"),
-        colNameOf(df, wE, "token_budget weight"),
-        colNameOf(df, idE, "token_budget id"))
-
-    // `evaluate dedup_incremental('index_table', threshold, text, id)`:
-    // drop rows near-duplicating the persisted corpus index
-    // (LlmOps.buildMinhashIndex) or a lower-id row of this input
-    case EvaluateOp("dedup_incremental", tblE :: tE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.dedupIncremental(df,
-        litString(tblE, "dedup_incremental index table"), litDouble(tE),
-        textCol = colNameOf(df, textE, "dedup_incremental text"),
-        idCol = colNameOf(df, idE, "dedup_incremental id"))
-
-    // `evaluate line_dedup_incremental('index_table', 'delim', text, id)`:
-    // drop lines already in the persisted line index
-    // (LlmOps.buildLineIndex) + in-batch first occurrences; pure — the
-    // index grows via appendToLineIndex on the committed output
-    case EvaluateOp("line_dedup_incremental", tblE :: dE :: textE :: idE :: Nil) =>
-      graft.ext.LlmOps.lineDedupIncremental(df,
-        litString(tblE, "line_dedup_incremental index table"),
-        litString(dE, "line_dedup_incremental delimiter"),
-        colNameOf(df, textE, "line_dedup_incremental text"),
-        colNameOf(df, idE, "line_dedup_incremental id"))
-
-    case EvaluateOp("funnel_sequence", idE :: tsE :: typeE :: stepEs) if stepEs.nonEmpty =>
-      val typeName = colNameOf(df, typeE, "funnel type")
-      val steps = stepEs.map { e =>
-        val s = litString(e, "funnel step"); s -> (col(typeName) === s)
-      }
-      graft.ext.TemporalOps.funnel(df, colNameOf(df, idE, "funnel id"),
-        colNameOf(df, tsE, "funnel timeline"), steps)
-
-    // `evaluate funnel_sequence_completion(id, timeline, type, bin,
-    // window, 's1', 's2', ...)`: per (start bin, step) — ids whose
-    // earliest funnel chain reached the step within the window
-    // (TemporalOps.funnelCompletion)
-    case EvaluateOp("funnel_sequence_completion",
-        idE :: tsE :: typeE :: binE :: winE :: stepEs) if stepEs.nonEmpty =>
-      val typeName = colNameOf(df, typeE, "funnel type")
-      val steps = stepEs.map { e =>
-        val s = litString(e, "funnel step"); s -> (col(typeName) === s)
-      }
-      val tsName = colNameOf(df, tsE, "funnel timeline")
-      graft.ext.TemporalOps.funnelCompletion(
-        df.withColumn("__fc_us", unix_micros(col(tsName))),
-        colNameOf(df, idE, "funnel id"), "__fc_us",
-        timespanUs(binE), timespanUs(winE), steps)
-
-    // `evaluate sequence_detect(ts, stepWindow, span, pred1, pred2, ...,
-    // keyCol)`: every step-1 occurrence, greedily extended within the
-    // step window, whole chain within the span (see TemporalOps)
-    case EvaluateOp("sequence_detect", tsE :: winE :: spanE :: rest) if rest.length >= 3 =>
-      val keyE = rest.last
-      val steps = rest.init.zipWithIndex.map { case (e, i) =>
-        s"s${i + 1}" -> toCol(e, df)
-      }
-      graft.ext.TemporalOps.sequenceDetect(df,
-        colNameOf(df, keyE, "sequence_detect key"),
-        colNameOf(df, tsE, "sequence_detect timeline"),
-        timespanUs(winE), timespanUs(spanE), steps)
-
-    case EvaluateOp(p, args) =>
-      // a KNOWN plugin reaching the catch-all means no case matched its
-      // arg count — say so instead of suggesting the name back at the
-      // user at edit distance 0
-      if (Suggest.plugins.contains(p))
-        throw PlanError(s"evaluate: plugin '$p' does not take ${args.length} " +
-          "argument(s) — check the expected signature")
-      else throw PlanError(
-        s"evaluate: unsupported plugin '$p'${Suggest.hint(p, Suggest.plugins)}")
+    case EvaluateOp(name, args) => evaluate(df, name, args)
 
     case PartitionOp(key, ops) =>
       // per-key-value subpipeline, rewritten to distribute instead of
@@ -1867,6 +646,1122 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
       df.groupBy(regexp_replace(c, lit("[0-9]+"), lit("*")).as("Pattern"))
         .agg(count(lit(1)).as("Count"), min(c).as("Representative"))
   }
+
+  // ====================================================== evaluate plugins
+  /** One `evaluate` plugin: its declared parameters and its body. A
+    * parameter spelled `x?` may be left out (trailing only); `x...`
+    * repeats one or more times and `x*` zero or more (several starred
+    * names repeat as a group); names after the repeating tail are
+    * required. Dispatch, the arity check, the argument-error labels and
+    * the unknown-name suggestions all read this one declaration. */
+  private final class Plugin(declared: Seq[String], val body: PluginArgs => DataFrame) {
+    private def repeats(p: String) = p.endsWith("...") || p.endsWith("*")
+    val fixed: Seq[String] = declared.takeWhile(!repeats(_))
+    val tail: Seq[String] = declared.drop(fixed.size).takeWhile(repeats)
+      .map(_.stripSuffix("...").stripSuffix("*"))
+    val after: Seq[String] = declared.drop(fixed.size + tail.size)
+    private val minGroups = if (declared.exists(_.endsWith("..."))) 1 else 0
+
+    def accepts(n: Int): Boolean =
+      if (tail.isEmpty) n >= fixed.count(!_.endsWith("?")) && n <= fixed.size
+      else {
+        val k = n - fixed.size - after.size
+        k >= minGroups * tail.size && k % tail.size == 0
+      }
+
+    def signature(name: String): String = {
+      val group = (tail :+ "...").mkString(", ")
+      val shown = fixed.map(p => if (p.endsWith("?")) s"[${p.init}]" else p) ++
+        (if (tail.isEmpty) Nil else Seq(if (minGroups == 1) group else s"[$group]")) ++
+        after
+      s"$name(${shown.mkString(", ")})"
+    }
+  }
+
+  /** One argument of an `evaluate` call, read as its declared type; every
+    * error names the plugin and the parameter. */
+  private final class Arg(val e: Expr, label: String, df: DataFrame) {
+    private def bad(what: String) = PlanError(s"$label expects $what, got $e")
+    def col: String = colIn(df)
+    def colIn(in: DataFrame): String = colNameOf(in, e, label)
+    def long: Long = e match {
+      case Lit(l: Long) => l
+      case _ => throw bad("an integer literal")
+    }
+    def int: Int = long.toInt
+    def real: Double = e match {
+      case Lit(d: Double) => d
+      case Lit(l: Long) => l.toDouble
+      case _ => throw bad("a numeric literal")
+    }
+    def str: String = litString(e, label)
+    def span: Long = e match {
+      case Lit(Timespan(us)) => us
+      case _ => throw bad("a timespan literal")
+    }
+    def time: Long = staticValue(e, "") match {
+      case t: java.sql.Timestamp =>
+        val i = t.toInstant
+        i.getEpochSecond * 1000000L + i.getNano / 1000L
+      case _ => throw bad("a datetime literal")
+    }
+    def table: DataFrame = e match {
+      case Col(t) => tableNamed(t)
+      case _ => throw bad("a table name")
+    }
+    /** Constant-folded integer / number (`2 * 3`, `-1`). */
+    def foldedInt: Int = staticValue(e, "") match {
+      case l: Long => l.toInt
+      case _ => throw bad("an integer")
+    }
+    def foldedReal: Double = staticValue(e, "") match {
+      case l: Long => l.toDouble
+      case d: Double => d
+      case _ => throw bad("a number")
+    }
+  }
+
+  /** An `evaluate` call's arguments bound to its plugin's parameters. */
+  private final class PluginArgs(name: String, p: Plugin, val df: DataFrame,
+                                 val exprs: List[Expr]) {
+    private def arg(param: String, e: Expr) = new Arg(e, s"$name $param", df)
+    private val named: Map[String, Arg] =
+      (p.fixed.map(_.stripSuffix("?")).zip(exprs) ++
+        p.after.zip(exprs.takeRight(p.after.size))).map { case (n, e) => n -> arg(n, e) }.toMap
+    def apply(param: String): Arg = named(param)
+    def opt(param: String): Option[Arg] = named.get(param)
+    def tail: List[Arg] =
+      if (p.tail.isEmpty) Nil
+      else exprs.slice(p.fixed.size, exprs.length - p.after.size).zipWithIndex.map {
+        case (e, i) => arg(p.tail(i % p.tail.size), e)
+      }
+  }
+
+  private def plugin(declared: String*)(body: PluginArgs => DataFrame) = new Plugin(declared, body)
+
+  /** Each plugin's accepted argument counts and rendered signature. */
+  private[graft] def pluginSignatures: Map[String, (Int => Boolean, String)] =
+    plugins.map { case (n, p) => n -> ((p.accepts _), p.signature(n)) }
+
+  private def evaluate(df: DataFrame, name: String, args: List[Expr]): DataFrame = {
+    val p = plugins.getOrElse(name, throw PlanError(
+      s"evaluate: unsupported plugin '$name'${Suggest.hint(name, plugins.keys)}"))
+    if (!p.accepts(args.length))
+      throw PlanError(s"evaluate: plugin '$name' does not take ${args.length} " +
+        s"argument(s) — expected ${p.signature(name)}")
+    p.body(new PluginArgs(name, p, df, args))
+  }
+
+  private lazy val plugins: Map[String, Plugin] = Map(
+    // KQL preview(n) has two results (planStatementsMulti)
+    "preview" -> plugin("n") { a =>
+      throw PlanError(s"evaluate preview(${a("n").long}) returns two results (the " +
+        "first n rows and the total count): run it through Kql.runMulti")
+    },
+
+    // Spark's native pivot (two-pass: distinct values then a pivoting
+    // hash aggregate); only the first aggregate is used. Group keys are
+    // every column not consumed by the pivot or the aggregate.
+    "pivot" -> plugin("column", "aggregate*") { a =>
+      val df = a.df
+      val pivotName = a("column").col
+      val aggE = a.tail.headOption.map(_.e).getOrElse(App("count", Nil))
+      def colRefs(e: Expr): Set[String] = e match {
+        case Col(n) => Set(n)
+        case App(_, as) => as.flatMap(colRefs).toSet
+        case BinOp(_, l, r) => colRefs(l) ++ colRefs(r)
+        case UnOp(_, x) => colRefs(x)
+        case _ => Set.empty
+      }
+      val consumed = colRefs(aggE) + pivotName
+      val groupCols = df.columns.filterNot(c => consumed.exists(_.equalsIgnoreCase(c)))
+      val pivoted = df.groupBy(groupCols.map(col).toSeq: _*)
+        .pivot(pivotName).agg(toCol(aggE, df, agg = true))
+      // KQL pivot yields 0 (not null) for empty count cells
+      aggE match {
+        case App("count" | "countif", _) => pivoted.na.fill(0L)
+        case _ => pivoted
+      }
+    },
+
+    // schema-creating by definition: KQL bag_unpack emits the UNION of
+    // keys across all rows, so infer over a bounded distinct sample of
+    // bag shapes (spark.read.json union-merges per-row schemas) — one
+    // bounded eager action, then the expansion itself stays lazy
+    "bag_unpack" -> plugin("bag") { a =>
+      val df = a.df
+      val dynE = a("bag").e
+      val c = toCol(dynE, df)
+      val sample = df.select(c.cast("string").as("__d")).na.drop()
+        .distinct().limit(1024)
+      val inferred = df.sparkSession.read
+        .json(sample.as(org.apache.spark.sql.Encoders.STRING))
+      if (inferred.schema.isEmpty) df
+      else {
+        val parsed = df.withColumn("__bag", from_json(c, inferred.schema))
+        val keep: Seq[String] = dynE match {
+          case Col(n) =>
+            val rn = resolveName(df, n)
+            df.columns.filterNot(_.equalsIgnoreCase(rn)).toSeq
+          case _ => df.columns.toSeq
+        }
+        parsed.select(keep.map(c => col(c)) :+ col("__bag.*"): _*)
+      }
+    },
+
+    // transpose to (Row, Column, Value): zero-based global row ordinal
+    // via the two-phase machinery, then one posexplode-style stack of
+    // the columns as (name, stringified value) structs
+    "narrow" -> plugin() { a =>
+      val df = a.df
+      if (!serialized && sortCols.isEmpty) serialized = true // natural order
+      val (dp, ord, keys, pr) = windowInputs(df)
+      val withRow = GlobalWindow.compute(dp, ord, keys,
+        Seq(GlobalWindow.RowNumber("__narrow_rn", None)), pr)
+      val cols = df.columns.toSeq
+      val pairs = array(cols.map(c =>
+        struct(lit(c).as("Column"), col(c).cast("string").as("Value"))): _*)
+      withRow.select((col("__narrow_rn") - 1L).as("Row"), explode(pairs).as("__kv"))
+        .select(col("Row"), col("__kv.Column").as("Column"), col("__kv.Value").as("Value"))
+    },
+
+    "activity_engagement" -> plugin("id", "timeline", "inner_window", "outer_window") { a =>
+      ActivityOps.activityEngagement(a.df, a("id").col, a("timeline").col,
+        a("inner_window").span, a("outer_window").span)
+    },
+
+    "sliding_window_counts" -> plugin("id", "timeline", "lookback", "bin") { a =>
+      ActivityOps.slidingWindowCounts(a.df, a("id").col, a("timeline").col,
+        a("lookback").span, a("bin").span)
+    },
+
+    // intersection cardinalities from the sketches by inclusion–exclusion
+    // — sketch unions are mergeable (hll_union), so this stays a projection
+    "dcount_intersect" -> plugin("hll1", "hll2", "hll3?") { a =>
+      val df = a.df
+      val hllEs = a.exprs
+      val hs = hllEs.map(e => toCol(e, df))
+      val est = (c: Column) => hll_sketch_estimate(c)
+      val u2 = (x: Column, y: Column) => est(hll_union(x, y))
+      val s = hs.map(est)
+      val keep = df.columns.filterNot(c => hllEs.exists {
+        case Col(n) => resolveName(df, n) == c; case _ => false }).map(col).toList
+      if (hs.length == 2) {
+        val inter = s(0) + s(1) - u2(hs(0), hs(1))
+        df.select((keep :+ s(0).as("s0") :+ greatest(inter, lit(0L)).as("s1")): _*)
+      } else {
+        val i01 = s(0) + s(1) - u2(hs(0), hs(1))
+        val i02 = s(0) + s(2) - u2(hs(0), hs(2))
+        val i12 = s(1) + s(2) - u2(hs(1), hs(2))
+        val uAll = est(hll_union(hll_union(hs(0), hs(1)), hs(2)))
+        val i012 = uAll - s(0) - s(1) - s(2) + i01 + i02 + i12
+        df.select((keep :+ s(0).as("s0") :+ greatest(i01, lit(0L)).as("s1")
+          :+ greatest(i012, lit(0L)).as("s2")): _*)
+      }
+    },
+
+    "rolling_percentile" -> plugin("value", "percentile", "timeline", "bin", "window") { a =>
+      val pct = a("percentile").foldedReal
+      ActivityOps.rollingPercentile(a.df, a("value").col, pct,
+        a("timeline").col, a("bin").span, a("window").foldedInt)
+    },
+
+    // enrich rows whose IPv4 falls inside a lookup row's CIDR. The range
+    // table is dimension-sized ⇒ explicit broadcast; containment is
+    // long-range arithmetic on the parsed addresses (no UDF).
+    "ipv4_lookup" -> plugin("range_table", "ip", "key") { a =>
+      val df = a.df
+      val lk = a("range_table").table
+      val keyName = a("key").colIn(lk)
+      val ipName = a("ip").col
+      val net = element_at(split(col(keyName), "/"), 1)
+      val sfx = coalesce(element_at(split(col(keyName), "/"), 2).cast("long"), lit(32L))
+      val block = pow(lit(2.0), lit(32L) - sfx).cast("long")
+      val start = Functions.registry("parse_ipv4")(List(net)) -
+        pmod(Functions.registry("parse_ipv4")(List(net)), block)
+      val aug = lk.withColumn("__ip_lo", start).withColumn("__ip_hi", start + block - 1)
+      val ipL = Functions.registry("parse_ipv4")(List(col(ipName)))
+      df.join(broadcast(aug),
+          ipL >= aug("__ip_lo") && ipL <= aug("__ip_hi"), "inner")
+        .drop("__ip_lo", "__ip_hi")
+    },
+
+    "active_users_count" -> plugin("id", "timeline", "start", "end", "lookback",
+        "period", "active_periods", "bin") { a =>
+      ActivityOps.activeUsersCount(a.df, a("id").col, a("timeline").col,
+        a("start").time, a("end").time, a("lookback").span, a("period").span,
+        a("active_periods").foldedInt, a("bin").span)
+    },
+
+    "activity_counts_metrics" -> plugin("id", "timeline", "start", "end", "bin") { a =>
+      ActivityOps.activityCountsMetrics(a.df, a("id").col, a("timeline").col,
+        a("start").time, a("end").time, a("bin").span)
+    },
+
+    // per-bin dcount / new / retained-from-previous-bin with exact micro rates
+    "activity_metrics" -> plugin("id", "timeline", "bin") { a =>
+      ActivityOps.activityMetrics(a.df, a("id").col, a("timeline").col, a("bin").span)
+    },
+
+    // cohort retention/churn per (first-seen bin, activity bin) pair
+    "new_activity_metrics" -> plugin("id", "timeline", "bin") { a =>
+      ActivityOps.newActivityMetrics(a.df, a("id").col, a("timeline").col, a("bin").span)
+    },
+
+    "session_count" -> plugin("id", "timeline", "start", "end", "bin", "lookback") { a =>
+      ActivityOps.sessionCount(a.df, a("id").col, a("timeline").col,
+        a("start").time, a("end").time, a("bin").span, a("lookback").span)
+    },
+
+    "autocluster" -> plugin("min_percent", "column...") { a =>
+      cubeSegments(a.df, a.tail.map(_.col), a("min_percent").real)
+    },
+
+    // simplified KQL diffpatterns: attribute segments whose share
+    // DIFFERS between the A and B splits of the data (incident
+    // investigation — "what changed?"); same cube lattice as
+    // autocluster/basket, split counted map-side as two conditional
+    // sums, difference threshold in percentage points
+    "diffpatterns" -> plugin("split", "a_value", "b_value", "min_diff_percent",
+        "column...") { a =>
+      diffPatterns(a.df, a("split").col, a("a_value").str, a("b_value").str,
+        a("min_diff_percent").real, a.tail.map(_.col))
+    },
+
+    // simplified KQL diffpatterns_text: TOKENS whose document-frequency
+    // share differs between the A and B splits — the text sibling of
+    // diffpatterns (error-message clustering: "which words appear in
+    // failing requests but not passing ones")
+    "diffpatterns_text" -> plugin("text", "split", "a_value", "b_value",
+        "min_diff_percent") { a =>
+      diffPatternsText(a.df, a("text").col, a("split").col, a("a_value").str,
+        a("b_value").str, a("min_diff_percent").real)
+    },
+
+    // simplified KQL basket: frequent attribute segments over the same
+    // cube lattice; a leading real literal is the support threshold as a
+    // ratio (default 0.05)
+    "basket" -> plugin("column...") { a =>
+      a.exprs match {
+        case Lit(v: Double) :: rest if rest.nonEmpty =>
+          cubeSegments(a.df, a.tail.tail.map(_.col), v * 100)
+        case _ => cubeSegments(a.df, a.tail.map(_.col), 5.0)
+      }
+    },
+
+    // on a serialized input: keep rows within `before` rows before /
+    // `after` rows (default `before`) after any condition row. Routed
+    // through the two-phase GlobalWindow lag/lead machinery — no
+    // single-partition window over data.
+    "rows_near" -> plugin("condition", "before", "after*") { a =>
+      val df = a.df
+      val before = a("before").foldedInt
+      val after = a.tail.headOption.map(_.foldedInt).getOrElse(before)
+      if (before < 0 || after < 0 || before > 32 || after > 32)
+        throw PlanError("rows_near supports 0..32 rows before/after")
+      val flagged = df.withColumn("__rn_f", when(toCol(a("condition").e, df), 1L).otherwise(0L))
+      val (dPrep, ordered, keys, preRanged) = windowInputs(flagged)
+      val lagNames = (1 to after).map(k => s"__rn_lag$k")
+      val leadNames = (1 to before).map(k => s"__rn_lead$k")
+      val calls: List[GlobalWindow.Call] =
+        ((1 to after).map(k => GlobalWindow.Lag(lagNames(k - 1), col("__rn_f"), k, Some(lit(0L)))) ++
+         (1 to before).map(k => GlobalWindow.Lead(leadNames(k - 1), col("__rn_f"), k, Some(lit(0L))))).toList
+      val computed =
+        if (calls.isEmpty) dPrep
+        else GlobalWindow.compute(dPrep, ordered, keys, calls, preRanged)
+      val near = ((col("__rn_f") === 1L) +:
+        (lagNames ++ leadNames).map(n => col(n) === 1L)).reduce(_ || _)
+      restoreSerializedOrder(
+        computed.filter(near).drop(("__rn_f" +: (lagNames ++ leadNames)): _*))
+    },
+
+    // ---- LLM-pipeline ops surfaced in the query language (E1): the same
+    // LlmOps/TemporalOps implementations the Scala API (E2) calls.
+    "dedup_exact" -> plugin("text", "id") { a =>
+      LlmOps.dedupExact(a.df, a("text").col, a("id").col)
+    },
+
+    "jaccard_pairs" -> plugin("threshold", "text", "id", "block*") { a =>
+      LlmOps.jaccardPairs(a.df, a("threshold").real, a.tail.headOption.map(_.col),
+        a("text").col, a("id").col)
+    },
+
+    // vocabulary spelling-variant pairs within Levenshtein distance
+    // max_dist, found by deletion-neighborhood blocking
+    "fuzzy_token_pairs" -> plugin("min_len", "max_vocab", "max_dist", "text") { a =>
+      LlmOps.fuzzyTokenPairs(a.df, a("min_len").int, a("max_vocab").int,
+        a("max_dist").int, textCol = a("text").col)
+    },
+
+    // asymmetric shingle-containment pairs
+    "containment_pairs" -> plugin("threshold", "w", "text", "id") { a =>
+      LlmOps.containmentPairs(a.df, a("threshold").real, a("w").int,
+        textCol = a("text").col, idCol = a("id").col)
+    },
+
+    // drop docs contained in a larger doc, keep the superset
+    "dedup_contained" -> plugin("threshold", "w", "text", "id") { a =>
+      LlmOps.dedupContained(a.df, a("threshold").real, a("w").int,
+        textCol = a("text").col, idCol = a("id").col)
+    },
+
+    // product-quantization ANN with exact re-rank
+    "ann_pq" -> plugin("query_id", "k", "refine", "id", "vector") { a =>
+      LlmOps.annCosinePq(a.df, a("query_id").long, a("k").int,
+        refine = a("refine").int, idCol = a("id").col, vecCol = a("vector").col)
+    },
+
+    // transitive components over the input edge frame via the two-phase
+    // star engine
+    "connected_components" -> plugin("src", "dst") { a =>
+      GraphOps.components(a.df, a("src").col, a("dst").col)
+    },
+
+    // damped power-iteration PageRank over the input edge frame,
+    // integer-micro arithmetic
+    "pagerank" -> plugin("iters", "src", "dst") { a =>
+      GraphOps.pageRank(a.df, a("iters").int, a("src").col, a("dst").col)
+    },
+
+    // per-source KL divergence from the corpus token distribution
+    "source_kl" -> plugin("text", "source") { a =>
+      LlmOps.sourceKl(a.df, textCol = a("text").col, srcCol = a("source").col)
+    },
+
+    // reciprocal-rank fusion of tall (system, id, rank) lists
+    "rrf_fuse" -> plugin("k0", "top_k", "system", "id", "rank") { a =>
+      LlmOps.rrfFuse(a.df, a("k0").int, a("top_k").int, systemCol = a("system").col,
+        idCol = a("id").col, rankCol = a("rank").col)
+    },
+
+    // hashed bag-of-words logistic-regression classifier, full-batch GD
+    "logreg_score" -> plugin("iters", "dim", "label", "text", "id") { a =>
+      LlmOps.logRegScore(a.df, a("label").col, dim = a("dim").int,
+        iters = a("iters").int, textCol = a("text").col, idCol = a("id").col)
+    },
+
+    // count-min sketch frequency estimates of the space-separated probes
+    "cms_count" -> plugin("probes", "width", "depth", "text") { a =>
+      LlmOps.cmsCount(a.df, a("probes").str, a("width").int, a("depth").int,
+        textCol = a("text").col)
+    },
+
+    // exact top-k tokens via the bounded-memory Misra-Gries candidate
+    // pass + exact recount
+    "heavy_hitters" -> plugin("m", "k", "text") { a =>
+      LlmOps.heavyHitters(a.df, a("m").int, a("k").int, a("text").col)
+    },
+
+    // top-k bigram collocations by lift (vocabulary-sized work, bounded
+    // selection)
+    "collocations" -> plugin("min_count", "k", "text") { a =>
+      LlmOps.collocations(a.df, a("min_count").int, a("k").int, a("text").col)
+    },
+
+    // multinomial NB language classifier over a documents-shaped frame
+    // (doc_id, lang, text)
+    "naive_bayes_lang" -> plugin("hold_mod") { a =>
+      LlmOps.naiveBayesLangId(a.df, a("hold_mod").int)
+    },
+
+    // diverse top-k over an embeddings-shaped frame (vec_id, embedding)
+    "mmr_select" -> plugin("query_id", "n_cand", "k") { a =>
+      LlmOps.mmrSelect(a.df, a("query_id").long, a("n_cand").int, a("k").int)
+    },
+
+    // per-doc token entropy + TTR
+    "doc_entropy" -> plugin("text", "id") { a =>
+      LlmOps.docEntropy(a.df, a("text").col, a("id").col)
+    },
+
+    // Unicode-script mix + dominant script (the pre-langid router)
+    "script_detect" -> plugin("text") { a => LlmOps.scriptDetect(a.df, a("text").col) },
+
+    // SPDX/phrase license detection
+    "license_detect" -> plugin("text") { a => LlmOps.licenseDetect(a.df, a("text").col) },
+
+    // encoding-damage signals + flag
+    "mojibake_detect" -> plugin("text") { a => LlmOps.mojibakeDetect(a.df, a("text").col) },
+
+    // T5 denoising pairs
+    "span_corrupt" -> plugin("block_size", "text", "id") { a =>
+      LlmOps.spanCorrupt(a.df, a("block_size").int, a("text").col, a("id").col)
+    },
+
+    // clipped n-gram precision + BLEU
+    "bleu" -> plugin("ref", "cand", "id") { a =>
+      LlmOps.bleuScore(a.df, a("ref").col, a("cand").col, a("id").col)
+    },
+
+    // BM25 against the at-rest inverted index (postings for the query
+    // terms only); the piped input is not read
+    "bm25_indexed" -> plugin("index_table", "query", "k") { a =>
+      LlmOps.bm25Indexed(a.df.sparkSession, a("index_table").str, a("query").str,
+        a("k").int)
+    },
+
+    // re-identification risk audit — per quasi-identifier-combo counts +
+    // the ≥ k flag
+    "k_anonymity" -> plugin("k", "column...") { a =>
+      LlmOps.kAnonymity(a.df, a.tail.map(_.col), a("k").int)
+    },
+
+    // sign-bit hamming ANN
+    "ann_binary" -> plugin("query_id", "k", "id", "vec") { a =>
+      LlmOps.annCosineBinary(a.df, a("query_id").long, a("k").int,
+        idCol = a("id").col, vecCol = a("vec").col)
+    },
+
+    // per-doc OOV rate vs the corpus top-K word vocabulary
+    "tokenizer_oov" -> plugin("vocab_top", "text", "id") { a =>
+      LlmOps.tokenizerOov(a.df, a("vocab_top").int, a("text").col, a("id").col)
+    },
+
+    // deterministic training reshard
+    "global_shuffle" -> plugin("shards", "id") { a =>
+      LlmOps.globalShuffle(a.df, a("shards").int, idCol = a("id").col)
+    },
+
+    // reliability bins
+    "calibration_bins" -> plugin("bins", "char_cut", "text", "id") { a =>
+      LlmOps.calibrationBins(a.df, a("bins").int, a("char_cut").int,
+        a("text").col, a("id").col)
+    },
+
+    // ROUGE-1/2 n-gram recall
+    "rouge_n" -> plugin("ref", "cand", "id") { a =>
+      LlmOps.rougeN(a.df, a("ref").col, a("cand").col, a("id").col)
+    },
+
+    // SFT loss-mask geometry per doc
+    "sft_pack" -> plugin("text", "id") { a =>
+      LlmOps.sftPack(a.df, textCol = a("text").col, idCol = a("id").col)
+    },
+
+    // per-prompt preference pairs
+    "dpo_pairs" -> plugin("groups", "text", "id") { a =>
+      LlmOps.dpoPairs(a.df, a("groups").int, a("text").col, a("id").col)
+    },
+
+    // prefix-energy truncation audit
+    "matryoshka" -> plugin("vec", "id") { a =>
+      LlmOps.matryoshkaEval(a.df, vecCol = a("vec").col, idCol = a("id").col)
+    },
+
+    // easy-to-hard cut
+    "curriculum_shards" -> plugin("shards", "text", "id") { a =>
+      LlmOps.curriculumShards(a.df, a("shards").int, a("text").col, a("id").col)
+    },
+
+    // per-language LM terciles
+    "ccnet_buckets" -> plugin("lang", "text", "id") { a =>
+      LlmOps.ccnetBuckets(a.df, a("lang").col, a("text").col, a("id").col)
+    },
+
+    // terminator-bounded sentence rows with in-doc indexes (chunking prep)
+    "sentence_split" -> plugin("text", "id") { a =>
+      LlmOps.sentenceSplit(a.df, a("text").col, a("id").col)
+    },
+
+    // duplicate-group training weights (1/n micros) instead of drops
+    "dedup_soft" -> plugin("text") { a => LlmOps.dedupSoft(a.df, a("text").col) },
+
+    // token edit distance + WER micros
+    "wer" -> plugin("ref", "hyp", "id") { a =>
+      LlmOps.werScore(a.df, a("ref").col, a("hyp").col, a("id").col)
+    },
+
+    // LCS recall/precision/F1
+    "rouge_l" -> plugin("ref", "cand", "id") { a =>
+      LlmOps.rougeL(a.df, a("ref").col, a("cand").col, a("id").col)
+    },
+
+    // contrastive hard-negative mining
+    "hard_negatives" -> plugin("anchor_every", "k", "id", "label", "vec") { a =>
+      LlmOps.hardNegatives(a.df, a("anchor_every").int, a("k").int,
+        idCol = a("id").col, labelCol = a("label").col, vecCol = a("vec").col)
+    },
+
+    // the IVF-pruned form (n_probe = n_lists reproduces the scan form
+    // exactly; see LlmOps.hardNegativesIvf)
+    "hard_negatives_ivf" -> plugin("anchor_every", "k", "n_lists", "n_probe", "id",
+        "label", "vec") { a =>
+      LlmOps.hardNegativesIvf(a.df, a("anchor_every").int, a("k").int,
+        nLists = a("n_lists").int, nProbe = a("n_probe").int,
+        idCol = a("id").col, labelCol = a("label").col, vecCol = a("vec").col)
+    },
+
+    // one-row-per-source release summary
+    "dataset_card" -> plugin("source", "lang", "text", "id") { a =>
+      LlmOps.datasetCard(a.df, a("source").col, a("lang").col, a("text").col,
+        a("id").col)
+    },
+
+    // crawl politeness fetch slots per host
+    "frontier_schedule" -> plugin("per_slot", "host", "priority", "id") { a =>
+      LlmOps.frontierSchedule(a.df, a("per_slot").int, a("host").col,
+        a("priority").col, a("id").col)
+    },
+
+    // top-k PMI association contexts per word
+    "pmi_contexts" -> plugin("window", "min_count", "k", "text") { a =>
+      LlmOps.pmiContexts(a.df, a("window").int, a("min_count").int, a("k").int,
+        textCol = a("text").col)
+    },
+
+    // per-doc top-k tf-idf terms (doc tagging / cluster labeling)
+    "keyword_extract" -> plugin("k", "text", "id") { a =>
+      LlmOps.keywordExtract(a.df, a("k").int, textCol = a("text").col,
+        idCol = a("id").col)
+    },
+
+    // held-out bigram LM scoring with unigram backoff (Brants 2007)
+    "stupid_backoff" -> plugin("hold_mod", "text", "id") { a =>
+      LlmOps.stupidBackoff(a.df, a("hold_mod").int, textCol = a("text").col,
+        idCol = a("id").col)
+    },
+
+    // code-vs-prose routing gate
+    "code_detect" -> plugin("text") { a => LlmOps.codeDetect(a.df, a("text").col) },
+
+    // WARC + embedded-HTTP header fields (the crawl container's
+    // route-and-filter metadata)
+    "warc_meta" -> plugin("text") { a => LlmOps.warcMeta(a.df, a("text").col) },
+
+    // AVIF/HEIC dims from the ISO-BMFF ispe box (meta -> iprp -> ipco
+    // walk), header bytes only
+    "avif_dims" -> plugin("payload") { a => LlmOps.avifDims(a.df, a("payload").col) },
+
+    // vocabulary-growth checkpoints + fitted Heaps exponent along the
+    // deterministic hash shuffle
+    "heaps_law" -> plugin("text", "id") { a => LlmOps.heapsLaw(a.df, a("text").col, a("id").col) },
+
+    // exact per-stratum train/val/test assignment
+    "stratified_split" -> plugin("train_frac", "val_frac", "strata", "id") { a =>
+      LlmOps.stratifiedSplit(a.df, a("train_frac").real, a("val_frac").real,
+        a("strata").col, a("id").col)
+    },
+
+    // per-vector distance-to-centroid Tukey quarantine
+    "embedding_outliers" -> plugin("label", "embedding", "id") { a =>
+      LlmOps.embeddingOutliers(a.df, a("label").col, a("embedding").col, a("id").col)
+    },
+
+    // per-label cluster cohesion/separation audit (squared
+    // Davies-Bouldin, integer milli)
+    "cluster_metrics" -> plugin("label", "embedding") { a =>
+      LlmOps.clusterMetrics(a.df, a("label").col, a("embedding").col)
+    },
+
+    // 64-bit energy-envelope gradient fingerprint
+    "audio_dhash" -> plugin("payload") { a => LlmOps.audioDhash(a.df, a("payload").col) },
+
+    // 64-bit perceptual gradient hash
+    "image_dhash" -> plugin("payload") { a => LlmOps.imageDhash(a.df, a("payload").col) },
+
+    // pigeonhole near-dup pairs over a dhash frame
+    "image_neardup" -> plugin("max_hamming", "id", "dhash") { a =>
+      LlmOps.imageNearDupPairs(a.df, a("max_hamming").int, a("id").col, a("dhash").col)
+    },
+
+    // per-doc n-gram novelty of the eval fold vs the train fold
+    "ngram_novelty" -> plugin("n", "hold_mod", "text", "id") { a =>
+      LlmOps.ngramNovelty(a.df, a("n").int, a("hold_mod").int, a("text").col,
+        a("id").col)
+    },
+
+    // log2 token-length histogram per group
+    "length_histogram" -> plugin("by", "text", "id") { a =>
+      LlmOps.lengthHistogram(a.df, a("by").col, a("text").col, a("id").col)
+    },
+
+    // per-source centroid drift over an embeddings-shaped frame; the
+    // source column is the docs table's
+    "embedding_drift" -> plugin("docs_table", "source") { a =>
+      val dt = a("docs_table").table
+      LlmOps.embeddingDrift(a.df, dt, a("source").colIn(dt))
+    },
+
+    // content-defined chunking via rolling window-sum boundaries
+    "cdc_chunks" -> plugin("w", "mask_bits", "text", "id") { a =>
+      LlmOps.cdcChunks(a.df, a("w").int, a("mask_bits").int, a("text").col, a("id").col)
+    },
+
+    // mergeable k-minimum-values distinct sketch per group + merged global
+    "kmv_distinct" -> plugin("k", "by", "text") { a =>
+      LlmOps.kmvDistinct(a.df, a("k").int, a("by").col, a("text").col)
+    },
+
+    // OGG Opus/Vorbis id-header metadata
+    "ogg_meta" -> plugin("payload") { a => LlmOps.oggMeta(a.df, a("payload").col) },
+
+    // TIFF/EXIF width/height/orientation
+    "exif_meta" -> plugin("payload") { a => LlmOps.exifMeta(a.df, a("payload").col) },
+
+    // α-temperature source mixing (mT5 rule) — keep-rate sampling with
+    // p_s ∝ n_s^α
+    "temperature_mix" -> plugin("alpha", "target_frac", "source", "id") { a =>
+      LlmOps.temperatureMix(a.df, a("alpha").real, a("target_frac").real,
+        a("source").col, a("id").col)
+    },
+
+    // top token-frequency movers between the piped (old) snapshot and
+    // the new table
+    "vocab_drift" -> plugin("new_table", "k", "text") { a =>
+      LlmOps.vocabDrift(a.df, a("new_table").table, a("k").int, a("text").col)
+    },
+
+    // unigram-LM Viterbi segmentation of the corpus vocabulary (Kudo 2018)
+    "unigram_segment" -> plugin("vocab_top", "top_k", "text", "id") { a =>
+      LlmOps.unigramSegment(a.df, a("vocab_top").int, a("top_k").int, 12,
+        a("text").col, a("id").col)
+    },
+
+    // pairwise source token-set Jaccard (corpus-composition audit)
+    "source_similarity" -> plugin("text", "source") { a =>
+      LlmOps.sourceSimilarity(a.df, a("text").col, a("source").col)
+    },
+
+    // Tukey-fence outlier counts per group over an integer measure
+    "iqr_outliers" -> plugin("val", "by") { a =>
+      TableOps.iqrOutliers(a.df, a("val").col, a("by").col)
+    },
+
+    // remove duplicated span_len-token spans corpus-wide, keeping each
+    // span's first occurrence
+    "dedup_substring" -> plugin("span_len", "text", "id") { a =>
+      LlmOps.dedupSubstringRemove(a.df, a("span_len").int, a("text").col, a("id").col)
+    },
+
+    // Flesch / FK-grade integer-micro readability signals per doc
+    "readability" -> plugin("text", "id") { a =>
+      LlmOps.readability(a.df, a("text").col, a("id").col)
+    },
+
+    // snapshot reconciliation — classify keys added/removed/changed/
+    // unchanged between the piped (old) table and the new table
+    "table_diff" -> plugin("new_table", "key...") { a =>
+      val nw = a("new_table").table
+      TableOps.tableDiff(a.df, nw, a.tail.map(_.col))
+    },
+
+    // small-file bin-packing over a file-metadata frame
+    "compact_plan" -> plugin("target_bytes", "size", "id") { a =>
+      TableOps.compactPlan(a.df, a("size").col, a("id").col, a("target_bytes").long)
+    },
+
+    // canonical-URL keep-best
+    "dedup_url" -> plugin("url", "quality", "id") { a =>
+      LlmOps.dedupByCanonicalUrl(a.df, a("url").col, a("quality").col, a("id").col)
+    },
+
+    // one-pass per-column profiling — (column, n, n_null, n_distinct,
+    // min_s, max_s), the dataset-card / data-quality summary. One
+    // aggregate over all requested columns (the multi-distinct Expand is
+    // ncols+1 wide — at 100 TB swap count_distinct for
+    // approx_count_distinct, same plan shape); min/max are computed on
+    // the NATIVE type then stringified, so numeric columns don't sort
+    // lexically.
+    "profile" -> plugin("column...") { a =>
+      val names = a.tail.map(_.col)
+      val aggs = names.flatMap(n => Seq(
+        count(col(n)).as(s"__nn_$n"),
+        countDistinct(col(n)).as(s"__nd_$n"),
+        min(col(n)).cast("string").as(s"__mn_$n"),
+        max(col(n)).cast("string").as(s"__mx_$n")))
+      val agged = a.df.agg(count(lit(1)).as("__t"), aggs: _*)
+      agged.select(explode(array(names.map(n => struct(
+          lit(n).as("column"), col("__t").as("n"),
+          (col("__t") - col(s"__nn_$n")).as("n_null"),
+          col(s"__nd_$n").as("n_distinct"),
+          col(s"__mn_$n").as("min_s"), col(s"__mx_$n").as("max_s"))): _*))
+          .as("__p"))
+        .select(col("__p.column").as("column"), col("__p.n").as("n"),
+          col("__p.n_null").as("n_null"),
+          col("__p.n_distinct").as("n_distinct"),
+          col("__p.min_s").as("min_s"), col("__p.max_s").as("max_s"))
+    },
+
+    // OLS via the normal equations — one Gram-sums aggregate + a
+    // driver-side deterministic solve; output (feature, coef) incl.
+    // _intercept/_n/_r2
+    "linreg" -> plugin("target", "feature...") { a =>
+      LlmOps.linReg(a.df, a("target").col, a.tail.map(_.col))
+    },
+
+    // single-source Bellman-Ford distances from the `source` node id,
+    // non-negative integer weights
+    "shortest_paths_weighted" -> plugin("source", "iters", "src", "dst", "w") { a =>
+      GraphOps.shortestPathsWeighted(a.df, a("source").str, a("iters").int,
+        a("src").col, a("dst").col, a("w").col)
+    },
+
+    // Kleinberg hubs & authorities, max-normalized integer-micro arithmetic
+    "hits" -> plugin("iters", "src", "dst") { a =>
+      GraphOps.hits(a.df, a("iters").int, a("src").col, a("dst").col)
+    },
+
+    // synchronous min-tie label-propagation communities over the input
+    // edge frame
+    "label_propagation" -> plugin("iters", "src", "dst") { a =>
+      GraphOps.labelPropagation(a.df, a("iters").int, a("src").col, a("dst").col)
+    },
+
+    // per-node triangle counts via degree-ordered orientation
+    "triangle_count" -> plugin("src", "dst") { a =>
+      GraphOps.triangleCount(a.df, a("src").col, a("dst").col)
+    },
+
+    // k-core peeling — surviving nodes + surviving degree after `rounds`
+    // synchronous peels
+    "kcore" -> plugin("k", "rounds", "src", "dst") { a =>
+      GraphOps.kCore(a.df, a("k").int, a("rounds").int, a("src").col, a("dst").col)
+    },
+
+    // scalar-quantized (int8) ANN with exact re-rank
+    "ann_sq8" -> plugin("query_id", "k", "refine", "id", "vector") { a =>
+      LlmOps.annCosineSq8(a.df, a("query_id").long, a("k").int,
+        refine = a("refine").int, idCol = a("id").col, vecCol = a("vector").col)
+    },
+
+    "neardup_minhash" -> plugin("threshold", "text", "id") { a =>
+      LlmOps.nearDupPairsMinhash(a.df, a("threshold").real,
+        textCol = a("text").col, idCol = a("id").col)
+    },
+
+    "neardup_groups" -> plugin("threshold", "text", "id", "block*") { a =>
+      LlmOps.nearDupGroups(a.df, a("threshold").real, a.tail.headOption.map(_.col),
+        a("text").col, a("id").col)
+    },
+
+    "simhash" -> plugin("text", "id") { a =>
+      LlmOps.simHash(a.df, textCol = a("text").col, idCol = a("id").col)
+    },
+
+    // n-gram overlap against a benchmark table (decontamination pass).
+    // The options are the eval table's text column (default `text`) and
+    // 'broadcast' (default) or 'shuffle' — the join strategy for eval
+    // corpora too large to broadcast.
+    "contamination" -> plugin("eval_table", "n", "text", "id", "option*") { a =>
+      val ev = a("eval_table").table
+      val (strategy, colArgs) = a.tail.partition(_.e match {
+        case Lit(s: String) => s == "broadcast" || s == "shuffle"
+        case _ => false
+      })
+      val evalText = colArgs.headOption.map(_.colIn(ev)).getOrElse("text")
+      val bcast = strategy.headOption.forall(_.e match {
+        case Lit(s: String) => s == "broadcast"
+        case _ => true
+      })
+      LlmOps.contamination(a.df, ev, a("n").int, a("text").col, a("id").col,
+        evalText, bcast)
+    },
+
+    // substring-granular contamination pairs via shared winnow fingerprints
+    "winnow_contamination" -> plugin("eval_table", "k", "w", "min_shared", "text",
+        "id") { a =>
+      val ev = a("eval_table").table
+      LlmOps.winnowContamination(a.df, ev, a("k").int, a("w").int,
+        a("min_shared").int, a("text").col, a("id").col)
+    },
+
+    // top-p principal-component projection (driver Jacobi eigensolve over
+    // the one-pass covariance, bounded model metadata)
+    "pca" -> plugin("p", "id", "vector") { a =>
+      LlmOps.pca(a.df, a("p").int, a("id").col, a("vector").col)
+    },
+
+    "stratified_sample" -> plugin("n", "strata", "id") { a =>
+      LlmOps.stratifiedSample(a.df, a("n").int, a("strata").col, a("id").col)
+    },
+
+    "hash_split" -> plugin("train", "val", "id") { a =>
+      LlmOps.hashSplit(a.df, a("train").real, a("val").real, a("id").col)
+    },
+
+    "simhash_pairs" -> plugin("k", "bits", "text", "id") { a =>
+      LlmOps.simHashPairs(a.df, a("k").int, a("bits").int, a("text").col, a("id").col)
+    },
+
+    "quality_score" -> plugin("text", "id") { a =>
+      LlmOps.qualityScore(a.df, a("text").col, a("id").col)
+    },
+
+    "repetition_score" -> plugin("text", "id") { a =>
+      LlmOps.repetitionScore(a.df, a("text").col, a("id").col)
+    },
+
+    "unigram_logprob" -> plugin("text", "id") { a =>
+      LlmOps.unigramLogProb(a.df, a("text").col, a("id").col)
+    },
+
+    "bigram_logprob" -> plugin("text", "id") { a =>
+      LlmOps.bigramLogProb(a.df, a("text").col, a("id").col)
+    },
+
+    // Okapi BM25 top-k lexical retrieval
+    "bm25" -> plugin("query", "k", "text", "id") { a =>
+      LlmOps.bm25(a.df, a("query").str, a("k").int, textCol = a("text").col,
+        idCol = a("id").col)
+    },
+
+    // corpus-wide first-occurrence line dedup
+    "line_dedup" -> plugin("delimiter", "text", "id") { a =>
+      LlmOps.lineDedup(a.df, a("delimiter").str, a("text").col, a("id").col)
+    },
+
+    // drop lines appearing in >= min_df distinct docs
+    "boilerplate_remove" -> plugin("min_df", "delimiter", "text", "id") { a =>
+      LlmOps.boilerplateRemove(a.df, a("min_df").int, a("delimiter").str,
+        a("text").col, a("id").col)
+    },
+
+    // overlapping token-window chunking
+    "chunk" -> plugin("chunk_tokens", "overlap_tokens", "text", "id") { a =>
+      LlmOps.chunkDocs(a.df, a("chunk_tokens").int, a("overlap_tokens").int,
+        a("text").col, a("id").col)
+    },
+
+    // training sequence assignment by cumulative weight
+    "pack_sequences" -> plugin("budget", "source", "weight", "id") { a =>
+      LlmOps.packSequences(a.df, a("budget").long, a("source").col,
+        a("weight").col, a("id").col)
+    },
+
+    // DSIR importance weights vs a target corpus
+    "dsir" -> plugin("target_table", "n", "buckets", "text", "id") { a =>
+      val target = a("target_table").table
+      LlmOps.dsirWeights(a.df, target, a("n").int, a("buckets").int,
+        a("text").col, a("id").col)
+    },
+
+    // Gumbel top-k importance resampling on the DSIR weights
+    "dsir_resample" -> plugin("target_table", "k", "n", "buckets", "text", "id") { a =>
+      val target = a("target_table").table
+      LlmOps.dsirResample(a.df, target, a("k").int, a("n").int, a("buckets").int,
+        a("text").col, a("id").col)
+    },
+
+    // NFC + control strip + whitespace collapse
+    "text_normalize" -> plugin("text", "id") { a =>
+      LlmOps.textNormalize(a.df, a("text").col, a("id").col)
+    },
+
+    // bloom-filter membership dedup against a corpus table
+    "dedup_bloom" -> plugin("corpus_table", "fpp", "text", "id") { a =>
+      val corpus = a("corpus_table").table
+      LlmOps.dedupBloomFilter(a.df, corpus, a("fpp").real, a("text").col, a("id").col)
+    },
+
+    // magic-bytes media-type detection on a binary (or string-bytes) column
+    "sniff_media_type" -> plugin("payload") { a => LlmOps.sniffMediaType(a.df, a("payload").col) },
+
+    // image width/height parsed from PNG/GIF/BMP/WebP/JPEG container
+    // headers — no decode
+    "media_dims" -> plugin("payload") { a => LlmOps.mediaDims(a.df, a("payload").col) },
+
+    // WAV fmt/data chunk-walk metadata (sample rate, channels, bits,
+    // frames, duration) — no decode
+    "audio_meta" -> plugin("payload") { a => LlmOps.audioMeta(a.df, a("payload").col) },
+
+    // MP3 frame-header metadata (bitrate, rate, channels, frame size),
+    // ID3v2-aware — no decode
+    "mp3_meta" -> plugin("payload") { a => LlmOps.mp3Meta(a.df, a("payload").col) },
+
+    // FLAC STREAMINFO metadata (sample rate, channels, bits, total
+    // samples, duration) — fixed-offset parse, no decode
+    "flac_meta" -> plugin("payload") { a => LlmOps.flacMeta(a.df, a("payload").col) },
+
+    // density clustering with core/border/noise roles
+    "dbscan" -> plugin("eps", "min_pts", "method", "block", "vec", "id") { a =>
+      LlmOps.dbscanCosine(a.df, a("eps").real, a("min_pts").int,
+        blockCol = a("block").col, idCol = a("id").col, vecCol = a("vec").col,
+        method = a("method").str)
+    },
+
+    // MOSS winnowing fingerprints — local substring-granular fingerprinting
+    "winnow" -> plugin("k", "w", "text", "id") { a =>
+      LlmOps.winnowFingerprints(a.df, a("k").int, a("w").int,
+        textCol = a("text").col, idCol = a("id").col)
+    },
+
+    // hashing-trick signed bag-of-words vectorizer, sparse output
+    "feature_hash" -> plugin("dim", "text", "id") { a =>
+      LlmOps.featureHash(a.df, a("dim").int, textCol = a("text").col,
+        idCol = a("id").col)
+    },
+
+    // JL ±1 projection to k dims in integer micros
+    "random_projection" -> plugin("k", "dim", "vec", "id") { a =>
+      LlmOps.randomProjection(a.df, a("k").int, a("dim").int,
+        idCol = a("id").col, vecCol = a("vec").col)
+    },
+
+    // MP4 mvhd/tkhd box-walk metadata (timescale, duration, track dims) —
+    // no decode
+    "video_meta" -> plugin("payload") { a => LlmOps.videoMeta(a.df, a("payload").col) },
+
+    "lang_id" -> plugin("text", "id") { a => LlmOps.langId(a.df, a("text").col, a("id").col) },
+
+    "fingerprint" -> plugin("text", "id") { a =>
+      LlmOps.fingerprint(a.df, a("text").col, a("id").col)
+    },
+
+    "token_count" -> plugin("text", "id") { a =>
+      LlmOps.tokenCount(a.df, a("text").col, a("id").col)
+    },
+
+    "pii_scrub" -> plugin("text", "id") { a => LlmOps.piiScrub(a.df, a("text").col, a("id").col) },
+
+    "substring_dup" -> plugin("w", "text", "id") { a =>
+      LlmOps.substringDup(a.df, a("w").int, a("text").col, a("id").col)
+    },
+
+    "term_freq" -> plugin("text") { a => LlmOps.termFreq(a.df, a("text").col) },
+
+    "tfidf" -> plugin("text", "id") { a => LlmOps.tfIdf(a.df, a("text").col, a("id").col) },
+
+    "knn_cosine" -> plugin("query_id", "k", "id", "vector") { a =>
+      LlmOps.knnCosine(a.df, a("query_id").long, a("k").int, a("id").col,
+        a("vector").col)
+    },
+
+    "similarity_pairs" -> plugin("threshold", "block", "id", "vector") { a =>
+      LlmOps.similarityPairs(a.df, a("threshold").real, a("block").col, a("id").col,
+        a("vector").col)
+    },
+
+    "similarity_pairs_lsh" -> plugin("threshold", "block", "id", "vector") { a =>
+      LlmOps.similarityPairsLsh(a.df, a("threshold").real, a("block").col,
+        a("id").col, a("vector").col)
+    },
+
+    "cosine_groups" -> plugin("threshold", "block", "id", "vector", "method*") { a =>
+      LlmOps.cosineGroups(a.df, a("threshold").real, a("block").col, a("id").col,
+        a("vector").col, method = a.tail.headOption.map(_.str).getOrElse("exact"))
+    },
+
+    "dedup_cosine" -> plugin("threshold", "block", "id", "vector", "method*") { a =>
+      LlmOps.dedupNearCosine(a.df, a("threshold").real, a("block").col, a("id").col,
+        a("vector").col, method = a.tail.headOption.map(_.str).getOrElse("lsh"))
+    },
+
+    // distributed Lloyd's k-means assignments over embeddings
+    "kmeans" -> plugin("k", "iters", "id", "vector") { a =>
+      LlmOps.kmeansFit(a.df, a("k").int, a("iters").int, a("id").col, a("vector").col)
+    },
+
+    // dedup the input against a persisted buildCosineIndex corpus + itself
+    "dedup_cosine_incremental" -> plugin("index_table", "id", "vector") { a =>
+      LlmOps.dedupCosineIncremental(a.df, a("index_table").str,
+        idCol = a("id").col, vecCol = a("vector").col)
+    },
+
+    // top-k adjacent char pairs, frequency-weighted over distinct words
+    // (one BPE-trainer pass)
+    "bpe_pair_counts" -> plugin("k", "text") { a =>
+      LlmOps.bpePairCounts(a.df, a("k").int, textCol = a("text").col)
+    },
+
+    // N-round iterative BPE merge training -> the merge table
+    "bpe_train" -> plugin("rounds", "text") { a =>
+      LlmOps.bpeTrain(a.df, a("rounds").int, textCol = a("text").col)
+    },
+
+    // per-doc token counts under the trained merges
+    "bpe_tokenize" -> plugin("rounds", "text", "id") { a =>
+      LlmOps.bpeTokenize(a.df, a("rounds").int, textCol = a("text").col,
+        idCol = a("id").col)
+    },
+
+    // corpus top-k n-grams
+    "ngram_counts" -> plugin("n", "k", "text") { a =>
+      LlmOps.ngramCounts(a.df, a("n").int, a("k").int, textCol = a("text").col)
+    },
+
+    // SemDeDup-style k-means-cell semantic dedup; max_cell_size is the
+    // mega-cell split cap (0 = off)
+    "semdedup" -> plugin("threshold", "n_clusters", "id", "vector", "max_cell_size?") { a =>
+      LlmOps.semDedup(a.df, a("threshold").real, a("n_clusters").int,
+        idCol = a("id").col, vecCol = a("vector").col,
+        maxCellSize = a.opt("max_cell_size").map(_.long).getOrElse(0L))
+    },
+
+    // keep the top-n rows per source/domain
+    "source_cap" -> plugin("n", "source", "order", "id") { a =>
+      LlmOps.sourceCap(a.df, a("n").int, a("source").col, a("order").col, a("id").col)
+    },
+
+    // the row-PRESERVING quality gate — keeps every input column, so KQL
+    // users can chain the full curation pipeline:
+    //   documents | evaluate quality_filter(0.05, 20, text, doc_id)
+    //             | evaluate source_cap(...) | evaluate token_budget_sample(...)
+    "quality_filter" -> plugin("min_stop_ratio", "min_tokens", "text", "id") { a =>
+      val idName = a("id").col
+      val passing = LlmOps.qualityScore(a.df, a("text").col, idName)
+        .filter(col("stop_ratio") >= a("min_stop_ratio").real &&
+          col("n_tokens") >= a("min_tokens").long)
+        .select(col(idName))
+      a.df.join(passing, Seq(idName), "left_semi")
+    },
+
+    // per-source mixing rates: ('src', rate) pairs override default_rate
+    "source_sample" -> plugin("default_rate", "source_col", "id", "source*", "rate*") { a =>
+      val rates = a.tail.grouped(2).map(g => g.head.str -> g(1).real).toMap
+      LlmOps.weightedSourceSample(a.df, rates, a("default_rate").real,
+        a("source_col").col, a("id").col)
+    },
+
+    // fill a per-source token/char budget
+    "token_budget_sample" -> plugin("budget", "source", "weight", "id") { a =>
+      LlmOps.tokenBudgetSample(a.df, a("budget").long, a("source").col,
+        a("weight").col, a("id").col)
+    },
+
+    // drop rows near-duplicating the persisted corpus index
+    // (LlmOps.buildMinhashIndex) or a lower-id row of this input
+    "dedup_incremental" -> plugin("index_table", "threshold", "text", "id") { a =>
+      LlmOps.dedupIncremental(a.df, a("index_table").str, a("threshold").real,
+        textCol = a("text").col, idCol = a("id").col)
+    },
+
+    // drop lines already in the persisted line index
+    // (LlmOps.buildLineIndex) + in-batch first occurrences; pure — the
+    // index grows via appendToLineIndex on the committed output
+    "line_dedup_incremental" -> plugin("index_table", "delimiter", "text", "id") { a =>
+      LlmOps.lineDedupIncremental(a.df, a("index_table").str, a("delimiter").str,
+        a("text").col, a("id").col)
+    },
+
+    "funnel_sequence" -> plugin("id", "timeline", "type", "step...") { a =>
+      val typeName = a("type").col
+      val steps = a.tail.map { e => val s = e.str; s -> (col(typeName) === s) }
+      TemporalOps.funnel(a.df, a("id").col, a("timeline").col, steps)
+    },
+
+    // per (start bin, step) — ids whose earliest funnel chain reached the
+    // step within the window
+    "funnel_sequence_completion" -> plugin("id", "timeline", "type", "bin", "window",
+        "step...") { a =>
+      val typeName = a("type").col
+      val steps = a.tail.map { e => val s = e.str; s -> (col(typeName) === s) }
+      val tsName = a("timeline").col
+      TemporalOps.funnelCompletion(
+        a.df.withColumn("__fc_us", unix_micros(col(tsName))),
+        a("id").col, "__fc_us", a("bin").span, a("window").span, steps)
+    },
+
+    // every step-1 occurrence, greedily extended within the step window,
+    // whole chain within the span (see TemporalOps); steps are predicates
+    "sequence_detect" -> plugin("timeline", "step_window", "span", "step1", "step...",
+        "key") { a =>
+      val steps = (a("step1") :: a.tail).zipWithIndex.map { case (e, i) =>
+        s"s${i + 1}" -> toCol(e.e, a.df)
+      }
+      TemporalOps.sequenceDetect(a.df, a("key").col, a("timeline").col,
+        a("step_window").span, a("span").span, steps)
+    }
+  )
 
   /** KQL parse-pattern → anchored regex + ordered named captures.
     * Each capture is lazy until the next literal; the trailing capture is
@@ -2329,9 +2224,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
     * all-wildcard segment is dropped. One partial+final hash aggregate —
     * Catalyst expands the cube map-side; the denominator reuses the
     * cube's own all-wildcard row (no separate count pass). */
-  private def cubeSegments(df: DataFrame, colEs: List[Expr], minPct: Double,
-                           what: String): DataFrame = {
-    val names = colEs.map(colNameOf(df, _, what))
+  private def cubeSegments(df: DataFrame, names: List[String], minPct: Double): DataFrame = {
     val cubed = df.cube(names.map(col): _*)
       .agg(count(lit(1)).as("count_"), grouping_id().as("__g"))
     val totalRow = cubed.filter(col("__g") === (1L << names.length) - 1)
@@ -2353,11 +2246,9 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
     * the same segment space with a proprietary significance heuristic;
     * this engine uses the transparent share-difference criterion (the
     * autocluster/basket simplification convention). */
-  private def diffPatterns(df: DataFrame, splitE: Expr, aVal: String,
+  private def diffPatterns(df: DataFrame, splitName: String, aVal: String,
                            bVal: String, minDiffPct: Double,
-                           colEs: List[Expr]): DataFrame = {
-    val splitName = colNameOf(df, splitE, "diffpatterns split column")
-    val names = colEs.map(colNameOf(df, _, "diffpatterns column"))
+                           names: List[String]): DataFrame = {
     val flagged = df
       .withColumn("__inA", when(col(splitName) === aVal, 1L).otherwise(0L))
       .withColumn("__inB", when(col(splitName) === bVal, 1L).otherwise(0L))
@@ -2430,29 +2321,6 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
   private def colNameOf(df: DataFrame, e: Expr, what: String): String = e match {
     case Col(n) => resolveName(df, n)
     case other => throw PlanError(s"$what expects a column, got $other")
-  }
-
-  private def litDouble(e: Expr): Double = e match {
-    case Lit(d: Double) => d
-    case Lit(l: Long) => l.toDouble
-    case other => throw PlanError(s"expected a numeric literal, got $other")
-  }
-
-  private def litLong(e: Expr): Long = e match {
-    case Lit(l: Long) => l
-    case other => throw PlanError(s"expected an integer literal, got $other")
-  }
-
-  private def timespanUs(e: Expr): Long = e match {
-    case Lit(Timespan(us)) => us
-    case other => throw PlanError(s"expected a timespan literal, got $other")
-  }
-
-  private def tsLitUs(e: Expr): Long = staticValue(e, "") match {
-    case t: java.sql.Timestamp =>
-      val i = t.toInstant
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    case other => throw PlanError(s"expected a datetime literal, got $other")
   }
 
   private def resolveName0(cols: Array[String], name: String): String =

@@ -95,64 +95,4 @@ object Suggest {
       "current_principal_details" -> principal,
       "current_principal_is_member_of" -> principal)
   }
-
-  /** Registered `evaluate` plugin names (the Planner's EvaluateOp
-    * cases) — for the unsupported-plugin error. */
-  val plugins: Seq[String] = Seq(
-    "active_users_count", "activity_counts_metrics", "activity_engagement",
-    "activity_metrics",
-    "ann_pq", "ann_sq8", "autocluster", "bag_unpack", "basket", "bigram_logprob",
-    "bm25",
-    "boilerplate_remove", "bpe_pair_counts", "bpe_tokenize", "bpe_train",
-    "cdc_chunks", "chunk", "cms_count", "collocations", "compact_plan",
-    "containment_pairs", "dbscan",
-    "dedup_substring", "dedup_url", "doc_entropy", "exif_meta",
-    "heavy_hitters",
-    "iqr_outliers",
-    "naive_bayes_lang", "profile",
-    "readability", "source_similarity", "table_diff",
-    "contamination", "cosine_groups", "ngram_counts", "ngram_novelty",
-    "connected_components",
-    "dcount_intersect", "dedup_bloom", "dedup_cosine", "dedup_exact",
-    "diffpatterns", "diffpatterns_text",
-    "dedup_contained",
-    "dedup_cosine_incremental", "dedup_incremental", "dsir",
-    "dsir_resample", "embedding_drift", "feature_hash", "fingerprint",
-    "flac_meta",
-    "funnel_sequence", "funnel_sequence_completion", "fuzzy_token_pairs",
-    "hash_split", "hits", "image_dhash", "image_neardup", "ipv4_lookup", "jaccard_pairs", "kcore", "kmeans",
-    "avif_dims", "cluster_metrics", "code_detect", "dataset_card",
-    "embedding_outliers",
-    "frontier_schedule", "heaps_law", "keyword_extract",
-    "license_detect", "pmi_contexts", "script_detect",
-    "mojibake_detect", "span_corrupt", "bleu", "hard_negatives",
-    "hard_negatives_ivf", "rouge_l",
-    "wer", "k_anonymity", "bm25_indexed", "sentence_split", "dedup_soft",
-    "ann_binary", "tokenizer_oov",
-    "sft_pack", "dpo_pairs", "matryoshka", "curriculum_shards",
-    "ccnet_buckets", "global_shuffle", "calibration_bins", "rouge_n",
-    "stratified_split", "stupid_backoff", "warc_meta",
-    "kmv_distinct", "knn_cosine", "label_propagation",
-    "lang_id", "length_histogram", "line_dedup", "line_dedup_incremental",
-    "linreg",
-    "logreg_score", "narrow",
-    "audio_dhash", "audio_meta", "media_dims", "mmr_select", "mp3_meta", "ogg_meta",
-    "neardup_groups",
-    "neardup_minhash",
-    "new_activity_metrics",
-    "pack_sequences", "pagerank", "pca", "pii_scrub",
-    "pivot", "preview", "quality_filter", "quality_score", "random_projection",
-    "repetition_score", "rolling_percentile", "rows_near", "rrf_fuse",
-    "semdedup",
-    "sequence_detect", "session_count", "shortest_paths_weighted",
-    "simhash", "simhash_pairs",
-    "sniff_media_type",
-    "similarity_pairs", "similarity_pairs_lsh", "sliding_window_counts",
-    "source_cap", "source_kl", "source_sample", "stratified_sample",
-    "substring_dup",
-    "temperature_mix",
-    "term_freq", "text_normalize", "tfidf", "token_budget_sample",
-    "unigram_segment", "vocab_drift",
-    "token_count", "triangle_count", "unigram_logprob", "video_meta",
-    "winnow", "winnow_contamination")
 }

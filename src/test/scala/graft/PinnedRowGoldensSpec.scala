@@ -2,14 +2,16 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import graft.kql.{Catalog, Kql}
 
 /** Replays golden digests of the rows that run under
-  * [[GraftSession.pinned]] and of the rows that stage files in
-  * [[GraftSession.scratch]]: schema, row count and a SHA-256 over the
-  * sorted row strings at sf0.001. Each set was recorded before its rows
-  * were refactored; the goldens change only when the DuckDB oracle has
-  * certified new values, never to make a refactor pass. Every row runs
-  * twice in one session, so state a first run leaves behind (a reused
+  * [[GraftSession.pinned]], of the rows that stage files in
+  * [[GraftSession.scratch]], and of the `evaluate` plugins no other spec
+  * reaches: schema, row count and a SHA-256 over the sorted row strings
+  * at sf0.001. Each set was recorded before its code was refactored; the
+  * goldens change only when the DuckDB oracle has certified new values,
+  * never to make a refactor pass. Every pinned and scratch row runs twice
+  * in one session, so state a first run leaves behind (a reused
   * directory, checkpoint or table) shows on the second. */
 class PinnedRowGoldensSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -22,6 +24,8 @@ class PinnedRowGoldensSpec extends AnyFunSuite {
   }
   private val goldens = load("/goldens/pinned_rows_sf0.001.tsv")
   private val scratchGoldens = load("/goldens/scratch_rows_sf0.001.tsv")
+  private val pluginGoldens = load("/goldens/plugin_rows_sf0.001.tsv")
+  private lazy val catalog = Catalog(spark, TestSpark.sfDir)
 
   private def digest(df: DataFrame): (String, String, String) = {
     val lines = df.collect().map(_.toString).sorted
@@ -43,6 +47,21 @@ class PinnedRowGoldensSpec extends AnyFunSuite {
         got
       }
       assert(runs == Seq.fill(2)((n, hash, schema)))
+    }
+  }
+
+  // a plugin row with a fifth column is that KQL query over the fixture
+  // tables; one without is the inventory row of that name
+  pluginGoldens.foreach { g =>
+    test(s"${g(0)} matches its golden digest") {
+      if (g(0) == "bm25_indexed")
+        graft.ext.LlmOps.buildBm25Index(catalog.table("documents"), "graft_golden_bm25")
+      val df =
+        if (g.length == 5) Kql.run(spark, g(4), catalog)
+        else SparkEntry.queries(g(0))(spark, TestSpark.sfDir)
+      val got = digest(df)
+      GraftSession.release(spark)
+      assert(got == (g(1), g(2), g(3)))
     }
   }
 }

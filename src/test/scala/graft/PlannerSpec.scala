@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
 import graft.kql.{Kql, Catalog}
+import scala.jdk.CollectionConverters._
 
 /** Golden-result tests for KQL semantic traps (SURVEY.md §7.4) using
   * inline datatable sources — no fixture dependency. */
@@ -940,6 +941,40 @@ class PlannerSpec extends AnyFunSuite {
       """{"r":{"@a":"1","k":["v","w"],"t":"hi"}}""")
   }
 
+  private def planError(q: String): String = {
+    val e = intercept[RuntimeException](run(q))
+    assert(e.getClass.getSimpleName == "PlanError", e)
+    e.getMessage
+  }
+
+  test("evaluate preview through Kql.run points to Kql.runMulti") {
+    val m = planError("datatable(x:long) [1, 2, 3] | evaluate preview(2)")
+    assert(m.contains("Kql.runMulti"), m)
+  }
+
+  test("rows_near rejects a non-integer row count with a plan error") {
+    val q = "datatable(id:long, v:long) [1, 0, 2, 9] | sort by id asc | evaluate rows_near(v == 9, "
+    assert(planError(q + "'one')").contains("rows_near before"))
+    assert(planError(q + "1, 1.5)").contains("rows_near after"))
+  }
+
+  private val rolling = "datatable(ts:datetime, v:long) [datetime(2024-01-01), 1, " +
+    "datetime(2024-01-02), 2] | evaluate rolling_percentile(v, "
+
+  test("rolling_percentile rejects a non-integer window with a plan error") {
+    assert(planError(rolling + "50, ts, 1d, 'three')").contains("rolling_percentile window"))
+  }
+
+  test("rolling_percentile rejects a non-numeric percentile instead of taking the median") {
+    assert(planError(rolling + "'p90', ts, 1d, 3)").contains("rolling_percentile percentile"))
+  }
+
+  test("active_users_count rejects a non-integer period count with a plan error") {
+    val m = planError("""datatable(ts:datetime, u:string) [datetime(2024-01-01 01:00:00), 'a']
+      | evaluate active_users_count(u, ts, datetime(2024-01-01), datetime(2024-01-05), 3d, 1d, 2.5, 1d)""")
+    assert(m.contains("active_users_count active_periods"), m)
+  }
+
   test("evaluate preview returns rows plus total count via runMulti") {
     val rs = Kql.runMulti(spark,
       "datatable(x:long) [1, 2, 3, 4, 5] | evaluate preview(2)", cat).toMap
@@ -1132,17 +1167,31 @@ class PlannerSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
   }
 
-  test("Suggest.plugins stays in sync with the planner's evaluate cases") {
-    // the suggestion list is hand-maintained next to the suggester; this
-    // guard reads the Planner source so a new EvaluateOp case (or a
-    // removed one) fails here instead of silently degrading suggestions
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/kql/Planner.scala")))
-    val declared = "EvaluateOp\\(\"([a-z_0-9]+)\"".r
-      .findAllMatchIn(src).map(_.group(1)).toSet
-    val listed = graft.kql.Suggest.plugins.toSet
-    assert(declared == listed,
-      s"planner-only: ${declared -- listed}; list-only: ${listed -- declared}")
+  test("every evaluate plugin answers a rejected argument count with its signature") {
+    val sigs = new graft.kql.Planner(spark, cat).pluginSignatures
+    // a Map literal keeps only the last of two equal keys
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/kql/Planner.scala"))
+    val declared = "\"([a-z_0-9]+)\" -> plugin\\(".r.findAllMatchIn(src).map(_.group(1)).toList
+    assert(declared.size == sigs.size, s"declared twice: ${declared.diff(declared.distinct)}")
+    sigs.foreach { case (name, (accepts, sig)) =>
+      val n = (0 to 16).find(!accepts(_)).get
+      val args = Seq.fill(n)("x").mkString(", ")
+      val m = intercept[RuntimeException](
+        run(s"datatable(x:long) [1] | evaluate $name($args)")).getMessage
+      assert(m.contains(s"plugin '$name' does not take $n argument(s) — expected $sig") &&
+        !m.contains("unsupported plugin"), m)
+    }
+  }
+
+  test("only planStatementsMulti's preview names a plugin outside the plugin table") {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val found = try s.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap(p => "EvaluateOp\\(\"[^\"]*\"".r
+        .findAllIn(java.nio.file.Files.readString(p)).map(m => s"${p.getFileName}: $m"))
+      .toList finally s.close()
+    assert(found == List("Planner.scala: EvaluateOp(\"preview\""),
+      s"declare the plugin in Planner's plugin table instead: $found")
   }
 
   test("bag_zip degrades on malformed bags instead of throwing") {
