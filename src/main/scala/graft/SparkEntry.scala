@@ -89,15 +89,18 @@ object SparkEntry {
       pmod(ascii(substring(k, 1, 1)) * 7 + ascii(substring(k, 2, 1)) * 13,
         lit(256))
     }
-    def pxv(r: Int, c: Int): org.apache.spark.sql.Column = {
-      val base = pxOf(col("doc_id"), r, c)
-      val prev = pxOf(col("doc_id") - 1, r, c)
-      when(pmod(col("doc_id"), lit(5)) === 4,
-        if (r == 0 && c == 0) pmod(prev + 1, lit(256)) else prev)
-        .otherwise(base)
-    }
-    concat((for (r <- 0 until 8; c <- 0 until 9)
-      yield lpad(conv(pxv(r, c), 10, 16), 2, "0")): _*)
+    // a planted doc copies its predecessor's pixels, so each pixel hashes
+    // one source id, and only px(0, 0) of a planted doc is bumped by one
+    val planted = pmod(col("doc_id"), lit(5)) === 4
+    val src = when(planted, col("doc_id") - 1).otherwise(col("doc_id"))
+    def pxv(r: Int, c: Int): org.apache.spark.sql.Column =
+      if (r == 0 && c == 0) pmod(pxOf(src, r, c) + planted.cast("int"), lit(256))
+      else pxOf(src, r, c)
+    // one concat per bitmap row, joined by concat_ws, which Catalyst does
+    // not fold back into a single concat: one 72-argument concat
+    // overflowed the whole-stage method and fell back from codegen
+    concat_ws("", (0 until 8).map(r =>
+      concat((0 until 9).map(c => lpad(conv(pxv(r, c), 10, 16), 2, "0")): _*)): _*)
   }
 
   /** tmp_bucketed_join body: write both sides bucketed + sorted on the

@@ -4,7 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.BasicFileAttributes
 import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
@@ -112,9 +114,34 @@ object Catalog {
         listing.foreach(l => known.put(key.toString, Meta(l, df.schema, cols)))
         (df, cols)
     }
-    if (ext == "txt") df.withColumnRenamed("value", "line")
-    else normalize(df, nanosCols)
+    val scan = if (listing.exists(oneSplit(spark, _))) df.coalesce(1) else df
+    if (ext == "txt") scan.withColumnRenamed("value", "line")
+    else normalize(scan, nanosCols)
   }
+
+  /** Whether Spark reads these files as one partition anyway: its split
+    * size (`FilePartition.maxSplitBytes`, from this session's
+    * `spark.sql.files.*` confs and parallelism), then its next-fit
+    * packing, which charges each file `openCostInBytes` and starts a new
+    * partition once the next file does not fit. Files Spark skips are
+    * left out, and empty files make no split. Such a scan is handed back
+    * as `coalesce(1)`: still one task, but it reports a single partition,
+    * so aggregates, sorts and shuffle joins over it plan no exchange. A
+    * `spark.sql.files.maxPartitionNum` merge is not modelled; it only
+    * makes this rule decline a table Spark would read as one split. */
+  private def oneSplit(spark: SparkSession, listing: Seq[(String, Long, Long)]): Boolean = {
+    val openCost = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.openCostInBytes"))
+    val sizes = listing.collect { case (name, size, _) if !hidden(name) => size }
+    val maxSplit = FilePartition.maxSplitBytes(spark, sizes.map(_ + openCost).sum)
+    val files = sizes.filter(_ > 0)
+    files.sum + (files.size - 1) * openCost <= maxSplit
+  }
+
+  /** Spark's data-file filter: a path component starting with `_` (other
+    * than a `k=v` partition directory) or with `.` hides the file. */
+  private def hidden(relName: String): Boolean =
+    relName.split(java.io.File.separatorChar)
+      .exists(c => (c.startsWith("_") && !c.contains("=")) || c.startsWith("."))
 
   /** Sorted (relative name, size, mtime in ns) of every regular file at
     * or under `p`; None when the tree changed under the walk (then the

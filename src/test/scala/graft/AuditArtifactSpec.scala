@@ -82,6 +82,32 @@ class AuditArtifactSpec extends AnyFunSuite {
         .filter(col("doc_id") >= cut).distinct()))
   }
 
+  test("building the image plant compiles every stage, with no codegen fallback") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val failures = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new AbstractAppender("plant-codegen", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("Failed to compile"))
+          failures.incrementAndGet()
+    }
+    counter.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(counter, Level.ERROR, null)
+    ctx.updateLoggers()
+    try SparkEntry.buildImagePlant(spark, dir)
+    finally {
+      root.removeAppender(counter.getName)
+      ctx.updateLoggers()
+      counter.stop()
+    }
+    assert(failures.get === 0)
+  }
+
   test("image plant table carries the planted near-duplicate structure") {
     SparkEntry.buildImagePlant(spark, dir)
     val plant = spark.table("graft_img_plant")
