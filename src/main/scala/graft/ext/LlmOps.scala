@@ -4144,25 +4144,22 @@ object LlmOps {
     * application/octet-stream. */
   def sniffMediaType(df: DataFrame, binCol: String,
                      out: String = "media_type"): DataFrame = {
-    // hex only the 12-byte prefix the signatures inspect — hexing the
-    // whole payload would materialize a 2×-payload string per row,
-    // which defeats the route-before-decode economics at 100 TB
-    val h = upper(hex(substring(col(binCol), 1, 12)))
-    def pre(n: Int) = substring(h, 1, n)
-    df.withColumn(out,
+    val riff = Bytes.at(1, "52494646")
+    Bytes.read(df, binCol, 12).withColumn(out,
       when(col(binCol).isNull, lit(null).cast("string"))
-        .when(pre(8) === "89504E47", "image/png")
-        .when(pre(6) === "FFD8FF", "image/jpeg")
-        .when(pre(12) === "474946383761" || pre(12) === "474946383961", "image/gif")
-        .when(pre(4) === "424D", "image/bmp")
-        .when(pre(8) === "25504446", "application/pdf")
-        .when(pre(8) === "52494646" && substring(h, 17, 8) === "57415645", "audio/wav")
-        .when(pre(8) === "52494646" && substring(h, 17, 8) === "57454250", "image/webp")
-        .when(pre(8) === "52494646" && substring(h, 17, 8) === "41564920", "video/avi")
-        .when(substring(h, 9, 8) === "66747970", "video/mp4")
-        .when(pre(8) === "504B0304", "application/zip")
-        .when(pre(4) === "1F8B", "application/gzip")
+        .when(Bytes.at(1, "89504E47"), "image/png")
+        .when(Bytes.at(1, "FFD8FF"), "image/jpeg")
+        .when(Bytes.at(1, "474946383761") || Bytes.at(1, "474946383961"), "image/gif")
+        .when(Bytes.at(1, "424D"), "image/bmp")
+        .when(Bytes.at(1, "25504446"), "application/pdf")
+        .when(riff && Bytes.at(9, "57415645"), "audio/wav")
+        .when(riff && Bytes.at(9, "57454250"), "image/webp")
+        .when(riff && Bytes.at(9, "41564920"), "video/avi")
+        .when(Bytes.at(5, "66747970"), "video/mp4")
+        .when(Bytes.at(1, "504B0304"), "application/zip")
+        .when(Bytes.at(1, "1F8B"), "application/gzip")
         .otherwise("application/octet-stream"))
+      .drop(Bytes.name)
   }
 
   /** Image dimensions from container HEADERS — no decode: the
@@ -4203,101 +4200,66 @@ object LlmOps {
                 maxSegments: Int = 6): DataFrame = {
     require(headerBytes >= 32 && maxSegments >= 1,
       "need headerBytes >= 32 and maxSegments >= 1")
-    val h = col("__mdh")
-    // byte offset (1-based) -> hex slice; bePos as Column for the walk
-    def hexAt(pos: Column, nBytes: Int): Column =
-      h.substr(pos * 2 - 1, lit(nBytes * 2))
-    def be16(pos: Column): Column = {
-      val s = hexAt(pos, 2)
-      when(length(s) === 4, conv(s, 16, 10).cast("int"))
-    }
-    def be32At(charPos: Int): Column = {
-      val s = substring(h, charPos, 8)
-      when(length(s) === 8, conv(s, 16, 10).cast("int"))
-    }
-    def le16At(charPos: Int): Column = {
-      val lo = substring(h, charPos, 2); val hi = substring(h, charPos + 2, 2)
-      when(length(hi) === 2,
-        (conv(hi, 16, 10).cast("int") * 256 + conv(lo, 16, 10).cast("int")))
-    }
-    // little-endian n-byte unsigned value as LONG (n <= 4)
-    def leAt(charPos: Int, nBytes: Int): Column = {
-      val last = substring(h, charPos + 2 * (nBytes - 1), 2)
-      val v = (0 until nBytes).map(b =>
-        conv(substring(h, charPos + 2 * b, 2), 16, 10).cast("long") *
-          lit(1L << (8 * b))).reduce(_ + _)
-      when(length(last) === 2, v)
-    }
-    // LE i32 sign-decode -> magnitude (BMP top-down heights)
-    def leMag32At(charPos: Int): Column = {
-      val u = leAt(charPos, 4)
-      abs(when(u >= 2147483648L, u - 4294967296L).otherwise(u)).cast("int")
-    }
     val noDims = struct(lit(null).cast("int").as("w"), lit(null).cast("int").as("h"))
     // WebP: dispatch on the first chunk fourCC (bytes 13-16)
-    val webpDims = {
-      val fourcc = substring(h, 25, 8)
-      when(fourcc === "56503858", // VP8X: canvas (w-1, h-1) LE u24
-        struct((leAt(49, 3) + 1).cast("int").as("w"),
-          (leAt(55, 3) + 1).cast("int").as("h")))
-        .when(fourcc === "5650384C" && substring(h, 41, 2) === "2F", {
+    val webpDims =
+      when(Bytes.at(13, "56503858"), // VP8X: canvas (w-1, h-1) LE u24
+        struct((Bytes.le(lit(25), 3) + 1).cast("int").as("w"),
+          (Bytes.le(lit(28), 3) + 1).cast("int").as("h")))
+        .when(Bytes.at(13, "5650384C") && Bytes.at(21, "2F"), {
           // VP8L: 14-bit (w-1) then 14-bit (h-1) packed LE
-          val b = leAt(43, 4)
+          val b = Bytes.le(lit(22), 4)
           struct((b.bitwiseAND(lit(16383L)) + 1).cast("int").as("w"),
             (shiftright(b, 14).bitwiseAND(lit(16383L)) + 1).cast("int").as("h"))
         })
-        .when(fourcc === "56503820" && substring(h, 47, 6) === "9D012A",
+        .when(Bytes.at(13, "56503820") && Bytes.at(24, "9D012A"),
           // lossy VP8: LE u16 pair after the frame start code, low 14 bits
-          struct(le16At(53).bitwiseAND(lit(16383)).as("w"),
-            le16At(57).bitwiseAND(lit(16383)).as("h")))
+          struct(Bytes.le(lit(27), 2).cast("int").bitwiseAND(lit(16383)).as("w"),
+            Bytes.le(lit(29), 2).cast("int").bitwiseAND(lit(16383)).as("h")))
         .otherwise(noDims)
-    }
-    // The JPEG segment walk is materialized as a withColumn CHAIN
-    // (__mj0..__mjN), one bound attribute per inspected marker — the
-    // recursive Column form re-derived the position ~3× per level
-    // (3^maxSegments duplicated subtrees; measured 1.29 s vs 0.28-0.31 s
-    // for the chain-based audio/video walks on the same fixture). The
-    // chain STICKS null on SOS (entropy data — a naive scan would
-    // false-positive on 0xFFC0 inside it), on a SOF (detected at that
-    // level, nothing to advance past), and on corrupt non-FF bytes.
+    // The JPEG walk (one level per inspected marker) STICKS null on SOS
+    // (entropy data — a naive scan would false-positive on 0xFFC0 inside
+    // it), on a SOF (detected at that level, nothing to advance past),
+    // and on a short read or a corrupt non-FF byte.
     val sofs = Seq("FFC0", "FFC1", "FFC2", "FFC3")
-    var out = sniffMediaType(df, binCol)
-      .withColumn("__mdh", upper(hex(substring(col(binCol), 1, headerBytes))))
-      .withColumn("__mj0",
-        when(substring(h, 1, 6) === "FFD8FF", lit(3)))
-    for (k <- 1 until maxSegments) {
-      val prev = col(s"__mj${k - 1}")
-      val mk = hexAt(prev, 2)
-      out = out.withColumn(s"__mj$k",
-        when(length(mk) =!= 4 || substring(mk, 1, 2) =!= "FF" ||
-             mk === "FFDA" || mk.isin(sofs: _*), lit(null).cast("int"))
-          .otherwise(prev + 2 + be16(prev + 2)))
+    val (out, segments) = Bytes.chain(
+        Bytes.read(sniffMediaType(df, binCol), binCol, headerBytes), "__mj",
+        when(Bytes.at(1, "FFD8FF"), lit(3)), maxSegments) { prev =>
+      val mk = Bytes.hexAt(prev, 2)
+      when(mk.isNull || substring(mk, 1, 2) =!= "FF" ||
+           mk === "FFDA" || mk.isin(sofs: _*), lit(null).cast("int"))
+        .otherwise(prev + 2 + Bytes.be(prev + 2, 2).cast("int"))
     }
-    val jpegDims = coalesce((0 until maxSegments).map { k =>
-      val p = col(s"__mj$k")
-      when(hexAt(p, 2).isin(sofs: _*),
-        struct(be16(p + 7).as("w"), be16(p + 5).as("h")))
+    val jpegDims = coalesce(segments.map { level =>
+      val p = col(level)
+      when(Bytes.hexAt(p, 2).isin(sofs: _*),
+        struct(Bytes.be(p + 7, 2).cast("int").as("w"),
+          Bytes.be(p + 5, 2).cast("int").as("h")))
     } :+ noDims: _*)
+    // PNG dims are u31 (the spec caps them at 2^31 - 1): larger is null;
+    // BMP's are i32, a negative height meaning top-down rows
+    val png = Seq(17, 21).map { pos =>
+      val v = Bytes.be(lit(pos), 4)
+      when(v <= Int.MaxValue, v).cast("int")
+    }
     val dims =
       when(col(binCol).isNull, noDims)
-        .when(substring(h, 1, 16) === "89504E470D0A1A0A" &&
-              substring(h, 25, 8) === "49484452",
-          struct(be32At(33).as("w"), be32At(41).as("h")))
-        .when(substring(h, 1, 12) === "474946383761" ||
-              substring(h, 1, 12) === "474946383961",
-          struct(le16At(13).as("w"), le16At(17).as("h")))
-        .when(substring(h, 1, 4) === "424D",
-          struct(leMag32At(37).as("w"), leMag32At(45).as("h")))
-        .when(substring(h, 1, 8) === "52494646" &&
-              substring(h, 17, 8) === "57454250", webpDims)
-        .when(substring(h, 1, 6) === "FFD8FF", jpegDims)
+        .when(Bytes.at(1, "89504E470D0A1A0A") && Bytes.at(13, "49484452"),
+          struct(png(0).as("w"), png(1).as("h")))
+        .when(Bytes.at(1, "474946383761") || Bytes.at(1, "474946383961"),
+          struct(Bytes.le(lit(7), 2).cast("int").as("w"),
+            Bytes.le(lit(9), 2).cast("int").as("h")))
+        .when(Bytes.at(1, "424D"),
+          struct(abs(Bytes.le(lit(19), 4).cast("int")).as("w"),
+            abs(Bytes.le(lit(23), 4).cast("int")).as("h")))
+        .when(Bytes.at(1, "52494646") && Bytes.at(9, "57454250"), webpDims)
+        .when(Bytes.at(1, "FFD8FF"), jpegDims)
         .otherwise(noDims)
     out
       .withColumn("__d", dims)
       .withColumn("width", col("__d.w"))
       .withColumn("height", col("__d.h"))
-      .drop("__d" +: "__mdh" +:
-        (0 until maxSegments).map(k => s"__mj$k"): _*)
+      .drop("__d" +: Bytes.name +: segments: _*)
   }
 
   /** Audio metadata from WAV headers — no decode (the sample-rate /
@@ -4317,59 +4279,29 @@ object LlmOps {
                 maxChunks: Int = 6): DataFrame = {
     require(headerBytes >= 44 && maxChunks >= 1,
       "need headerBytes >= 44 and maxChunks >= 1")
-    // The walk is materialized as a withColumn CHAIN (__p0..__pN), one
-    // column per chunk position, each referencing the previous as a
-    // bound ATTRIBUTE — the naive recursive Column form re-derives the
-    // position expression ~7× per level (the LE32 size read alone
-    // references it 5×), i.e. 7^maxChunks duplicated subtrees, which
-    // stalls the analyzer. mediaDims' JPEG walk tolerates inlining at
-    // ~3×/level; a RIFF walk does not. CollapseProject leaves the
-    // aliases alone because they are non-cheap and multiply referenced.
-    def hexAt(pos: Column, nBytes: Int): Column =
-      col("__amh").substr(pos * 2 - 1, lit(nBytes * 2))
-    def leC(pos: Column, nBytes: Int): Column = {
-      val last = hexAt(pos + (nBytes - 1), 1)
-      val v = (0 until nBytes).map(b =>
-        conv(hexAt(pos + b, 1), 16, 10).cast("long") * lit(1L << (8 * b)))
-        .reduce(_ + _)
-      when(length(last) === 2, v)
+    val isWav = Bytes.at(1, "52494646") && Bytes.at(9, "57415645")
+    // RIFF pads odd-size chunks to even offsets: advance by the
+    // even-rounded size (single reference to the size via shift-rounding)
+    val (walked, chunks) = Bytes.chain(Bytes.read(df, binCol, headerBytes),
+        "__p", when(isWav, lit(13L)), maxChunks) { prev =>
+      prev + 8 + shiftleft(shiftright(Bytes.le(prev + 4, 4) + 1, 1), 1)
     }
-    val isWav = substring(col("__amh"), 1, 8) === "52494646" &&
-      substring(col("__amh"), 17, 8) === "57415645"
-    var out = df
-      .withColumn("__amh", upper(hex(substring(col(binCol), 1, headerBytes))))
-      .withColumn("__p0", when(isWav, lit(13L)))
-    for (k <- 1 until maxChunks) {
-      val prev = col(s"__p${k - 1}")
-      val sz = leC(prev + 4, 4)
-      // RIFF pads odd-size chunks to even offsets: advance by the
-      // even-rounded size (single reference to sz via shift-rounding)
-      out = out.withColumn(s"__p$k",
-        prev + 8 + shiftleft(shiftright(sz + 1, 1), 1))
-    }
-    val levels = (0 until maxChunks).map(k => col(s"__p$k"))
-    // payload position of the FIRST chunk whose fourCC matches (the
-    // chunk header is 8 bytes); null when absent/corrupt/exhausted
-    def findPayload(targetHex: String): Column =
-      coalesce(levels.map(p =>
-        when(hexAt(p, 4) === targetHex, p + 8)) :+ lit(null).cast("long"): _*)
-    out = out
-      .withColumn("__fmtp", findPayload("666D7420"))
-      .withColumn("__datap", findPayload("64617461"))
+    val out = walked
+      .withColumn("__fmtp", Bytes.find(chunks, 0, "666D7420"))
+      .withColumn("__datap", Bytes.find(chunks, 0, "64617461"))
     val fmtP = col("__fmtp")
-    val blockAlign = leC(fmtP + 12, 2)
-    val rate = leC(fmtP + 4, 4)
-    val dataSize = leC(col("__datap") - 4, 4) // size field precedes payload
+    val blockAlign = Bytes.le(fmtP + 12, 2)
+    val rate = Bytes.le(fmtP + 4, 4)
+    val dataSize = Bytes.le(col("__datap") - 4, 4) // size field precedes payload
     val frames = when(blockAlign > 0, expr_div(dataSize, blockAlign))
     out
-      .withColumn("audio_format", leC(fmtP, 2).cast("int"))
-      .withColumn("n_channels", leC(fmtP + 2, 2).cast("int"))
+      .withColumn("audio_format", Bytes.le(fmtP, 2).cast("int"))
+      .withColumn("n_channels", Bytes.le(fmtP + 2, 2).cast("int"))
       .withColumn("sample_rate", rate.cast("int"))
-      .withColumn("bits_per_sample", leC(fmtP + 14, 2).cast("int"))
+      .withColumn("bits_per_sample", Bytes.le(fmtP + 14, 2).cast("int"))
       .withColumn("n_frames", frames)
       .withColumn("duration_ms", when(rate > 0, expr_div(frames * 1000L, rate)))
-      .drop("__amh" +: "__fmtp" +: "__datap" +:
-        (0 until maxChunks).map(k => s"__p$k"): _*)
+      .drop(Bytes.name +: "__fmtp" +: "__datap" +: chunks: _*)
   }
 
   /** Audio metadata from FLAC STREAMINFO — no decode. Unlike RIFF, the
@@ -4383,29 +4315,23 @@ object LlmOps {
     * length) yield all-null fields. duration_ms is exact integer floor
     * division. Pure codegen hex arithmetic over a 26-byte prefix. */
   def flacMeta(df: DataFrame, binCol: String): DataFrame = {
-    val h = col("__ffh")
-    def beC(pos: Int, nBytes: Int): Column = {
-      val s = substring(h, pos * 2 - 1, nBytes * 2)
-      when(length(s) === nBytes * 2, conv(s, 16, 10).cast("long"))
-    }
-    val isFlac = substring(h, 1, 8) === "664C6143" &&
-      conv(substring(h, 9, 2), 16, 10).cast("int")
-        .bitwiseAND(lit(127)) === 0 &&
-      substring(h, 11, 6) === "000022"
-    val hi = beC(19, 4)
-    val lo = beC(23, 4)
+    val isFlac = Bytes.at(1, "664C6143") &&
+      Bytes.be(lit(5), 1).bitwiseAND(lit(127L)) === 0 &&
+      Bytes.at(6, "000022")
+    val hi = Bytes.be(lit(19), 4)
+    val lo = Bytes.be(lit(23), 4)
     val rate = shiftright(hi, 12)
     val ch = (shiftright(hi, 9).bitwiseAND(lit(7L)) + 1).cast("int")
     val bps = (shiftright(hi, 4).bitwiseAND(lit(31L)) + 1).cast("int")
     val tot = hi.bitwiseAND(lit(15L)) * lit(4294967296L) + lo
-    df.withColumn("__ffh", upper(hex(substring(col(binCol), 1, 26))))
+    Bytes.read(df, binCol, 26)
       .withColumn("sample_rate", when(isFlac, rate).cast("int"))
       .withColumn("n_channels", when(isFlac, ch))
       .withColumn("bits_per_sample", when(isFlac, bps))
       .withColumn("total_samples", when(isFlac, tot))
       .withColumn("duration_ms",
         when(isFlac && rate > 0, expr_div(tot * 1000L, rate)))
-      .drop("__ffh")
+      .drop(Bytes.name)
   }
 
   /** Audio metadata from an MP3 (MPEG-1 Layer III) frame header — no
@@ -4423,19 +4349,11 @@ object LlmOps {
   def mp3Meta(df: DataFrame, binCol: String,
               headerBytes: Int = 4096): DataFrame = {
     require(headerBytes >= 16, "need headerBytes >= 16")
-    val h = col("__m3h")
-    def byteAt(pos: Column): Column = {
-      val s = h.substr(pos * 2 - 1, lit(2))
-      when(length(s) === 2, conv(s, 16, 10).cast("int"))
-    }
-    val hasId3 = substring(h, 1, 6) === "494433"
     val tagSize = (0 until 4).map(i =>
-      byteAt(lit(7 + i)) * lit(1 << (7 * (3 - i)))).reduce(_ + _)
-    val fpos = when(hasId3, tagSize + 11).otherwise(lit(1))
-    val b1 = byteAt(fpos)
-    val b2 = byteAt(fpos + 1)
-    val b3 = byteAt(fpos + 2)
-    val b4 = byteAt(fpos + 3)
+      Bytes.be(lit(7 + i), 1).cast("int") * lit(1 << (7 * (3 - i)))).reduce(_ + _)
+    val fpos = when(Bytes.at(1, "494433"), tagSize + 11).otherwise(lit(1))
+    val Seq(b1, b2, b3, b4) =
+      (0 until 4).map(i => Bytes.be(fpos + i, 1).cast("int"))
     val isMp3 = b1 === 255 && shiftright(b2, 5) === 7 &&
       shiftright(b2, 3).bitwiseAND(lit(3)) === 3 &&
       shiftright(b2, 1).bitwiseAND(lit(3)) === 1
@@ -4447,15 +4365,14 @@ object LlmOps {
     val pad = shiftright(b3, 1).bitwiseAND(lit(1))
     val mode = shiftright(b4, 6)
     val valid = isMp3 && brIdx >= 1 && brIdx <= 14 && srIdx <= 2
-    df.withColumn("__m3h",
-        upper(hex(substring(col(binCol), 1, headerBytes))))
+    Bytes.read(df, binCol, headerBytes)
       .withColumn("bitrate_kbps", when(valid, bitrate))
       .withColumn("sample_rate", when(valid, rate))
       .withColumn("n_channels",
         when(valid, when(mode === 3, 1).otherwise(2)))
       .withColumn("frame_bytes", when(valid,
         expr_div(bitrate.cast("long") * 144000L, rate.cast("long")) + pad))
-      .drop("__m3h")
+      .drop(Bytes.name)
   }
 
   /** Video metadata from MP4/ISO-BMFF headers — no decode (the
@@ -4464,9 +4381,9 @@ object LlmOps {
     * nesting, so three bounded walks chain: top-level → `moov`, inside
     * moov → `mvhd` (v0: timescale at payload+12, duration at +16) and
     * the first `trak`, inside trak → `tkhd` (v0: 16.16-fixed width /
-    * height at payload +76 / +80). Each walk is a materialized
-    * withColumn chain (the audioMeta technique — recursive Column
-    * inlining is exponential); a zero/corrupt box size pins the walk
+    * height at payload +76 / +80). Each walk is a `Bytes.chain` of
+    * materialized positions (recursive Column inlining is
+    * exponential); a zero/corrupt box size pins the walk
     * in place until depth exhausts (bounded, never hangs). Version-1
     * boxes (64-bit times) and non-MP4 / truncated payloads yield
     * nulls. Outputs: `timescale`, `duration_ms` (exact integer floor
@@ -4474,52 +4391,31 @@ object LlmOps {
   def videoMeta(df: DataFrame, binCol: String,
                 headerBytes: Int = 4096): DataFrame = {
     require(headerBytes >= 32, "need headerBytes >= 32")
-    def hexAt(pos: Column, nBytes: Int): Column =
-      col("__vmh").substr(pos * 2 - 1, lit(nBytes * 2))
-    def beC(pos: Column, nBytes: Int): Column = {
-      val s = hexAt(pos, nBytes)
-      when(length(s) === nBytes * 2, conv(s, 16, 10).cast("long"))
-    }
-    // chain a box walk from `start`, then first-match payload positions
-    def walk(out0: DataFrame, pre: String, start: Column,
-             depth: Int): (DataFrame, Seq[Column]) = {
-      var out = out0.withColumn(s"${pre}0", start)
-      for (k <- 1 until depth) {
-        val prev = col(s"$pre${k - 1}")
-        out = out.withColumn(s"$pre$k", prev + beC(prev, 4))
-      }
-      (out, (0 until depth).map(k => col(s"$pre$k")))
-    }
-    def findPayload(levels: Seq[Column], targetHex: String): Column =
-      coalesce(levels.map(p =>
-        when(hexAt(p + 4, 4) === targetHex, p + 8)) :+
-        lit(null).cast("long"): _*)
-    val isMp4 = substring(col("__vmh"), 9, 8) === "66747970"
-    var out = df.withColumn("__vmh",
-      upper(hex(substring(col(binCol), 1, headerBytes))))
-    val (out1, top) = walk(out, "__vt", when(isMp4, lit(1L)), 4)
-    out = out1.withColumn("__moovp", findPayload(top, "6D6F6F76"))
-    val (out2, inMoov) = walk(out, "__vm", col("__moovp"), 4)
-    out = out2
-      .withColumn("__mvhdp", findPayload(inMoov, "6D766864"))
-      .withColumn("__trakp", findPayload(inMoov, "7472616B"))
-    val (out3, inTrak) = walk(out, "__vk", col("__trakp"), 3)
-    out = out3.withColumn("__tkhdp", findPayload(inTrak, "746B6864"))
-    val mvhdV0 = hexAt(col("__mvhdp"), 1) === "00"
-    val tkhdV0 = hexAt(col("__tkhdp"), 1) === "00"
-    val timescale = when(mvhdV0, beC(col("__mvhdp") + 12, 4))
-    val duration = when(mvhdV0, beC(col("__mvhdp") + 16, 4))
-    out
+    val (d1, top) = Bytes.chain(Bytes.read(df, binCol, headerBytes), "__vt",
+      when(Bytes.at(5, "66747970"), lit(1L)), 4)(Bytes.box)
+    val (d2, inMoov) = Bytes.chain(
+      d1.withColumn("__moovp", Bytes.find(top, 4, "6D6F6F76")),
+      "__vm", col("__moovp"), 4)(Bytes.box)
+    val (d3, inTrak) = Bytes.chain(d2
+        .withColumn("__mvhdp", Bytes.find(inMoov, 4, "6D766864"))
+        .withColumn("__trakp", Bytes.find(inMoov, 4, "7472616B")),
+      "__vk", col("__trakp"), 3)(Bytes.box)
+    val mvhd = col("__mvhdp")
+    val tkhd = col("__tkhdp")
+    val mvhdV0 = Bytes.at(mvhd, "00")
+    val tkhdV0 = Bytes.at(tkhd, "00")
+    val timescale = when(mvhdV0, Bytes.be(mvhd + 12, 4))
+    val duration = when(mvhdV0, Bytes.be(mvhd + 16, 4))
+    d3.withColumn("__tkhdp", Bytes.find(inTrak, 4, "746B6864"))
       .withColumn("timescale", timescale.cast("int"))
       .withColumn("duration_ms",
         when(timescale > 0, expr_div(duration * 1000L, timescale)))
       .withColumn("width",
-        when(tkhdV0, shiftright(beC(col("__tkhdp") + 76, 4), 16)).cast("int"))
+        when(tkhdV0, shiftright(Bytes.be(tkhd + 76, 4), 16)).cast("int"))
       .withColumn("height",
-        when(tkhdV0, shiftright(beC(col("__tkhdp") + 80, 4), 16)).cast("int"))
-      .drop("__vmh" +: "__moovp" +: "__mvhdp" +: "__trakp" +: "__tkhdp" +:
-        ((0 until 4).map(k => s"__vt$k") ++ (0 until 4).map(k => s"__vm$k") ++
-          (0 until 3).map(k => s"__vk$k")): _*)
+        when(tkhdV0, shiftright(Bytes.be(tkhd + 80, 4), 16)).cast("int"))
+      .drop(Seq(Bytes.name, "__moovp", "__mvhdp", "__trakp", "__tkhdp") ++
+        top ++ inMoov ++ inTrak: _*)
   }
 
   /** Code-vs-prose detection (r8) — the routing gate before text
@@ -4627,58 +4523,32 @@ object LlmOps {
   def avifDims(df: DataFrame, binCol: String,
                headerBytes: Int = 1024): DataFrame = {
     require(headerBytes >= 32, "need headerBytes >= 32")
-    def hexAt(pos: Column, nBytes: Int): Column =
-      col("__ah").substr(pos * 2 - 1, lit(nBytes * 2))
-    def beC(pos: Column, nBytes: Int): Column = {
-      val s = hexAt(pos, nBytes)
-      when(length(s) === nBytes * 2, conv(s, 16, 10).cast("long"))
-    }
-    def walk(out0: DataFrame, pre: String, start: Column,
-             depth: Int): (DataFrame, Seq[Column]) = {
-      var out = out0.withColumn(s"${pre}0", start)
-      for (k <- 1 until depth) {
-        val prev = col(s"$pre${k - 1}")
-        out = out.withColumn(s"$pre$k", prev + beC(prev, 4))
-      }
-      (out, (0 until depth).map(k => col(s"$pre$k")))
-    }
-    def findPayload(levels: Seq[Column], targetHex: String): Column =
-      coalesce(levels.map(p =>
-        when(hexAt(p + 4, 4) === targetHex, p + 8)) :+
-        lit(null).cast("long"): _*)
     val brands = Seq("61766966" -> "avif", "61766973" -> "avis",
       "68656963" -> "heic", "68656966" -> "heif", "6D696631" -> "mif1")
-    var out = df.withColumn("__ah",
-      upper(hex(substring(col(binCol), 1, headerBytes))))
-    val isFtyp = substring(col("__ah"), 9, 8) === "66747970"
-    val brand = when(isFtyp,
-      coalesce(brands.map { case (h, n) =>
-        when(substring(col("__ah"), 17, 8) === h, lit(n)) } :+
+    val brand = when(Bytes.at(5, "66747970"),
+      coalesce(brands.map { case (h, n) => when(Bytes.at(9, h), lit(n)) } :+
         lit(null).cast("string"): _*))
-    out = out.withColumn("__abr", brand)
-    val (out1, top) = walk(out, "__at",
-      when(col("__abr").isNotNull, lit(1L)), 4)
+    val (d1, top) = Bytes.chain(
+      Bytes.read(df, binCol, headerBytes).withColumn("__abr", brand), "__at",
+      when(col("__abr").isNotNull, lit(1L)), 4)(Bytes.box)
     // meta is a FULLBOX: version/flags precede its children
-    out = out1.withColumn("__ameta",
-      findPayload(top, "6D657461") + 4)
-    val (out2, inMeta) = walk(out, "__am", col("__ameta"), 6)
-    out = out2.withColumn("__aiprp", findPayload(inMeta, "69707270"))
-    val (out3, inIprp) = walk(out, "__ap", col("__aiprp"), 2)
-    out = out3.withColumn("__aipco", findPayload(inIprp, "6970636F"))
-    val (out4, inIpco) = walk(out, "__ac", col("__aipco"), 4)
-    out = out4.withColumn("__aispe", findPayload(inIpco, "69737065"))
-    val ispeV0 = hexAt(col("__aispe"), 1) === "00"
-    out
+    val (d2, inMeta) = Bytes.chain(
+      d1.withColumn("__ameta", Bytes.find(top, 4, "6D657461") + 4),
+      "__am", col("__ameta"), 6)(Bytes.box)
+    val (d3, inIprp) = Bytes.chain(
+      d2.withColumn("__aiprp", Bytes.find(inMeta, 4, "69707270")),
+      "__ap", col("__aiprp"), 2)(Bytes.box)
+    val (d4, inIpco) = Bytes.chain(
+      d3.withColumn("__aipco", Bytes.find(inIprp, 4, "6970636F")),
+      "__ac", col("__aipco"), 4)(Bytes.box)
+    val ispe = col("__aispe")
+    val ispeV0 = Bytes.at(ispe, "00")
+    d4.withColumn("__aispe", Bytes.find(inIpco, 4, "69737065"))
       .withColumn("brand", col("__abr"))
-      .withColumn("width",
-        when(ispeV0, beC(col("__aispe") + 4, 4)).cast("int"))
-      .withColumn("height",
-        when(ispeV0, beC(col("__aispe") + 8, 4)).cast("int"))
-      .drop("__ah" +: "__abr" +: "__ameta" +: "__aiprp" +: "__aipco" +:
-        "__aispe" +:
-        ((0 until 4).map(k => s"__at$k") ++ (0 until 6).map(k => s"__am$k") ++
-          (0 until 2).map(k => s"__ap$k") ++
-          (0 until 4).map(k => s"__ac$k")): _*)
+      .withColumn("width", when(ispeV0, Bytes.be(ispe + 4, 4)).cast("int"))
+      .withColumn("height", when(ispeV0, Bytes.be(ispe + 8, 4)).cast("int"))
+      .drop(Seq(Bytes.name, "__abr", "__ameta", "__aiprp", "__aipco",
+        "__aispe") ++ top ++ inMeta ++ inIprp ++ inIpco: _*)
   }
 
   // exact integer floor-division as a Column (Column./ is double
@@ -4689,6 +4559,80 @@ object LlmOps {
   // here tops out near 2^42)
   private def expr_div(a: Column, b: Column): Column =
     floor(a.cast("double") / b.cast("double")).cast("long")
+
+  /** The one byte reader of the binary-header parsers. `read` hexes a
+    * payload's first bytes into one column, and every read goes through
+    * it: positions are 1-based BYTE offsets (a `Column`, so a read can
+    * follow a walked position), and a read that runs past the prefix is
+    * null. Pure codegen string arithmetic, no UDF. */
+  private object Bytes {
+    val name = "__hdr"
+    private val h = col(name)
+
+    /** Adds the hex of the first `bytes` bytes of `binCol` — never the
+      * whole payload, whose hex would be a 2×-payload string per row. */
+    def read(df: DataFrame, binCol: String, bytes: Int): DataFrame =
+      df.withColumn(name, upper(hex(substring(col(binCol), 1, bytes))))
+
+    private def slice(pos: Column, n: Int): Column =
+      h.substr(pos * 2 - 1, lit(n * 2))
+
+    /** `n` bytes at `pos` as upper-case hex. */
+    def hexAt(pos: Column, n: Int): Column = {
+      val s = slice(pos, n)
+      when(length(s) === n * 2, s)
+    }
+
+    /** Whether the bytes at `pos` are the hex signature `sig` (a short
+      * read is not, so the test needs no length check). */
+    def at(pos: Column, sig: String): Column =
+      slice(pos, sig.length / 2) === sig
+    def at(pos: Int, sig: String): Column = at(lit(pos), sig)
+
+    /** Unsigned big-endian value of `n` <= 4 bytes, as a long. */
+    def be(pos: Column, n: Int): Column =
+      conv(hexAt(pos, n), 16, 10).cast("long")
+
+    /** Unsigned little-endian value of `n` <= 4 bytes, as a long. */
+    def le(pos: Column, n: Int): Column = {
+      val s = hexAt(pos, n)
+      conv(concat((n - 1 to 0 by -1).map(b => substring(s, 2 * b + 1, 2)): _*),
+        16, 10).cast("long")
+    }
+
+    /** `le` where `little` holds, else `be` (TIFF names its byte order). */
+    def ordered(little: Column)(pos: Column, n: Int): Column =
+      when(little, le(pos, n)).otherwise(be(pos, n))
+
+    /** A walk down a chain of headers (JPEG segments, RIFF chunks,
+      * ISO-BMFF boxes): level 0 is `start`, level k+1 is `next(level
+      * k)`. Each level is a materialized withColumn attribute
+      * (`prefix0`, `prefix1`, ...): inlined, each level re-derives its
+      * position 3-7 times, so the plan grows exponentially in depth —
+      * the RIFF walk stalled the analyzer, and the JPEG walk took 1.29 s
+      * for 5,000 rows inlined against 0.27 s as a chain (CollapseProject
+      * leaves the non-cheap, multiply referenced aliases alone). Returns
+      * the frame and the level names, which the caller drops. */
+    def chain(df: DataFrame, prefix: String, start: Column, depth: Int)(
+        next: Column => Column): (DataFrame, Seq[String]) = {
+      val levels = (0 until depth).map(k => s"$prefix$k")
+      val out = levels.zip(levels.tail).foldLeft(df.withColumn(levels.head, start)) {
+        case (d, (prev, cur)) => d.withColumn(cur, next(col(prev)))
+      }
+      (out, levels)
+    }
+
+    /** The ISO-BMFF box after the one at `pos` ([BE32 size][fourCC]); a
+      * zero size pins the walk in place until its depth runs out. */
+    def box(pos: Column): Column = pos + be(pos, 4)
+
+    /** Payload position (level + 8) of the first level whose 4-byte tag,
+      * `tagAt` bytes into it, is `tag`; null when none is. */
+    def find(levels: Seq[String], tagAt: Int, tag: String): Column =
+      coalesce(levels.map(l =>
+        when(at(col(l) + tagAt, tag), col(l) + 8)) :+
+        lit(null).cast("long"): _*)
+  }
 
   /** STUB feature extraction: 8-dim pseudo-embedding from payload hash —
     * stands in for a real decoder (mapInPandas/ONNX in production). */
@@ -5171,39 +5115,22 @@ object LlmOps {
     * non-Ogg / unknown-codec rows null out (total). */
   def oggMeta(docs: DataFrame, binCol: String,
               idCol: String = "doc_id"): DataFrame = {
-    var d = docs.withColumn("__oh",
-      upper(hex(substring(col(binCol), 1, 96))))
-    def hexAt(at: Column, nBytes: Int): Column = {
-      val h = col("__oh").substr((at * 2 + 1).cast("int"), lit(nBytes * 2))
-      when(length(h) === nBytes * 2, h)
-    }
-    def u8(at: Column): Column = conv(hexAt(at, 1), 16, 10).cast("long")
-    def le16(at: Column): Column = {
-      val h = hexAt(at, 2)
-      conv(concat(substring(h, 3, 2), substring(h, 1, 2)), 16, 10)
-        .cast("long")
-    }
-    def le32(at: Column): Column = {
-      val h = hexAt(at, 4)
-      conv(concat(substring(h, 7, 2), substring(h, 5, 2),
-        substring(h, 3, 2), substring(h, 1, 2)), 16, 10).cast("long")
-    }
-    d = d.withColumn("__pk",
-      when(col("__oh").substr(lit(1), lit(8)) === "4F676753" &&
-        col("__oh").substr(lit(9), lit(2)) === "00",
-        lit(27L) + u8(lit(26L))))
-    d = d.withColumn("__codec",
-      when(hexAt(col("__pk"), 8) === "4F70757348656164", lit("opus"))
-        .when(hexAt(col("__pk"), 7) === "01766F72626973", lit("vorbis")))
-    d.select(col(idCol), col("__codec").as("codec"),
-      when(col("__codec") === "opus", u8(col("__pk") + 9))
-        .when(col("__codec") === "vorbis", u8(col("__pk") + 11))
-        .as("n_channels"),
-      when(col("__codec") === "opus", le16(col("__pk") + 10))
-        .as("pre_skip"),
-      when(col("__codec") === "opus", le32(col("__pk") + 12))
-        .when(col("__codec") === "vorbis", le32(col("__pk") + 12))
-        .as("sample_rate"))
+    // the first packet starts after the 27 fixed header bytes and the
+    // segment table, whose length is byte 27
+    val d = Bytes.read(docs, binCol, 96)
+      .withColumn("__pk", when(Bytes.at(1, "4F676753") && Bytes.at(5, "00"),
+        lit(28L) + Bytes.be(lit(27), 1)))
+    val pk = col("__pk")
+    val codec = col("__codec")
+    d.withColumn("__codec",
+        when(Bytes.at(pk, "4F70757348656164"), lit("opus"))
+          .when(Bytes.at(pk, "01766F72626973"), lit("vorbis")))
+      .select(col(idCol), codec.as("codec"),
+        when(codec === "opus", Bytes.be(pk + 9, 1))
+          .when(codec === "vorbis", Bytes.be(pk + 11, 1))
+          .as("n_channels"),
+        when(codec === "opus", Bytes.le(pk + 10, 2)).as("pre_skip"),
+        when(codec.isNotNull, Bytes.le(pk + 12, 4)).as("sample_rate"))
   }
 
   /** EXIF/TIFF image metadata — width (0x0100), height (0x0101) and
@@ -5213,7 +5140,7 @@ object LlmOps {
     * (SHORT inline values are LEFT-justified in the 4-byte field —
     * the classic endianness trap; LONG fills it). Accepts standalone
     * TIFF payloads and JPEG APP1-Exif wrapping (SOI + APP1 +
-    * "Exif" + two NUL bytes ⇒ TIFF base 12). The IFD walk is capped at 8
+    * "Exif" + two NUL bytes ⇒ TIFF header at byte 13). The IFD walk is capped at 8
     * entries (documented contract; IFD0's curation-relevant tags lead
     * in practice). Pure codegen hex arithmetic over a 120-byte
     * bounded prefix, materialized as a withColumn CHAIN (the
@@ -5221,42 +5148,26 @@ object LlmOps {
     * wrong-magic headers null out (total). */
   def exifMeta(docs: DataFrame, binCol: String,
                idCol: String = "doc_id"): DataFrame = {
-    var d = docs.withColumn("__xh",
-      upper(hex(substring(col(binCol), 1, 120))))
-    def hexAt(at: Column, nBytes: Int): Column = {
-      val h = col("__xh").substr((at * 2 + 1).cast("int"), lit(nBytes * 2))
-      when(length(h) === nBytes * 2, h)
-    }
-    def swap16(h: Column) = concat(substring(h, 3, 2), substring(h, 1, 2))
-    def swap32(h: Column) = concat(substring(h, 7, 2), substring(h, 5, 2),
-      substring(h, 3, 2), substring(h, 1, 2))
-    def u16(at: Column): Column = {
-      val h = hexAt(at, 2)
-      conv(when(col("__le"), swap16(h)).otherwise(h), 16, 10).cast("long")
-    }
-    def u32(at: Column): Column = {
-      val h = hexAt(at, 4)
-      conv(when(col("__le"), swap32(h)).otherwise(h), 16, 10).cast("long")
-    }
-    d = d.withColumn("__sig", col("__xh").substr(lit(1), lit(4)))
-    d = d.withColumn("__tb",
-      when(col("__sig") === "FFD8" &&
-          col("__xh").substr(lit(5), lit(4)) === "FFE1" &&
-          col("__xh").substr(lit(13), lit(12)) === "457869660000", lit(12L))
-        .when(col("__sig").isin("4949", "4D4D"), lit(0L)))
-    d = d.withColumn("__le", hexAt(col("__tb"), 2) === "4949")
+    // TIFF values are in the byte order the header names (II / MM)
+    val tiff = Bytes.ordered(col("__le")) _
+    var d = Bytes.read(docs, binCol, 120)
+      .withColumn("__tb",
+        when(Bytes.at(1, "FFD8") && Bytes.at(3, "FFE1") &&
+            Bytes.at(7, "457869660000"), lit(13L))
+          .when(Bytes.at(1, "4949") || Bytes.at(1, "4D4D"), lit(1L)))
+    d = d.withColumn("__le", Bytes.at(col("__tb"), "4949"))
     d = d.withColumn("__tbv",
-      when(u16(col("__tb") + 2) === 42L, col("__tb")))
-    d = d.withColumn("__ifd", col("__tbv") + u32(col("__tbv") + 4))
-    d = d.withColumn("__ne", u16(col("__ifd")))
+      when(tiff(col("__tb") + 2, 2) === 42L, col("__tb")))
+    d = d.withColumn("__ifd", col("__tbv") + tiff(col("__tbv") + 4, 4))
+    d = d.withColumn("__ne", tiff(col("__ifd"), 2))
     for (i <- 0 until 8) {
       val base = col("__ifd") + lit(2L + 12L * i)
-      d = d.withColumn(s"__t$i", when(lit(i) < col("__ne"), u16(base)))
+      d = d.withColumn(s"__t$i", when(lit(i) < col("__ne"), tiff(base, 2)))
       d = d.withColumn(s"__y$i",
-        when(col(s"__t$i").isNotNull, u16(base + 2)))
+        when(col(s"__t$i").isNotNull, tiff(base + 2, 2)))
       d = d.withColumn(s"__v$i",
-        when(col(s"__y$i") === 3L, u16(base + 8))
-          .when(col(s"__y$i") === 4L, u32(base + 8)))
+        when(col(s"__y$i") === 3L, tiff(base + 8, 2))
+          .when(col(s"__y$i") === 4L, tiff(base + 8, 4)))
     }
     def tagVal(tag: Long) = coalesce((0 until 8).map(i =>
       when(col(s"__t$i") === tag, col(s"__v$i"))): _*)

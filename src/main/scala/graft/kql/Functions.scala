@@ -1113,9 +1113,11 @@ object Functions {
     else {
       val d = new java.util.zip.Deflater()
       d.setInput(s.getBytes("UTF-8")); d.finish()
-      val buf = new Array[Byte](s.length * 2 + 64)
-      val n = d.deflate(buf); d.end()
-      java.util.Base64.getEncoder.encodeToString(buf.take(n))
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](4096)
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+      d.end()
+      java.util.Base64.getEncoder.encodeToString(out.toByteArray)
     }
   }
 

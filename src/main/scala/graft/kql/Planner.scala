@@ -2974,15 +2974,6 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
         }
         to_json(struct(pairs: _*))
       case "pack_all" => to_json(struct(df.columns.map(col).toSeq: _*))
-      // schema-aware fallback: the column when present, else the default
-      case "column_ifexists" =>
-        val name = args.headOption match {
-          case Some(Lit(s: String)) => s
-          case Some(Col(n)) => n
-          case other => throw PlanError(s"column_ifexists expects a name, got $other")
-        }
-        if (df.columns.exists(_.equalsIgnoreCase(name))) col(resolveName(df, name))
-        else toCol(args(1), df)
       case "pack_dictionary" =>
         val pairs = args.grouped(2).toList.flatMap {
           case List(k, v) => List(lit(litString(k, "key")), toCol(v, df))

@@ -69,12 +69,7 @@ object ZOrderLayout {
   def zValue(df: DataFrame, cols: Seq[String], bits: Int): Column = {
     require(cols.size >= 2 && cols.size <= 4, "z-order needs 2..4 columns")
     require(bits >= 2 && bits <= 8, "need 2 <= bits <= 8")
-    val probs = (1 until (1 << bits)).map(_.toDouble / (1 << bits)).toArray
-    val buckets = cols.map { c =>
-      val cuts = df.stat.approxQuantile(c, probs, 0.001)
-      bucketOf(col(c), cuts)
-    }
-    morton(buckets, bits)
+    morton(cols.map(c => bucketOf(col(c), quantileCuts(df, c, bits))), bits)
   }
 
   /** Write `df` z-ordered on `cols` to `path` as `files` parquet files

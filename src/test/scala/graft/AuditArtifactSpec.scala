@@ -82,7 +82,9 @@ class AuditArtifactSpec extends AnyFunSuite {
         .filter(col("doc_id") >= cut).distinct()))
   }
 
-  test("building the image plant compiles every stage, with no codegen fallback") {
+  /** How many "Failed to compile" errors `body` logs: each is a
+    * whole-stage codegen fallback to the interpreted path. */
+  private def codegenFailures(body: => Unit): Int = {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
@@ -99,13 +101,38 @@ class AuditArtifactSpec extends AnyFunSuite {
     val root = ctx.getConfiguration.getRootLogger
     root.addAppender(counter, Level.ERROR, null)
     ctx.updateLoggers()
-    try SparkEntry.buildImagePlant(spark, dir)
+    try body
     finally {
       root.removeAppender(counter.getName)
       ctx.updateLoggers()
       counter.stop()
     }
-    assert(failures.get === 0)
+    failures.get
+  }
+
+  test("building the image plant compiles every stage, with no codegen fallback") {
+    assert(codegenFailures(SparkEntry.buildImagePlant(spark, dir)) === 0)
+  }
+
+  test("the nine media-header parser rows compile every stage, with no codegen fallback") {
+    val rows = Seq("llm_media_sniff", "llm_media_dims", "llm_audio_meta",
+      "llm_flac_meta", "llm_mp3_meta", "llm_video_meta", "llm_avif_dims",
+      "llm_ogg_meta", "llm_exif_meta")
+    assert(codegenFailures(rows.foreach { name =>
+      SparkEntry.queries(name)(spark, dir).collect()
+      GraftSession.release(spark)
+    }) === 0)
+  }
+
+  test("media parsers hex a payload prefix in one place: the shared byte reader") {
+    val ext = new java.io.File("src/main/scala/graft/ext")
+    val hits = ext.listFiles().filter(_.getName.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().filter(_.contains("upper(hex(substring(")).toList
+        finally src.close()
+      }
+    assert(hits.size === 1, hits.mkString("\n"))
   }
 
   test("image plant table carries the planted near-duplicate structure") {

@@ -1762,24 +1762,42 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("byte parsers are total: signature-prefixed random payloads never throw") {
-    val rnd = new scala.util.Random(7)
-    val sigs = Seq("89504E470D0A1A0A", "47494638", "424D", "FFD8FF",
-      "52494646AAAAAAAA57454250", "52494646AAAAAAAA57415645", "1F8B", "",
-      "664C6143", "FFFB", "494433")
-    val rows = (0 until 240).map { i =>
-      val sig = sigs(i % sigs.length)
-      val tail = Array.fill(rnd.nextInt(48))(rnd.nextInt(256).toByte)
-      val sigBytes = sig.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
-      (i.toLong, sigBytes ++ tail)
-    }.toDF("id", "payload")
+    val rows = LlmOpsSpec.parserFuzz(spark)
     // collect() forces every parsed column; hostile headers must
-    // degrade to null per field, never throw
-    assert(LlmOps.mediaDims(rows, "payload").collect().length == 240)
-    assert(LlmOps.audioMeta(rows, "payload").collect().length == 240)
-    assert(LlmOps.sniffMediaType(rows, "payload").collect().length == 240)
-    assert(LlmOps.videoMeta(rows, "payload").collect().length == 240)
-    assert(LlmOps.flacMeta(rows, "payload").collect().length == 240)
-    assert(LlmOps.mp3Meta(rows, "payload").collect().length == 240)
+    // degrade to null per field, never throw. Each digest was recorded
+    // before the parsers shared one byte reader, so any change to a
+    // parser's output over these rows (a value, a null, a type) fails.
+    val got = LlmOpsSpec.parsers.map { case (name, parse) =>
+      name -> PinnedRowGoldensSpec.digest(parse(rows).drop("payload"))
+    }.toMap
+    assert(got == Map(
+      "sniffMediaType" -> (("960",
+        "3c35f5d0dd5a7f831d53750cb80535b665c8294eb54ff826034b0172247b208d",
+        "struct<doc_id:bigint,media_type:string>")),
+      "mediaDims" -> (("960",
+        "3bff43ea338b83029530c82749e9a4d4ddb2b31a759f8910ddc1eebd298e7aa3",
+        "struct<doc_id:bigint,media_type:string,width:int,height:int>")),
+      "audioMeta" -> (("960",
+        "243cf353a5152d8bc8884c804604236de11b37c817fe3113dd5468c9469b4f2f",
+        "struct<doc_id:bigint,audio_format:int,n_channels:int,sample_rate:int,bits_per_sample:int,n_frames:bigint,duration_ms:bigint>")),
+      "flacMeta" -> (("960",
+        "a55de4a56ce5b33a99feafa6dfe6e1565ae14fddebb02f1e1c661b4ec4bb8681",
+        "struct<doc_id:bigint,sample_rate:int,n_channels:int,bits_per_sample:int,total_samples:bigint,duration_ms:bigint>")),
+      "mp3Meta" -> (("960",
+        "8ca2c06faa02fb455ef7f68c81944789c17987bf5dfddb47d8c30d39dd057df5",
+        "struct<doc_id:bigint,bitrate_kbps:int,sample_rate:int,n_channels:int,frame_bytes:bigint>")),
+      "videoMeta" -> (("960",
+        "82431843229835c746f2861e53d8d46f782a400993cd7f040f531e963329527c",
+        "struct<doc_id:bigint,timescale:int,duration_ms:bigint,width:int,height:int>")),
+      "avifDims" -> (("960",
+        "46f233520bababfdf5f31372409e13c1d2336c3e84c5283e7ca43889360186ba",
+        "struct<doc_id:bigint,brand:string,width:int,height:int>")),
+      "oggMeta" -> (("960",
+        "32838fc6776bde741a673e66c7b8697607effa3594f502eb41a05e59f277d535",
+        "struct<doc_id:bigint,codec:string,n_channels:bigint,pre_skip:bigint,sample_rate:bigint>")),
+      "exifMeta" -> (("960",
+        "03a877adebebb04a5d9e3c5b095b4a69b83a820ae66ac87969cee11d5080ad8a",
+        "struct<doc_id:bigint,byte_order:string,width:bigint,height:bigint,orientation:bigint>"))))
   }
 
   test("videoMeta: mvhd/tkhd box walk, v1 boxes and degraded inputs to null") {
@@ -2459,5 +2477,92 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(rows.length == docs.select("source").distinct().count())
     assert(rows.forall(_.getLong(2) >= -rows.length)) // >= 0 up to micros
     LlmOps.releaseCaches()
+  }
+}
+
+object LlmOpsSpec {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+
+  /** The nine binary-header parsers, each over a `payload` column. */
+  val parsers: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "sniffMediaType" -> (LlmOps.sniffMediaType(_, "payload")),
+    "mediaDims" -> (LlmOps.mediaDims(_, "payload")),
+    "audioMeta" -> (LlmOps.audioMeta(_, "payload")),
+    "flacMeta" -> (LlmOps.flacMeta(_, "payload")),
+    "mp3Meta" -> (LlmOps.mp3Meta(_, "payload")),
+    "videoMeta" -> (LlmOps.videoMeta(_, "payload")),
+    "avifDims" -> (LlmOps.avifDims(_, "payload")),
+    "oggMeta" -> (LlmOps.oggMeta(_, "payload")),
+    "exifMeta" -> (LlmOps.exifMeta(_, "payload")))
+
+  /** Fuzz input for the parsers: `doc_id`, `payload`. Every signature
+    * a parser dispatches on, followed by random bytes; then every
+    * truncation (0 to 64 bytes, and the whole) of one valid header per
+    * supported format; then a null payload. */
+  def parserFuzz(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    def bytes(hx: String): Array[Byte] =
+      hx.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+    val rnd = new scala.util.Random(7)
+    val sigs = Seq("89504E470D0A1A0A", "47494638", "424D", "FFD8FF",
+      "52494646AAAAAAAA57454250", "52494646AAAAAAAA57415645", "1F8B", "",
+      "664C6143", "FFFB", "494433", "0000001C6674797061766966",
+      "4F67675300", "49492A00", "4D4D002A", "FFD8FFE1")
+    val random = (0 until 320).map { i =>
+      bytes(sigs(i % sigs.length)) ++
+        Array.fill(rnd.nextInt(48))(rnd.nextInt(256).toByte)
+    }
+    val riff = "52494646" + "00000000" + "57454250"
+    val mvhd = "0000001C" + "6D766864" + "00000000" * 3 + "00000258" + "000004B0"
+    val tkhd = "0000005C" + "746B6864" + "00000007" + "00" * 72 +
+      "01400000" + "00B40000"
+    val ispe = "00000014" + "69737065" + "00000000" + "00000280" + "000001E0"
+    val oggPage = "4F676753" + "00" + "02" + "00" * 8 + "AABBCCDD" +
+      "00000000" + "11223344" + "02" + "1313"
+    val mmTiff = "4D4D002A" + "00000008" + "0003" +
+      "0100" + "0004" + "00000001" + "00000140" +
+      "0101" + "0003" + "00000001" + "00B40000" +
+      "0112" + "0003" + "00000001" + "00060000"
+    val valid = Seq(
+      // PNG 800x600, GIF89a 320x200, BMP 800x(-600)
+      "89504E470D0A1A0A" + "0000000D" + "49484452" + "00000320" +
+        "00000258" + "0802000000",
+      "474946383961" + "4001" + "C800" + "F700",
+      "424D" + "00" * 12 + "28000000" + "20030000" + "A8FDFFFF" + "0100",
+      // JPEG: APP0 then SOF0 123x45
+      "FFD8" + "FFE00010" + "4A46494600010100000100010000" + "FFC0" +
+        "0011" + "08" + "002D" + "007B" + "03" + "012200" + "021101",
+      // WebP VP8, VP8L, VP8X
+      riff + "56503820" + "00000000" + "000000" + "9D012A" + "4001" + "F000",
+      riff + "5650384C" + "00000000" + "2F" + "7A000B00",
+      riff + "56503858" + "00000000" + "00" + "000000" + "E70300" + "F30100",
+      // WAV: odd LIST chunk, fmt (16 kHz mono 8-bit), data
+      "52494646" + "A8000000" + "57415645" + "4C495354" + "03000000" +
+        "00000000" + "666D7420" + "10000000" + "0100" + "0100" +
+        "803E0000" + "803E0000" + "0100" + "0800" + "64617461" + "64000000",
+      // FLAC STREAMINFO: 44.1 kHz stereo 16-bit
+      "664C6143" + "00" + "000022" + "1000" + "1000" + "000000" + "000000" +
+        "0AC442F0" + "0006BAA8",
+      // MP3 behind an ID3v2 tag
+      "494433" + "0400" + "00" + "000000" + "05" + "00" * 5 + "FFFB92C0",
+      // MP4: ftyp, moov{mvhd, trak{tkhd}}
+      "00000010" + "66747970" + "69736F6D" + "00000000" + "00000088" +
+        "6D6F6F76" + mvhd + "00000064" + "7472616B" + tkhd,
+      // AVIF: ftyp, meta{iprp{ipco{ispe 640x480}}}
+      "00000010" + "66747970" + "61766966" + "00000000" + "00000030" +
+        "6D657461" + "00000000" + "00000024" + "69707270" + "0000001C" +
+        "6970636F" + ispe,
+      // Ogg: Opus and Vorbis identification packets
+      oggPage + "4F70757348656164" + "01" + "03" + "3801" + "80BB0000" + "0000",
+      oggPage + "01766F72626973" + "00000000" + "02" + "44AC0000" + "00000000",
+      // TIFF II (SHORT width), and MM inside a JPEG APP1-Exif wrap
+      "49492A00" + "08000000" + "0200" + "0001" + "0300" + "01000000" +
+        "2800" + "0000" + "1201" + "0300" + "01000000" + "0300" + "0000",
+      "FFD8" + "FFE1" + "0040" + "457869660000" + mmTiff)
+    val truncated = valid.map(bytes).flatMap(v =>
+      (0 to math.min(64, v.length)).map(v.take) :+ v)
+    val payloads = (random ++ truncated).map(Option(_)) :+ None
+    payloads.zipWithIndex.map { case (p, i) => (i.toLong, p.orNull) }
+      .toDF("doc_id", "payload")
   }
 }

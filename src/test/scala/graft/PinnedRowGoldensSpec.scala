@@ -7,10 +7,11 @@ import graft.kql.{Catalog, Kql}
 /** Replays golden digests of the rows that run under
   * [[GraftSession.pinned]], of the rows that stage files in
   * [[GraftSession.scratch]], and of the `evaluate` plugins no other spec
-  * reaches: schema, row count and a SHA-256 over the sorted row strings
-  * at sf0.001. Each set was recorded before its code was refactored; the
-  * goldens change only when the DuckDB oracle has certified new values,
-  * never to make a refactor pass. Every pinned and scratch row runs twice
+  * reaches, and of the nine media-header parser rows: schema, row count
+  * and a SHA-256 over the sorted row strings at sf0.001. Each set was
+  * recorded before its code was refactored; the goldens change only when
+  * the DuckDB oracle has certified new values, never to make a refactor
+  * pass. Every pinned and scratch row runs twice
   * in one session, so state a first run leaves behind (a reused
   * directory, checkpoint or table) shows on the second. */
 class PinnedRowGoldensSpec extends AnyFunSuite {
@@ -25,18 +26,17 @@ class PinnedRowGoldensSpec extends AnyFunSuite {
   private val goldens = load("/goldens/pinned_rows_sf0.001.tsv")
   private val scratchGoldens = load("/goldens/scratch_rows_sf0.001.tsv")
   private val pluginGoldens = load("/goldens/plugin_rows_sf0.001.tsv")
+  private val mediaGoldens = load("/goldens/media_rows_sf0.001.tsv")
   private lazy val catalog = Catalog(spark, TestSpark.sfDir)
 
-  private def digest(df: DataFrame): (String, String, String) = {
-    val lines = df.collect().map(_.toString).sorted
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.update(lines.mkString("\n").getBytes("UTF-8"))
-    val hex = md.digest().map(b => f"${b & 0xff}%02x").mkString
-    (lines.length.toString, hex, df.schema.catalogString)
-  }
+  import PinnedRowGoldensSpec.digest
 
   test("goldens cover the 18 pinned rows") {
     assert(goldens.map(_(0)).distinct.size == 18)
+  }
+
+  test("goldens cover the 9 media-header parser rows") {
+    assert(mediaGoldens.map(_(0)).distinct.size == 9)
   }
 
   (goldens ++ scratchGoldens).foreach { case Array(name, n, hash, schema) =>
@@ -51,8 +51,9 @@ class PinnedRowGoldensSpec extends AnyFunSuite {
   }
 
   // a plugin row with a fifth column is that KQL query over the fixture
-  // tables; one without is the inventory row of that name
-  pluginGoldens.foreach { g =>
+  // tables; one without (and every media row) is the inventory row of
+  // that name
+  (pluginGoldens ++ mediaGoldens).foreach { g =>
     test(s"${g(0)} matches its golden digest") {
       if (g(0) == "bm25_indexed")
         graft.ext.LlmOps.buildBm25Index(catalog.table("documents"), "graft_golden_bm25")
@@ -63,5 +64,17 @@ class PinnedRowGoldensSpec extends AnyFunSuite {
       GraftSession.release(spark)
       assert(got == (g(1), g(2), g(3)))
     }
+  }
+}
+
+object PinnedRowGoldensSpec {
+  /** Row count, SHA-256 over the sorted `Row.toString` lines joined by
+    * `\n`, and the schema's catalog string. */
+  def digest(df: DataFrame): (String, String, String) = {
+    val lines = df.collect().map(_.toString).sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.update(lines.mkString("\n").getBytes("UTF-8"))
+    val hex = md.digest().map(b => f"${b & 0xff}%02x").mkString
+    (lines.length.toString, hex, df.schema.catalogString)
   }
 }

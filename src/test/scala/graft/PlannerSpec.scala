@@ -22,6 +22,17 @@ class PlannerSpec extends AnyFunSuite {
     assert(run(s"$base | where s endswith 'WORLD'").length == 1)
   }
 
+  test("zlib base64 round trip keeps incompressible text whole") {
+    // 200 random CJK characters are 600 UTF-8 bytes that deflate does
+    // not shrink: the compressed stream outgrows any buffer sized from
+    // the character count, and every byte of it must still come out
+    val rnd = new scala.util.Random(1)
+    val text = Seq.fill(200)((0x4E00 + rnd.nextInt(0x5000)).toChar).mkString
+    val r = one(s"print z = zlib_decompress_from_base64_string(" +
+      s"zlib_compress_to_base64_string('$text'))")
+    assert(r.getString(0) == text)
+  }
+
   test("== is case-sensitive; =~ is not") {
     val base = "datatable(s:string) ['Abc']"
     assert(run(s"$base | where s == 'abc'").isEmpty)
