@@ -3629,7 +3629,7 @@ object LlmOps {
     * must NOT recompute once its output partition is committed — after
     * the append, this batch's own hashes are in the index and a
     * recompute would anti-join them all away (see
-    * `StreamingOps.processLineBatch` for the committed-partition
+    * `StreamingOps.dedupBatch` for the committed-partition
     * guard). */
   def lineDedupIncremental(newDocs: DataFrame, table: String,
                            delim: String = "\n", textCol: String = "text",
@@ -5160,15 +5160,15 @@ object LlmOps {
       when(tiff(col("__tb") + 2, 2) === 42L, col("__tb")))
     d = d.withColumn("__ifd", col("__tbv") + tiff(col("__tbv") + 4, 4))
     d = d.withColumn("__ne", tiff(col("__ifd"), 2))
-    for (i <- 0 until 8) {
-      val base = col("__ifd") + lit(2L + 12L * i)
-      d = d.withColumn(s"__t$i", when(lit(i) < col("__ne"), tiff(base, 2)))
-      d = d.withColumn(s"__y$i",
-        when(col(s"__t$i").isNotNull, tiff(base + 2, 2)))
-      d = d.withColumn(s"__v$i",
-        when(col(s"__y$i") === 3L, tiff(base + 8, 2))
-          .when(col(s"__y$i") === 4L, tiff(base + 8, 4)))
-    }
+    // the 8 IFD entries, one projection per level (tag, type, value);
+    // each level reads only the one before it
+    def level(d: DataFrame, name: String)(f: (Int, Column) => Column) =
+      d.withColumns(scala.collection.immutable.ListMap((0 until 8).map(i =>
+        s"$name$i" -> f(i, col("__ifd") + lit(2L + 12L * i))): _*))
+    d = level(d, "__t")((i, base) => when(lit(i) < col("__ne"), tiff(base, 2)))
+    d = level(d, "__y")((i, base) => when(col(s"__t$i").isNotNull, tiff(base + 2, 2)))
+    d = level(d, "__v")((i, base) => when(col(s"__y$i") === 3L, tiff(base + 8, 2))
+      .when(col(s"__y$i") === 4L, tiff(base + 8, 4)))
     def tagVal(tag: Long) = coalesce((0 until 8).map(i =>
       when(col(s"__t$i") === tag, col(s"__v$i"))): _*)
     d.select(col(idCol),

@@ -11,7 +11,30 @@ package graft.kql
 object Ast {
 
   // ---------------------------------------------------------------- exprs
-  sealed trait Expr
+  sealed trait Expr {
+    /** The direct sub-expressions. `ToScalar` is a leaf: its query is
+      * planned on its own, never walked as part of the enclosing
+      * expression. */
+    def children: List[Expr] = this match {
+      case App(_, args) => args
+      case BinOp(_, l, r) => List(l, r)
+      case UnOp(_, x) => List(x)
+      case PathGet(b, k) => List(b, k)
+      case InList(x, vs, _, _) => x :: vs
+      case BetweenOp(x, lo, hi, _) => List(x, lo, hi)
+      case _ => Nil
+    }
+    /** This node with `f` applied to each of its [[children]]. */
+    def mapChildren(f: Expr => Expr): Expr = this match {
+      case App(fn, args) => App(fn, args.map(f))
+      case BinOp(op, l, r) => BinOp(op, f(l), f(r))
+      case UnOp(op, x) => UnOp(op, f(x))
+      case PathGet(b, k) => PathGet(f(b), f(k))
+      case InList(x, vs, n, ci) => InList(f(x), vs.map(f), n, ci)
+      case BetweenOp(x, lo, hi, n) => BetweenOp(f(x), f(lo), f(hi), n)
+      case leaf => leaf
+    }
+  }
   /** Literal value. `value` is one of: Long, Double, String, Boolean, null,
     * java.sql.Timestamp (datetime literal), Timespan (timespan literal). */
   final case class Lit(value: Any) extends Expr

@@ -212,13 +212,7 @@ object GraphOps {
         }
       case Col(v) if varVars.contains(v) => Col(varVars(v))
       case Col(v) if nodeVars.contains(v) => Col(nodeVars(v))
-      case App(fn, args) => App(fn, args.map(rw))
-      case BinOp(op, l, r) => BinOp(op, rw(l), rw(r))
-      case UnOp(op, x) => UnOp(op, rw(x))
-      case PathGet(b, k) => PathGet(rw(b), rw(k))
-      case InList(x, vs, n, ci) => InList(rw(x), vs.map(rw), n, ci)
-      case BetweenOp(x, lo, hi, n) => BetweenOp(rw(x), rw(lo), rw(hi), n)
-      case other => other
+      case other => other.mapChildren(rw)
     }
     rw(e)
   }
@@ -277,11 +271,7 @@ object GraphOps {
     def bindHops(e: Expr): Expr = e match {
       case App("array_length", List(Col(v))) if eP.name.contains(v) => Col("__hops")
       case Col(v) if eP.name.contains(v) => Col("__hops")
-      case App(fn, args) => App(fn, args.map(bindHops))
-      case BinOp(o, l, r) => BinOp(o, bindHops(l), bindHops(r))
-      case UnOp(o, x) => UnOp(o, bindHops(x))
-      case PathGet(b, k) => PathGet(bindHops(b), bindHops(k))
-      case other => other
+      case other => other.mapChildren(bindHops)
     }
     def rw(e: Expr) = rewrite(bindHops(e), ctx, Map.empty, nodeVars, Map.empty, propPres)
     val filtered = op.where.map(w => df1.filter(toCol(rw(w), df1))).getOrElse(df1)

@@ -87,14 +87,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
     * body (KQL function declarations, SURVEY §2.11 — NOT Spark UDFs). */
   private def substitute(e: Expr, env: Map[String, Expr]): Expr = e match {
     case Col(n) if env.contains(n) => env(n)
-    case App(fn, args) => App(fn, args.map(substitute(_, env)))
-    case BinOp(op, l, r) => BinOp(op, substitute(l, env), substitute(r, env))
-    case UnOp(op, x) => UnOp(op, substitute(x, env))
-    case PathGet(b, k) => PathGet(substitute(b, env), substitute(k, env))
-    case InList(x, vs, n, ci) => InList(substitute(x, env), vs.map(substitute(_, env)), n, ci)
-    case BetweenOp(x, lo, hi, n) =>
-      BetweenOp(substitute(x, env), substitute(lo, env), substitute(hi, env), n)
-    case other => other
+    case other => other.mapChildren(substitute(_, env))
   }
 
   def plan(q: Query): DataFrame = {
@@ -768,10 +761,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
       val aggE = a.tail.headOption.map(_.e).getOrElse(App("count", Nil))
       def colRefs(e: Expr): Set[String] = e match {
         case Col(n) => Set(n)
-        case App(_, as) => as.flatMap(colRefs).toSet
-        case BinOp(_, l, r) => colRefs(l) ++ colRefs(r)
-        case UnOp(_, x) => colRefs(x)
-        case _ => Set.empty
+        case other => other.children.flatMap(colRefs).toSet
       }
       val consumed = colRefs(aggE) + pivotName
       val groupCols = df.columns.filterNot(c => consumed.exists(_.equalsIgnoreCase(c)))
@@ -2390,26 +2380,13 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
       val (params, body) = letFuncs(fn)
       params.length == args.length &&
         containsWindowFn(substitute(body, params.zip(args).toMap))
-    case App(fn, args) => windowFns(fn) || args.exists(containsWindowFn)
-    case BinOp(_, l, r) => containsWindowFn(l) || containsWindowFn(r)
-    case UnOp(_, x) => containsWindowFn(x)
-    case PathGet(b, k) => containsWindowFn(b) || containsWindowFn(k)
-    case InList(x, vs, _, _) => containsWindowFn(x) || vs.exists(containsWindowFn)
-    case BetweenOp(x, lo, hi, _) =>
-      containsWindowFn(x) || containsWindowFn(lo) || containsWindowFn(hi)
-    case _ => false
+    case App(fn, _) if windowFns(fn) => true
+    case other => other.children.exists(containsWindowFn)
   }
 
   private def referencesAny(e: Expr, names: Set[String]): Boolean = e match {
     case Col(n) => names.contains(n)
-    case App(_, args) => args.exists(referencesAny(_, names))
-    case BinOp(_, l, r) => referencesAny(l, names) || referencesAny(r, names)
-    case UnOp(_, x) => referencesAny(x, names)
-    case PathGet(b, k) => referencesAny(b, names) || referencesAny(k, names)
-    case InList(x, vs, _, _) => referencesAny(x, names) || vs.exists(referencesAny(_, names))
-    case BetweenOp(x, lo, hi, _) =>
-      referencesAny(x, names) || referencesAny(lo, names) || referencesAny(hi, names)
-    case _ => false
+    case other => other.children.exists(referencesAny(_, names))
   }
 
   private def applyExtend(df0: DataFrame, items: List[(Option[String], Expr)]): DataFrame = {
@@ -2544,16 +2521,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
         case other => throw PlanError(s"unsupported window function '$other'")
       }
       Col(out)
-    case App(fn, args) => App(fn, args.map(rewriteWindows(_, d, calls)))
-    case BinOp(op, l, r) => BinOp(op, rewriteWindows(l, d, calls), rewriteWindows(r, d, calls))
-    case UnOp(op, x) => UnOp(op, rewriteWindows(x, d, calls))
-    case PathGet(b, k) => PathGet(rewriteWindows(b, d, calls), rewriteWindows(k, d, calls))
-    case InList(x, vs, neg, ci) =>
-      InList(rewriteWindows(x, d, calls), vs.map(rewriteWindows(_, d, calls)), neg, ci)
-    case BetweenOp(x, lo, hi, neg) =>
-      BetweenOp(rewriteWindows(x, d, calls), rewriteWindows(lo, d, calls),
-        rewriteWindows(hi, d, calls), neg)
-    case other => other
+    case other => other.mapChildren(rewriteWindows(_, d, calls))
   }
 
   private[kql] def toCol(e: Expr, df: DataFrame): Column = toCol(e, df, agg = false)

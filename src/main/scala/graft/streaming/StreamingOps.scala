@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.ext.LlmOps
 
 /** Streaming surface (SURVEY.md §2.10): the same KQL-shaped aggregations
   * run as Structured Streaming jobs. ADX semantics map as:
@@ -94,58 +95,88 @@ object StreamingOps {
           "retained?); refusing to reuse or overwrite the committed partition")
   }
 
-  /** One micro-batch of [[dedupIncrementalStream]] — package-visible so
-    * the crash-replay contract is directly testable. Replay idempotency
-    * has two cases: (1) the kept partition for this batchId already
-    * exists ⇒ the previous attempt committed its output and died
-    * between the index append and the checkpoint commit. RECOMPUTING
-    * here would dedup the batch against an index that may already hold
-    * its own signatures — every doc matches itself (Jaccard 1) and the
-    * dynamic overwrite would wipe the committed partition to empty. So
-    * the replay skips recompute and only re-derives the index append
-    * from the durable kept rows (duplicate signatures in the index make
-    * duplicate candidates, never different drops — re-appending is
-    * harmless). (2) No partition ⇒ the index is guaranteed untouched by
-    * this batch (the append runs strictly after the kept-commit), so
-    * the normal compute path is correct. */
-  private[graft] def processDedupBatch(batch: DataFrame, batchId: Long,
-      indexTable: String, keptTable: String, threshold: Double,
-      textCol: String, idCol: String): Unit = {
+  /** The one foreachBatch sink: runs `step` on each micro-batch of
+    * `stream` in output `mode`. Deploys pass a checkpoint dir so a
+    * restart resumes at the next unprocessed offset (every step below
+    * is replay-safe); tests drive batches with [[drive]]. */
+  private def sink(stream: DataFrame, checkpoint: Option[String],
+                   mode: String = "append")(
+      step: (DataFrame, Long) => Unit): StreamingQuery = {
+    val writer = stream.writeStream.outputMode(mode).foreachBatch(step)
+    checkpoint.foreach(writer.option("checkpointLocation", _))
+    writer.start()
+  }
+
+  /** The one `__batch_id` table commit: creates `table` (parquet,
+    * partitioned by `__batch_id`) with `rows`' columns if it is absent,
+    * then replaces exactly the `__batch_id = id` partition with `rows`
+    * through a STATIC-partition `INSERT OVERWRITE`. A replayed batch
+    * rewrites its own partition instead of appending a second copy,
+    * every other partition stays as committed, and no session conf
+    * changes (a dynamic overwrite would need the session's
+    * `partitionOverwriteMode`, since V1 `insertInto` ignores a
+    * per-write option). An empty `rows` leaves the partition empty.
+    * `rows`' columns map by position onto the table's. */
+  private def commitBatch(table: String, id: Long, rows: DataFrame): Unit = {
+    val spark = rows.sparkSession
+    if (!spark.catalog.tableExists(table))
+      rows.withColumn("__batch_id", lit(id)).limit(0).write.format("parquet")
+        .partitionBy("__batch_id").saveAsTable(table)
+    val view = "__graft_batch_commit"
+    rows.createOrReplaceTempView(view)
+    try spark.sql(
+      s"INSERT OVERWRITE TABLE $table PARTITION (__batch_id = $id) SELECT * FROM $view")
+    finally spark.catalog.dropTempView(view)
+  }
+
+  /** One micro-batch of an index-backed dedup stream — package-visible
+    * so the crash-replay contract is directly testable. `dedup` keeps
+    * the rows of `batch` the index at rest does not already cover;
+    * `append` grows the index from kept rows.
+    *
+    * Replay idempotency has two cases. (1) The kept partition for this
+    * batchId is already committed ⇒ the previous attempt died between
+    * the index append and the checkpoint commit, so the index may
+    * already hold this batch's own signatures or line hashes.
+    * RECOMPUTING would dedup the batch against itself (every doc
+    * self-matches, every line anti-joins away) and overwrite the
+    * committed rows with less. So the replay checks that it is one
+    * ([[requireReplayConsistent]]), skips recompute and only re-derives
+    * the append from the durable kept rows (duplicate index entries
+    * make duplicate candidates, never different drops — re-appending is
+    * harmless). (2) No partition ⇒ the append runs strictly after the
+    * commit, so the index is untouched by this batch and the normal
+    * dedup → commit → append path is correct.
+    *
+    * The dedup functions persist per-batch frames for within-query
+    * reuse; without a per-batch release they accumulate for the life of
+    * the stream. releaseCaches() frees exactly the library's own
+    * persists AND drains its tracking queue (a clearCache here would
+    * leak one tracked plan per micro-batch and nuke any unrelated
+    * caches the embedding app holds). */
+  private[graft] def dedupBatch(batch: DataFrame, batchId: Long,
+      keptTable: String, idCol: String)(
+      dedup: DataFrame => DataFrame, append: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     if (batchCommitted(spark, keptTable, batchId)) {
       requireReplayConsistent(spark, keptTable, batchId, batch, idCol)
-      graft.ext.LlmOps.appendToMinhashIndex(
-        spark.table(keptTable).filter(col("__batch_id") === batchId)
-          .drop("__batch_id"),
-        indexTable, textCol = textCol, idCol = idCol)
+      append(spark.table(keptTable).filter(col("__batch_id") === batchId)
+        .drop("__batch_id"))
     } else {
-      val kept = graft.ext.LlmOps.dedupIncremental(
-          batch, indexTable, threshold, textCol = textCol, idCol = idCol)
-        .withColumn("__batch_id", lit(batchId)).persist()
-      if (!spark.catalog.tableExists(keptTable))
-        kept.limit(0).write.format("parquet")
-          .partitionBy("__batch_id").saveAsTable(keptTable)
-      kept.write.mode("overwrite").insertInto(keptTable)
-      graft.ext.LlmOps.appendToMinhashIndex(
-        kept.drop("__batch_id"), indexTable, textCol = textCol, idCol = idCol)
+      val kept = dedup(batch).persist()
+      commitBatch(keptTable, batchId, kept)
+      append(kept)
       kept.unpersist()
     }
-    // dedupIncremental persists its per-batch token/signature frames
-    // for within-query reuse; without a per-batch release they
-    // accumulate for the life of the stream. releaseCaches() frees
-    // exactly the library's own persists AND drains its tracking queue
-    // (a clearCache here would leak one tracked plan per micro-batch
-    // and nuke any unrelated caches the embedding app holds).
-    graft.ext.LlmOps.releaseCaches()
+    LlmOps.releaseCaches()
   }
 
   /** Continuous-ingestion near-dup dedup: each micro-batch is deduped
     * against the persisted minhash index (LlmOps.dedupIncremental —
     * index candidates + in-batch self-join, exact-verified), the kept
-    * rows are appended to `keptTable`, and their signatures are
+    * rows are committed to `keptTable`, and their signatures are
     * APPENDED to the index, so later batches dedup against everything
-    * kept so far.
+    * kept so far ([[dedupBatch]]).
     *
     * The cross-batch state is the bucketed index AT REST, not streaming
     * state: unlike dropDuplicatesWithinWatermark (whose state store
@@ -161,57 +192,16 @@ object StreamingOps {
                              keptTable: String, threshold: Double = 0.8,
                              textCol: String = "text", idCol: String = "doc_id",
                              checkpoint: Option[String] = None)
-      : StreamingQuery = {
-    val writer = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processDedupBatch(batch, batchId, indexTable, keptTable, threshold,
-          textCol, idCol)
-      }
-    // deploys pass a checkpoint dir so a restart resumes at the next
-    // unprocessed offset (finished batches' writes are idempotent per
-    // processDedupBatch's replay contract); tests drive batches via
-    // processAllAvailable
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
-
-  /** One micro-batch of [[dedupCosineIncrementalStream]] — the
-    * embedding-space sibling of [[processDedupBatch]], with the same
-    * committed-partition replay guard (a replayed batch whose
-    * signatures already reached the index would self-match and wipe its
-    * committed output; see processDedupBatch). */
-  private[graft] def processCosineBatch(batch: DataFrame, batchId: Long,
-      indexTable: String, keptTable: String,
-      idCol: String, vecCol: String): Unit = {
-    val spark = batch.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    if (batchCommitted(spark, keptTable, batchId)) {
-      requireReplayConsistent(spark, keptTable, batchId, batch, idCol)
-      graft.ext.LlmOps.appendToCosineIndex(
-        spark.table(keptTable).filter(col("__batch_id") === batchId)
-          .drop("__batch_id"),
-        indexTable, idCol = idCol, vecCol = vecCol)
-    } else {
-      val kept = graft.ext.LlmOps.dedupCosineIncremental(
-          batch, indexTable, idCol = idCol, vecCol = vecCol)
-        .withColumn("__batch_id", lit(batchId)).persist()
-      if (!spark.catalog.tableExists(keptTable))
-        kept.limit(0).write.format("parquet")
-          .partitionBy("__batch_id").saveAsTable(keptTable)
-      kept.write.mode("overwrite").insertInto(keptTable)
-      graft.ext.LlmOps.appendToCosineIndex(
-        kept.drop("__batch_id"), indexTable, idCol = idCol, vecCol = vecCol)
-      kept.unpersist()
-    }
-    // free the library's per-batch persists + drain the tracking queue
-    graft.ext.LlmOps.releaseCaches()
-  }
+      : StreamingQuery =
+    sink(stream, checkpoint)(dedupBatch(_, _, keptTable, idCol)(
+      LlmOps.dedupIncremental(_, indexTable, threshold, textCol = textCol, idCol = idCol),
+      LlmOps.appendToMinhashIndex(_, indexTable, textCol = textCol, idCol = idCol)))
 
   /** Continuous embedding near-dup dedup: each micro-batch dedups
     * against the persisted cosine index
     * ([[graft.ext.LlmOps.dedupCosineIncremental]]), commits kept rows to
-    * a per-batch partition (dynamic overwrite ⇒ replay-safe), then grows
-    * the index from the committed output. Cross-batch state is the
+    * its own `__batch_id` partition, then grows the index from the
+    * committed output ([[dedupBatch]]). Cross-batch state is the
     * bucketed index AT REST — unbounded horizon, near-dup (not
     * exact-key) matching, restart-safe. Seed the index with
     * [[graft.ext.LlmOps.buildCosineIndex]] (possibly on an empty
@@ -221,77 +211,27 @@ object StreamingOps {
                                    idCol: String = "vec_id",
                                    vecCol: String = "embedding",
                                    checkpoint: Option[String] = None)
-      : StreamingQuery = {
-    val writer = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processCosineBatch(batch, batchId, indexTable, keptTable, idCol, vecCol)
-      }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
-
-  /** One micro-batch of [[lineDedupIncrementalStream]] — package-visible
-    * so the crash-replay contract is directly testable. Same two-case
-    * replay idempotency as [[processDedupBatch]]: if this batch's kept
-    * partition is already committed, the previous attempt died between
-    * the index append and the checkpoint commit — recomputing would
-    * anti-join the batch's own line hashes away (the index has no line
-    * provenance) and overwrite the committed rows with empty
-    * clean_text, so the replay skips recompute and only re-derives the
-    * index append from the durable kept rows (duplicate hashes never
-    * change an anti-join's answer). Otherwise the index is untouched by
-    * this batch and the normal path runs. */
-  private[graft] def processLineBatch(batch: DataFrame, batchId: Long,
-      indexTable: String, keptTable: String, delim: String,
-      textCol: String, idCol: String): Unit = {
-    val spark = batch.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    if (batchCommitted(spark, keptTable, batchId)) {
-      requireReplayConsistent(spark, keptTable, batchId, batch, idCol)
-      graft.ext.LlmOps.appendToLineIndex(
-        spark.table(keptTable).filter(col("__batch_id") === batchId)
-          .drop("__batch_id"),
-        indexTable, delim, idCol = idCol)
-    } else {
-      val cleaned = graft.ext.LlmOps.lineDedupIncremental(
-          batch, indexTable, delim, textCol, idCol)
-        .withColumn("__batch_id", lit(batchId)).persist()
-      if (!spark.catalog.tableExists(keptTable))
-        cleaned.limit(0).write.format("parquet")
-          .partitionBy("__batch_id").saveAsTable(keptTable)
-      cleaned.write.mode("overwrite").insertInto(keptTable)
-      // kept rows are durable — NOW grow the index, reading the novel
-      // lines back out of the cached cleaned output (its cache is
-      // only invalidated by the append's own trailing refresh, after
-      // the last read)
-      graft.ext.LlmOps.appendToLineIndex(
-        cleaned.drop("__batch_id"), indexTable, delim, idCol = idCol)
-      cleaned.unpersist()
-    }
-  }
+      : StreamingQuery =
+    sink(stream, checkpoint)(dedupBatch(_, _, keptTable, idCol)(
+      LlmOps.dedupCosineIncremental(_, indexTable, idCol = idCol, vecCol = vecCol),
+      LlmOps.appendToCosineIndex(_, indexTable, idCol = idCol, vecCol = vecCol)))
 
   /** Continuous LINE-level dedup ([[graft.ext.LlmOps.lineDedupIncremental]]
     * per micro-batch): each batch drops lines already in the persisted
     * line index, keeps in-batch first occurrences, COMMITS its cleaned
-    * docs to a per-batch partition (dynamic overwrite ⇒ replay-safe),
-    * and only THEN grows the index from the committed output. A crash
-    * before the kept-commit replays cleanly against the unchanged
-    * index; a crash after it takes [[processLineBatch]]'s
-    * reuse-committed-partition path. */
+    * docs to its own `__batch_id` partition, and only THEN grows the
+    * index from the committed output. A crash before the kept-commit
+    * replays cleanly against the unchanged index; a crash after it
+    * takes [[dedupBatch]]'s reuse-committed-partition path. */
   def lineDedupIncrementalStream(stream: DataFrame, indexTable: String,
                                  keptTable: String, delim: String = "\n",
                                  textCol: String = "text",
                                  idCol: String = "doc_id",
                                  checkpoint: Option[String] = None)
-      : StreamingQuery = {
-    val writer = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processLineBatch(batch, batchId, indexTable, keptTable, delim,
-          textCol, idCol)
-      }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      : StreamingQuery =
+    sink(stream, checkpoint)(dedupBatch(_, _, keptTable, idCol)(
+      LlmOps.lineDedupIncremental(_, indexTable, delim, textCol, idCol),
+      LlmOps.appendToLineIndex(_, indexTable, delim, idCol = idCol)))
 
   /** ADX materialized-view / update-policy semantics over a streaming
     * aggregation: run `aggregated` (a streaming groupBy/summarize) in
@@ -300,9 +240,8 @@ object StreamingOps {
     * state — and upsert them into `viewTable` as an append-only
     * CHANGELOG partitioned by `__batch_id` (the Delta/CDC pattern: the
     * view's current state is "latest batch per key", materialized by
-    * [[matViewRead]]). Dynamic partition overwrite makes a checkpoint
-    * replay of a batch idempotent (same partition rewritten, the
-    * processLineBatch convention).
+    * [[matViewRead]]). Each batch overwrites its own partition, so a
+    * checkpoint replay of a batch is idempotent.
     *
     * Scale shape: the per-batch write is sized by the keys the batch
     * touched, not the view; the aggregation state lives in the
@@ -312,21 +251,9 @@ object StreamingOps {
     * harness doesn't need one. */
   def matViewStream(aggregated: DataFrame, viewTable: String,
                     checkpoint: Option[String] = None)
-      : StreamingQuery = {
-    val writer = aggregated.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        val delta = batch.withColumn("__batch_id", lit(batchId))
-        if (!spark.catalog.tableExists(viewTable))
-          delta.limit(0).write.format("parquet")
-            .partitionBy("__batch_id").saveAsTable(viewTable)
-        delta.write.mode("overwrite").insertInto(viewTable)
-      }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      : StreamingQuery =
+    sink(aggregated, checkpoint, "update")(
+      (batch, batchId) => commitBatch(viewTable, batchId, batch))
 
   /** Streaming maintenance of an AT-REST [[graft.sources.MatViewLayout]]
     * view (r12) — the ADX update-policy shape where ingest both lands in
@@ -356,73 +283,69 @@ object StreamingOps {
   def matViewMaintainStream(stream: DataFrame, view: String,
                             stagePath: String, cursorCol: String,
                             checkpoint: Option[String] = None)
-      : StreamingQuery = {
-    val writer = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.persist()
-        try {
-          if (b.count() > 0) {
-            // CONTRACT: cursorCol is an INGEST cursor — monotone
-            // non-decreasing across batches (update-policy ingest ids /
-            // arrival times). A batch whose high-water mark sits below
-            // the committed cursor would be silently unreadable forever
-            // (the fold window (cursor, hi] and the delta read both
-            // exclude it), so refuse it LOUDLY and BEFORE any state
-            // changes — stage and store stay exactly as committed.
-            // Event-time-late data belongs to matViewStream, whose
-            // watermark semantics the tmp_stream_matview_late harness
-            // pins. Exact replays (hi == cursor after a crash between
-            // refresh and checkpoint commit) pass through: the stage
-            // overwrite is per-partition idempotent and refresh
-            // early-returns on an unchanged cursor.
-            val bounds = b.agg(max(col(cursorCol)), min(col(cursorCol))).head()
-            val hi = bounds.getLong(0)
-            val lo = bounds.getLong(1)
-            val committed = graft.sources.MatViewLayout.cursorOf(spark, view)
-            if (hi < committed) throw new IllegalStateException(
-              s"matview maintain: batch $batchId high-water $hi is below " +
-              s"the committed cursor $committed — '$cursorCol' must be " +
-              s"monotone non-decreasing across batches (ingest cursor). " +
-              s"For event-time-late rows use matViewStream (watermarked).")
-            // A MIXED batch (hi advances past the cursor but some rows sit
-            // at or below it) would stage every row yet fold only the
-            // (cursor, hi] window — the low rows become silently
-            // unreadable forever, the exact loss the all-late refuse
-            // exists to prevent. Refuse it too. Exact replays are NOT
-            // mixed: a replayed batch has hi == committed (the cursor
-            // already advanced to this batch's own high-water mark), so
-            // hi > committed is false and the idempotent-overwrite path
-            // stays open.
-            if (hi > committed && lo <= committed) throw new IllegalStateException(
-              s"matview maintain: batch $batchId mixes rows at-or-below the " +
-              s"committed cursor $committed (min $lo) with rows above it " +
-              s"(max $hi) — the low rows would stage but never fold. " +
-              s"'$cursorCol' must be monotone non-decreasing across batches; " +
-              s"for event-time-late rows use matViewStream (watermarked).")
-            // idempotent: replays overwrite their own partition only
-            b.withColumn("__batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("__batch_id").parquet(stagePath)
-            graft.sources.MatViewLayout.refresh(spark, view,
-              _ => spark.read.parquet(stagePath).drop("__batch_id"), hi)
-          }
-        } finally b.unpersist()
-      }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      : StreamingQuery =
+    sink(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val b = batch.persist()
+      try {
+        if (b.count() > 0) {
+          // CONTRACT: cursorCol is an INGEST cursor — monotone
+          // non-decreasing across batches (update-policy ingest ids /
+          // arrival times). A batch whose high-water mark sits below
+          // the committed cursor would be silently unreadable forever
+          // (the fold window (cursor, hi] and the delta read both
+          // exclude it), so refuse it LOUDLY and BEFORE any state
+          // changes — stage and store stay exactly as committed.
+          // Event-time-late data belongs to matViewStream, whose
+          // watermark semantics the tmp_stream_matview_late harness
+          // pins. Exact replays (hi == cursor after a crash between
+          // refresh and checkpoint commit) pass through: the stage
+          // overwrite is per-partition idempotent and refresh
+          // early-returns on an unchanged cursor.
+          val bounds = b.agg(max(col(cursorCol)), min(col(cursorCol))).head()
+          val hi = bounds.getLong(0)
+          val lo = bounds.getLong(1)
+          val committed = graft.sources.MatViewLayout.cursorOf(spark, view)
+          if (hi < committed) throw new IllegalStateException(
+            s"matview maintain: batch $batchId high-water $hi is below " +
+            s"the committed cursor $committed — '$cursorCol' must be " +
+            s"monotone non-decreasing across batches (ingest cursor). " +
+            s"For event-time-late rows use matViewStream (watermarked).")
+          // A MIXED batch (hi advances past the cursor but some rows sit
+          // at or below it) would stage every row yet fold only the
+          // (cursor, hi] window — the low rows become silently
+          // unreadable forever, the exact loss the all-late refuse
+          // exists to prevent. Refuse it too. Exact replays are NOT
+          // mixed: a replayed batch has hi == committed (the cursor
+          // already advanced to this batch's own high-water mark), so
+          // hi > committed is false and the idempotent-overwrite path
+          // stays open.
+          if (hi > committed && lo <= committed) throw new IllegalStateException(
+            s"matview maintain: batch $batchId mixes rows at-or-below the " +
+            s"committed cursor $committed (min $lo) with rows above it " +
+            s"(max $hi) — the low rows would stage but never fold. " +
+            s"'$cursorCol' must be monotone non-decreasing across batches; " +
+            s"for event-time-late rows use matViewStream (watermarked).")
+          // idempotent: replays overwrite their own partition only
+          b.withColumn("__batch_id", lit(batchId))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__batch_id").parquet(stagePath)
+          graft.sources.MatViewLayout.refresh(spark, view,
+            _ => spark.read.parquet(stagePath).drop("__batch_id"), hi)
+        }
+      } finally b.unpersist()
+    }
 
   /** Streaming hard-negative mining (r14): each micro-batch of anchors
     * (new training examples) probes the AT-REST IVF index
     * ([[graft.ext.LlmOps.hardNegativesForIndexed]]) and commits its
-    * (anchor_id, rank, neg_id, cos_u) rows to a per-batch partition
-    * (dynamic overwrite ⇒ replay-safe). STATELESS per anchor — the
-    * index is read-only here, so batch parity with the one-shot form
-    * is exact by construction and replays are pure overwrites. The
-    * online flavor of the dual-encoder mining loop: negatives are
-    * ready as soon as an example arrives, no corpus rescan. */
+    * (anchor_id, rank, neg_id, cos_u) rows to its own `__batch_id`
+    * partition. STATELESS per anchor — the index is read-only here, so
+    * batch parity with the one-shot form is exact by construction and
+    * a replay recomputes and overwrites the same rows. The online
+    * flavor of the dual-encoder mining loop: negatives are ready as
+    * soon as an example arrives, no corpus rescan. */
   def hardNegativesStream(anchors: DataFrame, indexPath: String,
                           centroids: Array[Array[Double]], outTable: String,
                           k: Int = 5, hiCos: Double = 0.9, nProbe: Int = 4,
@@ -430,23 +353,13 @@ object StreamingOps {
                           labelCol: String = "label",
                           vecCol: String = "embedding",
                           checkpoint: Option[String] = None)
-      : StreamingQuery = {
-    val writer = anchors.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        val out = graft.ext.LlmOps.hardNegativesForIndexed(spark, indexPath,
-            centroids, batch, k, hiCos, nProbe, idCol, labelCol, vecCol)
-          .withColumn("__batch_id", lit(batchId))
-        if (!spark.catalog.tableExists(outTable))
-          out.limit(0).write.format("parquet")
-            .partitionBy("__batch_id").saveAsTable(outTable)
-        out.write.mode("overwrite").insertInto(outTable)
-        graft.ext.LlmOps.releaseCaches()
-      }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      : StreamingQuery =
+    sink(anchors, checkpoint) { (batch, batchId) =>
+      commitBatch(outTable, batchId, LlmOps.hardNegativesForIndexed(
+        batch.sparkSession, indexPath, centroids, batch, k, hiCos, nProbe,
+        idCol, labelCol, vecCol))
+      LlmOps.releaseCaches()
+    }
 
   /** Materialize the current state of a [[matViewStream]] changelog:
     * latest `__batch_id` row per key, plus `n_updates` = number of

@@ -82,12 +82,18 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("no main source sets or unsets session conf outside GraftSession") {
-    // StreamingOps is exempt: its sets run on foreachBatch's
-    // batch.sparkSession, the stream's own clone, and V1 insertInto
-    // ignores a per-write partitionOverwriteMode option
     val found = offenders("src/main", "\\.conf\\s*\\.\\s*(set|unset)\\s*\\(".r,
-      Set("GraftSession.scala", "StreamingOps.scala"))
+      Set("GraftSession.scala"))
     assert(found.isEmpty, s"pin conf with GraftSession.pinned instead: $found")
+  }
+
+  test("StreamingOps.sink is the one foreachBatch under src/main") {
+    val calls = sources("src/main").flatMap { p =>
+      "\\.foreachBatch\\s*[({]".r
+        .findAllIn(java.nio.file.Files.readString(p)).map(_ => p.getFileName.toString)
+    }
+    assert(calls == Seq("StreamingOps.scala"),
+      s"start a batch sink through StreamingOps' one sink and commit: $calls")
   }
 
   test("only StreamingOps builds, starts or drives a stream") {

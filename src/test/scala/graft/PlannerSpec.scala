@@ -331,6 +331,20 @@ class PlannerSpec extends AnyFunSuite {
       Seq(("u1", 2L, 0L), ("u2", 0L, 1L)))
   }
 
+  test("evaluate pivot: columns the aggregate reads are not group keys") {
+    // `in` and `between` read x exactly as `==` does, so the group key
+    // is g alone
+    for (agg <- Seq("countif(x in (1))", "countif(x between (1 .. 1))")) {
+      val df = Kql.run(spark,
+        s"""datatable(g:string, k:string, x:long) ['u1','a',1, 'u1','a',2, 'u2','b',1]
+           | | evaluate pivot(k, $agg)
+           | | sort by g asc""".stripMargin, cat)
+      assert(df.columns.toSeq == Seq("g", "a", "b"), agg)
+      assert(df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq ==
+        Seq(("u1", 1L, 0L), ("u2", 0L, 1L)), agg)
+    }
+  }
+
   test("evaluate bag_unpack expands JSON keys to typed columns") {
     val rows = run(
       """datatable(id:long, d:string) [1, '{"x": 5, "y": "a"}', 2, '{"x": 7, "y": "b"}']

@@ -4,6 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.StreamingOps
+import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
 
 case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
               event_type: String, value: Double)
@@ -346,7 +348,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming incremental EMBEDDING dedup: index-backed cross-batch drops + replay") {
+  test("streaming incremental EMBEDDING dedup: index-backed cross-batch drops") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     def cleanTable(t: String): Unit = {
@@ -381,85 +383,92 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(keptIds == Set(1L, 3L, 5L))
     } finally q.stop()
-    // replay after the index append: recompute would self-match id 5 —
-    // the committed-partition guard must preserve the output instead
-    val replay = Seq((4L, v1), (5L, v3)).toDF("vec_id", "embedding")
-    graft.streaming.StreamingOps.processCosineBatch(replay, 1L,
-      "graft_cosstream_idx", "graft_cosstream_kept", "vec_id", "embedding")
-    spark.catalog.refreshTable("graft_cosstream_kept")
-    assert(spark.table("graft_cosstream_kept")
-      .select("vec_id").collect().map(_.getLong(0)).toSet == Set(1L, 3L, 5L))
   }
 
-  // Crash-replay contract (r5 advice): a batch that died AFTER the index
-  // append but BEFORE the streaming checkpoint commit is re-run by the
-  // engine with the same batchId. The index then already contains the
-  // batch's own line hashes / signatures, so a recompute would anti-join
-  // (or self-match) the whole batch away and the dynamic partition
-  // overwrite would replace the committed kept rows with nothing. The
-  // committed-partition guard must skip recompute and only re-derive the
-  // index append from the durable rows.
-  test("line-dedup batch replay after index append preserves committed output") {
+  // Crash-replay contract of StreamingOps.dedupBatch, one row per
+  // index kind. A batch that died AFTER the index append but BEFORE the
+  // streaming checkpoint commit is re-run by the engine with the same
+  // batchId. The index then already holds the batch's own line hashes /
+  // signatures, so a recompute would anti-join (or self-match) the
+  // batch away and the static-partition commit would replace the
+  // committed kept rows with less. The committed-partition guard must
+  // skip recompute and only re-derive the index append from the durable
+  // rows. A batchId collision whose committed ids are absent from the
+  // incoming batch is no replay (a reset checkpoint against a retained
+  // kept table) and must fail loudly instead of discarding the batch.
+  // An empty batch commits an empty partition and replays as one.
+  private case class ReplayKind(name: String, idCol: String, seed: () => Unit,
+      step: (DataFrame, Long) => Unit, batch: DataFrame, keptIds: Set[Long],
+      foreign: DataFrame)
+
+  private def replayKinds: Seq[ReplayKind] = {
     import spark.implicits._
-    def cleanTable(t: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), t)
-      loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
-    }
-    cleanTable("graft_replay_kept")
-    graft.ext.LlmOps.buildLineIndex(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "graft_replay_idx",
-      delim = " ")
-    val batch = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
-    def run() = graft.streaming.StreamingOps.processLineBatch(
-      batch, 0L, "graft_replay_idx", "graft_replay_kept", " ", "text", "doc_id")
-    run() // first attempt: commits kept partition 0 AND appends the index
-    def kept = {
-      spark.catalog.refreshTable("graft_replay_kept")
-      spark.table("graft_replay_kept").select("doc_id", "clean_text")
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    }
-    val first = kept
-    assert(first == Map(1L -> "alpha beta", 2L -> "gamma"))
-    run() // replay with the index already poisoned by batch 0's hashes
-    assert(kept == first, "replay must not wipe the committed partition")
-    spark.catalog.refreshTable("graft_replay_idx_lines")
-    assert(spark.table("graft_replay_idx_lines").distinct().count() == 3L)
-    // a batchId collision that is NOT a replay (different ids — the
-    // deleted-checkpoint-with-retained-kept-table case) must fail
-    // loudly instead of silently discarding the new batch
-    val foreign = Seq((9L, "totally new")).toDF("doc_id", "text")
-    val e = intercept[IllegalStateException] {
-      graft.streaming.StreamingOps.processLineBatch(
-        foreign, 0L, "graft_replay_idx", "graft_replay_kept", " ", "text", "doc_id")
-    }
-    assert(e.getMessage.contains("not a checkpoint replay"))
-    assert(kept == first, "the refused batch must leave the partition intact")
+    import graft.ext.LlmOps
+    val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    def kept(kind: String) = s"graft_replay_${kind}_kept"
+    def idx(kind: String) = s"graft_replay_${kind}_idx"
+    val v1 = Seq(1.0, 0.0, 0.0, 0.1)
+    val v2 = Seq(0.0, 1.0, 0.0, 0.0)
+    Seq(
+      ReplayKind("line", "doc_id",
+        () => LlmOps.buildLineIndex(docs, idx("line"), delim = " "),
+        StreamingOps.dedupBatch(_, _, kept("line"), "doc_id")(
+          LlmOps.lineDedupIncremental(_, idx("line"), " "),
+          LlmOps.appendToLineIndex(_, idx("line"), " ")),
+        Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text"),
+        Set(1L, 2L), Seq((9L, "totally new")).toDF("doc_id", "text")),
+      ReplayKind("minhash", "doc_id",
+        () => LlmOps.buildMinhashIndex(docs, idx("minhash")),
+        StreamingOps.dedupBatch(_, _, kept("minhash"), "doc_id")(
+          LlmOps.dedupIncremental(_, idx("minhash"), 0.8),
+          LlmOps.appendToMinhashIndex(_, idx("minhash"))),
+        Seq((1L, "alpha beta gamma delta"), (2L, "totally different words here"),
+          (3L, "alpha beta gamma delta")).toDF("doc_id", "text"),
+        Set(1L, 2L), Seq((9L, "fresh new unique content")).toDF("doc_id", "text")),
+      ReplayKind("cosine", "vec_id",
+        () => LlmOps.buildCosineIndex(
+          Seq.empty[(Long, Seq[Double])].toDF("vec_id", "embedding"),
+          idx("cosine"), threshold = 0.8),
+        StreamingOps.dedupBatch(_, _, kept("cosine"), "vec_id")(
+          LlmOps.dedupCosineIncremental(_, idx("cosine")),
+          LlmOps.appendToCosineIndex(_, idx("cosine"))),
+        Seq((1L, v1), (2L, v1), (3L, v2)).toDF("vec_id", "embedding"),
+        Set(1L, 3L), Seq((9L, v2)).toDF("vec_id", "embedding")))
   }
 
-  test("near-dup batch replay after index append preserves committed output") {
-    import spark.implicits._
-    spark.sql("DROP TABLE IF EXISTS graft_replay2_kept")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), "graft_replay2_kept")
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
-    graft.ext.LlmOps.buildMinhashIndex(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "graft_replay2_idx")
-    val batch = Seq((1L, "alpha beta gamma delta"),
-      (2L, "totally different words here")).toDF("doc_id", "text")
-    def run() = graft.streaming.StreamingOps.processDedupBatch(
-      batch, 0L, "graft_replay2_idx", "graft_replay2_kept", 0.8, "text", "doc_id")
-    run()
-    def keptIds = {
-      spark.catalog.refreshTable("graft_replay2_kept")
-      spark.table("graft_replay2_kept").select("doc_id")
-        .collect().map(_.getLong(0)).toSet
+  test("index-dedup replay: line, minhash and cosine keep committed rows") {
+    for (k <- replayKinds) {
+      val table = s"graft_replay_${k.name}_kept"
+      graft.sources.BucketedLayout.clearStale(spark, table)
+      k.seed()
+      def kept = {
+        spark.catalog.refreshTable(table)
+        spark.table(table).collect().toSet
+      }
+      k.step(k.batch, 0L) // first attempt: commits partition 0 AND appends the index
+      val first = kept
+      assert(first.map(_.getAs[Long](k.idCol)) == k.keptIds, k.name)
+      k.step(k.batch, 0L) // replay with the index already holding batch 0
+      assert(kept == first, s"${k.name}: replay must not rewrite the committed partition")
+      val e = intercept[IllegalStateException](k.step(k.foreign, 0L))
+      assert(e.getMessage.contains("not a checkpoint replay"), k.name)
+      assert(kept == first, s"${k.name}: the refused batch must leave the partition intact")
+      val empty = k.batch.limit(0)
+      k.step(empty, 1L)
+      k.step(empty, 1L) // replay of an empty committed batch
+      assert(kept == first, s"${k.name}: an empty batch commits no rows")
     }
-    assert(keptIds == Set(1L, 2L))
-    run() // replay: both docs' signatures are already in the index
-    assert(keptIds == Set(1L, 2L),
-      "replay must not self-match the batch against its own index entries")
+  }
+
+  test("the batch step leaves the caller's partitionOverwriteMode as it was") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val k = replayKinds.head
+    graft.sources.BucketedLayout.clearStale(spark, s"graft_replay_${k.name}_kept")
+    k.seed()
+    GraftSession.pinned(spark, key -> "STATIC") { s =>
+      k.step(s.createDataFrame(k.batch.collect().toList.asJava, k.batch.schema), 0L)
+      assert(s.conf.get(key) == "STATIC")
+    }
   }
 
   test("tmp_stream_matview_refresh gives the same answer on a second run in one session") {
