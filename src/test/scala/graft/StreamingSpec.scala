@@ -397,9 +397,10 @@ class StreamingSpec extends AnyFunSuite {
   // incoming batch is no replay (a reset checkpoint against a retained
   // kept table) and must fail loudly instead of discarding the batch.
   // An empty batch commits an empty partition and replays as one.
+  // `extra` holds a kind's own checks, run after the replay.
   private case class ReplayKind(name: String, idCol: String, seed: () => Unit,
       step: (DataFrame, Long) => Unit, batch: DataFrame, keptIds: Set[Long],
-      foreign: DataFrame)
+      foreign: DataFrame, extra: () => Unit = () => ())
 
   private def replayKinds: Seq[ReplayKind] = {
     import spark.implicits._
@@ -416,7 +417,15 @@ class StreamingSpec extends AnyFunSuite {
           LlmOps.lineDedupIncremental(_, idx("line"), " "),
           LlmOps.appendToLineIndex(_, idx("line"), " ")),
         Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text"),
-        Set(1L, 2L), Seq((9L, "totally new")).toDF("doc_id", "text")),
+        Set(1L, 2L), Seq((9L, "totally new")).toDF("doc_id", "text"),
+        () => {
+          spark.catalog.refreshTable(kept("line"))
+          assert(spark.table(kept("line")).select("doc_id", "clean_text").collect()
+            .map(r => r.getLong(0) -> r.getString(1)).toMap ==
+            Map(1L -> "alpha beta", 2L -> "gamma"))
+          spark.catalog.refreshTable(s"${idx("line")}_lines")
+          assert(spark.table(s"${idx("line")}_lines").distinct().count() == 3L)
+        }),
       ReplayKind("minhash", "doc_id",
         () => LlmOps.buildMinhashIndex(docs, idx("minhash")),
         StreamingOps.dedupBatch(_, _, kept("minhash"), "doc_id")(
@@ -436,28 +445,40 @@ class StreamingSpec extends AnyFunSuite {
         Set(1L, 3L), Seq((9L, v2)).toDF("vec_id", "embedding")))
   }
 
-  test("index-dedup replay: line, minhash and cosine keep committed rows") {
-    for (k <- replayKinds) {
-      val table = s"graft_replay_${k.name}_kept"
-      graft.sources.BucketedLayout.clearStale(spark, table)
-      k.seed()
-      def kept = {
-        spark.catalog.refreshTable(table)
-        spark.table(table).collect().toSet
-      }
-      k.step(k.batch, 0L) // first attempt: commits partition 0 AND appends the index
-      val first = kept
-      assert(first.map(_.getAs[Long](k.idCol)) == k.keptIds, k.name)
-      k.step(k.batch, 0L) // replay with the index already holding batch 0
-      assert(kept == first, s"${k.name}: replay must not rewrite the committed partition")
-      val e = intercept[IllegalStateException](k.step(k.foreign, 0L))
-      assert(e.getMessage.contains("not a checkpoint replay"), k.name)
-      assert(kept == first, s"${k.name}: the refused batch must leave the partition intact")
-      val empty = k.batch.limit(0)
-      k.step(empty, 1L)
-      k.step(empty, 1L) // replay of an empty committed batch
-      assert(kept == first, s"${k.name}: an empty batch commits no rows")
+  private def checkReplay(name: String): Unit = {
+    val k = replayKinds.find(_.name == name).get
+    val table = s"graft_replay_${k.name}_kept"
+    graft.sources.BucketedLayout.clearStale(spark, table)
+    k.seed()
+    def kept = {
+      spark.catalog.refreshTable(table)
+      spark.table(table).collect().toSet
     }
+    k.step(k.batch, 0L) // first attempt: commits partition 0 AND appends the index
+    val first = kept
+    assert(first.map(_.getAs[Long](k.idCol)) == k.keptIds, k.name)
+    k.step(k.batch, 0L) // replay with the index already holding batch 0
+    assert(kept == first, s"${k.name}: replay must not rewrite the committed partition")
+    k.extra()
+    val e = intercept[IllegalStateException](k.step(k.foreign, 0L))
+    assert(e.getMessage.contains("not a checkpoint replay"), k.name)
+    assert(kept == first, s"${k.name}: the refused batch must leave the partition intact")
+    val empty = k.batch.limit(0)
+    k.step(empty, 1L)
+    k.step(empty, 1L) // replay of an empty committed batch
+    assert(kept == first, s"${k.name}: an empty batch commits no rows")
+  }
+
+  test("line-dedup batch replay after index append preserves committed output") {
+    checkReplay("line")
+  }
+
+  test("near-dup batch replay after index append preserves committed output") {
+    checkReplay("minhash")
+  }
+
+  test("cosine-dedup batch replay after index append preserves committed output") {
+    checkReplay("cosine")
   }
 
   test("the batch step leaves the caller's partitionOverwriteMode as it was") {
