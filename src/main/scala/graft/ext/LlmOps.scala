@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
 object LlmOps {
 
   /** Within-query persists that BACK a returned lazy frame (per-doc
-    * token/signature/norm frames; the CC labels handoff). They cannot
+    * token/signature/norm frames; every [[Rounds.handOff]]). They cannot
     * be unpersisted inside the op — the caller's action still has to
     * read them — so each one is registered here and reclaimed by
     * [[releaseCaches]] once the caller has consumed its result. The
@@ -910,13 +910,11 @@ object LlmOps {
     * centroid).
     *
     * Iteration shape at scale: the L2-normalized vectors are cached as
-    * a pinned RDD (the logRegScore/q170_hits loop pattern — the
-    * DataFrame form re-planned an assignment UDF + posexplode + hash
-    * aggregate every round); each round is ONE shuffle-free
-    * mapPartitions accumulating k×dim partial sums + k counts locally,
-    * reduced to the driver — the only driver traffic per round is that
-    * k·dim partial (bounded model metadata, the same class as the IVF
-    * centroid sample, NOT a data pass). Seeds are the k
+    * an RDD, so no round is planned by Catalyst; each round is ONE
+    * shuffle-free mapPartitions accumulating k×dim partial sums + k
+    * counts locally, reduced to the driver — the only driver traffic per
+    * round is that k·dim partial (bounded model metadata, the same
+    * class as the IVF centroid sample, NOT a data pass). Seeds are the k
     * lowest-(Knuth-hash, id) vectors, so runs are deterministic up to
     * FP summation order in the update; empty cells keep their previous
     * centroid. Lloyd's descent property (WCSS non-increasing per round)
@@ -976,15 +974,11 @@ object LlmOps {
     }
     val centsF = centroids
     val halfNormF = centsF.map(c => c.map(x => x * x).sum / 2)
-    // materialize the per-row assignment into the tracked DF cache (one
-    // narrow row per vector) so the vector RDD can be dropped eagerly
-    val out = persistTracked(data.map { case (id, v) =>
+    // one narrow row per vector, so the vector RDD can be dropped eagerly
+    Rounds.handOff(data.map { case (id, v) =>
       val (cell, d2) = bestCell(v, centsF, halfNormF)
       (id, cell, d2)
-    }.toDF(idCol, "cell", "dist2"))
-    out.count()
-    data.unpersist(false)
-    out
+    }.toDF(idCol, "cell", "dist2"))(data.unpersist(false))
   }
 
   /** Probe cells for a query vector: driver-side math against the
@@ -1899,26 +1893,11 @@ object LlmOps {
     * which this replaces). The loop is driver-side but touches only
     * per-round checksums (aggregate scalars — no data collect).
     *
-    * This loop deliberately runs on pair RDDs with a PINNED
-    * HashPartitioner, not DataFrames — the one place in this library
-    * where the DataFrame API is the wrong tool, for two measured
-    * reasons. (1) Per-round cost: every DataFrame iteration must be
-    * checkpointed to stop the logical plan doubling (Catalyst analysis
-    * measured 2.2s → 6.6s → 24s → 107s across four rounds under
-    * persist-only), and even with per-round checkpoint truncation each
-    * round re-runs analysis + optimization + codegen on a fresh plan —
-    * a measured ~0.16 s/round floor that dominates a 16-round loop on
-    * ANY data size, because rounds are synchronous barriers. The RDD
-    * loop has no per-round planning at all. (2) Shuffle count: with a
-    * pinned partitioner each star phase shuffles the (monotonically
-    * contracting) edge set once and its adjacency⋈min join is NARROW
-    * (co-partitioned, zero exchange); the DataFrame variant re-shuffles
-    * every intermediate each round because exchange reuse does not
-    * survive checkpoint truncation. This is the same architecture as
-    * Spark's own
-    * iterative-graph layer (GraphX/Pregel: RDDs + partitioner reuse),
-    * and it is an internal engine choice — inputs and outputs remain
-    * DataFrames.
+    * The loop is a [[Rounds]] loop on pair RDDs (see there for why not
+    * DataFrames): each star phase shuffles the (monotonically
+    * contracting) edge set once, and its adjacency⋈min join is narrow.
+    * The pair input is cached here for the two or three passes that
+    * read it.
     *
     * Each round truncates RDD lineage via checkpoint: `localCheckpoint`
     * (executor-resident, cheap) by default; when the session has a
@@ -1949,24 +1928,6 @@ object LlmOps {
 
   private[graft] def connectedComponentsImpl(pairs: DataFrame, maxIters: Int,
                                              smallLimit: Long): DataFrame = {
-    val spark = pairs.sparkSession
-    val sc = spark.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
-    def ckptRdd[T](rdd: RDD[T]): RDD[T] = {
-      rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      if (reliable) rdd.checkpoint() else rdd.localCheckpoint()
-      rdd
-    }
-    def rmCkpt(rdd: RDD[_]): Unit =
-      if (reliable) rdd.getCheckpointFile.foreach { p =>
-        try {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(sc.hadoopConfiguration).delete(hp, true)
-        } catch { case _: java.io.IOException => () }
-      }
     // ids must be integral: a silent cast('long') would null out string
     // ids (na.drop would then delete every edge — dedup becomes a
     // no-op) and truncate fractional ids (conflating distinct nodes).
@@ -1979,17 +1940,34 @@ object LlmOps {
           s"connectedComponents: id column '$c' must be integral, got $other")
       }
     }
+    // a frame the caller already cached stays the caller's to free
+    val owned = pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (owned) pairs.persist()
+    try componentLabels(pairs, maxIters, smallLimit)
+    finally if (owned) pairs.unpersist(false)
+  }
+
+  private def componentLabels(pairs: DataFrame, maxIters: Int,
+                              smallLimit: Long): DataFrame = {
+    val spark = pairs.sparkSession
+    val sc = spark.sparkContext
+    val reliable = sc.getCheckpointDir.isDefined
+    import org.apache.spark.rdd.RDD
+    import spark.implicits._
+    def rmCkpt(rdd: RDD[_]): Unit =
+      if (reliable) rdd.getCheckpointFile.foreach { p =>
+        try {
+          val hp = new org.apache.hadoop.fs.Path(p)
+          hp.getFileSystem(sc.hadoopConfiguration).delete(hp, true)
+        } catch { case _: java.io.IOException => () }
+      }
+    val keep = Rounds.Keep(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+      pin = r => if (reliable) r.checkpoint() else r.localCheckpoint(),
+      unpin = rmCkpt)
     val edgePairs = pairs
       .select(col("i").cast("long").as("i"), col("j").cast("long").as("j"))
       .na.drop()
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
-    // partition count sized to the GRAPH, not the session default: every
-    // round is a synchronous barrier over these partitions, and on a
-    // small graph per-task launch overhead dominates (measured 0.30
-    // s/round at 32 partitions vs 0.03 at 1 for a 1.4k-edge graph —
-    // 16 rounds of pure scheduling). ~250k directed edges/partition
-    // (a few MB), capped at 4× cores for skew headroom at scale; the
-    // count() is one cheap job over the (caller-persisted) pair frame.
     val nEdges = edgePairs.count()
     if (nEdges <= smallLimit) {
       // driver union-find with path compression; components resolve to
@@ -2015,15 +1993,10 @@ object LlmOps {
       val labels = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
       val kit = parent.keySet.iterator()
       while (kit.hasNext) { val n: Long = kit.next(); labels += ((n, find(n))) }
-      import spark.implicits._
-      val out = persistTracked(
-        spark.createDataset(labels.toSeq).toDF("node", "group_id"))
-      out.count()
-      return out
+      return Rounds.handOff(spark.createDataset(labels.toSeq).toDF("node", "group_id"))()
     }
-    val part = new HashPartitioner(math.max(1, math.min(
-      4L * math.max(1, sc.defaultParallelism),
-      4L * nEdges / 250000L + 1L).toInt))
+    // the partitioner rule applied to the directed edge count
+    val part = Rounds.partitioner(sc, 4L * nEdges)
     val mn = math.min(_: Long, _: Long)
     // the node universe of the pair graph (for the final label frame;
     // singleton stars lose their edges, not their nodes)
@@ -2087,52 +2060,25 @@ object LlmOps {
         (acc, kv) => (acc._1 + 1, acc._2 + kv._1, acc._3 + kv._2,
           acc._4 + mix(kv._1, kv._2)),
         (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4))
-    var edges = ckptRdd(edgePairs.filter { case (i, j) => i != j }
-      .distinct(part.numPartitions))
-    var sumPrev = checksum(edges)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val next = ckptRdd(smallStar(largeStar(edges)))
-      val sumNow = checksum(next) // materializes next's checkpoint
-      rmCkpt(edges)
-      edges.unpersist(false)
-      edges = next
-      converged = sumNow == sumPrev
-      sumPrev = sumNow
-      iter += 1
+    val last = Rounds.until(edgePairs.filter { case (i, j) => i != j }
+      .distinct(part.numPartitions), maxIters, keep)(checksum) { e =>
+      smallStar(largeStar(e))
     }
-    if (!converged)
+    if (!last.converged) {
+      last.free()
       throw new IllegalStateException(
         s"connectedComponents: no convergence in $maxIters rounds — " +
           "pathological contraction; raise maxIters")
+    }
     // stars: every non-root points straight at its component min; roots
     // and singletons label themselves. Materialized + checkpointed HERE
-    // so the returned frame carries no lineage into the caller's pair
-    // frame (callers free their persisted pairs right after this call).
-    val labels = ckptRdd(nodes.map(n => (n, n)).union(edges).reduceByKey(part, mn))
+    // so the returned frame carries no lineage into the pair frame.
+    val labels = keep.hold(
+      nodes.map(n => (n, n)).union(last.state).reduceByKey(part, mn))
     labels.count()
-    rmCkpt(edges)
-    edges.unpersist(false)
-    // Hand the result off to a DATAFRAME-level cache and release every
-    // RDD persist before returning. Through r5 `labels` stayed RDD-
-    // persisted (its localCheckpoint blocks WERE the returned data) and
-    // was reclaimed only by ContextCleaner GC — which a large long-lived
-    // heap almost never runs, so blocks accumulated across a 191-query
-    // bench session and squeezed execution memory (the r5 pass-2
-    // blowups). A DF cache is visible to spark.catalog.clearCache() and
-    // to callers' unpersist(); the extra materialization is one pass
-    // over (node, group) 16-byte rows — noise next to the CC loop.
-    // Block-loss risk (executor death between here and the caller's
-    // action) is unchanged vs the r5 localCheckpoint design — both are
-    // non-recomputable once the internal RDDs die; MEMORY_AND_DISK
-    // spills under pressure rather than evicting.
-    import spark.implicits._
-    val out = persistTracked(spark.createDataset(labels).toDF("node", "group_id"))
-    out.count()
-    rmCkpt(labels)
-    labels.unpersist(false)
-    out
+    last.free()
+    Rounds.handOff(spark.createDataset(labels).toDF("node", "group_id"))(
+      keep.free(labels))
   }
 
   /** DBSCAN-style density clustering over embeddings with a cosine
@@ -2167,17 +2113,14 @@ object LlmOps {
     val sym = pairs.union(pairs.select(col("j").as("i"), col("i").as("j")))
     val core = sym.groupBy("i").agg(count(lit(1)).as("__n"))
       .filter(col("__n") + 1 >= minPts).select(col("i").as("id"))
-    val coreEdges = pairs
+    val comp = connectedComponents(pairs
       .join(core.withColumnRenamed("id", "i"), "i")
       .join(core.withColumnRenamed("id", "j"), "j")
-      .select("i", "j").persist()
-    val comp = connectedComponents(coreEdges)
-    coreEdges.unpersist(false)
+      .select("i", "j"))
     // isolated cores (no core neighbor) are their own clusters
-    val coreClusters = persistTracked(
+    val coreClusters = Rounds.handOff(
       core.join(comp.withColumnRenamed("node", "id"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("group_id"), col("id")).as("cluster_id")))
-    coreClusters.count()
+        .select(col("id"), coalesce(col("group_id"), col("id")).as("cluster_id")))()
     val borderAttach = sym
       .join(coreClusters.select(col("id").as("j"), col("cluster_id").as("__cj")), "j")
       .groupBy("i").agg(min(col("__cj")).as("__cb"))
@@ -2202,14 +2145,8 @@ object LlmOps {
   def nearDupGroups(docs: DataFrame, threshold: Double,
                     blockCol: Option[String] = None,
                     textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    // persisted: the component loop's edge build reads the pair frame
-    // twice (both orientations), and pair generation is the expensive
-    // stage; the loop materializes everything, so freeing right after
-    // is safe (comp is checkpoint-backed, no lineage into pairs)
-    val pairs = jaccardPairs(docs, threshold, blockCol, textCol, idCol).persist()
-    val comp = connectedComponents(pairs)
-    pairs.unpersist()
-    groupRows(docs, idCol, comp)
+    groupRows(docs, idCol,
+      connectedComponents(jaccardPairs(docs, threshold, blockCol, textCol, idCol)))
   }
 
   /** Shared tail of the *Groups ops: attach component labels to the full
@@ -2251,10 +2188,7 @@ object LlmOps {
     * pairs (the audit-artifact path). */
   def cosineGroupsFromPairs(universe: DataFrame, pairs: DataFrame,
                             idCol: String = "vec_id"): DataFrame = {
-    val p = pairs.select(col("i"), col("j")).persist()
-    val comp = connectedComponents(p)
-    p.unpersist()
-    groupRows(universe, idCol, comp)
+    groupRows(universe, idCol, connectedComponents(pairs.select(col("i"), col("j"))))
   }
 
   // ==================================================== sampling / splits
@@ -2697,9 +2631,7 @@ object LlmOps {
     val spark2 = docs.sparkSession
     import spark2.implicits._
     // The training loop runs on a PINNED RDD of the id-clustered,
-    // id-sorted feature rows (the q170_hits/q166 lesson applied to GD —
-    // r11's DataFrame form re-planned a broadcast-join + window + hash
-    // aggregate every round): rows of one doc are contiguous within a
+    // id-sorted feature rows: rows of one doc are contiguous within a
     // partition, so each round is ONE shuffle-free mapPartitions that
     // streams doc-by-doc — margin from the broadcast weights, then the
     // gradient contribution into a per-partition double[dim+1] — and
@@ -2752,10 +2684,7 @@ object LlmOps {
     val scored = featRdd.mapPartitions { it =>
       LlmOps.foldDocRuns(it, wF, (id, y, mg, _) => (id, y, mg))
     }
-    val scoredDf = persistTracked(scored.toDF("id", "y", "mg"))
-    scoredDf.count()
-    featRdd.unpersist(false)
-    scoredDf
+    Rounds.handOff(scored.toDF("id", "y", "mg"))(featRdd.unpersist(false))
       .withColumn("prob", lit(1.0) / (lit(1.0) + exp(-col("mg"))))
       .withColumn("predicted", (col("prob") >= 0.5).cast("int"))
       .withColumn(labelCol, col("y").cast("int")) // 0/1 by contract
@@ -3834,13 +3763,10 @@ object LlmOps {
   def bpeTokenize(docs: DataFrame, rounds: Int = 3, textCol: String = "text",
                   idCol: String = "doc_id"): DataFrame = {
     val (_, vocab) = bpeMergeRounds(bpeInitVocab(docs, textCol), rounds)
-    // hand the vocabulary sizes to a TRACKED cache (the CC handoff
-    // convention) so the merge-loop lineage can be released while the
-    // returned frame stays cheap to consume
-    val sizes = persistTracked(
-      vocab.select(col("w"), size(col("syms")).cast("long").as("n_syms")))
-    sizes.count()
-    vocab.unpersist(false)
+    // the merge-loop lineage is released once the sizes have materialized
+    val sizes = Rounds.handOff(
+      vocab.select(col("w"), size(col("syms")).cast("long").as("n_syms")))(
+      vocab.unpersist(false))
     val docWords = spread(docs)
       .select(col(idCol), explode(split(lower(txt(textCol)), "\\s+")).as("w"))
       .filter(length(col("w")) >= 1)

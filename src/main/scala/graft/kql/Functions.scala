@@ -13,9 +13,11 @@ object Functions {
   /** Regex-quote a literal string for use in Spark's regex-based fns. */
   def rxQuote(s: String): String = java.util.regex.Pattern.quote(s)
 
-  private def f(fn: List[Column] => Column): List[Column] => Column = fn
+  private def f(fn: PartialFunction[List[Column], Column]): PartialFunction[List[Column], Column] = fn
 
-  val registry: Map[String, List[Column] => Column] = Map(
+  /** Each entry is defined exactly on the argument lists it accepts, so
+    * the planner can reject any other arity with a typed error. */
+  val registry: Map[String, PartialFunction[List[Column], Column]] = Map(
     // ------------------------------------------------------------ string
     "strlen" -> f { case c :: Nil => length(c).cast("long") },
     "strcmp" -> f { case a :: b :: Nil =>
@@ -24,7 +26,7 @@ object Functions {
     "new_guid" -> f { case Nil => uuid() },
     "tolower" -> f { case c :: Nil => lower(c) },
     "toupper" -> f { case c :: Nil => upper(c) },
-    "strcat" -> f { cs => concat_ws("", cs: _*) }, // KQL: nulls act as empty
+    "strcat" -> f { case cs => concat_ws("", cs: _*) }, // KQL: nulls act as empty
     "strcat_delim" -> f { case d :: rest => call_function("concat_ws", (d :: rest): _*) },
     "strcat_array" -> f { case a :: d :: Nil => call_function("array_join", a, d) },
     "reverse" -> f { case c :: Nil => reverse(c) },
@@ -47,7 +49,7 @@ object Functions {
       col("_metadata").getField("file_modification_time") },
     "hash" -> f { case c :: Nil => xxhash64(c)
                   case c :: m :: Nil => pmod(xxhash64(c), m.cast("long")) },
-    "hash_many" -> f { cs => xxhash64(cs: _*) },
+    "hash_many" -> f { case cs => xxhash64(cs: _*) },
     "format_number" -> f { case c :: d :: Nil =>
       call_function("format_number", c, d.cast("int")) },
     // component encoding = RFC 3986 unreserved set (A-Za-z0-9-_.~),
@@ -100,7 +102,7 @@ object Functions {
     "range" -> f {
       case a :: b :: Nil => sequence(a, b)
       case a :: b :: st :: Nil => sequence(a, b, st) },
-    "hash_combine" -> f { cs => xxhash64(cs: _*) },
+    "hash_combine" -> f { case cs => xxhash64(cs: _*) },
     "unixtime_nanoseconds_todatetime" -> f { case c :: Nil =>
       // exact ns→µs floor division (decimal path — double division loses
       // ULPs at 1.7e18-scale epochs, see Catalog.normalize)
@@ -136,7 +138,7 @@ object Functions {
     "pow" -> f { case b :: e :: Nil => pow(b, e) },
     "sqrt" -> f { case c :: Nil => sqrt(c) },
     "sign" -> f { case c :: Nil => signum(c) },
-    "pi" -> f { _ => lit(math.Pi) },
+    "pi" -> f { case _ => lit(math.Pi) },
     "degrees" -> f { case c :: Nil => degrees(c) },
     "radians" -> f { case c :: Nil => radians(c) },
     "sin" -> f { case c :: Nil => sin(c) }, "cos" -> f { case c :: Nil => cos(c) },
@@ -146,11 +148,11 @@ object Functions {
     "isnan" -> f { case c :: Nil => isnan(c) },
     "isinf" -> f { case c :: Nil => c === lit(Double.PositiveInfinity) || c === lit(Double.NegativeInfinity) },
     "isfinite" -> f { case c :: Nil => !isnan(c) && c =!= lit(Double.PositiveInfinity) && c =!= lit(Double.NegativeInfinity) },
-    "max_of" -> f { cs => greatest(cs: _*) },
-    "min_of" -> f { cs => least(cs: _*) },
-    "coalesce" -> f { cs => coalesce(cs: _*) },
+    "max_of" -> f { case cs => greatest(cs: _*) },
+    "min_of" -> f { case cs => least(cs: _*) },
+    "coalesce" -> f { case cs => coalesce(cs: _*) },
     // ----------------------------------------------------------- datetime
-    "now" -> f { _ => current_timestamp() },
+    "now" -> f { case _ => current_timestamp() },
     "getyear" -> f { case c :: Nil => year(c) },
     "getmonth" -> f { case c :: Nil => month(c) },
     "dayofmonth" -> f { case c :: Nil => dayofmonth(c) },
@@ -190,9 +192,9 @@ object Functions {
     // ------------------------------------------------- dynamic/array/json
     "parse_json" -> f { case c :: Nil => c },
     "todynamic" -> f { case c :: Nil => c },
-    "pack_array" -> f { cs => array(cs: _*) },
+    "pack_array" -> f { case cs => array(cs: _*) },
     "array_length" -> f { case c :: Nil => size(c).cast("long") },
-    "array_concat" -> f { cs => concat(cs: _*) },
+    "array_concat" -> f { case cs => concat(cs: _*) },
     "array_slice" -> f { case a :: lo :: hi :: Nil => slice(a, lo + 1, hi - lo + 1) }, // 0-based inclusive
     "array_index_of" -> f {
       case a :: v :: Nil => (array_position(a, v) - 1).cast("long")
@@ -291,7 +293,7 @@ object Functions {
       val part = (i: Int) =>
         lpad(coalesce(element_at(p, i), lit("0")), 8, "0")
       concat(part(1), part(2), part(3), part(4)).cast("decimal(38,0)") },
-    "pack_all" -> f { _ => throw new IllegalArgumentException("pack_all handled in planner") },
+    "pack_all" -> f { case _ => throw new IllegalArgumentException("pack_all handled in planner") },
     // KQL string_size = UTF-8 byte length (strlen is char length)
     "string_size" -> f { case s :: Nil => octet_length(s).cast("long") },
     // 0-based first-match position, -1 when absent (KQL indexof_regex);

@@ -3,6 +3,7 @@ package graft.kql
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import Ast._
+import graft.ext.Rounds
 
 /** Graph operators (`make-graph` / `graph-match` / `graph-shortest-paths`
   * / `graph-to-table`) planned as plain relational algebra — the
@@ -36,23 +37,6 @@ object GraphOps {
                             nodes: Option[(DataFrame, String)])
 
   private def err(msg: String): Nothing = throw new RuntimeException(msg)
-
-  /** Partitioner for the iterative pair-RDD loops, sized to the GRAPH,
-    * not the session default (the connectedComponents rule): every
-    * round is a synchronous barrier over these partitions, and on a
-    * small graph per-task launch overhead dominates (measured 0.30
-    * s/round at 32 partitions vs 0.03 at 1 for a 1.4k-edge graph).
-    * ~250k edges/partition, min 1, capped at 4× cores for skew headroom
-    * at warehouse scale — scale-adaptive, never a local-mode constant.
-    * `nEdges` may be an upper bound (e.g. a pre-distinct count):
-    * sizing needs only the order of magnitude, and the partition count
-    * never changes any op's values (integer sums/mins are
-    * order-independent; the replay specs pin each loop). */
-  private def graphPartitioner(spark: org.apache.spark.sql.SparkSession,
-                               nEdges: Long): org.apache.spark.HashPartitioner =
-    new org.apache.spark.HashPartitioner(math.max(1L, math.min(
-      4L * math.max(1, spark.sparkContext.defaultParallelism),
-      nEdges / 250000L + 1L)).toInt)
 
   /** Column prefix for edge occurrence k. */
   private def ePre(k: Int) = s"__ge${k}_"
@@ -293,31 +277,16 @@ object GraphOps {
     * leaks (the standard simplified variant — no teleport
     * redistribution), documented rather than hidden.
     *
-    * Scale shape: each iteration is ONE equi-join of the edge frame
-    * with the current rank frame plus ONE hash aggregate — no driver
-    * state, no collect. Lineage is CAPPED: every 5 rounds the rank
-    * frame is eagerly localCheckpoint-ed (the connectedComponents
-    * cadence) so the planned DAG never chains more than 5 join+agg
-    * rounds — at 50 iterations an uncapped chain's analysis/codegen
-    * cost and recovery lineage are real; the previous checkpoint's
-    * blocks are freed as soon as the next one materializes. Edges and
-    * the node set are computed once and reused across iterations. */
+    * Scale shape: a [[graft.ext.Rounds]] loop. The degree-joined edge
+    * list is keyed by src, so the per-round contribution join is narrow
+    * and the only shuffle per round is the contribution reduceByKey.
+    * Edges and the node set are computed once and reused across
+    * iterations. */
   def pageRank(edges: DataFrame, iters: Int, srcCol: String, dstCol: String): DataFrame = {
     require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
-    // RDD loop (r15 — the HITS/LPA escalation applied to the linear
-    // chain too): the degree-joined edge list is keyed by src on ONE
-    // pinned HashPartitioner, so the per-round contribution join is
-    // co-partitioned and narrow; the only shuffle per round is the
-    // contribution reduceByKey (map-side combined), and there is no
-    // per-round Catalyst planning or checkpoint cadence at all. All
-    // arithmetic is the same integer micros (non-negative Longs, where
-    // Scala / equals SQL div), so the RDD rounds are VALUE-IDENTICAL to
-    // the DataFrame rounds they replace — the unrolled-round oracles
-    // replay verbatim.
     val spark = edges.sparkSession
     import spark.implicits._
-    // one cheap count sizes the loop's partitioner to the graph
-    val part = graphPartitioner(spark, edges.count())
+    val part = Rounds.partitioner(spark.sparkContext, edges.count())
     val ePairs = edges.select(col(srcCol).cast("string"),
         col(dstCol).cast("string"))
       .distinct().as[(String, String)].rdd
@@ -332,25 +301,15 @@ object GraphOps {
       .partitionBy(part).persist()
     eDeg.count()
     try {
-      var ranks = nodes.mapValues(_ => 1000000L).persist()
-      for (_ <- 1 to iters) {
+      Rounds.loop(nodes.mapValues(_ => 1000000L), iters) { ranks =>
         val contrib = eDeg.join(ranks)
           .map { case (_, ((dst, deg), r)) => (dst, r / deg) }
           .reduceByKey(part, _ + _)
-        val next = nodes.leftOuterJoin(contrib)
+        nodes.leftOuterJoin(contrib)
           .mapValues { case (_, o) => 150000L + 85L * o.getOrElse(0L) / 100L }
-          .persist()
-        next.count() // materialize before freeing the parent
-        ranks.unpersist(false)
-        ranks = next
-      }
-      val out = graft.ext.LlmOps.persistTracked(
-        ranks.map { case (id, r) => (id, r) }.toDF("id", "rank_micros")
-          .select(col("id"), col("rank_micros"),
-            (col("rank_micros").cast("double") / 1000000.0d).as("rank")))
-      out.count()
-      ranks.unpersist(false)
-      out
+      }.handOff(_.toDF("id", "rank_micros")
+        .select(col("id"), col("rank_micros"),
+          (col("rank_micros").cast("double") / 1000000.0d).as("rank")))
     } finally {
       bySrc.unpersist(false); eDeg.unpersist(false); nodes.unpersist(false)
     }
@@ -374,33 +333,16 @@ object GraphOps {
     * raw · 1e6 needs Σ-degree ≤ ~9.2e6 micro-saturated neighbors —
     * beyond that drop to millis (documented dial, not auto-switched).
     *
-    * Scale shape: per round TWO equi-joins of the edge frame with a
-    * score frame + two hash aggregates + two 1-row max aggregates
-    * broadcast back — no driver state, no data collect; each half-step
-    * materializes eagerly (see the loop comment), so lineage is one
-    * round deep at all times. */
+    * Scale shape: a [[graft.ext.Rounds]] loop whose round is the pair
+    * (hubs, authorities). The edge list is keyed both ways on the loop's
+    * partitioner, so every join is narrow; per round the only shuffles
+    * are the two reduceByKey fan-ins, and the two maxima are 1-value
+    * folds. */
   def hits(edges: DataFrame, iters: Int, srcCol: String, dstCol: String): DataFrame = {
     require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
     val spark = edges.sparkSession
     import spark.implicits._
-    // RDD loop (r14) — the escalation path the r8 notes promised. Each
-    // HITS round references its intermediate frames SEVERAL times (raw
-    // sums feed both the data join and the 1-row max; new authorities
-    // feed the hub half-step and the final assembly), which in
-    // DataFrame form multiplied the planned subtree ~8× per round and
-    // needed an eager localCheckpoint per HALF-step — two node-sized
-    // materializations of pure Catalyst floor every round. On pair
-    // RDDs with ONE pinned partitioner (the connectedComponents
-    // machinery) every join/reduceByKey below is co-partitioned and
-    // narrow: per round the only shuffles are the two reduceByKey
-    // fan-ins, and there is no per-round planning at all. All
-    // arithmetic is the same integer micros (Long sums are exact and
-    // order-independent; `div` and Scala Long `/` both truncate toward
-    // zero on the non-negative values here), so the RDD form is
-    // VALUE-IDENTICAL to the DataFrame form it replaces — the
-    // hand-computed and random-digraph replay specs pin that.
-    // one cheap count sizes the loop's partitioner to the graph
-    val part = graphPartitioner(spark, edges.count())
+    val part = Rounds.partitioner(spark.sparkContext, edges.count())
     val ePairs = edges.select(col(srcCol).cast("string"),
         col(dstCol).cast("string"))
       .distinct().as[(String, String)].rdd
@@ -409,14 +351,14 @@ object GraphOps {
     val nodes = bySrc.keys.union(byDst.keys).distinct()
       .map((_, ())).partitionBy(part).persist()
     try {
-      var h = nodes.mapValues(_ => 1000000L).persist()
-      var a = h
-      for (_ <- 1 to iters) {
+      val init = nodes.mapValues(_ => 1000000L)
+      Rounds.loop((init, init), iters) { case (h, _) =>
         // authority half-step: a'(v) = Σ_{u→v} h(u), max-normalized
         val aRaw = bySrc.join(h)
           .map { case (_, (dst, hu)) => (dst, hu) }
           .reduceByKey(part, _ + _)
         val am = aRaw.values.fold(0L)(math.max)
+        // persisted before the round ends: the hub maximum below reads it
         val aNew = nodes.leftOuterJoin(aRaw)
           .mapValues { case (_, o) => o.getOrElse(0L) * 1000000L / am }
           .persist()
@@ -425,24 +367,15 @@ object GraphOps {
           .map { case (_, (src, av)) => (src, av) }
           .reduceByKey(part, _ + _)
         val hm = hRaw.values.fold(0L)(math.max)
-        val hNew = nodes.leftOuterJoin(hRaw)
-          .mapValues { case (_, o) => o.getOrElse(0L) * 1000000L / hm }
-          .persist()
-        // materialize before freeing the parents (each round's RDDs are
-        // consumed twice: next round + final assembly)
-        hNew.count()
-        h.unpersist(false); if (a ne h) a.unpersist(false)
-        h = hNew; a = aNew
-      }
-      val out = graft.ext.LlmOps.persistTracked(
+        (nodes.leftOuterJoin(hRaw)
+          .mapValues { case (_, o) => o.getOrElse(0L) * 1000000L / hm }, aNew)
+      }.handOff { case (h, a) =>
         h.join(a).map { case (id, (hv, av)) => (id, hv, av) }
           .toDF("id", "hub_micros", "auth_micros")
           .select(col("id"), col("hub_micros"), col("auth_micros"),
             (col("hub_micros").cast("double") / 1000000.0d).as("hub"),
-            (col("auth_micros").cast("double") / 1000000.0d).as("auth")))
-      out.count()
-      h.unpersist(false); if (a ne h) a.unpersist(false)
-      out
+            (col("auth_micros").cast("double") / 1000000.0d).as("auth"))
+      }
     } finally {
       bySrc.unpersist(false); byDst.unpersist(false); nodes.unpersist(false)
     }
@@ -459,23 +392,16 @@ object GraphOps {
     * exact on any graph without negative cycles; fewer rounds = a
     * bounded-hop horizon, often exactly what a radius query wants).
     *
-    * Scale shape (RDD loop, r11 — the [[hits]] escalation applied here):
-    * the edge list is keyed by src on ONE pinned HashPartitioner, so the
-    * per-round relax join is co-partitioned and narrow; the only shuffle
-    * per round is the min-fold reduceByKey (with map-side combine), and
-    * there is no per-round Catalyst planning at all — the DataFrame form
-    * paid an analysis+optimize+codegen floor per round plus an eager
-    * localCheckpoint to stop plan doubling. Long min is exact and
-    * order-independent, so the RDD form is VALUE-IDENTICAL to the
-    * DataFrame rounds it replaces (the unrolled-round oracle replays). */
+    * Scale shape: a [[graft.ext.Rounds]] loop. The edge list is keyed by
+    * src, so the per-round relax join is narrow and the only shuffle per
+    * round is the min-fold reduceByKey. */
   def shortestPathsWeighted(edges: DataFrame, sourceId: String, iters: Int,
                             srcCol: String, dstCol: String,
                             wCol: String): DataFrame = {
     require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
     val spark = edges.sparkSession
     import spark.implicits._
-    // one cheap count sizes the loop's partitioner to the graph
-    val part = graphPartitioner(spark, edges.count())
+    val part = Rounds.partitioner(spark.sparkContext, edges.count())
     val bySrc = edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"),
         col(wCol).cast("long").as("w"))
@@ -485,23 +411,12 @@ object GraphOps {
       .map { case (s, d, w) => (s, (d, w)) }
       .partitionBy(part).persist()
     try {
-      var dist = spark.sparkContext
-        .parallelize(Seq((sourceId, 0L))).partitionBy(part).persist()
-      for (_ <- 1 to iters) {
+      Rounds.loop(spark.sparkContext.parallelize(Seq((sourceId, 0L))).partitionBy(part),
+          iters) { dist =>
         val relaxed = bySrc.join(dist)
           .map { case (_, ((dst, w), d)) => (dst, d + w) }
-        val next = dist.union(relaxed)
-          .reduceByKey(part, math.min(_: Long, _: Long)).persist()
-        // materialize before freeing the parent (next reads dist lazily)
-        next.count()
-        dist.unpersist(false)
-        dist = next
-      }
-      val out = graft.ext.LlmOps.persistTracked(
-        dist.toDF("id", "dist"))
-      out.count()
-      dist.unpersist(false)
-      out
+        dist.union(relaxed).reduceByKey(part, math.min(_: Long, _: Long))
+      }.handOff(_.toDF("id", "dist"))
     } finally bySrc.unpersist(false)
   }
 
@@ -518,18 +433,12 @@ object GraphOps {
     * min-tie form is deterministic). Isolated nodes keep their own
     * label. Output: (id, community, community_size).
     *
-    * Scale shape (RDD loop, r11 — the [[hits]] escalation applied here):
-    * the symmetric neighbor list is keyed by the LABEL-side endpoint on
-    * ONE pinned HashPartitioner, so the per-round neighbor-label join is
-    * co-partitioned and narrow; the vote count AND the argmax fold into
-    * a single aggregateByKey per round (per-node label→count maps,
+    * Scale shape: a [[graft.ext.Rounds]] loop. The symmetric neighbor
+    * list is keyed by the LABEL-side endpoint, so the per-round
+    * neighbor-label join is narrow; the vote count AND the argmax fold
+    * into a single aggregateByKey per round (per-node label→count maps,
     * bounded by degree, combined map-side), landing already partitioned
-    * for the narrow keep-own-label leftOuterJoin — ONE shuffle per round
-    * and zero per-round Catalyst planning (the DataFrame form paid an
-    * analysis+codegen floor per round plus two aggregates' exchanges).
-    * Counts are exact Longs and the (count desc, label asc) argmax is
-    * deterministic, so the RDD form is VALUE-IDENTICAL to the DataFrame
-    * rounds it replaces (the unrolled-round oracle replays verbatim).
+    * for the narrow keep-own-label leftOuterJoin — ONE shuffle per round.
     * Synchronous LPA can oscillate on bipartite structures — `iters`
     * bounds it (the caller picks convergence vs cost, as with
     * pagerank). */
@@ -538,14 +447,12 @@ object GraphOps {
     require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
     val spark = edges.sparkSession
     import spark.implicits._
-    // one cheap count sizes the loop's partitioner to the graph
-    val part = graphPartitioner(spark, edges.count())
+    val part = Rounds.partitioner(spark.sparkContext, edges.count())
     val raw = edges.select(col(srcCol).cast("string"),
       col(dstCol).cast("string")).as[(String, String)].rdd
     // keyed by the neighbor whose LABEL each vote reads: edge (a,b)
     // contributes (b -> a) and (a -> b); self-loops drop (they vote for
-    // the node's own current label symmetrically — the DataFrame form
-    // filtered them too)
+    // the node's own current label symmetrically)
     val sym = raw.filter { case (a, b) => a != b }
       .flatMap { case (a, b) => Iterator((b, a), (a, b)) }
       .distinct().partitionBy(part).persist()
@@ -555,10 +462,8 @@ object GraphOps {
       .distinct().map((_, ())).partitionBy(part).persist()
     nodes.count()
     try {
-      var labels = nodes.mapPartitions(
-        _.map { case (id, _) => (id, id) }, preservesPartitioning = true)
-        .persist()
-      for (_ <- 1 to iters) {
+      Rounds.loop(nodes.mapPartitions(
+          _.map { case (id, _) => (id, id) }, preservesPartitioning = true), iters) { labels =>
         // votes: for node a, count neighbor labels; argmax (count desc,
         // label asc) inside the same shuffle via per-node count maps
         val winner = sym.join(labels)
@@ -580,22 +485,15 @@ object GraphOps {
             }
             bestL
           }
-        val next = nodes.leftOuterJoin(winner)
+        nodes.leftOuterJoin(winner)
           .mapPartitions(_.map { case (id, (_, o)) =>
             (id, o.getOrElse(id)) }, preservesPartitioning = true)
-          .persist()
-        next.count() // materialize before freeing the parent
-        labels.unpersist(false)
-        labels = next
-      }
-      val ldf = labels.toDF("id", "lbl")
-      val sizes = ldf.groupBy("lbl").agg(count(lit(1)).as("community_size"))
-      val out = graft.ext.LlmOps.persistTracked(
+      }.handOff { labels =>
+        val ldf = labels.toDF("id", "lbl")
+        val sizes = ldf.groupBy("lbl").agg(count(lit(1)).as("community_size"))
         ldf.join(sizes, "lbl")
-          .select(col("id"), col("lbl").as("community"), col("community_size")))
-      out.count()
-      labels.unpersist(false)
-      out
+          .select(col("id"), col("lbl").as("community"), col("community_size"))
+      }
     } finally {
       sym.unpersist(false); nodes.unpersist(false)
     }
@@ -614,19 +512,17 @@ object GraphOps {
       col(dstCol).cast("string").as("b"))
     val ids = e.select(col("a").as("id"))
       .unionByName(e.select(col("b").as("id"))).distinct()
-    val pairs = e.select(xxhash64(col("a")).as("i"), xxhash64(col("b")).as("j"))
-      .filter(col("i") =!= col("j")).persist()
-    try {
-      val comp = graft.ext.LlmOps.connectedComponents(pairs)
-      val labeled = ids
-        .join(comp.withColumnRenamed("node", "h"),
-          xxhash64(col("id")) === col("h"), "left")
-        .select(col("id"), coalesce(col("group_id"), xxhash64(col("id"))).as("g"))
-      val reps = labeled.groupBy("g")
-        .agg(min(col("id")).as("group_id"), count(lit(1)).as("group_size"))
-      labeled.join(reps, "g")
-        .select(col("id"), col("group_id"), col("group_size"))
-    } finally pairs.unpersist(false)
+    val comp = graft.ext.LlmOps.connectedComponents(
+      e.select(xxhash64(col("a")).as("i"), xxhash64(col("b")).as("j"))
+        .filter(col("i") =!= col("j")))
+    val labeled = ids
+      .join(comp.withColumnRenamed("node", "h"),
+        xxhash64(col("id")) === col("h"), "left")
+      .select(col("id"), coalesce(col("group_id"), xxhash64(col("id"))).as("g"))
+    val reps = labeled.groupBy("g")
+      .agg(min(col("id")).as("group_id"), count(lit(1)).as("group_size"))
+    labeled.join(reps, "g")
+      .select(col("id"), col("group_id"), col("group_size"))
   }
 
   /** ADX `graph-mark-components`: label every node of the pending graph
@@ -707,12 +603,9 @@ object GraphOps {
       val perNode = tri
         .select(explode(array(col("u"), col("v1"), col("v2"))).as("id"))
         .groupBy("id").agg(count(lit(1)).as("t"))
-      val out = graft.ext.LlmOps.persistTracked(
-        nodes.join(perNode, Seq("id"), "left_outer")
-          .select(col("id"), coalesce(col("t"), lit(0L)).as("triangles")))
-      out.count()
-      out
-    } finally { und.unpersist(false) }
+      Rounds.handOff(nodes.join(perNode, Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("t"), lit(0L)).as("triangles")))(o.unpersist(false))
+    } finally und.unpersist(false)
   }
 
   /** k-core peeling over ANY edge frame: `rounds` synchronous rounds of
@@ -728,67 +621,38 @@ object GraphOps {
     * the same fixed rounds verbatim (pure count arithmetic ⇒
     * VALUE-EXACT cross-engine).
     *
-    * Scale shape: per round ONE degree aggregate + two semi-join-shaped
-    * edge filters (Catalyst broadcasts the keep-set when small) — no
-    * driver state, no collect; lineage capped at the pageRank
-    * localCheckpoint cadence. */
+    * Scale shape: a [[graft.ext.Rounds]] loop over the surviving edge
+    * set. The degree count and the a-side semi-join are narrow; per
+    * round the only shuffles are the degree reduceByKey fan-in and the
+    * b-side re-key. Peeling only REMOVES edges, so an unchanged edge
+    * count means no node lost degree and every later round is the
+    * identity: the loop stops there, which is value-identical to the
+    * oracle's fixed-round replay. */
   def kCore(edges: DataFrame, k: Int, rounds: Int,
             srcCol: String, dstCol: String): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1 && rounds <= 50, "rounds must be in [1, 50]")
     val spark = edges.sparkSession
     import spark.implicits._
-    // RDD peel loop (r14, the [[hits]] rewrite): each peel references
-    // the surviving edge set FOUR times (both halves of the degree
-    // count + both semi-join sides) — in DataFrame form that multiplied
-    // the planned subtree ~4× per round and needed an eager
-    // localCheckpoint per round of pure Catalyst floor (the r8 property
-    // replay at rounds=6 stalled the analyzer for minutes). On pair
-    // RDDs with one pinned partitioner the degree count and the a-side
-    // semi-join are co-partitioned narrow ops; per round the only
-    // shuffles are the degree reduceByKey fan-in and the b-side re-key,
-    // with zero per-round planning. Integer degree counts ⇒
-    // value-identical (random-graph replay spec pins it).
-    // one cheap count sizes the loop's partitioner to the graph
-    val part = graphPartitioner(spark, edges.count())
-    var cur = edges.select(col(srcCol).cast("string").as("x"),
+    val part = Rounds.partitioner(spark.sparkContext, edges.count())
+    val und = edges.select(col(srcCol).cast("string").as("x"),
         col(dstCol).cast("string").as("y"))
       .filter(col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("a"),
         greatest(col("x"), col("y")).as("b"))
       .distinct().as[(String, String)].rdd
-      .partitionBy(part).persist()
-    try {
-      // early convergence exit (r15): peeling only REMOVES edges, so an
-      // unchanged edge count means no node lost degree ⇒ every later
-      // round is the identity — skipping them is value-identical to the
-      // oracle's fixed-round replay (which replays identities too). The
-      // count is the same action that already materializes each round.
-      var curCount = cur.count()
-      var round = 0
-      var converged = false
-      while (round < rounds && !converged) {
-        val keep = cur
-          .flatMap { case (a, b) => Iterator((a, 1L), (b, 1L)) }
-          .reduceByKey(part, _ + _).filter(_._2 >= k)
-        val next = cur.join(keep).mapValues(_._1)        // a-side, narrow
-          .map { case (a, b) => (b, a) }.partitionBy(part)
-          .join(keep).map { case (b, (a, _)) => (a, b) } // b-side
-          .partitionBy(part).persist()
-        val nextCount = next.count()
-        converged = nextCount == curCount
-        curCount = nextCount
-        cur.unpersist(false)
-        cur = next
-        round += 1
-      }
-      val out = graft.ext.LlmOps.persistTracked(
-        cur.flatMap { case (a, b) => Iterator((a, 1L), (b, 1L)) }
-          .reduceByKey(part, _ + _)
-          .toDF("id", "degree"))
-      out.count()
-      out
-    } finally cur.unpersist(false)
+      .partitionBy(part)
+    Rounds.until(und, rounds)(_.count()) { cur =>
+      val keep = cur
+        .flatMap { case (a, b) => Iterator((a, 1L), (b, 1L)) }
+        .reduceByKey(part, _ + _).filter(_._2 >= k)
+      cur.join(keep).mapValues(_._1)                   // a-side, narrow
+        .map { case (a, b) => (b, a) }.partitionBy(part)
+        .join(keep).map { case (b, (a, _)) => (a, b) } // b-side
+        .partitionBy(part)
+    }.handOff(_.flatMap { case (a, b) => Iterator((a, 1L), (b, 1L)) }
+      .reduceByKey(part, _ + _)
+      .toDF("id", "degree"))
   }
 
   def graphToTable(ctx: GraphCtx, what: String): DataFrame = what match {

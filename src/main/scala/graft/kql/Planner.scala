@@ -1996,7 +1996,8 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
 
   private def planAgg(e: Expr, df: DataFrame): Column = e match {
     case App(fn, args) =>
-      def a(i: Int) = toCol(args(i), df)
+      def arg(i: Int) = argAt(fn, args, i)
+      def a(i: Int) = toCol(arg(i), df)
       fn match {
         case "count" if args.isEmpty => count(lit(1))
         case "count" => count(a(0))
@@ -2010,19 +2011,19 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
         case "max" => max(a(0))
         case "maxif" => max(when(a(1), a(0)))
         case "dcount" =>
-          val rsd = if (args.length > 1) accuracyToRsd(args(1)) else 0.02
+          val rsd = if (args.length > 1) accuracyToRsd(arg(1)) else 0.02
           approx_count_distinct(a(0), rsd)
         case "dcountif" => approx_count_distinct(when(a(1), a(0)), 0.02)
         case "count_distinct" => count_distinct(a(0))
         case "count_distinctif" => count_distinct(when(a(1), a(0)))
         case "percentile" =>
-          call_function("percentile", a(0), percentAsFraction(args(1), df))
+          call_function("percentile", a(0), percentAsFraction(arg(1), df))
         case "percentile_approx" =>
-          percentile_approx(a(0), percentAsFraction(args(1), df), lit(10000))
+          percentile_approx(a(0), percentAsFraction(arg(1), df), lit(10000))
         case "take_any" | "any" => first(a(0), ignoreNulls = true)
         case "take_anyif" | "anyif" => first(when(a(1), a(0)), ignoreNulls = true)
         case "make_list" if args.length == 1 => collect_list(a(0))
-        case "make_list" => slice(collect_list(a(0)), 1, staticValue(args(1), "").asInstanceOf[Long].toInt)
+        case "make_list" => slice(collect_list(a(0)), 1, staticValue(arg(1), "").asInstanceOf[Long].toInt)
         case "make_set" => array_sort(collect_set(a(0)))
         case "make_list_if" => collect_list(when(a(1), a(0)))
         case "make_set_if" => array_sort(collect_set(when(a(1), a(0))))
@@ -2040,7 +2041,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
           // collect_list drops nulls; a struct wrapper smuggles them through
           transform(collect_list(struct(a(0).as("v"))), s => s.getField("v"))
         case "percentilew" =>
-          Functions.percentileW(a(0), a(1), percentAsFraction(args(2), df))
+          Functions.percentileW(a(0), a(1), percentAsFraction(arg(2), df))
         case "binary_all_and" => bit_and(a(0))
         case "binary_all_or" => bit_or(a(0))
         case "binary_all_xor" => bit_xor(a(0))
@@ -2508,16 +2509,16 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
         case "prev" | "next" =>
           val n = if (args.length > 1) staticValue(args(1), "").asInstanceOf[Long].toInt else 1
           val dflt = if (args.length > 2) Some(lit(staticValue(args(2), ""))) else None
-          val a0 = toCol(args.head, d)
+          val a0 = toCol(argAt(fn, args, 0), d)
           calls += (if (fn == "prev") GlobalWindow.Lag(out, a0, n, dflt)
                     else GlobalWindow.Lead(out, a0, n, dflt))
-        case "row_cumsum" => calls += GlobalWindow.CumSum(out, toCol(args.head, d))
+        case "row_cumsum" => calls += GlobalWindow.CumSum(out, toCol(argAt(fn, args, 0), d))
         case "row_rank_min" => calls += GlobalWindow.RankMin(out)
         case "row_rank_dense" => calls += GlobalWindow.DenseRank(out)
         case "percent_rank" => calls += GlobalWindow.PercentRank(out)
         case "ntile" =>
           calls += GlobalWindow.NTile(out,
-            staticValue(args.head, "").asInstanceOf[Long].toInt)
+            staticValue(argAt(fn, args, 0), "").asInstanceOf[Long].toInt)
         case other => throw PlanError(s"unsupported window function '$other'")
       }
       Col(out)
@@ -2683,8 +2684,14 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
     case other => throw PlanError(s"$what requires a string literal, got $other")
   }
 
+  /** Argument `i` (0-based) of a call to `fn`; a call that is short of
+    * it is a PlanError naming the function and the 1-based position. */
+  private def argAt(fn: String, args: List[Expr], i: Int): Expr =
+    args.lift(i).getOrElse(throw PlanError(s"function '$fn' is missing argument ${i + 1}"))
+
   private def planApp(fn: String, args: List[Expr], df: DataFrame, agg: Boolean = false): Column = {
-    def a(i: Int): Column = toCol(args(i), df, agg)
+    def arg(i: Int): Expr = argAt(fn, args, i)
+    def a(i: Int): Column = toCol(arg(i), df, agg)
     fn match {
       // ---------------------------------------------------- conditionals
       case "iff" | "iif" => when(a(0), a(1)).otherwise(a(2))
@@ -2701,15 +2708,15 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
         }
       case "case" =>
         val pairs = args.dropRight(1).grouped(2).toList
-        val dflt = toCol(args.last, df, agg)
+        val dflt = toCol(args.lastOption.getOrElse(arg(0)), df, agg)
         pairs.foldRight(dflt) { case (List(p, v), acc) =>
           when(toCol(p, df, agg), toCol(v, df, agg)).otherwise(acc)
         }
       // ------------------------------------------------------------- bin
-      case "bin" | "floor" if args.length == 2 => planBin(args(0), args(1), df)
+      case "bin" | "floor" if args.length == 2 => planBin(arg(0), arg(1), df)
       case "bin_at" if args.length == 3 =>
         // bin_at(x, size, fixedPoint): bins aligned to fixedPoint
-        (typeOf(df, a(0)), args(1), args(2)) match {
+        (typeOf(df, a(0)), arg(1), arg(2)) match {
           case (TimestampType, Lit(Timespan(us)), Lit(fp: java.sql.Timestamp)) =>
             val fpUs = fp.getTime * 1000
             timestamp_micros(floor((unix_micros(a(0)) - fpUs) / lit(us.toDouble)).cast("long") * us + fpUs)
@@ -2728,12 +2735,12 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
           case _ => throw PlanError("bin_at supports datetime or numeric axes")
         }
       // -------------------------------------------------------- datetime
-      case "ago" => args.head match {
+      case "ago" => arg(0) match {
         case Lit(Timespan(us)) => timestamp_micros(unix_micros(current_timestamp()) - us)
         case _ => throw PlanError("ago() needs a timespan literal")
       }
       case "datetime_add" =>
-        val part = litString(args(0), "datetime_add part").toLowerCase
+        val part = litString(arg(0), "datetime_add part").toLowerCase
         val amount = a(1); val ts = a(2)
         part match {
           case "year" => add_months(ts, amount * 12).cast("timestamp")
@@ -2748,7 +2755,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
         }
       case "datetime_diff" =>
         // boundary-crossing count (KQL semantics): diff of truncated values
-        val part = litString(args(0), "datetime_diff part").toLowerCase
+        val part = litString(arg(0), "datetime_diff part").toLowerCase
         val d1 = a(1); val d2 = a(2)
         part match {
           case "year" => (year(d1) - year(d2)).cast("long")
@@ -2762,7 +2769,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
           case other => throw PlanError(s"datetime_diff part '$other'")
         }
       case "format_datetime" =>
-        date_format(a(0), translateDatePattern(litString(args(1), "format_datetime pattern")))
+        date_format(a(0), translateDatePattern(litString(arg(1), "format_datetime pattern")))
       case "has_any" => args.tail.map(t => hasTerm(a(0), t, df, cs = false)).reduce(_ || _)
       case "has_all" => args.tail.map(t => hasTerm(a(0), t, df, cs = false)).reduce(_ && _)
       // sequential pairwise replacement over lookup/rewrite arrays
@@ -2793,8 +2800,8 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
           throw PlanError(
             "bin_auto(x) requires 'let query_bin_auto_size = <size>;'"))
         letScalars.get("query_bin_auto_minimum") match {
-          case Some(minE) => planApp("bin_at", List(args.head, sizeE, minE), df, agg)
-          case None => planApp("bin", List(args.head, sizeE), df, agg)
+          case Some(minE) => planApp("bin_at", List(arg(0), sizeE, minE), df, agg)
+          case None => planApp("bin", List(arg(0), sizeE), df, agg)
         }
       // each arg is a codepoint or a codepoint array — needs arg types
       case "unicode_codepoints_to_string" =>
@@ -2812,7 +2819,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
           lit(null).cast("string"))
           .otherwise(concat_ws("", parts: _*))
       case "datetime_part" =>
-        (litString(args(0), "datetime_part part").toLowerCase match {
+        (litString(arg(0), "datetime_part part").toLowerCase match {
           case "year" => year(a(1))
           case "quarter" => quarter(a(1))
           case "month" => month(a(1))
@@ -2830,7 +2837,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
         // timespan is µs (SURVEY §1.2); supported patterns cover the KQL
         // doc examples: d, dd, h/hh, m/mm, s/ss (longer runs zero-pad)
         val us = a(0).cast("long")
-        val fmt = litString(args(1), "format_timespan pattern")
+        val fmt = litString(arg(1), "format_timespan pattern")
         val parts = "(d+|h+|m+|s+)".r
         val pieces = scala.collection.mutable.ListBuffer[Column]()
         var rest = fmt
@@ -2855,7 +2862,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
           }
         }
         concat(pieces.toSeq: _*)
-      case "totimespan" => args.head match {
+      case "totimespan" => arg(0) match {
         case Lit(s: String) => lit(Literals.parseTimespan(s).micros)
         case Lit(Timespan(us)) => lit(us)
         case _ => a(0).cast("long")
@@ -2873,7 +2880,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
         if (args.length > 2) src.substr(start, a(2).cast("int"))
         else src.substr(start, lit(Int.MaxValue))
       case "split" =>
-        val delim = Functions.rxQuote(litString(args(1), "split delimiter"))
+        val delim = Functions.rxQuote(litString(arg(1), "split delimiter"))
         val arr = split(a(0), delim, -1)
         if (args.length > 2) element_at(arr, a(2).cast("int") + 1)
         else arr
@@ -2883,7 +2890,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
       // recovered from the split-part lengths (literal lookup required
       // for the regex split)
       case "indexof" if args.length > 2 =>
-        val lookup = litString(args(1), "indexof lookup (literal for 3+ args)")
+        val lookup = litString(arg(1), "indexof lookup (literal for 3+ args)")
         val start = a(2).cast("int")
         val len =
           if (args.length > 3) when(a(3).cast("int") < 0, lit(Int.MaxValue))
@@ -2898,40 +2905,40 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
         when(start < 0, lit(-1L))
           .when(found, (prefix + start.cast("long")).cast("long"))
           .otherwise(lit(-1L))
-      case "trim" => regexpTrim(a(1), litString(args(0), "trim regex"), both = true, start = false)
-      case "trim_start" => regexpTrim(a(1), litString(args(0), "trim regex"), both = false, start = true)
-      case "trim_end" => regexpTrim(a(1), litString(args(0), "trim regex"), both = false, start = false)
+      case "trim" => regexpTrim(a(1), litString(arg(0), "trim regex"), both = true, start = false)
+      case "trim_start" => regexpTrim(a(1), litString(arg(0), "trim regex"), both = false, start = true)
+      case "trim_end" => regexpTrim(a(1), litString(arg(0), "trim regex"), both = false, start = false)
       case "replace_string" => call_function("replace", a(0), a(1), a(2))
       case "translate" =>
         // KQL arg order is (from, to, source); Spark's is (src, from, to)
-        translate(a(2), litString(args(0), "translate from"),
-          litString(args(1), "translate to"))
+        translate(a(2), litString(arg(0), "translate from"),
+          litString(arg(1), "translate to"))
       case "extract_json" | "extractjson" =>
         // extract_json("$.path", doc) — JSONPath passes straight through
-        get_json_object(a(1), litString(args(0), "extract_json path"))
-      case "replace_regex" => regexp_replace(a(0), litString(args(1), "replace_regex"), litString(args(2), "replacement"))
+        get_json_object(a(1), litString(arg(0), "extract_json path"))
+      case "replace_regex" => regexp_replace(a(0), litString(arg(1), "replace_regex"), litString(arg(2), "replacement"))
       case "extract" =>
         // extract(regex, captureGroup, source[, typeof])
-        val rx = litString(args(0), "extract regex")
-        val grp = args(1) match { case Lit(l: Long) => l.toInt; case _ => 1 }
+        val rx = litString(arg(0), "extract regex")
+        val grp = arg(1) match { case Lit(l: Long) => l.toInt; case _ => 1 }
         regexp_extract(a(2), rx, grp)
       case "extract_all" =>
-        regexp_extract_all(a(1), lit(litString(args(0), "extract_all regex")), lit(1))
+        regexp_extract_all(a(1), lit(litString(arg(0), "extract_all regex")), lit(1))
       case "countof" =>
-        val needle = args(1) match {
+        val needle = arg(1) match {
           case Lit(s: String) =>
-            val kind = if (args.length > 2) litString(args(2), "countof kind") else "normal"
+            val kind = if (args.length > 2) litString(arg(2), "countof kind") else "normal"
             if (kind == "regex") s else Functions.rxQuote(s)
           case _ => throw PlanError("countof needs literal needle")
         }
         regexp_count(a(0), lit(needle)).cast("long")
-      case "pad" | "pad_left" => lpad(a(0), staticValue(args(1), "").asInstanceOf[Long].toInt,
-        if (args.length > 2) litString(args(2), "pad char") else " ")
-      case "pad_right" => rpad(a(0), staticValue(args(1), "").asInstanceOf[Long].toInt,
-        if (args.length > 2) litString(args(2), "pad char") else " ")
+      case "pad" | "pad_left" => lpad(a(0), staticValue(arg(1), "").asInstanceOf[Long].toInt,
+        if (args.length > 2) litString(arg(2), "pad char") else " ")
+      case "pad_right" => rpad(a(0), staticValue(arg(1), "").asInstanceOf[Long].toInt,
+        if (args.length > 2) litString(arg(2), "pad char") else " ")
       // ------------------------------------------------------------ math
       case "round" =>
-        if (args.length > 1) round(a(0), staticValue(args(1), "").asInstanceOf[Long].toInt)
+        if (args.length > 1) round(a(0), staticValue(arg(1), "").asInstanceOf[Long].toInt)
         else round(a(0))
       case "rand" => if (args.isEmpty) rand(42) else (rand(42) * a(0).cast("double")).cast("long").cast("double")
       // --------------------------------------------------------- dynamic
@@ -2951,27 +2958,29 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
       // --------------------------------------------------------- windows
       case "row_number" =>
         val base = row_number().over(windowSpec(df)).cast("long")
-        if (args.nonEmpty) base + toCol(args.head, df) - 1 else base
+        if (args.nonEmpty) base + toCol(arg(0), df) - 1 else base
       case "prev" =>
-        val n = if (args.length > 1) staticValue(args(1), "").asInstanceOf[Long].toInt else 1
-        if (args.length > 2) lag(a(0), n, staticValue(args(2), "")).over(windowSpec(df))
+        val n = if (args.length > 1) staticValue(arg(1), "").asInstanceOf[Long].toInt else 1
+        if (args.length > 2) lag(a(0), n, staticValue(arg(2), "")).over(windowSpec(df))
         else lag(a(0), n).over(windowSpec(df))
       case "next" =>
-        val n = if (args.length > 1) staticValue(args(1), "").asInstanceOf[Long].toInt else 1
-        if (args.length > 2) lead(a(0), n, staticValue(args(2), "")).over(windowSpec(df))
+        val n = if (args.length > 1) staticValue(arg(1), "").asInstanceOf[Long].toInt else 1
+        if (args.length > 2) lead(a(0), n, staticValue(arg(2), "")).over(windowSpec(df))
         else lead(a(0), n).over(windowSpec(df))
       case "row_cumsum" =>
         sum(a(0)).over(windowSpec(df).rowsBetween(Window.unboundedPreceding, Window.currentRow))
       case "row_rank_min" => rank().over(windowSpec(df)).cast("long")
       case "row_rank_dense" => dense_rank().over(windowSpec(df)).cast("long")
       case "ntile" =>
-        val n = staticValue(args.head, "").asInstanceOf[Long].toInt
+        val n = staticValue(arg(0), "").asInstanceOf[Long].toInt
         ntile(n).over(windowSpec(df)).cast("long")
       case "percent_rank" => percent_rank().over(windowSpec(df))
       // --------------------------------------------------------- default
       case other =>
         Functions.registry.get(other) match {
-          case Some(builder) => builder(args.map(toCol(_, df, agg)))
+          case Some(impl) =>
+            impl.applyOrElse(args.map(toCol(_, df, agg)), (_: List[Column]) =>
+              throw PlanError(s"function '$other' does not take ${args.length} argument(s)"))
           case None => Suggest.unsupported.get(other) match {
             // declared-out-of-scope KQL functions refuse with the
             // decision and the shipped alternative, not a typo hint

@@ -104,6 +104,15 @@ class GraftSessionSpec extends AnyFunSuite {
       s"use StreamingOps.memoryStream, toMemory and drive instead: $found")
   }
 
+  test("Rounds.partitioner is the one HashPartitioner under src/main") {
+    val calls = sources("src/main").flatMap { p =>
+      "new\\s+(org\\.apache\\.spark\\.)?HashPartitioner\\b".r
+        .findAllIn(java.nio.file.Files.readString(p)).map(_ => p.getFileName.toString)
+    }
+    assert(calls == Seq("Rounds.scala"),
+      s"size an iterative loop's partitioner with Rounds.partitioner: $calls")
+  }
+
   test("only GraftSession makes directories under java.io.tmpdir") {
     val found = offenders("src/main", "java\\.io\\.tmpdir|createTempDirectory".r,
       Set("GraftSession.scala"))

@@ -727,6 +727,13 @@ class LlmOpsSpec extends AnyFunSuite {
     // but after the caller's action, one releaseCaches() sweep must
     // return the session to its pre-op persisted-block state (no
     // harness-dependence on Bench/Verify's blunt clearCache).
+    import graft.kql.GraphOps
+    // a small weighted digraph with triangles and 2-cores, and a labeled
+    // corpus for the classifier
+    val edges = (1 to 40).flatMap { i =>
+      Seq((i.toString, (i % 40 + 1).toString, i % 5L), (i.toString, ((i * 7) % 40 + 1).toString, 1L))
+    }.toDF("s", "d", "w")
+    val labeled = docs.withColumn("label", (col("doc_id") % 2).cast("int"))
     val sc = spark.sparkContext
     val baseline = sc.getPersistentRDDs.keySet
     val ops: Seq[(String, () => Long)] = Seq(
@@ -734,7 +741,20 @@ class LlmOpsSpec extends AnyFunSuite {
       "minhashPairs" -> (() => LlmOps.nearDupPairsMinhash(docs, 0.8).count()),
       "jaccardGroups" -> (() => LlmOps.nearDupGroups(docs, 0.8).count()),
       "cosineGroups" -> (() => LlmOps.cosineGroups(embs, 0.3).count()),
-      "semDedup" -> (() => LlmOps.semDedup(embs, 0.3, nClusters = 4).count()))
+      "semDedup" -> (() => LlmOps.semDedup(embs, 0.3, nClusters = 4).count()),
+      "pageRank" -> (() => GraphOps.pageRank(edges, 3, "s", "d").count()),
+      "hits" -> (() => GraphOps.hits(edges, 3, "s", "d").count()),
+      "shortestPathsWeighted" -> (() =>
+        GraphOps.shortestPathsWeighted(edges, "1", 3, "s", "d", "w").count()),
+      "labelPropagation" -> (() => GraphOps.labelPropagation(edges, 3, "s", "d").count()),
+      "kCore" -> (() => GraphOps.kCore(edges, 2, 3, "s", "d").count()),
+      "triangleCount" -> (() => GraphOps.triangleCount(edges, "s", "d").count()),
+      "components" -> (() => GraphOps.components(edges, "s", "d").count()),
+      "dbscanCosine" -> (() => LlmOps.dbscanCosine(embs, 0.3, 3).count()),
+      "kmeansFit" -> (() => LlmOps.kmeansFit(embs, 4, iters = 2).count()),
+      "logRegScore" -> (() => LlmOps.logRegScore(labeled, "label", dim = 64, iters = 3).count()),
+      "bpeTrain" -> (() => LlmOps.bpeTrain(docs, rounds = 2).count()),
+      "bpeTokenize" -> (() => LlmOps.bpeTokenize(docs, rounds = 2).count()))
     ops.foreach { case (name, op) =>
       op()
       LlmOps.releaseCaches()

@@ -7,7 +7,8 @@ import graft.kql.{Catalog, Kql}
 /** Replays golden digests of the rows that run under
   * [[GraftSession.pinned]], of the rows that stage files in
   * [[GraftSession.scratch]], and of the `evaluate` plugins no other spec
-  * reaches, and of the nine media-header parser rows: schema, row count
+  * reaches, of the nine media-header parser rows and of the 13 rows
+  * that run graft's iterative operators: schema, row count
   * and a SHA-256 over the sorted row strings at sf0.001. Each set was
   * recorded before its code was refactored; the goldens change only when
   * the DuckDB oracle has certified new values, never to make a refactor
@@ -27,6 +28,7 @@ class PinnedRowGoldensSpec extends AnyFunSuite {
   private val scratchGoldens = load("/goldens/scratch_rows_sf0.001.tsv")
   private val pluginGoldens = load("/goldens/plugin_rows_sf0.001.tsv")
   private val mediaGoldens = load("/goldens/media_rows_sf0.001.tsv")
+  private val loopGoldens = load("/goldens/loop_rows_sf0.001.tsv")
   private lazy val catalog = Catalog(spark, TestSpark.sfDir)
 
   import PinnedRowGoldensSpec.digest
@@ -37,6 +39,10 @@ class PinnedRowGoldensSpec extends AnyFunSuite {
 
   test("goldens cover the 9 media-header parser rows") {
     assert(mediaGoldens.map(_(0)).distinct.size == 9)
+  }
+
+  test("goldens cover the 13 loop rows") {
+    assert(loopGoldens.map(_(0)).distinct.size == 13)
   }
 
   (goldens ++ scratchGoldens).foreach { case Array(name, n, hash, schema) =>
@@ -51,9 +57,9 @@ class PinnedRowGoldensSpec extends AnyFunSuite {
   }
 
   // a plugin row with a fifth column is that KQL query over the fixture
-  // tables; one without (and every media row) is the inventory row of
+  // tables; one without (and every media and loop row) is the inventory row of
   // that name
-  (pluginGoldens ++ mediaGoldens).foreach { g =>
+  (pluginGoldens ++ mediaGoldens ++ loopGoldens).foreach { g =>
     test(s"${g(0)} matches its golden digest") {
       if (g(0) == "bm25_indexed")
         graft.ext.LlmOps.buildBm25Index(catalog.table("documents"), "graft_golden_bm25")

@@ -972,6 +972,20 @@ class PlannerSpec extends AnyFunSuite {
     e.getMessage
   }
 
+  test("a call with the wrong number of arguments is a plan error naming the function") {
+    Seq(
+      "part | extend x = strlen(p_name, p_name)" -> "function 'strlen' does not take 2 argument(s)",
+      "part | extend x = tolower()" -> "function 'tolower' does not take 0 argument(s)",
+      "part | summarize sumif(p_size)" -> "function 'sumif' is missing argument 2",
+      "part | extend x = substring(p_name)" -> "function 'substring' is missing argument 2",
+      "print x = case()" -> "function 'case' is missing argument 1",
+      "part | serialize | extend y = prev()" -> "function 'prev' is missing argument 1"
+    ).foreach { case (q, want) =>
+      val m = planError(q)
+      assert(m == want, q)
+    }
+  }
+
   test("evaluate preview through Kql.run points to Kql.runMulti") {
     val m = planError("datatable(x:long) [1, 2, 3] | evaluate preview(2)")
     assert(m.contains("Kql.runMulti"), m)
