@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -751,6 +751,97 @@ object LlmOps {
   private def normD(a: Column): Column =
     sqrt(aggregate(a, lit(0.0d), (acc, x) => acc + x.cast("double") * x.cast("double")))
 
+  /** The vector-search kernel behind every top-k similarity operator:
+    * an operator supplies its candidate source (a scan, an LSH bucket,
+    * probed IVF cells, an ADC / SQ8 / popcount cut) and takes the query
+    * normalization, the exact score and the k-cuts from here. */
+  private object Vectors {
+    /** Guarded query norm: a zero query divides by 1e-300 (the guard
+      * bestCell applies at assignment time), so it probes
+      * deterministically instead of turning every score into NaN. */
+    def norm(q: Array[Double]): Double = math.sqrt(q.map(x => x * x).sum).max(1e-300)
+    def unit(q: Array[Double]): Array[Double] = { val n = norm(q); q.map(_ / n) }
+
+    /** The raw embedding of `queryId` (one pushdown-filtered scan). */
+    def fetch(emb: DataFrame, queryId: Long, idCol: String, vecCol: String): Array[Double] =
+      emb.filter(col(idCol) === queryId)
+        .select(col(vecCol).cast("array<double>")).head().getSeq[Double](0).toArray
+
+    /** Exact cosine rounded to 4 places; `qNorm` is ‖q‖ as a column. */
+    def cosine(v: Column, q: Column, qNorm: Column): Column =
+      round(dotD(v, q) / (normD(v) * qNorm), 4)
+
+    /** Exact cosine over precomputed norms through the codegen
+      * DotProductD kernel (pair-shaped inputs), and its integer 1e-4
+      * quantization — the cross-engine-stable ranking key. */
+    def cosineD(spark: SparkSession, a: Column, na: Column, b: Column,
+                nb: Column): Column =
+      graft.expr.DotProductD(spark, a, b) / (na * nb)
+    def quantized(c: Column): Column = round(c * 10000).cast("long")
+
+    /** (score desc, id asc) top-k: TakeOrderedAndProject, no global sort. */
+    def topK(df: DataFrame, score: String, idCol: String, k: Int): DataFrame =
+      df.orderBy(col(score).desc, col(idCol).asc).limit(k)
+
+    /** Exact re-rank of a candidate frame: the top k by exact cosine. */
+    def rerank(cand: DataFrame, idCol: String, v: Column, q: Column, k: Int): DataFrame =
+      topK(cand.select(col(idCol), cosine(v, q, normD(q)).as("cos")), "cos", idCol, k)
+
+    /** The approximate candidate cut: the top k·refine rows by `approx`
+      * (ADC and SQ8 scores descending, popcount distance ascending). */
+    def candidates(df: DataFrame, approx: Column, idCol: String, k: Int,
+                   refine: Int): DataFrame =
+      df.orderBy(approx, col(idCol).asc).limit(math.max(k * refine, k))
+
+    /** ADC score of PQ codes against the unit query: per subspace, a
+      * driver-built m×ksub table of q_s·c partial dots turns scoring into
+      * m lookups + adds, run by the codegen AdcScoreD expression. */
+    def adc(spark: SparkSession, codes: Column, qVec: Array[Double],
+            codebooks: Array[Array[Array[Double]]]): Column = {
+      val table = codebooks.zipWithIndex.map { case (cb, s) =>
+        cb.map { c =>
+          var d = 0.0; var j = 0
+          while (j < c.length) { d += qVec(s * c.length + j) * c(j); j += 1 }
+          d
+        }
+      }
+      graft.expr.AdcScoreD(spark, codes, table)
+    }
+
+    /** The hard-negative step over anchor×candidate pairs (anchor_id,
+      * __av, __an and idCol, __v, __n): exact quantized cosine,
+      * near-duplicates above hiCos dropped, then the two-phase k-cut
+      * [[hardNegatives]] describes — per (anchor, input partition), then
+      * per anchor over the <= k·P survivors. */
+    def anchorTopK(pairs: DataFrame, k: Int, hiCos: Double, idCol: String): DataFrame = {
+      val byScore = Seq(col("cos_u").desc, col(idCol))
+      pairs
+        .withColumn("__cos", cosineD(pairs.sparkSession,
+          col("__av"), col("__an"), col("__v"), col("__n")))
+        .withColumn("cos_u", quantized(col("__cos")))
+        .filter(col("cos_u") <= math.round(hiCos * 10000))
+        .withColumn("__p", spark_partition_id())
+        .withColumn("__lr", row_number().over(
+          Window.partitionBy(col("anchor_id"), col("__p")).orderBy(byScore: _*)))
+        .filter(col("__lr") <= k)
+        .drop("__lr", "__p")
+        .withColumn("rank", row_number().over(
+          Window.partitionBy(col("anchor_id")).orderBy(byScore: _*)).cast("long"))
+        .filter(col("rank") <= k)
+        .select(col("anchor_id"), col("rank"), col(idCol).as("neg_id"), col("cos_u"))
+    }
+
+    /** `df`'s `keep` columns plus the embedding as `__v` (double) and its
+      * norm `__n`. */
+    def withNorm(df: DataFrame, vecCol: String, keep: Column*): DataFrame =
+      df.select(keep :+ transform(col(vecCol), _.cast("double")).as("__v"): _*)
+        .withColumn("__n", normD(col("__v")))
+
+    /** The anchor comb of the id-sampled hard-negative forms. */
+    def anchorComb(idCol: String, every: Int, max: Long): Column =
+      pmod(col(idCol), lit(every.toLong)) === 0 && col(idCol) <= max
+  }
+
   /** Exact cosine of EVERY vector against the embedding of `queryId` —
     * one broadcast of the 1-row query side, one embarrassingly parallel
     * projection, no order, no limit. The building block for knnCosine
@@ -762,9 +853,7 @@ object LlmOps {
     val q = emb.filter(col(idCol) === queryId)
       .select(col(vecCol).as("q_vec"), normD(col(vecCol)).as("q_nrm"))
     spread(emb).crossJoin(broadcast(q))
-      .select(col(idCol),
-        round(dotD(col(vecCol), col("q_vec")) /
-          (normD(col(vecCol)) * col("q_nrm")), 4).as("cos"))
+      .select(col(idCol), Vectors.cosine(col(vecCol), col("q_vec"), col("q_nrm")).as("cos"))
   }
 
   /** Brute-force cosine top-k against the embedding of `queryId`.
@@ -772,8 +861,7 @@ object LlmOps {
     * TakeOrderedAndProject (distributed top-k, no global sort). */
   def knnCosine(emb: DataFrame, queryId: Long, k: Int,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    cosineAll(emb, queryId, idCol, vecCol)
-      .orderBy(col("cos").desc, col(idCol).asc).limit(k)
+    Vectors.topK(cosineAll(emb, queryId, idCol, vecCol), "cos", idCol, k)
 
   /** ANN via random-hyperplane LSH: bucket = sign-bit signature of
     * `planes` fixed pseudo-random hyperplanes (seeded, data-independent).
@@ -793,12 +881,8 @@ object LlmOps {
     val bucketed = spread(emb).withColumn("bucket", bucketOf(col(vecCol)))
     val q = bucketed.filter(col(idCol) === queryId)
       .select(col(vecCol).as("q_vec"), col("bucket"))
-    bucketed.join(broadcast(q), "bucket")
-      .select(col(idCol),
-        round(dotD(col(vecCol), col("q_vec")) /
-          (normD(col(vecCol)) * normD(col("q_vec"))), 4).as("cos"))
-      .orderBy(col("cos").desc, col(idCol).asc)
-      .limit(k)
+    Vectors.rerank(bucketed.join(broadcast(q), "bucket"), idCol, col(vecCol),
+      col("q_vec"), k)
   }
 
   /** ANN via IVF (inverted-file index): k-means partitions the corpus
@@ -981,15 +1065,6 @@ object LlmOps {
     }.toDF(idCol, "cell", "dist2"))(data.unpersist(false))
   }
 
-  /** Probe cells for a query vector: driver-side math against the
-    * nLists centroids (1-based, matching [[cellOf]]). */
-  private def probeCells(centroids: Array[Array[Double]], qVec: Array[Double],
-                         nProbe: Int): Seq[Int] =
-    centroids.zipWithIndex.map { case (c, i) =>
-      val score = c.zip(qVec).map { case (a, b) => a * b }.sum - c.map(x => x * x).sum / 2
-      (i + 1, score)
-    }.sortBy(-_._2).take(nProbe).map(_._1).toSeq
-
   /** Persist the IVF index: the corpus written `partitionBy(cell)`, so a
     * probe at read time is PARTITION-PRUNED I/O — only nProbe/nLists of
     * the index files are touched (the deployed-index layout the
@@ -1009,19 +1084,24 @@ object LlmOps {
     centroids
   }
 
-  /** Probe-cell selection for a deployed [[buildIvfIndex]] index — which
-    * nProbe cells a raw query vector reads. Public because a probe
-    * service holds only the centroid metadata, and the declared pruning
-    * contract (`llm_ann_ivf_indexed`) recomputes the scanned-row count
-    * from the same cells the search touches. */
+  /** Probe-cell selection — which nProbe cells a raw query vector reads:
+    * driver-side math against the nLists centroids, ranked by the score
+    * [[cellOf]] assigns by (x·c − |c|²/2 on the unit query; cells
+    * 1-based). The one probe rule of every IVF search. Public because a
+    * probe service holds only the centroid metadata, and the declared
+    * pruning contract (`llm_ann_ivf_indexed`) recomputes the scanned-row
+    * count from the same cells the search touches. */
   def ivfProbeCells(centroids: Array[Array[Double]], qRaw: Array[Double],
                     nProbe: Int): Seq[Int] = {
-    // .max(1e-300): a zero query vector probes deterministically (the
-    // same guard bestCell applies at assignment time) instead of
-    // poisoning every score with NaN
-    val qn = math.sqrt(qRaw.map(x => x * x).sum).max(1e-300)
-    probeCells(centroids, qRaw.map(_ / qn), nProbe)
+    val qVec = Vectors.unit(qRaw)
+    centroids.zipWithIndex.map { case (c, i) =>
+      val score = c.zip(qVec).map { case (a, b) => a * b }.sum - c.map(x => x * x).sum / 2
+      (i + 1, score)
+    }.sortBy(-_._2).take(nProbe).map(_._1).toSeq
   }
+  /** [[ivfProbeCells]] per row: the probed cells of each anchor vector. */
+  private def probeCellsOf(centroids: Array[Array[Double]], nProbe: Int) =
+    udf { v: Seq[Double] => ivfProbeCells(centroids, v.toArray, nProbe) }
 
   /** Search a persisted IVF index: filter on the partition column prunes
     * to the probed cells' files, then cosine + TakeOrderedAndProject. */
@@ -1029,16 +1109,10 @@ object LlmOps {
                           centroids: Array[Array[Double]], qRaw: Array[Double],
                           k: Int, nProbe: Int = 2, idCol: String = "vec_id",
                           vecCol: String = "embedding"): DataFrame = {
-    val qn = math.sqrt(qRaw.map(x => x * x).sum)
-    val qVec = qRaw.map(_ / qn)
-    val probes = probeCells(centroids, qVec, nProbe)
-    val qLit = array(qVec.map(lit).toSeq: _*)
-    spark.read.parquet(path)
-      .filter(col("__cell").isin(probes: _*))
-      .select(col(idCol),
-        round(dotD(col(vecCol), qLit) / (normD(col(vecCol)) * normD(qLit)), 4).as("cos"))
-      .orderBy(col("cos").desc, col(idCol).asc)
-      .limit(k)
+    val probes = ivfProbeCells(centroids, qRaw, nProbe)
+    val qLit = array(Vectors.unit(qRaw).map(lit).toSeq: _*)
+    Vectors.rerank(spark.read.parquet(path).filter(col("__cell").isin(probes: _*)),
+      idCol, col(vecCol), qLit, k)
   }
 
   def annCosineIvf(emb: DataFrame, queryId: Long, k: Int, nLists: Int = 16,
@@ -1049,17 +1123,11 @@ object LlmOps {
       .withColumn("__cell", cellOf(centroids)(col(vecCol).cast("array<double>")))
     // query vector: one pushdown-filtered scan of the raw table; probe
     // cells are driver-side math against the nLists centroids
-    val raw = emb.filter(col(idCol) === queryId)
-      .select(col(vecCol).cast("array<double>")).head().getSeq[Double](0)
-    val qn = math.sqrt(raw.map(x => x * x).sum)
-    val qVec = raw.map(_ / qn).toArray
-    val probes = probeCells(centroids, qVec, nProbe)
-    val qLit = array(qVec.map(lit): _*)
-    assigned.filter(col("__cell").isin(probes: _*))
-      .select(col(idCol),
-        round(dotD(col(vecCol), qLit) / (normD(col(vecCol)) * normD(qLit)), 4).as("cos"))
-      .orderBy(col("cos").desc, col(idCol).asc)
-      .limit(k)
+    val raw = Vectors.fetch(emb, queryId, idCol, vecCol)
+    val probes = ivfProbeCells(centroids, raw, nProbe)
+    val qLit = array(Vectors.unit(raw).map(lit).toSeq: _*)
+    Vectors.rerank(assigned.filter(col("__cell").isin(probes: _*)),
+      idCol, col(vecCol), qLit, k)
   }
 
   /** Lloyd's k-means over a driver-resident bounded sample (the IVF
@@ -1185,40 +1253,20 @@ object LlmOps {
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && refine >= 1, "need k >= 1 and refine >= 1")
     val codebooks = trainPqCodebooks(emb, m, ksub, seed, idCol, vecCol)
-    val raw = emb.filter(col(idCol) === queryId)
-      .select(col(vecCol).cast("array<double>")).head().getSeq[Double](0).toArray
-    val qn = math.sqrt(raw.map(x => x * x).sum).max(1e-300)
-    val qVec = raw.map(_ / qn)
-    val dsub = raw.length / m
-    val adc: Array[Array[Double]] = Array.tabulate(m) { s =>
-      Array.tabulate(ksub) { c =>
-        var d = 0.0; var j = 0
-        while (j < dsub) { d += qVec(s * dsub + j) * codebooks(s)(c)(j); j += 1 }
-        d
-      }
-    }
-    // native codegen ADC lookup (r7: the DotProductD precedent — the
-    // per-row UDF boxed every codes array; measured swap recorded in
-    // COVERAGE §2.11)
-    def adcScoreOf(codes: Column) =
-      graft.expr.AdcScoreD(emb.sparkSession, codes, adc)
+    val raw = Vectors.fetch(emb, queryId, idCol, vecCol)
+    val qVec = Vectors.unit(raw)
     val base0 = spread(emb)
     val base = if (nLists > 0 && nProbe > 0) {
       val cents = trainIvfCentroids(emb, nLists, seed, idCol, vecCol)
-      val probes = probeCells(cents, qVec, nProbe)
+      val probes = ivfProbeCells(cents, raw, nProbe)
       base0.withColumn("__cell", cellOf(cents)(col(vecCol).cast("array<double>")))
         .filter(col("__cell").isin(probes: _*))
     } else base0
-    val qLit = array(qVec.map(lit).toIndexedSeq: _*)
-    base
+    val cand = base
       .withColumn("__codes", pqCodesOf(codebooks)(col(vecCol).cast("array<double>")))
-      .withColumn("__adc", adcScoreOf(col("__codes")))
-      .orderBy(col("__adc").desc, col(idCol).asc)
-      .limit(math.max(k * refine, k))
-      .select(col(idCol),
-        round(dotD(col(vecCol), qLit) / (normD(col(vecCol)) * normD(qLit)), 4).as("cos"))
-      .orderBy(col("cos").desc, col(idCol).asc)
-      .limit(k)
+      .withColumn("__adc", Vectors.adc(emb.sparkSession, col("__codes"), qVec, codebooks))
+    Vectors.rerank(Vectors.candidates(cand, col("__adc").desc, idCol, k, refine),
+      idCol, col(vecCol), array(qVec.map(lit).toIndexedSeq: _*), k)
   }
 
   /** Johnson-Lindenstrauss SIGN random projection: reduce `dim`-d
@@ -1321,10 +1369,7 @@ object LlmOps {
         }
       }
     }
-    val raw = emb.filter(col(idCol) === queryId)
-      .select(col(vecCol).cast("array<double>")).head().getSeq[Double](0).toArray
-    val qn = math.sqrt(raw.map(x => x * x).sum).max(1e-300)
-    val qVec = raw.map(_ / qn)
+    val qVec = Vectors.unit(Vectors.fetch(emb, queryId, idCol, vecCol))
     val base = qVec.zip(mins).map { case (q, mn) => q * mn }.sum
     val weights = Array.tabulate(dim)(d => qVec(d) * steps(d))
     val approxOf = udf { codes: Seq[Int] =>
@@ -1332,16 +1377,11 @@ object LlmOps {
       while (d < codes.length) { acc += codes(d) * weights(d); d += 1 }
       acc
     }
-    val qLit = array(qVec.map(lit).toIndexedSeq: _*)
-    spread(emb)
+    val cand = spread(emb)
       .withColumn("__codes", codesOf(col(vecCol).cast("array<double>")))
       .withColumn("__sq", approxOf(col("__codes")))
-      .orderBy(col("__sq").desc, col(idCol).asc)
-      .limit(math.max(k * refine, k))
-      .select(col(idCol),
-        round(dotD(col(vecCol), qLit) / (normD(col(vecCol)) * normD(qLit)), 4).as("cos"))
-      .orderBy(col("cos").desc, col(idCol).asc)
-      .limit(k)
+    Vectors.rerank(Vectors.candidates(cand, col("__sq").desc, idCol, k, refine),
+      idCol, col(vecCol), array(qVec.map(lit).toIndexedSeq: _*), k)
   }
 
   /** Persist an IVF-PQ index — the deployed form of [[annCosinePq]]
@@ -1411,34 +1451,17 @@ object LlmOps {
                             nProbe: Int = 2, refine: Int = 4,
                             idCol: String = "vec_id"): DataFrame = {
     val (centroids, codebooks) = readPqIndexMeta(spark, path)
-    val m = codebooks.length
-    val ksub = codebooks(0).length
-    val dsub = codebooks(0)(0).length
-    val qn = math.sqrt(qRaw.map(x => x * x).sum).max(1e-300)
-    val qVec = qRaw.map(_ / qn)
-    require(qVec.length == m * dsub, "query dim does not match the index")
+    val qVec = Vectors.unit(qRaw)
+    require(qVec.length == codebooks.length * codebooks(0)(0).length,
+      "query dim does not match the index")
     val probes = ivfProbeCells(centroids, qRaw, nProbe)
-    val adc: Array[Array[Double]] = Array.tabulate(m) { s =>
-      Array.tabulate(ksub) { c =>
-        var d = 0.0; var j = 0
-        while (j < dsub) { d += qVec(s * dsub + j) * codebooks(s)(c)(j); j += 1 }
-        d
-      }
-    }
-    // native codegen ADC lookup on the pruned codes stream (r7)
-    def adcScoreOf(codes: Column) = graft.expr.AdcScoreD(spark, codes, adc)
-    val qLit = array(qVec.map(lit).toIndexedSeq: _*)
-    val cand = spark.read.parquet(s"$path/codes")
+    val codes = spark.read.parquet(s"$path/codes")
       .filter(col("__cell").isin(probes: _*))
-      .withColumn("__adc", adcScoreOf(col("codes")))
-      .orderBy(col("__adc").desc, col("id").asc)
-      .limit(math.max(k * refine, k))
-      .select("id")
-    cand.join(spark.read.parquet(s"$path/vecs"), "id")
-      .select(col("id").as(idCol),
-        round(dotD(col("v"), qLit) / (normD(col("v")) * normD(qLit)), 4).as("cos"))
-      .orderBy(col("cos").desc, col(idCol).asc)
-      .limit(k)
+      .withColumn("__adc", Vectors.adc(spark, col("codes"), qVec, codebooks))
+    val cand = Vectors.candidates(codes, col("__adc").desc, "id", k, refine).select("id")
+    Vectors.rerank(cand.join(spark.read.parquet(s"$path/vecs"), "id")
+      .select(col("id").as(idCol), col("v")), idCol, col("v"),
+      array(qVec.map(lit).toIndexedSeq: _*), k)
   }
 
   /** All vector pairs with cosine ≥ threshold, blocked by a grouping
@@ -6026,39 +6049,15 @@ object LlmOps {
                     vecCol: String = "embedding",
                     anchorMax: Long = Long.MaxValue): DataFrame = {
     require(anchorEvery >= 1 && k >= 1, "hardNegatives: bad params")
-    val spark = emb.sparkSession
-    val base = emb.select(col(idCol), col(labelCol),
-      transform(col(vecCol), _.cast("double")).as("__v"))
-      .withColumn("__n", normD(col("__v")))
+    val base = Vectors.withNorm(emb, vecCol, col(idCol), col(labelCol))
     // anchorMax bounds the QUERY set (production shape: fixed anchors,
     // growing corpus) — the scale harness pins it so measured work is
     // anchors × corpus, linear in the corpus
-    val anchors = base.filter(pmod(col(idCol), lit(anchorEvery.toLong)) === 0
-      && col(idCol) <= anchorMax)
+    val anchors = base.filter(Vectors.anchorComb(idCol, anchorEvery, anchorMax))
       .select(col(idCol).as("anchor_id"), col(labelCol).as("__al"),
         col("__v").as("__av"), col("__n").as("__an"))
-    val scored = base.join(broadcast(anchors), col(labelCol) =!= col("__al"))
-      .withColumn("__cos",
-        graft.expr.DotProductD(spark, col("__av"), col("__v")) /
-          (col("__an") * col("__n")))
-      .withColumn("cos_u", round(col("__cos") * 10000).cast("long"))
-      .filter(col("cos_u") <= math.round(hiCos * 10000))
-    // phase 1: per-(anchor, input-partition) cut — the window keys on
-    // a projected spark_partition_id column, so each sort group holds
-    // at most one input partition's candidates for one anchor (never
-    // the whole different-label corpus); survivors <= k·P
-    val localW = Window.partitionBy(col("anchor_id"), col("__p"))
-      .orderBy(col("cos_u").desc, col(idCol))
-    // phase 2: final rank over the bounded survivor set
-    val globalW = Window.partitionBy(col("anchor_id"))
-      .orderBy(col("cos_u").desc, col(idCol))
-    scored.withColumn("__p", spark_partition_id())
-      .withColumn("__lr", row_number().over(localW)).filter(col("__lr") <= k)
-      .drop("__lr", "__p")
-      .withColumn("rank", row_number().over(globalW).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("anchor_id"), col("rank"), col(idCol).as("neg_id"),
-        col("cos_u"))
+    Vectors.anchorTopK(base.join(broadcast(anchors), col(labelCol) =!= col("__al")),
+      k, hiCos, idCol)
   }
   /** [[hardNegatives]] with IVF candidate pruning — the declared 100 TB
     * path for GROWING anchor sets. The scan form scores
@@ -6094,46 +6093,19 @@ object LlmOps {
                        pretrained: Option[Array[Array[Double]]] = None): DataFrame = {
     require(anchorEvery >= 1 && k >= 1 && nProbe >= 1 && nProbe <= nLists,
       "hardNegativesIvf: bad params")
-    val spark = emb.sparkSession
     val centroids = pretrained.getOrElse(
       trainIvfCentroids(emb, nLists, seed, idCol, vecCol))
-    val base = spread(emb).select(col(idCol), col(labelCol),
-        transform(col(vecCol), _.cast("double")).as("__v"))
-      .withColumn("__n", normD(col("__v")))
+    val base = Vectors.withNorm(spread(emb), vecCol, col(idCol), col(labelCol))
       .withColumn("__cell",
         cellOf(centroids)(transform(col("__v"), x => x / col("__n"))))
-    val probeOf = udf { v: Seq[Double] =>
-      val n = math.sqrt(v.map(x => x * x).sum).max(1e-300)
-      probeCells(centroids, v.map(_ / n).toArray, nProbe)
-    }
-    val anchors = base
-      .filter(pmod(col(idCol), lit(anchorEvery.toLong)) === 0
-        && col(idCol) <= anchorMax)
+    val anchors = base.filter(Vectors.anchorComb(idCol, anchorEvery, anchorMax))
       .select(col(idCol).as("anchor_id"), col(labelCol).as("__al"),
         col("__v").as("__av"), col("__n").as("__an"),
-        explode(probeOf(col("__v"))).as("__cell"))
+        explode(probeCellsOf(centroids, nProbe)(col("__v"))).as("__cell"))
     // cell-equi join: a corpus row belongs to exactly ONE cell, so a
     // (anchor, candidate) pair can only form once — no post-join dedup
-    val scored = base.join(anchors, Seq("__cell"))
-      .filter(col(labelCol) =!= col("__al"))
-      .withColumn("__cos",
-        graft.expr.DotProductD(spark, col("__av"), col("__v")) /
-          (col("__an") * col("__n")))
-      .withColumn("cos_u", round(col("__cos") * 10000).cast("long"))
-      .filter(col("cos_u") <= math.round(hiCos * 10000))
-    // same two-phase k-cut as the scan form (never a corpus-sized
-    // single sort group per anchor)
-    val localW = Window.partitionBy(col("anchor_id"), col("__p"))
-      .orderBy(col("cos_u").desc, col(idCol))
-    val globalW = Window.partitionBy(col("anchor_id"))
-      .orderBy(col("cos_u").desc, col(idCol))
-    scored.withColumn("__p", spark_partition_id())
-      .withColumn("__lr", row_number().over(localW)).filter(col("__lr") <= k)
-      .drop("__lr", "__p")
-      .withColumn("rank", row_number().over(globalW).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("anchor_id"), col("rank"), col(idCol).as("neg_id"),
-        col("cos_u"))
+    Vectors.anchorTopK(base.join(anchors, Seq("__cell"))
+      .filter(col(labelCol) =!= col("__al")), k, hiCos, idCol)
   }
   /** [[hardNegativesIvf]] against an AT-REST [[buildIvfIndex]] layout —
     * the deployed form. The inline variant re-assigns every corpus row
@@ -6159,8 +6131,7 @@ object LlmOps {
                               anchorMax: Long = Long.MaxValue): DataFrame = {
     require(anchorEvery >= 1, "hardNegativesIvfIndexed: anchorEvery >= 1")
     val anchors = spark.read.parquet(indexPath)
-      .filter(pmod(col(idCol), lit(anchorEvery.toLong)) === 0
-        && col(idCol) <= anchorMax)
+      .filter(Vectors.anchorComb(idCol, anchorEvery, anchorMax))
       .select(col(idCol), col(labelCol), col(vecCol))
     hardNegativesForIndexed(spark, indexPath, centroids, anchors, k, hiCos,
       nProbe, idCol, labelCol, vecCol)
@@ -6183,35 +6154,15 @@ object LlmOps {
                               vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && nProbe >= 1 && nProbe <= centroids.length,
       "hardNegativesForIndexed: bad params")
-    val idx = spark.read.parquet(indexPath)
-    val base = idx.select(col("__cell"), col(idCol), col(labelCol),
-        transform(col(vecCol), _.cast("double")).as("__v"))
-      .withColumn("__n", normD(col("__v")))
-    val nP = nProbe
-    val probeOf = udf { v: Seq[Double] => ivfProbeCells(centroids, v.toArray, nP) }
+    val base = Vectors.withNorm(spark.read.parquet(indexPath), vecCol,
+      col("__cell"), col(idCol), col(labelCol))
     val anchors = anchorFrame
       .select(col(idCol).as("anchor_id"), col(labelCol).as("__al"),
         transform(col(vecCol), _.cast("double")).as("__av"))
       .withColumn("__an", normD(col("__av")))
-      .withColumn("__cell", explode(probeOf(col("__av"))))
-    val scored = base.join(anchors, Seq("__cell"))
-      .filter(col(labelCol) =!= col("__al"))
-      .withColumn("__cos",
-        graft.expr.DotProductD(spark, col("__av"), col("__v")) /
-          (col("__an") * col("__n")))
-      .withColumn("cos_u", round(col("__cos") * 10000).cast("long"))
-      .filter(col("cos_u") <= math.round(hiCos * 10000))
-    val localW = Window.partitionBy(col("anchor_id"), col("__p"))
-      .orderBy(col("cos_u").desc, col(idCol))
-    val globalW = Window.partitionBy(col("anchor_id"))
-      .orderBy(col("cos_u").desc, col(idCol))
-    scored.withColumn("__p", spark_partition_id())
-      .withColumn("__lr", row_number().over(localW)).filter(col("__lr") <= k)
-      .drop("__lr", "__p")
-      .withColumn("rank", row_number().over(globalW).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("anchor_id"), col("rank"), col(idCol).as("neg_id"),
-        col("cos_u"))
+      .withColumn("__cell", explode(probeCellsOf(centroids, nProbe)(col("__av"))))
+    Vectors.anchorTopK(base.join(anchors, Seq("__cell"))
+      .filter(col(labelCol) =!= col("__al")), k, hiCos, idCol)
   }
   /** ROUGE-L (r12, Lin 2004): longest-common-subsequence overlap — the
     * standard summarization/generation recall metric next to [[bleuScore]]'s
@@ -6433,10 +6384,7 @@ object LlmOps {
                       refine: Int = 4, idCol: String = "vec_id",
                       vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && refine >= 1, "annCosineBinary: bad params")
-    val spark = emb.sparkSession
-    val base = emb.select(col(idCol),
-        transform(col(vecCol), _.cast("double")).as("__v"))
-      .withColumn("__n", normD(col("__v")))
+    val base = Vectors.withNorm(emb, vecCol, col(idCol))
       .withColumn("__w", expr(packSignWord))
     val q = base.filter(col(idCol) === queryId)
     require(!q.isEmpty, s"annCosineBinary: query id $queryId not found")
@@ -6444,15 +6392,11 @@ object LlmOps {
       "annCosineBinary: dim must be <= 64 (one packed word)")
     val qr = broadcast(q.select(col("__w").as("__qw"), col("__v").as("__qv"),
       col("__n").as("__qn")))
-    spread(base).crossJoin(qr)
+    val cand = spread(base).crossJoin(qr)
       .withColumn("hamming", expr("bit_count(__w ^ __qw)").cast("long"))
-      .orderBy(col("hamming"), col(idCol))
-      .limit(k * refine) // TakeOrderedAndProject — the popcount k-cut
-      .withColumn("cos_u", round(graft.expr.DotProductD(spark,
-        col("__qv"), col("__v")) / (col("__qn") * col("__n")) * 10000)
-        .cast("long"))
-      .orderBy(col("cos_u").desc, col(idCol))
-      .limit(k)
+    Vectors.topK(Vectors.candidates(cand, col("hamming"), idCol, k, refine)
+      .withColumn("cos_u", Vectors.quantized(Vectors.cosineD(emb.sparkSession,
+        col("__qv"), col("__qn"), col("__v"), col("__n")))), "cos_u", idCol, k)
       .select(col(idCol), col("hamming"), col("cos_u"))
   }
   /** At-rest binary ANN index (r12): [[annCosineBinary]]'s scan stage
@@ -6490,21 +6434,17 @@ object LlmOps {
     require(queryVec.length <= 64, "annCosineBinaryIndexed: dim <= 64")
     var qw = 0L
     queryVec.zipWithIndex.foreach { case (x, i) => if (x > 0) qw |= 1L << i }
-    val cand = spark.table(s"${table}_words")
+    val words = spark.table(s"${table}_words")
       .withColumn("hamming", expr(s"bit_count(__w ^ ${qw}L)").cast("long"))
-      .orderBy(col("hamming"), col(idCol))
-      .limit(k * refine)
+    val cand = Vectors.candidates(words, col("hamming"), idCol, k, refine)
       .select(col(idCol), col("hamming"))
     val ids = cand.collect().map(_.getLong(0)) // ≤ k·refine — bounded
-    val qn = math.sqrt(queryVec.map(x => x * x).sum)
     val vecs = spark.table(s"${table}_vecs")
       .filter(col(idCol).isin(ids.map(Long.box): _*))
-    cand.join(vecs, idCol)
-      .withColumn("cos_u", round(graft.expr.DotProductD(spark,
-        typedLit(queryVec.toSeq), col("vec")) /
-        (lit(qn) * normD(col("vec"))) * 10000).cast("long"))
-      .orderBy(col("cos_u").desc, col(idCol))
-      .limit(k)
+    Vectors.topK(cand.join(vecs, idCol)
+      .withColumn("cos_u", Vectors.quantized(Vectors.cosineD(spark,
+        typedLit(queryVec.toSeq), lit(Vectors.norm(queryVec)), col("vec"),
+        normD(col("vec"))))), "cos_u", idCol, k)
       .select(col(idCol), col("hamming"), col("cos_u"))
   }
   /** Tokenizer vocabulary coverage (r12): per-doc out-of-vocabulary

@@ -138,7 +138,7 @@ object Functions {
     "pow" -> f { case b :: e :: Nil => pow(b, e) },
     "sqrt" -> f { case c :: Nil => sqrt(c) },
     "sign" -> f { case c :: Nil => signum(c) },
-    "pi" -> f { case _ => lit(math.Pi) },
+    "pi" -> f { case Nil => lit(math.Pi) },
     "degrees" -> f { case c :: Nil => degrees(c) },
     "radians" -> f { case c :: Nil => radians(c) },
     "sin" -> f { case c :: Nil => sin(c) }, "cos" -> f { case c :: Nil => cos(c) },
@@ -152,7 +152,11 @@ object Functions {
     "min_of" -> f { case cs => least(cs: _*) },
     "coalesce" -> f { case cs => coalesce(cs: _*) },
     // ----------------------------------------------------------- datetime
-    "now" -> f { case _ => current_timestamp() },
+    // now(offset) shifts like ago(): a timespan literal plans to its micros
+    "now" -> f {
+      case Nil => current_timestamp()
+      case off :: Nil => timestamp_micros(unix_micros(current_timestamp()) + off)
+    },
     "getyear" -> f { case c :: Nil => year(c) },
     "getmonth" -> f { case c :: Nil => month(c) },
     "dayofmonth" -> f { case c :: Nil => dayofmonth(c) },
@@ -293,7 +297,9 @@ object Functions {
       val part = (i: Int) =>
         lpad(coalesce(element_at(p, i), lit("0")), 8, "0")
       concat(part(1), part(2), part(3), part(4)).cast("decimal(38,0)") },
-    "pack_all" -> f { case _ => throw new IllegalArgumentException("pack_all handled in planner") },
+    // pack_all() reads the frame's columns, so Planner.planApp plans its
+    // one (zero-argument) form; any argument list lands here and is refused
+    "pack_all" -> f(PartialFunction.empty),
     // KQL string_size = UTF-8 byte length (strlen is char length)
     "string_size" -> f { case s :: Nil => octet_length(s).cast("long") },
     // 0-based first-match position, -1 when absent (KQL indexof_regex);

@@ -2948,7 +2948,7 @@ final class Planner(spark: SparkSession, catalog: Catalog) {
           case _ => throw PlanError("pack needs key/value pairs")
         }
         to_json(struct(pairs: _*))
-      case "pack_all" => to_json(struct(df.columns.map(col).toSeq: _*))
+      case "pack_all" if args.isEmpty => to_json(struct(df.columns.map(col).toSeq: _*))
       case "pack_dictionary" =>
         val pairs = args.grouped(2).toList.flatMap {
           case List(k, v) => List(lit(litString(k, "key")), toCol(v, df))

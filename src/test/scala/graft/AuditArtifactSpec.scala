@@ -135,6 +135,20 @@ class AuditArtifactSpec extends AnyFunSuite {
     assert(hits.size === 1, hits.mkString("\n"))
   }
 
+  test("vector search writes its exact score, candidate cut and anchor cut once") {
+    val ext = new java.io.File("src/main/scala/graft/ext")
+    val lines = ext.listFiles().filter(_.getName.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().toList finally src.close()
+      }
+    Seq("round(dotD(", "k * refine",
+        "Window.partitionBy(col(\"anchor_id\"), col(\"__p\"))").foreach { p =>
+      val hits = lines.filter(_.contains(p))
+      assert(hits.size === 1, s"$p:\n" + hits.mkString("\n"))
+    }
+  }
+
   test("image plant table carries the planted near-duplicate structure") {
     SparkEntry.buildImagePlant(spark, dir)
     val plant = spark.table("graft_img_plant")

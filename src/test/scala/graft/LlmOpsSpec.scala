@@ -183,6 +183,19 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(indexed.collect().map(_.getLong(0)).toSeq == direct)
   }
 
+  test("a zero query searches only the cells ivfProbeCells names, with no NaN score") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf0").toFile.getAbsolutePath
+    val cents = LlmOps.buildIvfIndex(embs, dir)
+    val zeros = new Array[Double](64)
+    val probes = LlmOps.ivfProbeCells(cents, zeros, 2)
+    val got = LlmOps.annCosineIvfIndexed(spark, dir, cents, zeros, 10, nProbe = 2)
+      .join(spark.read.parquet(dir).select("vec_id", "__cell"), "vec_id")
+      .select(col("__cell").cast("int"), col("cos")).collect()
+    assert(got.nonEmpty)
+    assert(got.forall(r => probes.contains(r.getInt(0))), (probes, got.toSeq))
+    assert(!got.exists(r => !r.isNullAt(1) && r.getDouble(1).isNaN), got.toSeq)
+  }
+
   test("ann-ivf: self top-hit, recall grows with nProbe, full probe = brute force") {
     val brute = LlmOps.knnCosine(embs, queryId = 0, k = 10).collect()
       .map(_.getLong(0)).toSet

@@ -979,11 +979,20 @@ class PlannerSpec extends AnyFunSuite {
       "part | summarize sumif(p_size)" -> "function 'sumif' is missing argument 2",
       "part | extend x = substring(p_name)" -> "function 'substring' is missing argument 2",
       "print x = case()" -> "function 'case' is missing argument 1",
-      "part | serialize | extend y = prev()" -> "function 'prev' is missing argument 1"
+      "part | serialize | extend y = prev()" -> "function 'prev' is missing argument 1",
+      "print x = pi(1)" -> "function 'pi' does not take 1 argument(s)",
+      "print x = now(1, 2)" -> "function 'now' does not take 2 argument(s)",
+      "print x = pack_all(1)" -> "function 'pack_all' does not take 1 argument(s)"
     ).foreach { case (q, want) =>
       val m = planError(q)
       assert(m == want, q)
     }
+  }
+
+  test("now(offset) shifts the current time like ago()") {
+    val r = one("print a = now(-1d), b = ago(1d), c = now()")
+    assert(r.getTimestamp(0) == r.getTimestamp(1))
+    assert(r.getTimestamp(2).getTime - r.getTimestamp(0).getTime == 86400000L)
   }
 
   test("evaluate preview through Kql.run points to Kql.runMulti") {
