@@ -537,9 +537,10 @@ object LlmOps {
                                  table: String, numHashes: Int, bands: Int,
                                  buckets: Int): Unit = {
     if (!spark.catalog.tableExists(s"${table}_meta")) return
-    val m = spark.table(s"${table}_meta").head
-    val (nh, bd, bk) = (m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"),
-      m.getAs[Int]("buckets"))
+    val (nh, bd, bk) = graft.sources.AtRest.tableMeta(spark, s"${table}_meta") { rs =>
+      val m = rs.head
+      (m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"), m.getAs[Int]("buckets"))
+    }
     // buckets < 0 ⇒ read-only caller (any bucket count reads fine); the
     // append path must match or the layout validation rejects mid-write
     require(nh == numHashes && bd == bands && (buckets < 0 || bk == buckets),
@@ -815,12 +816,16 @@ object LlmOps {
       * per anchor over the <= k·P survivors. */
     def anchorTopK(pairs: DataFrame, k: Int, hiCos: Double, idCol: String): DataFrame = {
       val byScore = Seq(col("cos_u").desc, col(idCol))
+      // the partition id is taken in the scoring projection, before the
+      // hiCos cut: Catalyst pushes no filter through a non-deterministic
+      // projection, so the cut reads the projected score instead of
+      // moving into the join condition and scoring every pair twice
       pairs
         .withColumn("__cos", cosineD(pairs.sparkSession,
           col("__av"), col("__an"), col("__v"), col("__n")))
         .withColumn("cos_u", quantized(col("__cos")))
-        .filter(col("cos_u") <= math.round(hiCos * 10000))
         .withColumn("__p", spark_partition_id())
+        .filter(col("cos_u") <= math.round(hiCos * 10000))
         .withColumn("__lr", row_number().over(
           Window.partitionBy(col("anchor_id"), col("__p")).orderBy(byScore: _*)))
         .filter(col("__lr") <= k)
@@ -1111,7 +1116,7 @@ object LlmOps {
                           vecCol: String = "embedding"): DataFrame = {
     val probes = ivfProbeCells(centroids, qRaw, nProbe)
     val qLit = array(Vectors.unit(qRaw).map(lit).toSeq: _*)
-    Vectors.rerank(spark.read.parquet(path).filter(col("__cell").isin(probes: _*)),
+    Vectors.rerank(graft.sources.AtRest.frame(spark, path).filter(col("__cell").isin(probes: _*)),
       idCol, col(vecCol), qLit, k)
   }
 
@@ -1429,18 +1434,19 @@ object LlmOps {
     (centroids, codebooks)
   }
 
-  /** Load the quantizer metadata of a [[buildPqIndex]] index. */
+  /** Load the quantizer metadata of a [[buildPqIndex]] index (read once
+    * per session and listing of `meta/`, see [[graft.sources.AtRest]]). */
   def readPqIndexMeta(spark: org.apache.spark.sql.SparkSession, path: String)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val rows = spark.read.parquet(s"$path/meta").collect()
-    val cents = rows.filter(_.getString(0) == "cent").sortBy(_.getInt(1))
-      .map(_.getSeq[Double](3).toArray)
-    val byS = rows.filter(_.getString(0) == "code").groupBy(_.getInt(1))
-    val codebooks = (0 until byS.size).toArray.map { s =>
-      byS(s).sortBy(_.getInt(2)).map(_.getSeq[Double](3).toArray)
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) =
+    graft.sources.AtRest.pathMeta(spark, s"$path/meta") { rows =>
+      val cents = rows.filter(_.getString(0) == "cent").sortBy(_.getInt(1))
+        .map(_.getSeq[Double](3).toArray).toArray
+      val byS = rows.filter(_.getString(0) == "code").groupBy(_.getInt(1))
+      val codebooks = (0 until byS.size).toArray.map { s =>
+        byS(s).sortBy(_.getInt(2)).map(_.getSeq[Double](3).toArray).toArray
+      }
+      (cents, codebooks)
     }
-    (cents, codebooks)
-  }
 
   /** Search a persisted [[buildPqIndex]] index: partition-pruned scan of
     * the probed cells' CODE files (m bytes/row), ADC lookup-table
@@ -1455,11 +1461,11 @@ object LlmOps {
     require(qVec.length == codebooks.length * codebooks(0)(0).length,
       "query dim does not match the index")
     val probes = ivfProbeCells(centroids, qRaw, nProbe)
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = graft.sources.AtRest.frame(spark, s"$path/codes")
       .filter(col("__cell").isin(probes: _*))
       .withColumn("__adc", Vectors.adc(spark, col("codes"), qVec, codebooks))
     val cand = Vectors.candidates(codes, col("__adc").desc, "id", k, refine).select("id")
-    Vectors.rerank(cand.join(spark.read.parquet(s"$path/vecs"), "id")
+    Vectors.rerank(cand.join(graft.sources.AtRest.frame(spark, s"$path/vecs"), "id")
       .select(col("id").as(idCol), col("v")), idCol, col("v"),
       array(qVec.map(lit).toIndexedSeq: _*), k)
   }
@@ -1646,10 +1652,12 @@ object LlmOps {
                               table: String): (Double, Int, Int, Int, Long, Int) = {
     require(spark.catalog.tableExists(s"${table}_meta"),
       s"cosine index '$table' not found — run buildCosineIndex first")
-    val m = spark.table(s"${table}_meta").head
-    (m.getAs[Double]("threshold"), m.getAs[Int]("n_bands"),
-      m.getAs[Int]("planes_per_band"), m.getAs[Int]("dim"),
-      m.getAs[Long]("seed"), m.getAs[Int]("buckets"))
+    graft.sources.AtRest.tableMeta(spark, s"${table}_meta") { rs =>
+      val m = rs.head
+      (m.getAs[Double]("threshold"), m.getAs[Int]("n_bands"),
+        m.getAs[Int]("planes_per_band"), m.getAs[Int]("dim"),
+        m.getAs[Long]("seed"), m.getAs[Int]("buckets"))
+    }
   }
 
   private def cosineIndexFrames(emb: DataFrame, nBands: Int, b: Int, dim: Int,
@@ -6130,7 +6138,7 @@ object LlmOps {
                               vecCol: String = "embedding",
                               anchorMax: Long = Long.MaxValue): DataFrame = {
     require(anchorEvery >= 1, "hardNegativesIvfIndexed: anchorEvery >= 1")
-    val anchors = spark.read.parquet(indexPath)
+    val anchors = graft.sources.AtRest.frame(spark, indexPath)
       .filter(Vectors.anchorComb(idCol, anchorEvery, anchorMax))
       .select(col(idCol), col(labelCol), col(vecCol))
     hardNegativesForIndexed(spark, indexPath, centroids, anchors, k, hiCos,
@@ -6154,7 +6162,7 @@ object LlmOps {
                               vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && nProbe >= 1 && nProbe <= centroids.length,
       "hardNegativesForIndexed: bad params")
-    val base = Vectors.withNorm(spark.read.parquet(indexPath), vecCol,
+    val base = Vectors.withNorm(graft.sources.AtRest.frame(spark, indexPath), vecCol,
       col("__cell"), col(idCol), col(labelCol))
     val anchors = anchorFrame
       .select(col(idCol).as("anchor_id"), col(labelCol).as("__al"),
@@ -6295,27 +6303,35 @@ object LlmOps {
 
   /** BM25 top-k against [[buildBm25Index]]'s tables: reads only the
     * query terms' postings (bucket-prunable term filter), joins the
-    * term-bucketed df table exchange-light, and reproduces [[bm25]]'s
-    * integer-micro per-term contributions bit-identically — same
-    * formula, same rounding, df/avgdl from the SAME corpus statistics,
-    * so `bm25Indexed(...) ≡ bm25(...)` row for row. */
+    * term-bucketed df table in place (a shuffled hash join, so the df
+    * side is never broadcast), and reproduces [[bm25]]'s integer-micro
+    * per-term contributions bit-identically — same formula, same
+    * rounding, df/avgdl from the SAME corpus statistics, so
+    * `bm25Indexed(...) ≡ bm25(...)` row for row. The two corpus
+    * constants enter as typed literals read once per index version
+    * ([[graft.sources.AtRest.tableMeta]]; an empty corpus's null
+    * `sum_dl` stays null), and tables that fit one split scan as one
+    * partition, so a probe of a small index is one job and one task. */
   def bm25Indexed(spark: org.apache.spark.sql.SparkSession, table: String, query: String, k: Int,
                   k1: Double = 1.2, b: Double = 0.75,
                   idCol: String = "doc_id"): DataFrame = {
     val qTerms = query.toLowerCase.split("\\s+").filter(_.nonEmpty)
       .distinct.toSeq
     require(qTerms.nonEmpty, "bm25Indexed: query has no terms")
-    val hits = spark.table(s"${table}_post")
+    val hits = graft.sources.AtRest.table(spark, s"${table}_post")
       .filter(col("tok").isin(qTerms: _*))
-    val dfc = spark.table(s"${table}_terms")
+    val dfc = graft.sources.AtRest.table(spark, s"${table}_terms")
       .filter(col("tok").isin(qTerms: _*))
-    val stats = spark.table(s"${table}_meta")
-    val avgdl = col("sum_dl").cast("double") / col("n_corpus")
+    val stats = graft.sources.AtRest.tableMeta(spark, s"${table}_meta")(_.head)
+    // bigint literals, a null one for an empty corpus's sum_dl
+    def const(c: String): Column = lit(stats.getAs[Any](c)).cast("long")
+    val (nCorpus, sumDl) = (const("n_corpus"), const("sum_dl"))
+    val avgdl = sumDl.cast("double") / nCorpus
     val idf = log(lit(1.0) +
-      (col("n_corpus") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+      (nCorpus - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val tfn = col("tf") * lit(k1 + 1.0) /
       (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / avgdl))
-    hits.join(dfc, "tok").crossJoin(broadcast(stats))
+    hits.join(dfc.hint("shuffle_hash"), "tok")
       .withColumn("c_u", round(idf * tfn * lit(1e6)).cast("long"))
       .groupBy(col("id").as(idCol))
       .agg(count(lit(1)).as("n_terms"), sum(col("c_u")).as("score_u"))

@@ -1,14 +1,11 @@
 package graft.kql
 
-import java.nio.file.{Files, Path, Paths}
-import java.nio.file.attribute.BasicFileAttributes
-import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
-import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import graft.sources.AtRest
 
 /** Table-name → DataFrame resolution over a directory of parquet files
   * (the driver fixture layout, TESTDATA.md). At cluster scale the same
@@ -79,84 +76,18 @@ object Catalog {
     case f => spark.read.format(f)
   }
 
-  /** What a session remembers of one table path: the listing it was
-    * resolved at — (name, size, mtime) of the file, or of every file
-    * under a directory table — the source schema Spark inferred from it,
-    * and its TIMESTAMP(NANOS) columns. Metadata only, never a DataFrame:
-    * nothing here references the session, so a dropped session's entries
-    * are collected with it, and every query still scans the files. */
-  private final case class Meta(listing: Seq[(String, Long, Long)],
-                                schema: StructType, nanosCols: Set[String])
-
-  private val sessions =
-    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Meta]]()
-
-  private def metas(spark: SparkSession): ConcurrentHashMap[String, Meta] =
-    sessions.synchronized {
-      sessions.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Meta]())
-    }
-
   /** The table at `path` as a DataFrame. Schema inference (a Spark job
     * for parquet/csv/json) and the footer read run once per session,
-    * path and listing: a hit hands Spark the recorded schema, so it
-    * starts no job and reads no footer. A rewritten file or directory
-    * changes the listing and resolves afresh. */
+    * path and listing ([[AtRest.open]]): a hit hands Spark the recorded
+    * schema, so it starts no job and reads no footer. A rewritten file or
+    * directory changes the listing and resolves afresh. */
   private def resolve(spark: SparkSession, ext: String, path: String): DataFrame = {
-    val key = Paths.get(path).toAbsolutePath.normalize
-    val listing = listingOf(key)
-    val known = metas(spark)
-    val hit = Option(known.get(key.toString)).filter(m => listing.contains(m.listing))
-    val (df, nanosCols) = hit match {
-      case Some(m) => (reader(spark, ext).schema(m.schema).load(path), m.nanosCols)
-      case None =>
-        val df = reader(spark, ext).load(path)
-        val cols = if (ext == "parquet") nanosTimestampCols(spark, path) else Set.empty[String]
-        listing.foreach(l => known.put(key.toString, Meta(l, df.schema, cols)))
-        (df, cols)
-    }
-    val scan = if (listing.exists(oneSplit(spark, _))) df.coalesce(1) else df
+    val (df, nanosCols, listing) = AtRest.open(spark, path, ext, reader(spark, ext))(
+      if (ext == "parquet") nanosTimestampCols(spark, path) else Set.empty[String])
+    val scan = if (listing.exists(AtRest.oneSplit(spark, _, bucketed = false))) df.coalesce(1) else df
     if (ext == "txt") scan.withColumnRenamed("value", "line")
     else normalize(scan, nanosCols)
   }
-
-  /** Whether Spark reads these files as one partition anyway: its split
-    * size (`FilePartition.maxSplitBytes`, from this session's
-    * `spark.sql.files.*` confs and parallelism), then its next-fit
-    * packing, which charges each file `openCostInBytes` and starts a new
-    * partition once the next file does not fit. Files Spark skips are
-    * left out, and empty files make no split. Such a scan is handed back
-    * as `coalesce(1)`: still one task, but it reports a single partition,
-    * so aggregates, sorts and shuffle joins over it plan no exchange. A
-    * `spark.sql.files.maxPartitionNum` merge is not modelled; it only
-    * makes this rule decline a table Spark would read as one split. */
-  private def oneSplit(spark: SparkSession, listing: Seq[(String, Long, Long)]): Boolean = {
-    val openCost = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.openCostInBytes"))
-    val sizes = listing.collect { case (name, size, _) if !hidden(name) => size }
-    val maxSplit = FilePartition.maxSplitBytes(spark, sizes.map(_ + openCost).sum)
-    val files = sizes.filter(_ > 0)
-    files.sum + (files.size - 1) * openCost <= maxSplit
-  }
-
-  /** Spark's data-file filter: a path component starting with `_` (other
-    * than a `k=v` partition directory) or with `.` hides the file. */
-  private def hidden(relName: String): Boolean =
-    relName.split(java.io.File.separatorChar)
-      .exists(c => (c.startsWith("_") && !c.contains("=")) || c.startsWith("."))
-
-  /** Sorted (relative name, size, mtime in ns) of every regular file at
-    * or under `p`; None when the tree changed under the walk (then the
-    * lookup is served, but not cached). */
-  private def listingOf(p: Path): Option[Seq[(String, Long, Long)]] =
-    try {
-      val walk = Files.walk(p)
-      try Some(walk.iterator.asScala.flatMap { f =>
-        val a = Files.readAttributes(f, classOf[BasicFileAttributes])
-        if (a.isRegularFile)
-          Some((p.relativize(f).toString, a.size, a.lastModifiedTime.to(TimeUnit.NANOSECONDS)))
-        else None
-      }.toVector.sorted)
-      finally walk.close()
-    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => None }
 
   /** Columns whose parquet logical type is TIMESTAMP(NANOS), read from
     * one file footer (a metadata-only driver read, like schema

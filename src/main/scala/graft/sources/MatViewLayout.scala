@@ -143,9 +143,11 @@ object MatViewLayout {
     BucketedLayout.writePlain(df, s"${view}_meta")
   }
 
+  /** The committed meta row, read through [[AtRest.tableMeta]]: a probe
+    * of an unchanged view starts no job for it. */
   private def readMeta(spark: SparkSession, view: String): Meta = {
     val r =
-      try spark.table(s"${view}_meta").head()
+      try AtRest.tableMeta(spark, s"${view}_meta")(_.head)
       catch {
         case e: org.apache.spark.sql.AnalysisException =>
           throw new IllegalArgumentException(
@@ -174,7 +176,7 @@ object MatViewLayout {
     * back as the next store. */
   private def mergedPartials(spark: SparkSession, view: String, m: Meta,
       resolve: String => DataFrame): DataFrame = {
-    val store = spark.table(m.storeTable)
+    val store = AtRest.table(spark, m.storeTable)
     val delta = applyDerive(
       resolve(m.sourceTable).filter(col(m.cursorCol) > m.cursor), m.derive)
       .groupBy(m.keys.map(col): _*)

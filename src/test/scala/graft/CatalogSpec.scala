@@ -30,27 +30,7 @@ class CatalogSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     Files.copy(Paths.get(s"${TestSpark.sfDir}/events.parquet"),
       Paths.get(s"$dir/events.parquet"), StandardCopyOption.REPLACE_EXISTING)
 
-  /** Spark jobs `body` starts on this thread. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("catalog.spec") == tag))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("catalog.spec", tag)
-    try {
-      val a = body
-      org.apache.spark.TestListenerBus.drain(sc)
-      (a, jobs.get)
-    } finally {
-      sc.setLocalProperty("catalog.spec", null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsDuring[A](body: => A): (A, Int) = CatalogSpec.jobsDuring(spark)(body)
 
   private def rows(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)
@@ -341,6 +321,30 @@ class CatalogSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         if (ordered) assert(gr == wr, s"$branch of $text")
         else assert(rows(g) == rows(w), s"$branch of $text")
       }
+    }
+  }
+}
+
+object CatalogSpec {
+  /** Spark jobs `body` starts on this thread. */
+  def jobsDuring[A](spark: SparkSession)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("catalog.spec") == tag))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("catalog.spec", tag)
+    try {
+      val a = body
+      org.apache.spark.TestListenerBus.drain(sc)
+      (a, jobs.get)
+    } finally {
+      sc.setLocalProperty("catalog.spec", null)
+      sc.removeSparkListener(listener)
     }
   }
 }

@@ -119,6 +119,25 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(found.isEmpty, s"stage files in GraftSession.scratch instead: $found")
   }
 
+  test("the at-rest reader is the one file walk and the one per-session cache") {
+    for (call <- Seq("Files.walk", "WeakHashMap[SparkSession")) {
+      val found = sources("src/main").flatMap { p =>
+        val text = java.nio.file.Files.readString(p)
+        java.util.regex.Pattern.quote(call).r.findAllIn(text).map(_ => p.getFileName.toString)
+      }
+      assert(found == Seq("AtRest.scala"), s"$call: list and remember through AtRest: $found")
+    }
+  }
+
+  test("index probes read their metadata through the at-rest reader") {
+    val found = (sources("src/main/scala/graft/ext") ++ sources("src/main/scala/graft/sources"))
+      .filter { p =>
+        val text = java.nio.file.Files.readString(p)
+        text.contains("_meta\").head") || text.contains("/meta\").collect()")
+      }.map(_.toString)
+    assert(found.isEmpty, s"read index metadata with AtRest.tableMeta or pathMeta: $found")
+  }
+
   test("only graft/sources drops catalog tables") {
     val found = offenders("src/main", "DROP TABLE IF EXISTS".r, Set.empty)
       .filterNot(_.contains("/graft/sources/"))

@@ -432,6 +432,23 @@ class R12OpsSpec extends AnyFunSuite {
       plan.contains("BroadcastHashJoin"), plan.take(1500))
   }
 
+  test("hardNegatives: each anchor×candidate pair is scored once, in a projection") {
+    for (row <- Seq("llm_hard_negatives", "llm_hard_negatives_ivf")) {
+      val q = SparkEntry.queries(row)(spark, TestSpark.sfDir)
+      q.collect()
+      val plan = (q.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }).toString
+      // every pair score is a projected column: it appears once in its
+      // Project and never again in a filter or a join condition
+      val scored = plan.linesIterator.filter(_.contains("dot_product_d(")).toSeq
+      assert(scored.nonEmpty && scored.forall(l => l.contains(" Project [") &&
+        "dot_product_d\\(".r.findAllIn(l).size == 1), s"$row:\n$plan")
+      GraftSession.release(spark)
+    }
+  }
+
   test("hardNegatives: two-phase k-cut — no corpus-sized single-partition window") {
     val e = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
     val q = LlmOps.hardNegatives(e, 50, 5)
