@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.LlmOps
@@ -138,14 +139,12 @@ object Scale {
       val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
       val nVecs = spark.read.parquet(s"$dir/embeddings.parquet").count()
       selected(dir, k).foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val out = try fn() catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val result = timed(fn)
         GraftSession.release(spark)
         val rowsIn = if (name.startsWith("ann_") || name.contains("kmeans") ||
           name.contains("cosine") || name.contains("semdedup")) nVecs else nDocs
         val line = s"""{"metric":"scale","op":"$name","scale":$k,""" +
-          s""""rows_in":$rowsIn,"out_rows":$out,"sec":$dt,"loadavg":"${loadavg()}"}"""
+          s""""rows_in":$rowsIn,$result,"loadavg":"${loadavg()}"}"""
         println(line); sb.append(line).append('\n')
       }
     }
@@ -171,6 +170,17 @@ object Scale {
         java.nio.file.StandardOpenOption.APPEND)
     }
     spark.stop()
+  }
+
+  /** The JSON fields of one timed op: `"out_rows"` and `"sec"` when it
+    * returned, or only `"error"` (the exception class) when it threw — a
+    * failure is never timed. */
+  private[graft] def timed(op: () => Long): String = {
+    val t0 = System.nanoTime()
+    try {
+      val out = op()
+      s""""out_rows":$out,"sec":${(System.nanoTime() - t0) / 1e9}"""
+    } catch { case NonFatal(e) => s""""error":"${e.getClass.getName}"""" }
   }
 
   /** ×K self-union with the per-copy transforms documented above. */

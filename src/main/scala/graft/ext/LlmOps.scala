@@ -4531,8 +4531,15 @@ object LlmOps {
     def read(df: DataFrame, binCol: String, bytes: Int): DataFrame =
       df.withColumn(name, upper(hex(substring(col(binCol), 1, bytes))))
 
+    /** The hex of `n` bytes at `pos`, empty past the prefix. A walked
+      * position is a long, and a long cast to `substr`'s int wraps: a
+      * position past 2^31 would read back inside the prefix. Cast through
+      * double, it saturates at the int maximum instead, which lies past
+      * any prefix a string can hold (and costs the generated code two
+      * casts per read: the media parsers sit near Janino's 64 KB method
+      * limit, which a null-checked guard per read pushed exifMeta past). */
     private def slice(pos: Column, n: Int): Column =
-      h.substr(pos * 2 - 1, lit(n * 2))
+      h.substr((pos * 2 - 1).cast("double").cast("int"), lit(n * 2))
 
     /** `n` bytes at `pos` as upper-case hex. */
     def hexAt(pos: Column, n: Int): Column = {
@@ -4541,7 +4548,8 @@ object LlmOps {
     }
 
     /** Whether the bytes at `pos` are the hex signature `sig` (a short
-      * read is not, so the test needs no length check). */
+      * read, or one past the prefix, is not, so the test needs no length
+      * check). */
     def at(pos: Column, sig: String): Column =
       slice(pos, sig.length / 2) === sig
     def at(pos: Int, sig: String): Column = at(lit(pos), sig)
@@ -6447,6 +6455,7 @@ object LlmOps {
                              table: String, queryVec: Array[Double],
                              k: Int, refine: Int = 4,
                              idCol: String = "vec_id"): DataFrame = {
+    require(k >= 1 && refine >= 1, "annCosineBinaryIndexed: bad params")
     require(queryVec.length <= 64, "annCosineBinaryIndexed: dim <= 64")
     var qw = 0L
     queryVec.zipWithIndex.foreach { case (x, i) => if (x > 0) qw |= 1L << i }
@@ -6457,10 +6466,12 @@ object LlmOps {
     val ids = cand.collect().map(_.getLong(0)) // ≤ k·refine — bounded
     val vecs = spark.table(s"${table}_vecs")
       .filter(col(idCol).isin(ids.map(Long.box): _*))
+    // the query's own unguarded norm, as annCosineBinary takes it: a zero
+    // query divides by zero and scores null on both paths
+    val q = typedLit(queryVec.toSeq)
     Vectors.topK(cand.join(vecs, idCol)
       .withColumn("cos_u", Vectors.quantized(Vectors.cosineD(spark,
-        typedLit(queryVec.toSeq), lit(Vectors.norm(queryVec)), col("vec"),
-        normD(col("vec"))))), "cos_u", idCol, k)
+        q, normD(q), col("vec"), normD(col("vec"))))), "cos_u", idCol, k)
       .select(col(idCol), col("hamming"), col("cos_u"))
   }
   /** Tokenizer vocabulary coverage (r12): per-doc out-of-vocabulary

@@ -82,9 +82,9 @@ object Catalog {
     * schema, so it starts no job and reads no footer. A rewritten file or
     * directory changes the listing and resolves afresh. */
   private def resolve(spark: SparkSession, ext: String, path: String): DataFrame = {
-    val (df, nanosCols, listing) = AtRest.open(spark, path, ext, reader(spark, ext))(
+    val (df, nanosCols) = AtRest.open(spark, path, ext, reader(spark, ext))(
       if (ext == "parquet") nanosTimestampCols(spark, path) else Set.empty[String])
-    val scan = if (listing.exists(AtRest.oneSplit(spark, _, bucketed = false))) df.coalesce(1) else df
+    val scan = if (AtRest.readsOneSplit(df)) df.coalesce(1) else df
     if (ext == "txt") scan.withColumnRenamed("value", "line")
     else normalize(scan, nanosCols)
   }

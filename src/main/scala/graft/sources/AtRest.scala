@@ -8,7 +8,9 @@ import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, DataFrameReader, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.CatalogTable
-import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition}
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation,
+  LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
 
 /** The one reader of at-rest files and tables that remembers what it
@@ -55,22 +57,22 @@ object AtRest {
     listing.foreach(l => known(spark).put(s"$kind:$p", Known(l, value)))
 
   /** The files at `path` read through `reader` in `format`, the `extra`
-    * facts taken from them alongside the schema, and their listing.
+    * facts taken from them alongside the schema.
     * Schema inference (a Spark job for parquet, csv and json) and
     * `extra` run once per session, path and listing: a hit hands the
     * reader the recorded schema, so it starts no job and reads no
     * footer. */
   private[graft] def open[A](spark: SparkSession, path: String, format: String,
-                             reader: DataFrameReader)(extra: => A): (DataFrame, A, Option[Listing]) = {
+                             reader: DataFrameReader)(extra: => A): (DataFrame, A) = {
     val p = keyOf(path)
     val listing = listingOf(p)
     recalled[(StructType, A)](spark, format, p, listing) match {
-      case Some((schema, a)) => (reader.schema(schema).load(path), a, listing)
+      case Some((schema, a)) => (reader.schema(schema).load(path), a)
       case None =>
         val df = reader.load(path)
         val a = extra
         record(spark, format, p, listing, (df.schema, a))
-        (df, a, listing)
+        (df, a)
     }
   }
 
@@ -104,14 +106,12 @@ object AtRest {
     }
   }
 
-  /** Catalog table `table`, handed back as `coalesce(1)` when its files
-    * fit one split ([[oneSplit]]): one task reads it, and joins,
+  /** Catalog table `table`, handed back as `coalesce(1)` when it reads
+    * as one split ([[readsOneSplit]]): one task reads it, and joins,
     * aggregates and sorts over it plan no exchange. */
   def table(spark: SparkSession, table: String): DataFrame = {
     val df = spark.table(table)
-    val one = catalogTable(spark, table).exists(t =>
-      dirOf(t).flatMap(listingOf).exists(oneSplit(spark, _, t.bucketSpec.isDefined)))
-    if (one) df.coalesce(1) else df
+    if (readsOneSplit(df)) df.coalesce(1) else df
   }
 
   /** The session catalog's entry for `table`; None for a temp view or a
@@ -127,36 +127,49 @@ object AtRest {
   private def dirOf(t: CatalogTable): Option[Path] =
     scala.util.Try(Paths.get(t.location).toAbsolutePath.normalize).toOption
 
-  /** Whether a scan of these files is one partition. A plain table is one
-    * exactly when Spark's own split rule reads it as one: its split size
-    * (`FilePartition.maxSplitBytes`, from this session's
+  /** Whether `df` reads as one split, so one task can read it whole:
+    * every leaf of its analyzed plan is either under a one-partition
+    * repartition (the `coalesce(1)` that [[table]] and `Catalog` hand
+    * out) or a batch file relation whose files, as its already-listed
+    * file index holds them, fit one split ([[oneSplit]]). A local, RDD,
+    * streaming or other non-file source does not read as one split. */
+  def readsOneSplit(df: DataFrame): Boolean = {
+    def leaves(plan: LogicalPlan): Boolean = plan match {
+      case r: Repartition if r.numPartitions == 1 => true
+      case r: LogicalRelation => (r.relation, r.isStreaming) match {
+        case (fs: HadoopFsRelation, false) => fs.location match {
+          case files: PartitioningAwareFileIndex => oneSplit(df.sparkSession,
+            files.allFiles().map(_.getLen), fs.bucketSpec.isDefined)
+          case _ => false
+        }
+        case _ => false
+      }
+      case p => p.children.nonEmpty && p.children.forall(leaves)
+    }
+    leaves(df.queryExecution.analyzed)
+  }
+
+  /** Whether a scan of files of these sizes is one partition. A plain
+    * scan is one exactly when Spark's own split rule reads it as one: its
+    * split size (`FilePartition.maxSplitBytes`, from this session's
     * `spark.sql.files.*` confs and parallelism), then its next-fit
     * packing, which charges each file `openCostInBytes` and starts a new
-    * partition once the next file does not fit. Files Spark skips are
-    * left out, and empty files make no split. A
-    * `spark.sql.files.maxPartitionNum` merge is not modelled; it only
-    * makes this rule decline a table Spark would read as one split.
+    * partition once the next file does not fit. Empty files make no
+    * split. A `spark.sql.files.maxPartitionNum` merge is not modelled; it
+    * only makes this rule decline a scan Spark would read as one split.
     * Spark never packs the files of a bucketed table: it starts one task
     * per bucket however small, so such a table is one partition when the
     * total bytes of its files fit one split. A scan that is one partition
     * is handed back as `coalesce(1)`: still one task, but it reports a
     * single partition, so aggregates, sorts and shuffle joins over it
     * plan no exchange. */
-  private[graft] def oneSplit(spark: SparkSession, listing: Listing,
-                              bucketed: Boolean): Boolean = {
+  private def oneSplit(spark: SparkSession, sizes: Seq[Long], bucketed: Boolean): Boolean = {
     val openCost = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.openCostInBytes"))
-    val sizes = listing.collect { case (name, size, _) if !hidden(name) => size }
     val maxSplit = FilePartition.maxSplitBytes(spark, sizes.map(_ + openCost).sum)
     val files = sizes.filter(_ > 0)
     if (bucketed) files.sum <= maxSplit
     else files.sum + (files.size - 1) * openCost <= maxSplit
   }
-
-  /** Spark's data-file filter: a path component starting with `_` (other
-    * than a `k=v` partition directory) or with `.` hides the file. */
-  private def hidden(relName: String): Boolean =
-    relName.split(java.io.File.separatorChar)
-      .exists(c => (c.startsWith("_") && !c.contains("=")) || c.startsWith("."))
 
   /** Sorted (relative name, size, mtime in ns) of every regular file at
     * or under `p`; None when the tree changed under the walk (then the

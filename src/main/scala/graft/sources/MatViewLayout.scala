@@ -43,6 +43,12 @@ final case class MatAgg(fn: String, col: String, alias: String)
   *
   * Only mergeable aggregates are accepted — the same restriction ADX
   * imposes on materialized views, and for the same algebraic reason.
+  *
+  * A small view is read and refreshed in one task: when the store and
+  * the source both fit one split, the delta's partial aggregate and the
+  * merge run in one partition with no exchange (one Spark job per read).
+  * A larger view, or one over a source that is not file-backed,
+  * shuffles both aggregates by the view keys.
   */
 object MatViewLayout {
 
@@ -173,17 +179,25 @@ object MatViewLayout {
 
   /** store ∪ partials(delta beyond cursor), merged per key — partial
     * column names round-trip, so the result can be finalized OR written
-    * back as the next store. */
+    * back as the next store. When the store and the source both read as
+    * one split ([[AtRest.readsOneSplit]]), the delta's source and the
+    * union are each taken as `coalesce(1)`: both aggregates then find
+    * their input in one partition and plan no exchange, so the whole
+    * merge is one task. Above one split, or over a source that is not
+    * file-backed, both aggregates shuffle by the view keys. */
   private def mergedPartials(spark: SparkSession, view: String, m: Meta,
       resolve: String => DataFrame): DataFrame = {
     val store = AtRest.table(spark, m.storeTable)
+    val source = resolve(m.sourceTable)
+    val inOne: DataFrame => DataFrame =
+      if (AtRest.readsOneSplit(store) && AtRest.readsOneSplit(source)) _.coalesce(1)
+      else identity
     val delta = applyDerive(
-      resolve(m.sourceTable).filter(col(m.cursorCol) > m.cursor), m.derive)
+      inOne(source.filter(col(m.cursorCol) > m.cursor)), m.derive)
       .groupBy(m.keys.map(col): _*)
       .agg(m.aggs.flatMap(partialExprs).head,
         m.aggs.flatMap(partialExprs).tail: _*)
-    val all = store.unionByName(delta)
-    all.groupBy(m.keys.map(col): _*)
+    inOne(store.unionByName(delta)).groupBy(m.keys.map(col): _*)
       .agg(m.aggs.flatMap(mergeExprs).head,
         m.aggs.flatMap(mergeExprs).tail: _*)
   }

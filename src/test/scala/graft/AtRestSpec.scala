@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.functions._
 import graft.ext.LlmOps
-import graft.sources.{MatAgg, MatViewLayout}
+import graft.sources.{AtRest, MatAgg, MatViewLayout}
 
 /** The at-rest reader behind the index probes ([[graft.sources.AtRest]]):
   * an index rebuilt in place is always probed at its new version, a
@@ -144,6 +144,23 @@ class AtRestSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(exchanges(joins.head).isEmpty, plan.toString)
       val scans = collect(joins.head) { case f: FileSourceScanExec => f }
       assert(scans.size == 2 && scans.forall(_.bucketedScan), plan.toString)
+    }
+  }
+
+  test("a frame reads as one split exactly when its leaves are one-split files or coalesce(1)") {
+    import spark.implicits._
+    val local = Seq((1L, "a"), (2L, "b")).toDF("o_orderkey", "tag")
+    assert(AtRest.readsOneSplit(orders))
+    assert(AtRest.readsOneSplit(orders.filter(col("o_orderkey") > 10).select("o_orderkey")))
+    assert(AtRest.readsOneSplit(orders.join(orders.select("o_orderkey"), "o_orderkey")))
+    assert(!AtRest.readsOneSplit(local))
+    assert(!AtRest.readsOneSplit(orders.join(local, "o_orderkey")))
+    assert(AtRest.readsOneSplit(local.coalesce(1)))
+    assert(AtRest.readsOneSplit(orders.join(local.coalesce(1), "o_orderkey")))
+    GraftSession.pinned(spark, "spark.sql.files.maxPartitionBytes" -> "1k") { s =>
+      val big = s.read.parquet(s"${TestSpark.sfDir}/orders.parquet")
+      assert(!AtRest.readsOneSplit(big))
+      assert(AtRest.readsOneSplit(big.coalesce(1)))
     }
   }
 }

@@ -17,4 +17,12 @@ class BenchSpec extends AnyFunSuite {
     assert(errors("planted").contains("planted failure"))
     assert(cleared == 2)
   }
+
+  test("a scale op that throws is written with its error and no time") {
+    val ok = Scale.timed(() => 7L)
+    assert(ok.startsWith("\"out_rows\":7,\"sec\":"), ok)
+    val failed = Scale.timed(() => throw new IllegalStateException("planted failure"))
+    assert(failed == "\"error\":\"java.lang.IllegalStateException\"")
+    assert(!failed.contains("sec") && !failed.contains("out_rows"))
+  }
 }

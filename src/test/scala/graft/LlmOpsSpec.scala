@@ -1866,6 +1866,32 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(kql.head.getLong(0) > 0)
   }
 
+  test("a chunk or box size past 2^31 reads null, not a wrapped offset") {
+    // the sizes walk the position past 2^31; wrapped back into the
+    // prefix, it would land on the fmt chunk / moov box that follows
+    val fmt8k = "666D7420" + "10000000" + "0100" + "0100" + "803E0000" +
+      "803E0000" + "0100" + "0800"
+    val wav = (list: String) => "52494646" + "A8000000" + "57415645" +
+      "4C495354" + list + fmt8k + "64617461" + "64000000"
+    val ftyp = (size: String) => size + "66747970" + "69736F6D" + "00000000"
+    val mvhd0 = "0000001C" + "6D766864" + "00000000" * 3 + "00000258" + "000004B0"
+    val tkhd = "0000005C" + "746B6864" + "00000007" + "00" * 72 + "01400000" + "00B40000"
+    val moov = "00000088" + "6D6F6F76" + mvhd0 + "00000064" + "7472616B" + tkhd
+    def frame(hx: Seq[(Long, String)]) =
+      hx.toDF("id", "hx").withColumn("payload", unhex(col("hx")))
+    val audio = LlmOps.audioMeta(frame(Seq(1L -> wav("00000000"), 2L -> wav("00000080"))), "payload")
+      .orderBy("id").select("audio_format", "n_channels", "sample_rate", "bits_per_sample",
+        "n_frames", "duration_ms").collect().map(_.toSeq)
+    assert(audio(0) == Seq(1, 1, 16000, 8, 100L, 6L))
+    assert(audio(1).forall(_ == null), audio(1))
+    val video = LlmOps.videoMeta(frame(Seq(1L -> (ftyp("00000010") + moov),
+      2L -> (ftyp("80000010") + moov))), "payload")
+      .orderBy("id").select("timescale", "duration_ms", "width", "height")
+      .collect().map(_.toSeq)
+    assert(video(0) == Seq(600, 2000L, 320, 180))
+    assert(video(1).forall(_ == null), video(1))
+  }
+
   test("randomProjection: exact driver replay, short vectors null, JL correlation") {
     def sign(d: Int, j: Int): Long = {
       val hex = java.security.MessageDigest.getInstance("MD5")

@@ -2,17 +2,20 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import graft.sources.{MatAgg, MatViewLayout}
 
 /** Materialized-view contract: read ≡ the full-table aggregation at any
   * cursor position, across refreshes, for every mergeable aggregate —
   * and the read plan touches the store + a pushed-down delta scan, not
   * the source's history. */
-class MatViewLayoutSpec extends AnyFunSuite {
+class MatViewLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
 
-  private def orders = spark.read.parquet(s"${TestSpark.sfDir}/orders.parquet")
+  private def orders = ordersIn(spark)
+  private def ordersIn(s: SparkSession) = s.read.parquet(s"${TestSpark.sfDir}/orders.parquet")
 
   private val aggs = Seq(
     MatAgg("count", "", "n"),
@@ -24,8 +27,9 @@ class MatViewLayoutSpec extends AnyFunSuite {
     MatAgg("arg_max", "o_orderkey|o_orderstatus", "latest_status"))
   private val derive = Seq("cents" -> "CAST(ROUND(o_totalprice * 100) AS BIGINT)")
 
-  private def direct: DataFrame =
-    orders.withColumn("cents", expr(derive.head._2))
+  private def direct: DataFrame = directIn(spark)
+  private def directIn(s: SparkSession): DataFrame =
+    ordersIn(s).withColumn("cents", expr(derive.head._2))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), sum("cents").as("rev_c"),
         min("o_orderdate").as("min_d"), max("o_orderdate").as("max_d"),
@@ -36,6 +40,10 @@ class MatViewLayoutSpec extends AnyFunSuite {
 
   private def sortedRows(df: DataFrame) =
     df.orderBy("o_orderpriority").collect().map(_.toSeq).toSeq
+
+  /** The exchanges of `df`'s executed plan, after it ran. */
+  private def exchanges(df: DataFrame) =
+    collect(df.queryExecution.executedPlan) { case e: Exchange => e }
 
   test("read ≡ full aggregation with both store and delta non-empty") {
     MatViewLayout.build(orders, "mv_spec_orders", "orders",
@@ -179,5 +187,51 @@ class MatViewLayoutSpec extends AnyFunSuite {
         Seq("o_orderpriority"), Seq(MatAgg("percentile", "cents", "p")),
         "o_orderkey", 700L, derive)
     }
+  }
+
+  test("a one-split view reads in one job with no exchange") {
+    MatViewLayout.build(orders, "mv_spec_one", "orders",
+      Seq("o_orderpriority"), aggs, "o_orderkey", 700L, derive)
+    val read = MatViewLayout.read(spark, "mv_spec_one", _ => orders)
+    val (got, jobs) = CatalogSpec.jobsDuring(spark)(read.collect())
+    assert(jobs == 1)
+    assert(exchanges(read).isEmpty, read.queryExecution.executedPlan.toString)
+    assert(got.map(_.toSeq).sortBy(_.head.toString).toSeq == sortedRows(direct))
+  }
+
+  test("a view above one split keeps its shuffled merge and stays exact") {
+    MatViewLayout.build(orders, "mv_spec_split", "orders",
+      Seq("o_orderpriority"), aggs, "o_orderkey", 700L, derive)
+    GraftSession.pinned(spark, "spark.sql.files.maxPartitionBytes" -> "1k") { s =>
+      val read = MatViewLayout.read(s, "mv_spec_split", _ => ordersIn(s))
+      assert(sortedRows(read) == sortedRows(directIn(s)))
+      assert(exchanges(read).nonEmpty, read.queryExecution.executedPlan.toString)
+    }
+  }
+
+  test("a view over a local frame keeps its shuffled merge and stays exact") {
+    import spark.implicits._
+    val df = (1L to 40L).map(i => (i, s"g${i % 3}", i * 10)).toDF("id", "g", "v")
+    MatViewLayout.build(df, "mv_spec_local", "t", Seq("g"),
+      Seq(MatAgg("count", "", "n"), MatAgg("sum", "v", "s")), "id", 25L)
+    val read = MatViewLayout.read(spark, "mv_spec_local", _ => df)
+    val got = read.orderBy("g").collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val want = df.groupBy("g").agg(count(lit(1)), sum("v")).orderBy("g").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(got.toSeq == want.toSeq)
+    assert(exchanges(read).nonEmpty, read.queryExecution.executedPlan.toString)
+  }
+
+  test("a one-split refresh leaves the store a fresh build at its cursor has") {
+    MatViewLayout.build(orders, "mv_spec_one_refresh", "orders",
+      Seq("o_orderpriority"), aggs, "o_orderkey", 400L, derive)
+    MatViewLayout.refresh(spark, "mv_spec_one_refresh", _ => orders, 1100L)
+    MatViewLayout.build(orders, "mv_spec_one_fresh", "orders",
+      Seq("o_orderpriority"), aggs, "o_orderkey", 1100L, derive)
+    // the merge ran in one partition, so the new store is one file
+    assert(spark.table("mv_spec_one_refresh_store_c1100").inputFiles.length == 1)
+    val refreshed = sortedRows(MatViewLayout.read(spark, "mv_spec_one_refresh", _ => orders))
+    assert(refreshed == sortedRows(MatViewLayout.read(spark, "mv_spec_one_fresh", _ => orders)))
+    assert(refreshed == sortedRows(direct))
   }
 }

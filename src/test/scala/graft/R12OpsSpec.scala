@@ -290,6 +290,22 @@ class R12OpsSpec extends AnyFunSuite {
       Seq("vec_id", "__w"))
   }
 
+  test("annCosineBinaryIndexed takes the in-memory contract: zero query, refine < 1") {
+    val vq = Seq.fill(64)(0f)
+    val df = Seq((0L, vq), (1L, Seq.fill(64)(1f)), (2L, vq.updated(5, -2f)))
+      .toDF("vec_id", "embedding")
+    LlmOps.buildBinaryIndex(df, "bin_spec_zero", buckets = 2)
+    val direct = LlmOps.annCosineBinary(df, 0, k = 3)
+      .orderBy("vec_id").collect().map(_.toSeq).toSeq
+    val indexed = LlmOps.annCosineBinaryIndexed(spark, "bin_spec_zero", Array.fill(64)(0.0), k = 3)
+      .orderBy("vec_id").collect().map(_.toSeq).toSeq
+    assert(direct.map(_(2)) == Seq(null, null, null))
+    assert(indexed == direct)
+    intercept[IllegalArgumentException](LlmOps.annCosineBinary(df, 0, k = 3, refine = 0))
+    intercept[IllegalArgumentException](
+      LlmOps.annCosineBinaryIndexed(spark, "bin_spec_zero", Array.fill(64)(1.0), k = 3, refine = 0))
+  }
+
   test("annCosineBinary/buildBinaryIndex: a corpus vector wider than 64 raises") {
     // Java's shiftleft is mod 64 — without the per-row guard a dim-65
     // vector would silently WRAP into a corrupted sign word
