@@ -21,11 +21,14 @@ way perfbench computes it (Harrell-Davis, over every timed query), and
 says whether the change's median over runs is below the parent's by more
 than the parent's IQR. The last lines name, for each pair, the family the
 query median falls in on each side, which is where a `query_p50_ms`
-change comes from.
+change comes from. For `kql_interactive` files, two more rows do the same
+for the queries whose text the run had not sent yet (`fresh_p50_ms`) and
+for the repeated texts (`repeat_p50_ms`).
 """
 
 import json
 import os
+import signal
 import statistics
 import sys
 
@@ -35,14 +38,18 @@ from report import percentile  # noqa: E402
 
 
 def load(path):
-    """(query ms, {family: (kind, [ms], jobs per op or None, tasks per op or None)})."""
+    """(query ms, {family: (kind, [ms], jobs per op or None, tasks per op or None)},
+    {tag: [query ms]} for the fresh and repeat tags of kql_interactive, else {})."""
     with open(path) as fh:
         result = json.load(fh)
     ctr = {c["id"]: c for c in result.get("counters", [])}
     out = {}
+    tagged = {"fresh": [], "repeat": []} if result.get("workload") == "kql_interactive" else {}
     for op in result["ops"]:
         if op.get("error"):
             continue
+        if op["kind"] == "query" and op.get("tag") in tagged:
+            tagged[op["tag"]].append(op["ms"])
         kind, ms, jobs, tasks = out.setdefault(op["family"], (op["kind"], [], [], []))
         ms.append(op["ms"])
         c = ctr.get(op["id"])
@@ -51,7 +58,7 @@ def load(path):
             tasks.append(c["tasks"])
     queries = [m for k, ms, _, _ in out.values() if k == "query" for m in ms]
     return queries, {f: (k, ms, statistics.mean(j) if j else None, statistics.mean(t) if t else None)
-                     for f, (k, ms, j, t) in out.items()}
+                     for f, (k, ms, j, t) in out.items()}, tagged
 
 
 def median_family(fams):
@@ -89,6 +96,21 @@ def wins(parent, change):
     return f"{sum(1 for p, c in pairs if c < p)}/{len(pairs)}"
 
 
+def p50_rows(name, parent, change, width):
+    """The per-run medians of one query set and whether the change's median
+    over runs is below the parent's by more than the parent's IQR."""
+    blank = f"{'':>6} {'':>7}"
+    print(f"{name:<24} {'':<6} | {'':>5} {statistics.median(parent):>9.1f} {iqr(parent):>7.1f} "
+          f"{blank} | {'':>5} {statistics.median(change):>9.1f} {iqr(change):>7.1f} {blank} | "
+          f"{wins(parent, change):>5}")
+    gain = statistics.median(parent) - statistics.median(change)
+    print(f"{name} per run: parent {' '.join(f'{x:.1f}' for x in parent)}; "
+          f"change {' '.join(f'{x:.1f}' for x in change)}")
+    print(f"change median below parent median by {gain:.1f} ms, parent IQR {iqr(parent):.1f} ms: "
+          f"{'beyond' if gain > iqr(parent) else 'not beyond'} the parent IQR")
+    print("-" * width)
+
+
 def main(argv):
     files = argv[1:]
     if not files or len(files) % 2:
@@ -101,32 +123,31 @@ def main(argv):
     print(f"{'':<31} | {'parent':^38} | {'change':^38} |")
     print(head)
     print("-" * len(head))
-    names = sorted({f for _, fams in runs for f in fams})
+    names = sorted({f for _, fams, _ in runs for f in fams})
     for f in names:
-        kind = next(fams[f][0] for _, fams in runs if f in fams)
+        kind = next(fams[f][0] for _, fams, _ in runs if f in fams)
         cols, per_run = [], []
         for group in (parents, changes):
-            meds = [statistics.median(fams[f][1]) if f in fams else None for _, fams in group]
+            meds = [statistics.median(fams[f][1]) if f in fams else None for _, fams, _ in group]
             per_run.append(meds)
-            present = [fams[f] for _, fams in group if f in fams]
+            present = [fams[f] for _, fams, _ in group if f in fams]
             cols.append(side([m for m in meds if m is not None], sum(len(p[1]) for p in present),
                              mean_or_none([p[2] for p in present]),
                              mean_or_none([p[3] for p in present])))
         print(f"{f:<24} {kind:<6} | {cols[0]} | {cols[1]} | {wins(*per_run):>5}")
-    p50 = [[percentile(q, 50) for q, _ in group] for group in (parents, changes)]
-    blank = f"{'':>6} {'':>7}"
     print("-" * len(head))
-    print(f"{'query_p50_ms':<24} {'':<6} | {'':>5} {statistics.median(p50[0]):>9.1f} {iqr(p50[0]):>7.1f} "
-          f"{blank} | {'':>5} {statistics.median(p50[1]):>9.1f} {iqr(p50[1]):>7.1f} {blank} | "
-          f"{wins(*p50):>5}")
-    gain = statistics.median(p50[0]) - statistics.median(p50[1])
-    print(f"query_p50_ms per run: parent {' '.join(f'{x:.1f}' for x in p50[0])}; "
-          f"change {' '.join(f'{x:.1f}' for x in p50[1])}")
-    print(f"change median below parent median by {gain:.1f} ms, parent IQR {iqr(p50[0]):.1f} ms: "
-          f"{'beyond' if gain > iqr(p50[0]) else 'not beyond'} the parent IQR")
-    for i, ((_, pf), (_, cf)) in enumerate(zip(parents, changes), 1):
+    p50_rows("query_p50_ms", *([percentile(q, 50) for q, _, _ in group] for group in (parents, changes)),
+             len(head))
+    for tag in ("fresh", "repeat"):
+        if all(t.get(tag) for _, _, t in runs):
+            p50_rows(f"{tag}_p50_ms",
+                     *([percentile(t[tag], 50) for _, _, t in group] for group in (parents, changes)),
+                     len(head))
+    for i, ((_, pf, _), (_, cf, _)) in enumerate(zip(parents, changes), 1):
         print(f"pair {i}: median query falls in: parent {median_family(pf)}, change {median_family(cf)}")
 
 
 if __name__ == "__main__":
+    # a reader that stops early (`| head`) ends the output, not in a traceback
+    signal.signal(signal.SIGPIPE, signal.SIG_DFL)
     main(sys.argv)

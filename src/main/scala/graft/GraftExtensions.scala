@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 /** Library integration surface: register graft's codegen expressions as
   * SQL functions via the standard extensions hook, so an embedding
@@ -19,13 +21,23 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * intersection), and AdcScoreD (PQ asymmetric-distance lookup-table
   * scoring). All three implement doGenCode, so they stay inside
   * whole-stage codegen wherever they appear.
+  *
+  * The hook also adds [[graft.expr.ParamLiterals]], so a query that
+  * differs from an earlier one only in the values of its filter and
+  * projection literals reuses the earlier query's compiled classes.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
+    ext.injectColumnar(_ => GraftExtensions.paramLiterals)
+  }
 }
 
 object GraftExtensions {
+
+  private val paramLiterals = new ColumnarRule {
+    override def preColumnarTransitions: Rule[SparkPlan] = graft.expr.ParamLiterals
+  }
 
   private def info(name: String, usage: String): ExpressionInfo =
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "",

@@ -4,6 +4,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.LlmOps
+import graft.sources.AtRest
 
 /** Empirical scale-slope harness (r6 verdict task 2): build ×K corpora
   * from the sf0.1 fixtures by id-shifted self-union and time the
@@ -220,8 +221,9 @@ object Scale {
     * deliberately NOT run here — they are oracle plumbing. */
   private def ops(spark: SparkSession, dir: String,
                   k: Int): Seq[(String, () => Long)] = {
-    def docs = spark.read.parquet(s"$dir/documents.parquet")
-    def embs = spark.read.parquet(s"$dir/embeddings.parquet")
+    // listed and inferred once per session, not inside every timed op
+    def docs = AtRest.frame(spark, s"$dir/documents.parquet")
+    def embs = AtRest.frame(spark, s"$dir/embeddings.parquet")
     def relined10(d: DataFrame): DataFrame = {
       val toks = split(coalesce(col("text"), lit("")), "\\s+")
       d.withColumn("text", array_join(transform(
@@ -408,10 +410,10 @@ object Scale {
       // pruned delta scan matches nothing; expect ~flat)
       "matview_read_delta" -> (() =>
         graft.sources.MatViewLayout.read(spark, s"graft_scale_mv60_x$k",
-          _ => spark.read.parquet(s"$dir/documents_by_id.parquet")).count()),
+          _ => AtRest.frame(spark, s"$dir/documents_by_id.parquet")).count()),
       "matview_read_hi" -> (() =>
         graft.sources.MatViewLayout.read(spark, s"graft_scale_mvhi_x$k",
-          _ => spark.read.parquet(s"$dir/documents_by_id.parquet")).count()),
+          _ => AtRest.frame(spark, s"$dir/documents_by_id.parquet")).count()),
       // r13 additions: the two shuffle-bearing training-data ops.
       // ccnet: token explode + SHUFFLED vocab join (K× distinct tokens
       // under the prefix-disjoint copies) + two-phase per-lang rank.

@@ -2999,12 +2999,14 @@ object LlmOps {
     * (winnowing-style). md5 on both engines ⇒ oracle-comparable. */
   def fingerprint(docs: DataFrame, textCol: String = "text",
                   idCol: String = "doc_id"): DataFrame = {
-    val toks = split(lower(txt(textCol)), "\\s+")
-    val shingles = transform(sequence(lit(1), greatest(size(toks) - 2, lit(1))),
-      i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))
+    // the one-element array binds the token array to a lambda variable,
+    // so each document is split once, not once per shingle token
+    val minShingle = transform(array(split(lower(txt(textCol)), "\\s+")), toks =>
+      array_min(transform(sequence(lit(1), greatest(size(toks) - 2, lit(1))), i =>
+        md5(concat_ws(" ", element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2))))))
     docs.select(col(idCol),
       md5(lower(txt(textCol))).as("fp"),
-      array_min(transform(shingles, s => md5(s))).as("min_shingle_fp"))
+      element_at(minShingle, 1).as("min_shingle_fp"))
   }
 
   /** Token counting for training-data budgeting: whitespace tokens plus a

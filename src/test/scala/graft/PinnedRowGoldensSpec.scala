@@ -9,8 +9,10 @@ import graft.kql.{Catalog, Kql}
   * [[GraftSession.scratch]], and of the `evaluate` plugins no other spec
   * reaches, of the nine media-header parser rows, of the 13 rows
   * that run graft's iterative operators, of the nine ANN and
-  * hard-negative rows no other golden covers and of the five rows that
-  * open an at-rest index or table no other golden reads: schema, row count
+  * hard-negative rows no other golden covers, of the five rows that
+  * open an at-rest index or table no other golden reads, and of
+  * `llm_fingerprint` and the KQL texts whose literals `ParamLiteralSpec`
+  * varies: schema, row count
   * and a SHA-256 over the sorted row strings at sf0.001. Each set was
   * recorded before its code was refactored; the goldens change only when
   * the DuckDB oracle has certified new values, never to make a refactor
@@ -33,6 +35,7 @@ class PinnedRowGoldensSpec extends AnyFunSuite {
   private val loopGoldens = load("/goldens/loop_rows_sf0.001.tsv")
   private val vectorGoldens = load("/goldens/vector_rows_sf0.001.tsv")
   private val indexGoldens = load("/goldens/index_rows_sf0.001.tsv")
+  private val literalGoldens = load("/goldens/literal_rows_sf0.001.tsv")
   private lazy val catalog = Catalog(spark, TestSpark.sfDir)
 
   import PinnedRowGoldensSpec.digest
@@ -68,10 +71,11 @@ class PinnedRowGoldensSpec extends AnyFunSuite {
     }
   }
 
-  // a plugin row with a fifth column is that KQL query over the fixture
-  // tables; one without (and every media, loop, vector and index row) is
-  // the inventory row of that name
-  (pluginGoldens ++ mediaGoldens ++ loopGoldens ++ vectorGoldens ++ indexGoldens).foreach { g =>
+  // a plugin or literal row with a fifth column is that KQL query over
+  // the fixture tables; one without (and every media, loop, vector and
+  // index row) is the inventory row of that name
+  (pluginGoldens ++ mediaGoldens ++ loopGoldens ++ vectorGoldens ++ indexGoldens ++
+      literalGoldens).foreach { g =>
     test(s"${g(0)} matches its golden digest") {
       if (g(0) == "bm25_indexed")
         graft.ext.LlmOps.buildBm25Index(catalog.table("documents"), "graft_golden_bm25")
